@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# gate-fixture and small result frames: one Arrow local relation each
+from spatial_spark.localrel import arrow_local_df  # noqa: E402
+
 # ---------------------------------------------------------------------------
 # shared SQL fragments (valid in BOTH Spark SQL and DuckDB)
 # ---------------------------------------------------------------------------
@@ -67,29 +70,6 @@ def _sphere_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
 
 
 _SETUP_DONE: dict = {}
-
-
-def _local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """Collected-rows → DataFrame through ONE Arrow batch.  A plain
-    ``createDataFrame`` over Python rows parallelizes into
-    defaultParallelism (32 here) Python tasks, costing ~1-2s PER
-    ACTION on these small result frames — profiled r15: the sentinel
-    and result local relations, not the scans, were why the r14 prep
-    persist didn't move interval_join_outer's driver number.  A
-    pandas frame plans a single in-memory Arrow relation instead.
-    ``schema`` must be a flat "name type, ..." string (all these
-    gate results are flat numeric/string rows)."""
-    import pandas as pd
-    names = [c.strip().split()[0] for c in schema.split(",")]
-    pdf = pd.DataFrame(list(rows), columns=names)
-    return spark.createDataFrame(pdf, schema=schema)
-
-
-def _arrow_local(spark: SparkSession, rows, schema) -> DataFrame:
-    """Gate-fixture rows -> one Arrow local relation (see _local_df; the
-    shared package helper handles StructType schemas + binary cells)."""
-    from spatial_spark.localrel import arrow_local_df
-    return arrow_local_df(spark, rows, schema)
 
 
 # State-store / shuffle width for the capped streaming-gate fixtures.
@@ -155,7 +135,7 @@ def _media_local_df(spark: SparkSession, rows) -> DataFrame:
     because the relation is re-evaluated, not cached.  Values identical;
     downstream .repartition(n) keeps the decode stages parallel."""
     from spatial_spark.operators.multimodal import MEDIA_SCHEMA
-    return _arrow_local(spark, rows, MEDIA_SCHEMA)
+    return arrow_local_df(spark, rows, MEDIA_SCHEMA)
 
 
 def _setup(spark: SparkSession, sf_dir: str) -> None:
@@ -1004,7 +984,7 @@ def _q_st_transform_registry(spark, sf_dir) -> DataFrame:
     rows = [(code, float(lon_b), int(lon_m), float(lat_b), int(lat_m))
             for code, _k, _p, lon_b, lon_m, lat_b, lat_m
             in _REG_GATE_SPECS]
-    codes = _arrow_local(
+    codes = arrow_local_df(
         spark, rows,
         "code int, lon_b double, lon_m bigint, lat_b double, lat_m bigint")
     cust = spread(spark.table("customer").select("c_custkey"))
@@ -1114,7 +1094,7 @@ def _q_shapefile_source(spark, sf_dir) -> DataFrame:
     geoms, attrs, _crs = read_shapefile(path)
     out = [(int(a["NKEY"]), *(float(v) for v in g.envelope()))
            for g, a in zip(geoms, attrs)]
-    return _local_df(
+    return arrow_local_df(
         spark, out, "n_nationkey long, xmin double, ymin double, "
              "xmax double, ymax double")
 
@@ -1231,7 +1211,7 @@ def _q_render_sink(spark, sf_dir) -> DataFrame:
         y0 = 24 * (n // 5) + 4.5
         data.append((n, f"POLYGON (({x0} {y0}, {x0 + s} {y0}, "
                         f"{x0 + s} {y0 + s}, {x0} {y0 + s}, {x0} {y0}))"))
-    df = (_arrow_local(spark, data, "n_nationkey long, wkt string")
+    df = (arrow_local_df(spark, data, "n_nationkey long, wkt string")
           .withColumn("geom", F.expr("st_geomfromtext(wkt)"))
           .select("geom")
           .coalesce(4))   # 25 rows: still multi-partition compositing,
@@ -1247,7 +1227,7 @@ def _q_render_sink(spark, sf_dir) -> DataFrame:
         out.append((n,
                     int((sub == (147, 207, 167)).all(-1).sum()),
                     int((sub == (40, 160, 80)).all(-1).sum())))
-    return _local_df(
+    return arrow_local_df(
         spark, out, "n_nationkey long, fill_px long, outline_px long")
 
 
@@ -2528,7 +2508,7 @@ def _image_hash_fixture_df(spark):
         rows.append((1000 + i, bytearray(encode_gif(tone(i, w, wa2, v, u)))))
     schema = T.StructType([T.StructField("media_id", T.LongType(), False),
                            T.StructField("payload", T.BinaryType(), True)])
-    return _arrow_local(spark, rows, schema).repartition(8)
+    return arrow_local_df(spark, rows, schema).repartition(8)
 
 
 def _q_image_hashes(spark, sf_dir) -> DataFrame:
@@ -3226,7 +3206,7 @@ def _q_tile_counts_stream(spark, sf_dir) -> DataFrame:
         rows = (out.select(
             F.col("window_start").cast("long").alias("window_epoch"),
             "tile_z", "tile_x", "tile_y", "n").collect())
-        return _local_df(
+        return arrow_local_df(
             spark, rows, "window_epoch bigint, tile_z int, tile_x bigint, "
                   "tile_y bigint, n bigint")
     finally:
@@ -3320,7 +3300,7 @@ def _q_mvt_export(spark, sf_dir) -> DataFrame:
                     sum(f["parts"][0][0][0] for f in feats),
                     sum(f["parts"][0][0][1] for f in feats),
                     sum(f["id"] for f in feats)))
-    return _local_df(
+    return arrow_local_df(
         spark, out, "tile_z int, tile_x bigint, tile_y bigint, "
              "n_features bigint, sum_px bigint, sum_py bigint, "
              "sum_id bigint")
@@ -4402,7 +4382,7 @@ def _q_kmv_stream(spark, sf_dir) -> DataFrame:
         out = stats.crossJoin(est).select("n", "h_max", "est_distinct")
         # materialize before the temp state dir disappears
         rows = out.collect()
-        return _local_df(
+        return arrow_local_df(
             spark, rows, "n bigint, h_max bigint, est_distinct double")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
@@ -4456,7 +4436,7 @@ def _q_quantile_stream(spark, sf_dir) -> DataFrame:
                .select("q", F.round("value", 2).alias("value"))
                .orderBy("q"))
         rows = out.collect()        # before the temp state dir goes
-        return _local_df(spark, rows, "q double, value double")
+        return arrow_local_df(spark, rows, "q double, value double")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -4534,7 +4514,7 @@ def _q_ivf_recall(spark, sf_dir) -> DataFrame:
         rows.append((nprobe, hits,
                      round(hits / float(len(exact_ids)), 6)))
     assigned.unpersist()
-    return _local_df(
+    return arrow_local_df(
         spark, rows, "nprobe int, hits bigint, recall double")
 
 
@@ -4840,7 +4820,7 @@ def _q_interval_join_stream(spark, sf_dir) -> DataFrame:
                           "user_id"),
             os.path.join(work, "ck"))
         rows = out.collect()
-        return _local_df(
+        return arrow_local_df(
             spark, rows, "view_id bigint, purchase_id bigint, user_id bigint")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
@@ -4932,7 +4912,7 @@ def _q_interval_join_outer(spark, sf_dir) -> DataFrame:
                           "user_id"),
             os.path.join(work, "ck"))
         rows = [r for r in out.collect() if r.user_id >= 0]
-        return _local_df(
+        return arrow_local_df(
             spark, rows, "view_id bigint, purchase_id bigint, user_id bigint")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
@@ -5004,7 +4984,7 @@ def _q_funnel_stream(spark, sf_dir) -> DataFrame:
         rows = (adv.groupBy("step_idx", "step")
                 .agg(F.count(F.lit(1)).alias("n_users"))
                 .orderBy("step_idx").collect())
-        return _local_df(
+        return arrow_local_df(
             spark, rows, "step_idx int, step string, n_users bigint")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
@@ -5086,7 +5066,7 @@ def _q_dedup_stream(spark, sf_dir) -> DataFrame:
         rows = (out.groupBy("text")
                 .agg(F.count(F.lit(1)).alias("n_emitted"))
                 .orderBy("text").collect())
-        return _local_df(spark, rows, "text string, n_emitted bigint")
+        return arrow_local_df(spark, rows, "text string, n_emitted bigint")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
         shutil.rmtree(work, ignore_errors=True)
@@ -5143,7 +5123,7 @@ def _q_retention_stream(spark, sf_dir) -> DataFrame:
         rows = (out.groupBy("cohort_week", "weeks_since")
                 .agg(F.count(F.lit(1)).alias("n_users"))
                 .orderBy("cohort_week", "weeks_since").collect())
-        return _local_df(
+        return arrow_local_df(
             spark, rows, "cohort_week string, weeks_since int, n_users bigint")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)

@@ -459,7 +459,7 @@ BUDGET_SF01 = {
     # min(old, 2.2x driver) — e.g. retention_stream 16.0->9.4,
     # dedup_stream 12.5->6.6, funnel_stream 14.0->8.9,
     # delta_roundtrip 2.4->1.1.  The r15 fixture trims
-    # (_local_df + persisted preps) should land WELL under these;
+    # (arrow_local_df + persisted preps) should land WELL under these;
     # re-ratchet again off BENCH_r15.
     # r15 newcomers: 2.2x warm local best-of-2 at sf0.1 (1.21 / 3.0),
     # to be re-ratcheted off BENCH_r15's driver numbers next round

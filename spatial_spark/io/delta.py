@@ -42,16 +42,19 @@ interop surface (geotools-plugin/src/main/java/org/geotools/data/
 neo4j/Neo4jSpatialDataStore.java:60-118 — expose layers to foreign
 engines); a lakehouse table format is the Spark-native analogue.
 
-Storage seam (r15, closing the r14 verdict's #1 gap): ALL log I/O —
-the put-if-absent commit, the JSON tail reads, the checkpoint
-parquet bytes, ``_last_checkpoint`` — routes through a pluggable
-``LogStore`` that wraps the layer manifest's duck-typed IO interface
-(``LocalManifestIO`` default; ``S3ManifestIO``/``HadoopManifestIO``
-or a test fake drop in — Delta's own spec delegates exactly this to
-a LogStore, and on S3 semantics ``create_excl`` IS the conditional
-PUT).  DATA files are still written/moved by Spark + the local
-``os`` module: on a cluster the table path is shared storage (the
-same assumption every Spark parquet write makes).
+Storage seam: ALL log I/O — the put-if-absent commit, the JSON tail
+reads, the checkpoint parquet bytes, ``_last_checkpoint`` — routes
+through a pluggable ``LogStore`` that wraps the layer manifest's IO
+interface (``LocalManifestIO`` default; ``S3ManifestIO``/
+``HadoopManifestIO`` or a test fake drop in — Delta's own spec
+delegates exactly this to a LogStore, and on S3 semantics
+``create_excl`` IS the conditional PUT).  DATA files are written by
+Spark into a staging dir and moved into the table by
+``manifest.publish_staged`` — the one mover every table write
+shares — over a ``LocalManifestIO()``, not the LogStore's IO: on a
+cluster the table path is shared storage (the same assumption every
+Spark parquet write makes).  Per-file stats are a translation of
+``manifest.footer_stats``, the one footer reader.
 100 TB shape: one commit is O(changed files); planning reads the log
 tail + one checkpoint, never lists the store; file pruning happens on
 driver-held metadata exactly like the layer manifest's files_where.
@@ -64,6 +67,8 @@ import shutil
 import time
 import uuid
 from urllib.parse import quote, unquote
+
+from ..manifest import LocalManifestIO, footer_stats, publish_staged
 
 __all__ = ["export_delta", "layer_to_delta", "layer_from_delta",
            "read_delta_log", "delta_source", "write_delta_checkpoint",
@@ -93,13 +98,11 @@ class LogStore:
     put-if-absent primitive, a conditional PUT on object stores).
     Delta's spec delegates exactly-once commit publication to a
     LogStore; this is ours.  Only the LOG lives behind it — data
-    files are Spark's parquet writes on shared table storage."""
+    files move in through ``manifest.publish_staged`` on shared
+    table storage."""
 
     def __init__(self, io=None):
-        if io is None:
-            from spatial_spark.manifest import LocalManifestIO
-            io = LocalManifestIO()
-        self.io = io
+        self.io = io if io is not None else LocalManifestIO()
 
     def put_commit(self, path: str, body: str) -> None:
         """Atomically create ``path`` with ``body``; CommitConflict if
@@ -112,13 +115,8 @@ class LogStore:
         return self.io.read_text(path)
 
     def read_bytes(self, path: str) -> bytes:
-        """Checkpoint parquet bytes.  Uses the io's ``read_bytes``
-        when it has one; the local fallback reads the file direct."""
-        rb = getattr(self.io, "read_bytes", None)
-        if rb is not None:
-            return rb(path)
-        with open(path, "rb") as f:
-            return f.read()
+        """Checkpoint parquet bytes."""
+        return self.io.read_bytes(path)
 
     def write_file(self, path: str, data: bytes) -> None:
         self.io.mkdirs(os.path.dirname(path))
@@ -138,22 +136,11 @@ class LogStore:
             return False
 
     def delete(self, path: str) -> bool:
-        """Object delete through the io seam — the manifest IOs name
-        this ``remove`` (probed first; ``delete`` accepted for
-        foreign duck-types), local unlink as the last resort.
-        Returns whether the object was removed — cleanup paths
-        (vacuum, snapshot expiration) must COUNT deletions, not
-        assume them."""
-        for attr in ("remove", "delete"):
-            d = getattr(self.io, attr, None)
-            if d is not None:
-                try:
-                    return bool(d(path))
-                except (FileNotFoundError, OSError):
-                    return False
+        """Object delete through the io's ``remove``.  Returns whether
+        the object was removed — cleanup paths (vacuum, snapshot
+        expiration) must COUNT deletions, not assume them."""
         try:
-            os.unlink(path)
-            return True
+            return bool(self.io.remove(path))
         except OSError:
             return False
 
@@ -225,47 +212,33 @@ def _json_safe_stat(v):
     return None
 
 
-def _footer_stats_for(path: str) -> dict | None:
-    """Delta per-file stats from ONE parquet footer: numRecords +
-    min/max/nullCount per leaf column with usable statistics."""
-    try:
-        import pyarrow.parquet as pq
-        md = pq.ParquetFile(path).metadata
-    except Exception:
+def _delta_stats(fs: dict | None) -> dict | None:
+    """Delta per-file stats from ``manifest.footer_stats``: numRecords
+    + min/max/nullCount per leaf column whose footer range has a JSON
+    form."""
+    if fs is None:
         return None
     mins: dict = {}
     maxs: dict = {}
     nulls: dict = {}
-    for ci in range(md.num_columns):
-        name = md.schema.column(ci).name
-        cmins, cmaxs, cnull, ok = [], [], 0, True
-        for g in range(md.num_row_groups):
-            try:
-                s = md.row_group(g).column(ci).statistics
-                if s is None or not s.has_min_max:
-                    ok = False
-                    break
-                raw_lo, raw_hi = s.min, s.max
-            except Exception:      # pyarrow: "Cannot extract
-                ok = False         # statistics for type" (decimal…)
-                break
-            lo, hi = _json_safe_stat(raw_lo), _json_safe_stat(raw_hi)
-            if lo is None or hi is None:
-                ok = False
-                break
-            cmins.append(lo)
-            cmaxs.append(hi)
-            cnull += s.null_count or 0
-        if ok and cmins:
-            mins[name] = min(cmins)
-            maxs[name] = max(cmaxs)
-            nulls[name] = cnull
-    out: dict = {"numRecords": md.num_rows}
+    for name, _, lo, hi, nc in fs["columns"]:
+        lo, hi = _json_safe_stat(lo), _json_safe_stat(hi)
+        if lo is not None and hi is not None:
+            mins[name], maxs[name], nulls[name] = lo, hi, nc
+    out: dict = {"numRecords": fs["rows"]}
     if mins:
         out["minValues"] = mins
         out["maxValues"] = maxs
         out["nullCount"] = nulls
     return out
+
+
+def _file_info(path: str) -> tuple:
+    """(size, mtime, Delta stats) of one data file — the per-file
+    ``stat`` export_delta, optimize_delta and export_iceberg hand to
+    ``publish_staged``."""
+    return (os.path.getsize(path), os.path.getmtime(path),
+            _delta_stats(footer_stats(path)))
 
 
 def _data_files(table_dir: str) -> set:
@@ -297,58 +270,21 @@ def _partition_values(rel_path: str, partition_cols: list) -> dict:
     return {c: vals.get(c) for c in partition_cols}
 
 
-def _move_and_add(staging: str, table_dir: str, rel: str,
-                  partition_cols: list, data_change: bool) -> dict:
-    """Move ONE staged data file into the table root and compose its
-    ``add`` action (size/mtime/footer stats).  Runs driver-side for
-    small commits and inside executor tasks for large ones — the
-    table path is shared storage either way (the same assumption the
-    parquet write itself makes)."""
-    dst = os.path.join(table_dir, rel)
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    os.replace(os.path.join(staging, rel), dst)
-    st = _footer_stats_for(dst)
-    add: dict = {"path": quote(rel),
-                 "partitionValues": _partition_values(
-                     rel, partition_cols),
-                 "size": os.path.getsize(dst),
-                 "modificationTime": int(os.path.getmtime(dst) * 1000),
-                 "dataChange": data_change}
-    if st is not None:
-        add["stats"] = json.dumps(st, separators=(",", ":"))
-    return add
-
-
-#: above this many staged files the move+footer-stat pass runs as ONE
-#: Spark job (a parallelize over rel paths) instead of a serial driver
-#: loop — the r14 verdict's "FGB-r13-style serial loop reborn" fix.
-#: 64 keeps gate-scale commits job-free; a 100k-file compaction runs
-#: ~400 tasks of 256 files each.
-_DISTRIBUTE_PUBLISH_AT = 64
-
-
-def _publish_staged(spark, staging: str, table_dir: str,
-                    partition_cols: list, data_change: bool) -> list:
-    """Move every staged file into the table and return its sorted
-    ``add`` actions.  O(changed files) metadata comes back to the
-    driver (the manifest discipline — the commit itself is that same
-    metadata); the per-file stat/footer/move WORK is distributed when
-    the file count warrants a job."""
-    rels = sorted(_data_files(staging))
-    if spark is not None and len(rels) >= _DISTRIBUTE_PUBLISH_AT:
-        sc = spark.sparkContext
-        n_slices = max(1, min(len(rels) // 16, 512))
-        adds = (sc.parallelize(rels, n_slices)
-                .map(lambda rel: _move_and_add(
-                    staging, table_dir, rel, partition_cols,
-                    data_change))
-                .collect())
-        adds.sort(key=lambda a: a["path"])
-    else:
-        adds = [_move_and_add(staging, table_dir, rel,
-                              partition_cols, data_change)
-                for rel in rels]
-    shutil.rmtree(staging, ignore_errors=True)
+def _add_actions(published: dict, partition_cols: list,
+                 data_change: bool) -> list:
+    """``add`` actions, in path order, for the files a
+    ``publish_staged(..., stat=_file_info)`` call moved in."""
+    adds = []
+    for rel, (size, mtime, st) in published.items():
+        add: dict = {"path": quote(rel),
+                     "partitionValues": _partition_values(
+                         rel, partition_cols),
+                     "size": size,
+                     "modificationTime": int(mtime * 1000),
+                     "dataChange": data_change}
+        if st is not None:
+            add["stats"] = json.dumps(st, separators=(",", ":"))
+        adds.append(add)
     return adds
 
 
@@ -410,8 +346,10 @@ def export_delta(df, path: str, mode: str = "overwrite",
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staging)
-    new_adds = _publish_staged(df.sparkSession, staging, path,
-                               partition_by, True)
+    new_adds = _add_actions(
+        publish_staged(LocalManifestIO(), staging, path, stat=_file_info,
+                       spark=df.sparkSession),
+        partition_by, True)
 
     now_ms = int(time.time() * 1000)
     actions: list = [{"commitInfo": {
@@ -505,25 +443,7 @@ def layer_to_delta(layer, out_dir: str, name: str | None = None,
     on the core columns, ``amin:<col>``/``amax:<col>`` → min/maxValues
     on the attribute.  Returns the committed version (always 0 — each
     call snapshots into a fresh log; re-export after layer commits)."""
-    man = layer._manifest
-    cur = man._newest()
-    if cur is None:
-        raise ValueError("layer_to_delta: layer has no manifest yet")
-    _, doc = cur
-    file_stats: dict = {}
-    names: list = []
-    if "files" in doc:
-        names = list(doc["files"])
-    else:
-        for sh in doc.get("shards", []):
-            sdoc = man._shard_doc(sh["name"])
-            names.extend(sdoc["files"])
-            file_stats.update(sdoc.get("file_stats") or {})
-        names.sort()
-
-    schema_json = layer.meta.get("schema_json")
-    if not schema_json:
-        raise ValueError("layer_to_delta: layer records no schema")
+    schema_json, files = _layer_files(layer, "layer_to_delta")
     now_ms = int(time.time() * 1000)
     actions: list = [
         {"commitInfo": {"timestamp": now_ms,
@@ -538,22 +458,7 @@ def layer_to_delta(layer, out_dir: str, name: str | None = None,
                       "partitionColumns": [],
                       "configuration": {},
                       "createdTime": now_ms}}]
-    # one directory scan for size/mtime instead of a per-file stat
-    # loop (100k files = one readdir pass, not 100k round trips)
-    ent: dict = {}
-    try:
-        with os.scandir(layer.path) as it:
-            for e in it:
-                if e.is_file():
-                    s = e.stat()
-                    ent[e.name] = (s.st_size, s.st_mtime)
-    except OSError:
-        pass
-    for n in names:
-        full = os.path.join(layer.path, n)
-        size, mtime = ent.get(n) or (os.path.getsize(full),
-                                     os.path.getmtime(full))
-        st = file_stats.get(n) or {}
+    for full, fst, st in files:
         mins: dict = {}
         maxs: dict = {}
         for src, dst, side in (("xmin", "xmin", "min"),
@@ -575,10 +480,10 @@ def layer_to_delta(layer, out_dir: str, name: str | None = None,
         if mins:
             stats["minValues"] = mins
             stats["maxValues"] = maxs
-        add: dict = {"path": quote(os.path.abspath(full)),
+        add: dict = {"path": quote(full),
                      "partitionValues": {},
-                     "size": size,
-                     "modificationTime": int(mtime * 1000),
+                     "size": fst.st_size,
+                     "modificationTime": int(fst.st_mtime * 1000),
                      "dataChange": True}
         if stats:
             add["stats"] = json.dumps(stats, separators=(",", ":"))
@@ -587,26 +492,50 @@ def layer_to_delta(layer, out_dir: str, name: str | None = None,
     return 0
 
 
+def _layer_files(layer, caller: str) -> tuple:
+    """``(schema_json, [(absolute path, os.stat_result, manifest file
+    stats)])`` of a layer's current snapshot — the read both
+    metadata-only layer exports (Delta, Iceberg) share."""
+    entries = layer._manifest.entries()
+    if entries is None:
+        raise ValueError(f"{caller}: layer has no manifest yet")
+    schema_json = layer.meta.get("schema_json")
+    if not schema_json:
+        raise ValueError(f"{caller}: layer records no schema")
+    files = []
+    for n, st in entries:
+        full = os.path.abspath(os.path.join(layer.path, n))
+        files.append((full, os.stat(full), st))
+    return schema_json, files
+
+
+def _layer_from_frame(ctx, df, layer_name: str, caller: str,
+                      reader: str):
+    """Reconstitute a WKB layer from a table frame carrying the
+    layer-core column shape — the import leg layer_from_delta and
+    layer_from_iceberg share.  Derived core columns (bbox/zkey) are
+    recomputed by the layer's own write path; the geometry and every
+    attribute column carry over."""
+    if "geom" not in df.columns:
+        raise ValueError(
+            f"{caller}: table has no 'geom' column — only layer-shaped "
+            f"tables import (read others with {reader})")
+    derived = {"gtype", "xmin", "ymin", "xmax", "ymax", "zkey", "bbox"}
+    layer = ctx.create_layer(layer_name, encoder="wkb")
+    layer.add(df.select(*[c for c in df.columns if c not in derived]))
+    return layer
+
+
 def layer_from_delta(ctx, path: str, layer_name: str,
                      version: int | None = None):
     """Reconstitute a WKB layer from a Delta table carrying the
     layer-core column shape (what ``layer_to_delta`` / an
     ``export_delta`` of a layer frame produces): the inverse leg of
     the metadata-only export, so layer → Delta → layer round-trips —
-    including time travel (``version=``).  Derived core columns
-    (bbox/zkey) are recomputed by the layer's own write path; the
-    geometry and every attribute column carry over."""
-    df = delta_source(ctx.spark, path, version=version)
-    if "geom" not in df.columns:
-        raise ValueError(
-            "layer_from_delta: table has no 'geom' column — only "
-            "layer-shaped Delta tables import (read others with "
-            "delta_source)")
-    derived = {"gtype", "xmin", "ymin", "xmax", "ymax", "zkey", "bbox"}
-    keep = [c for c in df.columns if c not in derived]
-    layer = ctx.create_layer(layer_name, encoder="wkb")
-    layer.add(df.select(*keep))
-    return layer
+    including time travel (``version=``)."""
+    return _layer_from_frame(
+        ctx, delta_source(ctx.spark, path, version=version), layer_name,
+        "layer_from_delta", "delta_source")
 
 
 def write_delta_checkpoint(path: str,
@@ -1000,7 +929,10 @@ def optimize_delta(spark, path: str, zorder_by: list | None = None,
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(staging)
-    new_adds = _publish_staged(spark, staging, path, part_cols, False)
+    new_adds = _add_actions(
+        publish_staged(LocalManifestIO(), staging, path, stat=_file_info,
+                       spark=spark),
+        part_cols, False)
 
     now_ms = int(time.time() * 1000)
     actions: list = [{"commitInfo": {

@@ -45,11 +45,20 @@ Deliberate seams (loud, spec-cited):
   row-level-delete tier, not needed for an analytics export;
 * Avro files are null-codec (spec-required readable everywhere).
 
+Storage seam: metadata (metadata.json, manifest lists, manifests,
+the version hint) goes through the same ``LogStore`` as the Delta leg.
+Data files are written by Spark into a staging dir and moved into
+``data/`` under stamped names by ``manifest.publish_staged`` — the one
+mover every table write shares — over a ``LocalManifestIO()``, not the
+LogStore's IO (shared table storage, as for every Spark parquet
+write); their bounds translate the Delta leg's stats over
+``manifest.footer_stats``, the one footer reader.
+
 100 TB shape: commits are O(changed files) like the Delta leg; the
 manifest list keeps planning at one small Avro read + one Avro per
 manifest (appends never rewrite old manifests); bounds pruning runs
-on driver-held metadata.  The per-file footer pass reuses the Delta
-leg's distributed publish above the same threshold.
+on metadata already in hand.  The per-file move + footer pass runs as
+one Spark job above ``publish_staged``'s file-count threshold.
 """
 from __future__ import annotations
 
@@ -59,10 +68,10 @@ import struct
 import time
 import uuid
 
+from ..manifest import LocalManifestIO, publish_staged
 from .avrofile import read_avro, write_avro
-from .delta import (LogStore, _DISTRIBUTE_PUBLISH_AT, _data_files,
-                    _footer_stats_for, _partition_values, _store,
-                    CommitConflict)
+from .delta import (LogStore, _file_info, _layer_files, _layer_from_frame,
+                    _partition_values, _store, CommitConflict)
 
 _FMT = 2
 _INITIAL_SPEC_ID = 0
@@ -470,19 +479,6 @@ def _write_avro_via_store(path: str, schema: dict, records: list,
             pass
 
 
-def _move_and_stat(staging: str, data_dir: str, rel: str,
-                   dst_rel: str) -> tuple:
-    """Move ONE staged data file into data/ and read its footer
-    stats.  Runs driver-side for small commits and inside executor
-    tasks for large ones (shared table storage either way — the
-    Delta leg's _move_and_add contract)."""
-    dst = os.path.join(data_dir, dst_rel)
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    os.replace(os.path.join(staging, rel), dst)
-    return (rel, dst_rel, os.path.getsize(dst),
-            _footer_stats_for(dst))
-
-
 def _snapshot_id() -> int:
     return uuid.uuid4().int & ((1 << 62) - 1)
 
@@ -546,36 +542,19 @@ def export_iceberg(df, path: str, mode: str = "overwrite",
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staging)
-    rels = sorted(_data_files(staging))
     data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
     snap_id = _snapshot_id()
     seq = 1 if prev is None else prev[1]["last-sequence-number"] + 1
     stamp = uuid.uuid4().hex[:8]
-    moves = []
-    for i, rel in enumerate(rels):
-        if partition_by:
-            dst_rel = os.path.join(os.path.dirname(rel),
-                                   f"{stamp}-{i:05d}.parquet")
-        else:
-            dst_rel = f"{stamp}-{i:05d}.parquet"
-        moves.append((rel, dst_rel))
-    # the per-file move+footer-stat pass runs as ONE Spark job above
-    # the Delta leg's threshold (the same serial-driver-loop fix)
-    if len(moves) >= _DISTRIBUTE_PUBLISH_AT:
-        sc = df.sparkSession.sparkContext
-        n_slices = max(1, min(len(moves) // 16, 512))
-        moved = (sc.parallelize(moves, n_slices)
-                 .map(lambda m: _move_and_stat(
-                     staging, data_dir, m[0], m[1]))
-                 .collect())
-        moved.sort(key=lambda t: t[1])
-    else:
-        moved = [_move_and_stat(staging, data_dir, rel, dst_rel)
-                 for rel, dst_rel in moves]
+    published = publish_staged(
+        LocalManifestIO(), staging, data_dir, stat=_file_info,
+        spark=df.sparkSession,
+        name=lambda rel, i: os.path.join(os.path.dirname(rel),
+                                         f"{stamp}-{i:05d}.parquet"))
     entries = []
-    for rel, dst_rel, size, fstats in moved:
-        raw_parts = _partition_values(rel, partition_by)
+    for dst_rel, (size, _, fstats) in published.items():
+        # the stamped name keeps the staged file's hive dirs
+        raw_parts = _partition_values(dst_rel, partition_by)
         part = {c: _part_typed(part_types[c], raw_parts.get(c))
                 for c in partition_by}
         entries.append({
@@ -584,8 +563,6 @@ def export_iceberg(df, path: str, mode: str = "overwrite",
             "data_file": _data_file_record(
                 os.path.abspath(os.path.join(data_dir, dst_rel)),
                 size, ice_schema, fstats, partition=part)})
-    import shutil
-    shutil.rmtree(staging, ignore_errors=True)
     return _commit_snapshot(path, st, ice_schema, entries, mode,
                             prev, snap_id, seq, name,
                             spec_fields=spec_fields)
@@ -782,43 +759,12 @@ def layer_to_iceberg(layer, out_dir: str, name: str | None = None,
     from pyspark.sql import types as T
 
     st = _store(store)
-    man = layer._manifest
-    cur = man._newest()
-    if cur is None:
-        raise ValueError("layer_to_iceberg: layer has no manifest yet")
-    _, doc = cur
-    file_stats: dict = {}
-    names: list = []
-    if "files" in doc:
-        names = list(doc["files"])
-    else:
-        for sh in doc.get("shards", []):
-            sdoc = man._shard_doc(sh["name"])
-            names.extend(sdoc["files"])
-            file_stats.update(sdoc.get("file_stats") or {})
-        names.sort()
-    schema_json = layer.meta.get("schema_json")
-    if not schema_json:
-        raise ValueError("layer_to_iceberg: layer records no schema")
+    schema_json, files = _layer_files(layer, "layer_to_iceberg")
     spark_schema = T.StructType.fromJson(json.loads(schema_json))
     ice_schema = _ice_schema_from_spark(spark_schema)
-
-    ent: dict = {}
-    try:
-        with os.scandir(layer.path) as it:
-            for e in it:
-                if e.is_file():
-                    ent[e.name] = e.stat().st_size
-    except OSError:
-        pass
     snap_id = _snapshot_id()
     entries = []
-    for n in names:
-        full = os.path.abspath(os.path.join(layer.path, n))
-        size = ent.get(n)
-        if size is None:
-            size = os.path.getsize(full)
-        s = file_stats.get(n) or {}
+    for full, fst, s in files:
         mins: dict = {}
         maxs: dict = {}
         # Iceberg bounds need BOTH sides per column.  The manifest's
@@ -850,8 +796,8 @@ def layer_to_iceberg(layer, out_dir: str, name: str | None = None,
         entries.append({
             "status": 1, "snapshot_id": snap_id,
             "sequence_number": 1, "file_sequence_number": 1,
-            "data_file": _data_file_record(full, size, ice_schema,
-                                           stats)})
+            "data_file": _data_file_record(full, fst.st_size,
+                                           ice_schema, stats)})
     return _commit_snapshot(out_dir, st, ice_schema, entries,
                             "overwrite", None, snap_id, 1,
                             name or layer.name)
@@ -863,21 +809,10 @@ def layer_from_iceberg(ctx, path: str, layer_name: str,
     layer-core column shape (what ``layer_to_iceberg`` / an
     ``export_iceberg`` of a layer frame produces): the inverse leg of
     the metadata-only export, so layer → Iceberg → layer round-trips
-    — including snapshot time travel.  Derived core columns
-    (bbox/zkey) are recomputed by the layer's own write path; the
-    geometry and every attribute column carry over (the
-    layer_from_delta twin)."""
-    df = iceberg_source(ctx.spark, path, snapshot_id=snapshot_id)
-    if "geom" not in df.columns:
-        raise ValueError(
-            "layer_from_iceberg: table has no 'geom' column — only "
-            "layer-shaped Iceberg tables import (read others with "
-            "iceberg_source)")
-    derived = {"gtype", "xmin", "ymin", "xmax", "ymax", "zkey", "bbox"}
-    keep = [c for c in df.columns if c not in derived]
-    layer = ctx.create_layer(layer_name, encoder="wkb")
-    layer.add(df.select(*keep))
-    return layer
+    — including snapshot time travel."""
+    return _layer_from_frame(
+        ctx, iceberg_source(ctx.spark, path, snapshot_id=snapshot_id),
+        layer_name, "layer_from_iceberg", "iceberg_source")
 
 
 def expire_snapshots(path: str, keep_last: int = 1,

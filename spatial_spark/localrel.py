@@ -10,9 +10,9 @@ Routing the same rows through a pandas frame plans a single in-memory
 Arrow relation instead; the values — and therefore every query result —
 are identical.
 
-``arrow_local_df`` is the shared helper for all small driver-side result
-or fixture frames (the entry file's ``_local_df`` is its gate-local
-twin).  It falls back to the row path on any conversion surprise, so it
+``arrow_local_df`` is the one helper for all small collected result
+or fixture frames, the gate fixtures in ``__spark_entry__`` included.
+It falls back to the row path on any conversion surprise, so it
 can never change semantics, only speed.
 """
 

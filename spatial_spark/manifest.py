@@ -58,8 +58,11 @@ import time
 import uuid
 from contextlib import contextmanager
 
+from .catalog import CORE_COLUMNS
+
 __all__ = ["Manifest", "ManifestLockTimeout", "ManifestConflict",
-           "LocalManifestIO", "HadoopManifestIO", "S3ManifestIO"]
+           "LocalManifestIO", "HadoopManifestIO", "S3ManifestIO",
+           "publish_staged", "footer_stats", "manifest_stats"]
 
 
 class ManifestLockTimeout(RuntimeError):
@@ -75,13 +78,14 @@ class ManifestConflict(RuntimeError):
 class LocalManifestIO:
     """POSIX implementation of the manifest filesystem interface.
 
-    The interface (duck-typed; HadoopManifestIO and the test fake
-    implement the same nine methods)::
+    The interface (duck-typed; HadoopManifestIO and S3ManifestIO
+    implement the same methods)::
 
         mkdirs(d)                ensure directory exists
         isdir(d) -> bool
         listdir(d) -> [name]     [] when the directory is missing
         read_text(p) -> str      raises FileNotFoundError when missing
+        read_bytes(p) -> bytes   raises FileNotFoundError when missing
         write_file(p, data)      plain overwrite (lock heartbeat only)
         create_excl(p, data) -> bool   atomic create-no-overwrite
         cas_rename(src, dst) -> bool   atomic move, FAILS if dst exists
@@ -89,10 +93,13 @@ class LocalManifestIO:
         remove(p) -> bool        idempotent delete
         remove_dir(p)            recursive delete, ignore-missing
 
-    The layer's file-mutating entry points (mutate/_rewrite/compact/
-    streaming admit) route their data-file moves/removes through this
-    same interface (ADVICE r8 medium: they used local os/shutil calls,
-    so the hadoop mode was only safe for the lock/manifest half).
+    Staged data files move into a table through ``publish_staged``,
+    the one mover: Layer add/mutate/rewrite/compact_range, the id
+    sidecar patch and the streaming admit pass the layer's manifest IO
+    (so the hadoop mode covers the data half too); export_delta,
+    optimize_delta and export_iceberg pass a ``LocalManifestIO()`` —
+    their data lives on the table's shared local path, only their logs
+    go through a LogStore.
     """
 
     def mkdirs(self, d: str) -> None:
@@ -350,6 +357,148 @@ class S3ManifestIO:
             self.client.delete(k)
 
 
+# ---- staged publish: the one mover + the one footer reader ----------
+#: at or above this many staged files (on LocalManifestIO, with a
+#: session at hand) the move + per-file stat pass runs as ONE Spark job
+#: instead of a serial local loop.  64 keeps small commits job-free; a
+#: 100k-file compaction runs ~400 tasks of 256 files each.
+_DISTRIBUTE_PUBLISH_AT = 64
+
+#: attribute ranges recorded per file (bounds the shard-doc size)
+_MAX_ATTR_STATS = 12
+
+
+def footer_stats(path: str) -> dict | None:
+    """One parquet footer walk: ``{"rows": N, "columns": [(name,
+    physical_type, lo, hi, nulls), ...]}``, one tuple per leaf column
+    in schema order.  ``lo``/``hi`` are the min/max over all row
+    groups, None unless every row group carries readable min/max;
+    ``nulls`` sums the row groups' null counts.  None when the footer
+    cannot be read (non-local path, not parquet) — stats are an
+    optimization, a file without them just never prunes."""
+    try:
+        import pyarrow.parquet as pq
+        md = pq.ParquetFile(path).metadata
+    except Exception:
+        return None
+    cols = []
+    for ci in range(md.num_columns):
+        los, his, nulls = [], [], 0
+        try:
+            for g in range(md.num_row_groups):
+                s = md.row_group(g).column(ci).statistics
+                if s is None or not s.has_min_max:
+                    los = []
+                    break
+                los.append(s.min)
+                his.append(s.max)
+                nulls += s.null_count or 0
+        except Exception:       # pyarrow: "Cannot extract statistics
+            los = []            # for type" (decimal, ...)
+        c = md.schema.column(ci)
+        cols.append((c.name, c.physical_type,
+                     min(los) if los else None,
+                     max(his) if los else None, nulls))
+    return {"rows": md.num_rows, "columns": cols}
+
+
+def manifest_stats(path: str) -> dict | None:
+    """The per-file stats a layer manifest shard records, translated
+    from ``footer_stats``: ``rows``; the zkey range (``zmin``/``zmax``);
+    the file envelope (``xmin``/``ymin`` mins, ``xmax``/``ymax``
+    maxes), which lets window planning prune whole shards from the
+    manifest list alone (the R-tree node envelopes at file granularity,
+    rtree/RTreeIndex.java:781-847); and ``amin:<col>``/``amax:<col>``
+    for the first 12 numeric non-core columns, so property predicates
+    prune the same way.  Numeric only: parquet string stats may be
+    writer-truncated, numeric min/max are exact.  None when the footer
+    is unreadable."""
+    fs = footer_stats(path)
+    if fs is None:
+        return None
+    rng = {name: (lo, hi) for name, _, lo, hi, _ in fs["columns"]}
+    st: dict = {"rows": fs["rows"]}
+    lo, hi = rng.get("zkey", (None, None))
+    if lo is not None:
+        st["zmin"], st["zmax"] = int(lo), int(hi)
+    for col in ("xmin", "ymin", "xmax", "ymax"):
+        lo, hi = rng.get(col, (None, None))
+        if lo is not None:
+            st[col] = float(hi if col.endswith("max") else lo)
+    n_attr = 0
+    for name, ptype, _, _, _ in fs["columns"]:
+        if (name in CORE_COLUMNS or not name.isidentifier()
+                or ptype not in ("INT32", "INT64", "FLOAT", "DOUBLE")):
+            continue
+        if n_attr >= _MAX_ATTR_STATS:
+            break
+        lo, hi = rng[name]
+        if lo is None:
+            continue
+        try:
+            lo, hi = float(lo), float(hi)
+        except (TypeError, ValueError):
+            continue
+        st[f"amin:{name}"] = lo
+        st[f"amax:{name}"] = hi
+        n_attr += 1
+    return st
+
+
+def _staged_parts(io, root: str, rel: str = "") -> list:
+    """Relative paths of the ``part-*.parquet`` files under ``root``,
+    descending into hive ``col=value`` partition dirs."""
+    out = []
+    for n in io.listdir(os.path.join(root, rel) if rel else root):
+        r = os.path.join(rel, n)
+        if n.startswith("part-") and n.endswith(".parquet"):
+            out.append(r)
+        elif "=" in n:
+            out.extend(_staged_parts(io, root, r))
+    return out
+
+
+def publish_staged(io, staging: str, dest: str, name=None, stat=None,
+                   spark=None) -> dict:
+    """Move a staged file set into a table — the ONE mover every table
+    write shares.
+
+    Lists the ``part-*.parquet`` files under ``staging`` (hive dirs
+    included) in sorted order and moves each through ``io`` to
+    ``dest/<name(rel, i)>`` (default: the same relative path; ``i`` is
+    the file's index in that order).  A move that fails raises OSError,
+    so no caller can commit a name that never landed.  Removes
+    ``staging`` and returns ``{dest-relative name: stat(dest path)}``
+    in name order (values None without ``stat``).
+
+    With ``spark`` given, ``io`` a plain ``LocalManifestIO`` and at
+    least ``_DISTRIBUTE_PUBLISH_AT`` files, the moves and ``stat``
+    calls run as one Spark job — the table path is shared storage, the
+    assumption every Spark parquet write makes; otherwise they run in a
+    local loop."""
+    moves = [(rel, name(rel, i) if name else rel) for i, rel in
+             enumerate(sorted(_staged_parts(io, staging)))]
+    for d in sorted({dest} | {os.path.dirname(os.path.join(dest, dst))
+                              for _, dst in moves}):
+        io.mkdirs(d)
+
+    def move(m):
+        src, dst = os.path.join(staging, m[0]), os.path.join(dest, m[1])
+        if not io.rename(src, dst):
+            raise OSError(f"publish_staged: move {src} -> {dst} failed")
+        return m[1], (stat(dst) if stat is not None else None)
+
+    if spark is not None and type(io) is LocalManifestIO \
+            and len(moves) >= _DISTRIBUTE_PUBLISH_AT:
+        out = (spark.sparkContext
+               .parallelize(moves, max(1, min(len(moves) // 16, 512)))
+               .map(move).collect())
+    else:
+        out = [move(m) for m in moves]
+    io.remove_dir(staging)
+    return dict(sorted(out))
+
+
 class _LockHandle:
     """What ``Manifest.lock`` yields: carries the writer token commits
     use to verify ownership at publish."""
@@ -425,14 +574,33 @@ class Manifest:
     def _shard_doc(self, name: str) -> dict:
         return json.loads(self.io.read_text(self.dir + "/" + name))
 
+    def _entries(self, doc: dict):
+        """``(store-relative name, per-file stats)`` pairs of a list
+        doc (v1 or v2), in the doc's name order ({} when no stats)."""
+        if "files" in doc:                       # format 1: no stats
+            yield from ((n, {}) for n in doc["files"])
+            return
+        names: list = []
+        stats: dict = {}
+        for sh in doc.get("shards", []):
+            sdoc = self._shard_doc(sh["name"])
+            names.extend(sdoc["files"])
+            stats.update(sdoc.get("file_stats") or {})
+        for n in sorted(names):                  # v1 contract: sorted
+            yield n, stats.get(n) or {}
+
     def _materialize(self, doc: dict) -> list:
         """Store-relative file names of a list doc (v1 or v2)."""
-        if "files" in doc:                       # format 1
-            return list(doc["files"])
-        out: list = []
-        for sh in doc.get("shards", []):
-            out.extend(self._shard_doc(sh["name"])["files"])
-        return sorted(out)                       # v1 contract: sorted
+        return [n for n, _ in self._entries(doc)]
+
+    def entries(self):
+        """The current snapshot's ``(store-relative name, per-file
+        stats)`` pairs in name order, or None when no manifest exists.
+        Only the manifest list is read here; shard docs are read when
+        the result is iterated, so ``entries() is None`` is a cheap
+        existence check."""
+        cur = self._newest()
+        return None if cur is None else self._entries(cur[1])
 
     def current(self):
         """``(epoch, [store-relative file names])`` of the newest

@@ -69,7 +69,7 @@ def stream_dedup_with_bloom(stream_df: DataFrame, out_path: str,
     pinned against a Python replay in tests."""
     import hashlib
 
-    from ..manifest import Manifest
+    from ..manifest import Manifest, publish_staged
     from ..operators.sketch import bloom_filter_new, build_bloom
 
     spark = stream_df.sparkSession
@@ -145,23 +145,16 @@ def stream_dedup_with_bloom(stream_df: DataFrame, out_path: str,
             new.write.mode("overwrite").parquet(tmp)
             # data moves via the manifest IO (ADVICE r8 medium: scheme'd
             # stores broke after the publish when these were os/shutil)
-            man.io.mkdirs(out_path)
-            moved = []
-            for p in man.io.listdir(tmp):
-                if p.startswith("part-"):
-                    name = f"part-e{epoch_id}-{p[5:]}"
-                    man.io.rename(os.path.join(tmp, p),
-                                  os.path.join(out_path, name))
-                    moved.append(name)
-            man.io.remove_dir(tmp)
+            moved = publish_staged(
+                man.io, tmp, out_path, spark=spark,
+                name=lambda rel, i: f"part-e{epoch_id}-{rel[5:]}")
             with man.lock() as lk:
                 epochs = dict(man.current_meta().get("stream_epochs", {}))
                 epochs[ckpt_key] = int(epoch_id)
                 # commit_delta dedups already-present names itself (the
                 # lo/hi shard ranges bound which docs it opens), so the
                 # admit never materializes the snapshot — O(changed)
-                man.commit_delta(add=sorted(moved),
-                                 lock_token=lk.token,
+                man.commit_delta(add=moved, lock_token=lk.token,
                                  meta={"stream_epochs": epochs})
             # 4. fold survivors into the bloom and publish (crash here
             # → next batch rebuilds from the store, see above)

@@ -571,14 +571,31 @@ def test_iceberg_append_relaxes_required(spark, tmp_path):
     assert got.filter("id IS NULL").count() == 1
 
 
-def test_iceberg_distributed_publish(spark, tmp_path):
+@pytest.mark.parametrize("fmt", ["iceberg", "delta"])
+def test_iceberg_distributed_publish(spark, tmp_path, fmt):
     """Above _DISTRIBUTE_PUBLISH_AT staged files the move+footer pass
-    runs as a Spark job; entries stay complete and sorted."""
-    from spatial_spark.io.delta import _DISTRIBUTE_PUBLISH_AT
+    (manifest.publish_staged, shared by both table formats) runs as a
+    Spark job; the committed file set stays complete, sorted and
+    carries per-file stats."""
+    from spatial_spark.io.delta import (delta_source, export_delta,
+                                        read_delta_log)
+    from spatial_spark.manifest import _DISTRIBUTE_PUBLISH_AT
     tab = str(tmp_path / "tbig")
     n = _DISTRIBUTE_PUBLISH_AT + 8
-    export_iceberg(spark.range(2000).repartition(n), tab)
-    meta = read_iceberg_meta(tab)
-    assert len(meta["files"]) == n
-    assert sum(f["records"] for f in meta["files"]) == 2000
-    assert iceberg_source(spark, tab).count() == 2000
+    frame = spark.range(2000).repartition(n)
+    if fmt == "iceberg":
+        export_iceberg(frame, tab)
+        files = read_iceberg_meta(tab)["files"]
+        records = [f["records"] for f in files]
+        count = iceberg_source(spark, tab).count()
+    else:
+        export_delta(frame, tab)
+        files = read_delta_log(tab)["files"]
+        records = [f["stats"]["numRecords"] for f in files]
+        count = delta_source(spark, tab).count()
+    paths = [f["path"] for f in files]
+    assert len(files) == n and paths == sorted(paths)
+    assert all(os.path.exists(p) for p in paths)
+    assert sum(records) == 2000 and count == 2000
+    # the staging dir is gone once its files are published
+    assert not glob.glob(os.path.join(tab, "_staging-*"))

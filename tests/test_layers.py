@@ -2141,3 +2141,81 @@ def test_register_all_idempotent_per_session(spark):
     assert spark.sql(
         f"SELECT st_area(st_geomfromtext('{wkt}')) v"
     ).collect()[0].v == 4.0
+
+
+def test_add_failed_data_move_raises_and_commits_nothing(ctx, spark,
+                                                         monkeypatch):
+    """A data-file move whose rename REPORTS failure (returns False
+    instead of raising) must fail Layer.add before the manifest
+    commits: committing the unmoved name would list a file that does
+    not exist, and every later read of the layer would fail."""
+    import os as _os
+
+    import pytest as _pytest
+
+    from spatial_spark.layer import Layer
+    from spatial_spark.manifest import LocalManifestIO, Manifest
+
+    class FlakyRenameIO(LocalManifestIO):
+        fails_left = 1
+
+        def rename(self, src, dst):
+            if self.fails_left and _os.path.basename(src).startswith(
+                    "part-"):
+                self.fails_left -= 1
+                return False
+            return super().rename(src, dst)
+
+    layer = ctx.create_point_layer("flaky_move", x="lon", y="lat")
+    layer.add(_grid_points(spark))
+    epochs = layer._manifest.epochs()
+    before = layer.df().count()
+    io = FlakyRenameIO()
+    monkeypatch.setattr(Layer, "_manifest", property(
+        lambda self: Manifest(self.path, io=io)))
+    more = _grid_points(spark, x0=20.0).selectExpr(
+        "id + 1000 AS id", "lon", "lat")
+    with _pytest.raises(OSError, match="publish_staged"):
+        layer.add(more, mode="append")
+    assert io.fails_left == 0
+    assert layer._manifest.epochs() == epochs
+    assert layer.df().count() == before
+    # the lock was released: the next append goes through
+    layer.add(more, mode="append")
+    assert layer.df().count() == before + 400
+
+
+def test_manifest_file_stats_match_parquet_values(ctx, spark):
+    """The per-file stats Layer.add records in the manifest are pinned
+    EXACTLY against values read back with pyarrow: rows, the zkey
+    range, the file envelope, and amin:/amax: for the first 12
+    numeric non-core columns in schema order (strings never)."""
+    import os as _os
+
+    import pyarrow.parquet as pq
+
+    attrs = [f"a{k}" for k in range(12)]
+    rows = [(i, 12.0 + (i % 25) * 0.01, 56.0 + (i // 25) * 0.01,
+             *[i * (k + 1) - 50 * k for k in range(12)], f"t{i}")
+            for i in range(300)]
+    schema = ("id long, lon double, lat double, "
+              + ", ".join(f"{a} long" for a in attrs) + ", tag string")
+    layer = ctx.create_point_layer("exact_stats", x="lon", y="lat")
+    layer.add(spark.createDataFrame(rows, schema))
+    entries = list(layer._manifest.entries())
+    assert len(entries) > 1
+    for name, st in entries:
+        t = pq.read_table(_os.path.join(layer.path, name))
+
+        def col(c):
+            return t.column(c).to_pylist()
+        want = {"rows": t.num_rows,
+                "zmin": min(col("zkey")), "zmax": max(col("zkey")),
+                "xmin": min(col("xmin")), "ymin": min(col("ymin")),
+                "xmax": max(col("xmax")), "ymax": max(col("ymax"))}
+        # lon, lat and a0..a9 fill the 12 attribute slots; a10, a11
+        # and the string tag get none
+        for c in ["lon", "lat"] + attrs[:10]:
+            want[f"amin:{c}"] = float(min(col(c)))
+            want[f"amax:{c}"] = float(max(col(c)))
+        assert st == want, name

@@ -13,7 +13,7 @@ Measured per scale:
 * optimize — optimize_delta wall compacting those n_files into 8
              (reads n_files, removes n_files, adds 8);
 * clone    — layer_to_delta wall over a synthetic manifest of
-             n_files entries (metadata-only: scandir + compose +
+             n_files entries (metadata-only: stat + compose +
              one commit).
 
 Structural asserts: the export commit carries exactly n_files adds;
@@ -46,19 +46,15 @@ SCALES = [16, 64, 256, 1024]
 
 class _FakeManifest:
     def __init__(self, names, file_stats):
-        self._doc = {"shards": [{"name": "s0"}]}
-        self._sdoc = {"files": names, "file_stats": file_stats}
+        self._entries = [(n, file_stats.get(n, {})) for n in sorted(names)]
 
-    def _newest(self):
-        return ("m0", self._doc)
-
-    def _shard_doc(self, name):
-        return self._sdoc
+    def entries(self):
+        return iter(self._entries)
 
 
 class _FakeLayer:
     """Duck-typed stand-in for Layer: layer_to_delta touches only
-    ``_manifest`` (``_newest``/``_shard_doc``), ``meta``, ``path``,
+    ``_manifest`` (``entries``), ``meta``, ``path``,
     ``name`` — synthesizing it keeps the clone leg data-free, the
     probe_delta_log discipline."""
 
