@@ -687,6 +687,10 @@ def _check_protocol(proto: dict) -> None:
             "parquet tables")
 
 
+#: the action columns of a checkpoint row, in replay order
+_ACTION_COLS = ("protocol", "metaData", "add", "remove", "txn")
+
+
 def _replay_actions(state: dict, actions) -> None:
     for a in actions:
         if "protocol" in a:
@@ -757,28 +761,10 @@ def read_delta_log(path: str, version: int | None = None,
         cp_file = os.path.join(log_dir,
                                f"{cpv:020d}.checkpoint.parquet")
         tbl = pq.read_table(_io.BytesIO(st.read_bytes(cp_file)))
-        cols = set(tbl.column_names)
-        rows = tbl.to_pylist()
-        for r in rows:
-            if "protocol" in cols and r.get("protocol"):
-                state["protocol"] = r["protocol"]
-                _check_protocol(r["protocol"])
-            if "metaData" in cols and r.get("metaData"):
-                state["metadata"] = r["metaData"]
-            if "add" in cols and r.get("add"):
-                ad = r["add"]
-                rel = unquote(ad["path"])
-                state["adds"][rel] = ad
-                state["tombstones"].pop(rel, None)
-            if "remove" in cols and r.get("remove"):
-                rel = unquote(r["remove"]["path"])
-                state["adds"].pop(rel, None)
-                state["tombstones"][rel] = r["remove"]
-            if "txn" in cols and r.get("txn"):
-                t = r["txn"]
-                state["txns"][t["appId"]] = max(
-                    t["version"],
-                    state["txns"].get(t["appId"], -1))
+        # one action per non-null column, in protocol/metaData/add/
+        # remove/txn order — a co-packed row replays column by column
+        _replay_actions(state, ({c: r[c]} for r in tbl.to_pylist()
+                                for c in _ACTION_COLS if r.get(c)))
         start = cpv + 1
     for v in range(start, version + 1):
         cf = _commit_path(path, v)
@@ -821,6 +807,29 @@ def read_delta_log(path: str, version: int | None = None,
             "tombstones": state["tombstones"]}
 
 
+def _in_partitions(caller: str, snap: dict, partitions: dict | None
+                   ) -> list:
+    """The snapshot's file entries whose partitionValues match
+    ``partitions={col: value}`` exactly (value compared as its string
+    form, the spec's storage); all files when ``partitions`` is empty.
+    Keys that are not partition columns raise — a typo would silently
+    match nothing."""
+    files = snap["files"]
+    if not partitions:
+        return files
+    part_cols = snap["metadata"]["partitionColumns"]
+    bad = set(partitions) - set(part_cols)
+    if bad:
+        raise ValueError(
+            f"{caller}: partitions= keys {sorted(bad)} are not partition "
+            f"columns {part_cols} — a typo would silently match nothing")
+    want = {k: (None if v is None else str(v))
+            for k, v in partitions.items()}
+    return [fe for fe in files
+            if all(fe["partitionValues"].get(k) == v
+                   for k, v in want.items())]
+
+
 def optimize_delta(spark, path: str, zorder_by: list | None = None,
                    target_files: int | None = None,
                    bits: int = 16,
@@ -856,23 +865,7 @@ def optimize_delta(spark, path: str, zorder_by: list | None = None,
     _check_writer_protocol(snap, "append")   # OPTIMIZE removes are
     # dataChange=false — legal on appendOnly, so the append rule
     part_cols = snap["metadata"]["partitionColumns"]
-    old_files = snap["files"]
-    if partitions:
-        if not part_cols:
-            raise ValueError(
-                "optimize_delta: partitions= given but the table is "
-                "unpartitioned")
-        bad = set(partitions) - set(part_cols)
-        if bad:
-            raise ValueError(
-                f"optimize_delta: partitions= keys {sorted(bad)} are "
-                f"not partition columns {part_cols} — a typo would "
-                "silently match nothing")
-        want = {k: (None if v is None else str(v))
-                for k, v in partitions.items()}
-        old_files = [fe for fe in old_files
-                     if all(fe["partitionValues"].get(k) == v
-                            for k, v in want.items())]
+    old_files = _in_partitions("optimize_delta", snap, partitions)
     if not old_files:
         return snap["version"]
     df = delta_source(spark, path, partitions=partitions)
@@ -1053,19 +1046,7 @@ def delta_source(spark, path: str, version: int | None = None,
     meta = snap["metadata"]
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     part_cols = meta["partitionColumns"]
-    files = snap["files"]
-    if partitions:
-        bad = set(partitions) - set(part_cols)
-        if bad:
-            raise ValueError(
-                f"delta_source: partitions= keys {sorted(bad)} are "
-                f"not partition columns {part_cols} — a typo would "
-                "silently read an empty table")
-        want = {k: (None if v is None else str(v))
-                for k, v in partitions.items()}
-        files = [fe for fe in files
-                 if all(fe["partitionValues"].get(k) == v
-                        for k, v in want.items())]
+    files = _in_partitions("delta_source", snap, partitions)
     pb = {k: v for k, v in (props or {}).items()
           if v is not None and (v[0] is not None or v[1] is not None)}
     if pb:

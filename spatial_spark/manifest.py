@@ -691,11 +691,11 @@ class Manifest:
     def files_at(self, epoch: int):
         """Absolute paths of snapshot ``epoch``'s data files.  Raises
         KeyError for a pruned/unknown epoch; note a RETAINED manifest
-        may still reference data files a later commit already removed —
-        time travel is only complete back to the last vacuum (gc() /
-        compact() reclaim orphans, commits unlink what they replace
-        after publishing).  The caller (Layer.df(epoch=...)) surfaces a
-        clear error when a referenced file is gone."""
+        may still reference data files a later vacuum()/gc() removed —
+        time travel is only complete back to the last vacuum (commits
+        never remove the files they replace).  The caller
+        (Layer.df(epoch=...)) surfaces a clear error when a referenced
+        file is gone."""
         path = self.dir + f"/manifest-{epoch}.json"
         try:
             doc = json.loads(self.io.read_text(path))
@@ -1182,8 +1182,7 @@ class Manifest:
 
     def snapshot_names(self) -> set:
         """Current data-file names in the store DIRECTORY (not the
-        manifest) — the before/after listing a locked writer uses to
-        learn which files a Spark job just wrote."""
+        manifest) — the listing a pre-manifest store is adopted from."""
         if not self.io.isdir(self.store):
             return set()
         return {f for f in self.io.listdir(self.store)

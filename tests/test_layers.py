@@ -1391,11 +1391,17 @@ def test_rewrite_carries_append_racing_the_first_lock(ctx, spark,
         "racing append was lost by the rewrite"
 
 
+def _ids(df) -> list:
+    return sorted(r["id"] for r in df.select("id").collect())
+
+
 def test_compact_range_incremental(ctx, spark):
     """compact_range re-clusters ONLY the files intersecting the zkey
     slice: untouched files stay byte-identical (same names), rows /
     search results / point lookups survive, the id sidecar stays valid
-    without a rebuild, and a disjoint slice is a no-op."""
+    without a rebuild, and a disjoint slice is a no-op.  Like compact(),
+    it drops the replaced files from the manifest, not from disk: the
+    pre-compaction epoch stays readable until vacuum() reclaims them."""
     import os
     from pyspark.sql import functions as F
     layer = ctx.create_point_layer("compact_slice", x="lon", y="lat",
@@ -1410,12 +1416,14 @@ def test_compact_range_incremental(ctx, spark):
     live = set(layer._manifest.current()[1])
     zmid = layer.df().agg(
         F.expr("percentile_approx(zkey, 0.5)")).first()[0]
+    e0 = layer.snapshots()[-1]
     res = layer.compact_range(0, int(zmid), target_files=1)
     assert 0 < res["files_compacted"] < res["files_before"]
     assert res["files_after"] < res["files_before"]
     after = set(layer._manifest.current()[1])
     untouched = live & after
     assert untouched, "files outside the slice must be preserved"
+    assert _ids(layer.df(epoch=e0)) == list(range(200))
     # everything still exact
     assert layer.count() == 200
     assert layer.within_distance(5.0, 7.0, 2500.0).count() == hits_before
@@ -1424,27 +1432,94 @@ def test_compact_range_incremental(ctx, spark):
     # a slice with no multi-file overlap is a no-op
     res2 = layer.compact_range(-10, -5)
     assert res2["files_compacted"] == 0
+    assert set(layer.vacuum()) == live - after
+    with pytest.raises(FileNotFoundError):
+        layer.df(epoch=e0)
+    assert layer.count() == 200
+
+
+def test_overwrite_keeps_replaced_snapshot_until_vacuum(ctx, spark):
+    """add(mode="overwrite") publishes through the same stage/commit
+    seam as every other write: the pre-overwrite snapshot stays
+    readable by time travel (its files are only dropped from the
+    manifest), stats are replaced, and vacuum() reclaims the replaced
+    files."""
+    import os
+    layer = ctx.create_point_layer("ow_tt", x="lon", y="lat")
+    layer.add(_grid_points(spark, n_side=4))             # ids 0..15
+    e0 = layer.snapshots()[-1]
+    old = set(layer._manifest.current()[1])
+    layer.add(spark.createDataFrame(
+        [(100 + i, 1.0 * i, 2.0) for i in range(5)],
+        "id long, lon double, lat double"), mode="overwrite")
+    assert _ids(layer.df()) == list(range(100, 105))
+    assert layer.count() == 5
+    assert layer.bbox() == (0.0, 2.0, 4.0, 2.0)
+    assert _ids(layer.df(epoch=e0)) == list(range(16))
+    assert not old & set(layer._manifest.current()[1])
+    assert set(layer.vacuum()) == old
+    assert not old & set(os.listdir(layer.path))
+    with pytest.raises(FileNotFoundError):
+        layer.df(epoch=e0)
+    assert _ids(layer.df()) == list(range(100, 105))
+
+
+def test_file_level_update_to_non_rect_clears_all_rects(ctx, spark):
+    """A file-level update that turns a rectangle into a triangle must
+    clear the write-time rect stat: otherwise Layer.join takes the
+    rectangle fast path and matches a point inside the old bbox but
+    outside the triangle."""
+    from spatial_spark.layer import ENC_WKT
+    sq = ctx.create_layer("rect_sq", encoder=ENC_WKT, id_index=True)
+    sq.add(spark.createDataFrame(
+        [(i, f"POLYGON (({i} 0, {i + 1} 0, {i + 1} 1, {i} 1, {i} 0))")
+         for i in range(5)], "id long, wkt string"), wkt="wkt")
+    assert sq.all_rects is True
+    pts = ctx.create_point_layer("rect_pt", x="lon", y="lat")
+    pts.add(spark.createDataFrame([(1, 2.9, 0.9)],
+                                  "id long, lon double, lat double"))
+    assert pts.join(sq, "within").count() == 1
+    sq.update([2], wkt="POLYGON ((2 0, 3 0, 2 1, 2 0))")
+    assert sq.all_rects is False
+    assert pts.join(sq, "within").count() == 0
+
+
+def test_compact_keeps_all_rects(ctx, spark):
+    """compact() re-observes the rect stat on its rewrite, so the
+    join's rectangle fast path survives compaction."""
+    from spatial_spark.layer import ENC_WKT
+    sq = ctx.create_layer("rect_compact", encoder=ENC_WKT)
+    for b in range(2):
+        sq.add(spark.createDataFrame(
+            [(b * 5 + i, f"POLYGON (({i} {b}, {i + 1} {b}, {i + 1} "
+              f"{b + 1}, {i} {b + 1}, {i} {b}))") for i in range(5)],
+            "id long, wkt string"), wkt="wkt")
+    assert sq.all_rects is True
+    sq.compact(target_files=1)
+    assert sq.all_rects is True
+    assert sq.count() == 10
 
 
 def test_concurrent_reader_never_sees_half_rewrite(ctx, spark):
     """r11 soak (VERDICT r10 ask #6): a reader that pins a manifest
     snapshot (df() resolves the file list at call time) and collects
-    WHILE a writer loops update/delete/compact commits must never
-    error on a vanished file and never observe a torn state — every
-    observed id-set is exactly the layer state after some prefix of
-    the writer's committed mutations (commits defer deletion, so a
+    WHILE a writer loops delete/append/overwrite/compact commits must
+    never error on a vanished file and never observe a torn state —
+    every observed id-set is exactly the layer state after some prefix
+    of the writer's committed mutations (commits defer deletion, so a
     pinned snapshot stays readable end to end)."""
     import threading
 
+    schema = "id long, lon double, lat double"
     layer = ctx.create_point_layer("soak", x="lon", y="lat")
     layer.add(spark.createDataFrame(
         [(i, float(i % 36) * 10 - 175, float(i % 17) * 10 - 83)
-         for i in range(200)],
-        "id long, lon double, lat double"))
+         for i in range(200)], schema))
 
     # writer: each round deletes one id and appends one id; valid
     # observable states are therefore indexed by how many rounds have
-    # committed (deletes 0..k-1, adds 200..199+k), plus a compact mid-way
+    # committed (deletes 0..k-1, adds 200..199+k), plus an overwrite
+    # with the same rows after round 1 and a compact mid-way
     ROUNDS = 6
     errors: list = []
     done = threading.Event()
@@ -1454,8 +1529,11 @@ def test_concurrent_reader_never_sees_half_rewrite(ctx, spark):
             for k in range(ROUNDS):
                 layer.delete([k])
                 layer.add(spark.createDataFrame(
-                    [(200 + k, 1.0 * k, -1.0 * k)],
-                    "id long, lon double, lat double"))
+                    [(200 + k, 1.0 * k, -1.0 * k)], schema))
+                if k == 1:
+                    same = layer.df().select("id", "lon", "lat").collect()
+                    layer.add(spark.createDataFrame(same, schema),
+                              mode="overwrite")
                 if k == ROUNDS // 2:
                     layer.compact(target_files=2)
         except Exception as e:          # pragma: no cover - fail loud
@@ -2063,7 +2141,7 @@ def test_cql_tier5_string_functions(ctx, spark):
 
 
 def test_attribute_stats_survive_compaction(ctx, spark):
-    """r13: compaction rewrites files through _footer_stats, so the
+    """r13: compaction re-reads the rewritten files' footer stats, so the
     amin:/amax: attribute-range keys must re-appear in the compacted
     shard aggregates and df_pruned(props=) must keep pruning with the
     SAME answers after compact()."""
