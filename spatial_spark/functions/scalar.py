@@ -75,14 +75,32 @@ def _uniform_batch(wkb: pd.Series):
     return coords.astype(np.float64, copy=False), base
 
 
+def _wkb_rows(hdr: bytes, coords: np.ndarray) -> list:
+    """Fixed-width little-endian WKB records: ``hdr`` followed by one
+    row of ``coords`` (n, k) as doubles, in one numpy pass."""
+    n, k = coords.shape
+    out = np.empty((n, len(hdr) + 8 * k), np.uint8)
+    out[:, :len(hdr)] = np.frombuffer(hdr, np.uint8)
+    out[:, len(hdr):] = np.ascontiguousarray(
+        coords, dtype="<f8").view(np.uint8).reshape(n, 8 * k)
+    return [r.tobytes() for r in out]
+
+
 def _points_to_wkb_rows(xs: np.ndarray, ys: np.ndarray) -> list:
     """Vectorized little-endian point-WKB assembly for a coordinate batch."""
-    n = len(xs)
-    out = np.empty((n, 21), np.uint8)
-    out[:, :5] = np.frombuffer(_PT_HDR, np.uint8)
-    pts = np.column_stack([xs, ys]).astype("<f8")
-    out[:, 5:] = pts.view(np.uint8).reshape(n, 16)
-    return [r.tobytes() for r in out]
+    return _wkb_rows(_PT_HDR, np.column_stack([xs, ys]))
+
+
+def _doubles(col: pd.Series) -> tuple:
+    """(float64 values, null mask) of a numeric UDF argument.  Only an
+    object column (decimal literals, NULL) can hold None; a double
+    column's nulls arrive as NaN, which the encoders keep as a value."""
+    if col.dtype != object:
+        return col.to_numpy(np.float64), np.zeros(len(col), dtype=bool)
+    null = np.fromiter((v is None for v in col), bool, len(col))
+    vals = np.array([np.nan if v is None else float(v) for v in col],
+                    dtype=np.float64)
+    return vals, null
 
 
 # ----------------------------------------------------------------- wrappers
@@ -283,26 +301,36 @@ def st_relate_matrix(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+_BOX_HDR = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
+
+
 @F.pandas_udf(T.BinaryType())
 def st_make_box(x0: pd.Series, y0: pd.Series,
                 x1: pd.Series, y1: pd.Series) -> pd.Series:
     """Rectangle polygon from corner columns — the fast path for
-    envelope-shaped geometry construction (no WKT round-trip)."""
-    out = []
-    for a, b, c, d in zip(x0, y0, x1, y1):
-        if a is None:
-            out.append(None)
-        else:
-            out.append(to_wkb(Geometry.box(float(a), float(b), float(c), float(d))))
+    envelope-shaped geometry construction (no WKT round-trip).  One
+    fixed-width encode, byte-identical to ``to_wkb(Geometry.box(...))``;
+    a None corner gives NULL."""
+    (a, na), (b, nb), (c, nc), (d, nd) = map(_doubles, (x0, y0, x1, y1))
+    out = np.array(_wkb_rows(_BOX_HDR, np.column_stack(
+        [a, b, c, b, c, d, a, d, a, b])), dtype=object)
+    # a NaN first corner never equals itself, so Geometry.box closes the
+    # ring with a sixth point: those rows keep the per-row encoder
+    for i in np.flatnonzero(np.isnan(a) | np.isnan(b)):
+        out[i] = to_wkb(Geometry.box(a[i], b[i], c[i], d[i]))
+    out[na | nb | nc | nd] = None
     return pd.Series(out)
 
 
 @F.pandas_udf(T.BinaryType())
 def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
-    out = []
-    for xv, yv in zip(x, y):
-        out.append(None if (xv is None or yv is None)
-                   else to_wkb(Geometry.point(float(xv), float(yv))))
+    """Point from coordinate columns, one fixed-width encode; a None
+    coordinate gives NULL, a NaN one POINT EMPTY (as ``to_wkb``)."""
+    (xs, nx), (ys, ny) = _doubles(x), _doubles(y)
+    empty = np.isnan(xs) | np.isnan(ys)
+    xs, ys = np.where(empty, np.nan, xs), np.where(empty, np.nan, ys)
+    out = np.array(_points_to_wkb_rows(xs, ys), dtype=object)
+    out[nx | ny] = None
     return pd.Series(out)
 
 

@@ -26,7 +26,10 @@ from .core import (
     GTYPE_GEOMETRY, GTYPE_LINESTRING, GTYPE_MULTILINESTRING, GTYPE_MULTIPOINT,
     GTYPE_MULTIPOLYGON, GTYPE_POINT, GTYPE_POLYGON, Geometry, envelopes_intersect,
 )
-from .algorithms import affine_transform, point_in_polygon, ring_signed_area
+from .algorithms import (
+    affine_transform, point_in_polygon, points_min_dist_to_boundary,
+    ring_signed_area,
+)
 
 _SNAP = 1e-9
 
@@ -854,7 +857,7 @@ def _as_rect(g: Geometry):
     the four envelope corners), else None.  A few-microsecond check
     that unlocks the rect∩rect fast path below — the dominant shape of
     window/tile/envelope workloads, where the general snap-rounded
-    overlay costs ~1 ms per pair."""
+    overlay costs ~2.1 ms per pair."""
     if g.gtype != GTYPE_POLYGON or len(g.data) != 1:
         return None
     r = np.asarray(g.data[0], dtype=np.float64)
@@ -900,6 +903,17 @@ def intersection(g1: Geometry, g2: Geometry) -> Geometry:
                     [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]],
                     dtype=np.float64)
                 return Geometry(GTYPE_POLYGON, [ring])
+        # convex∩rect (either order): four exact S-H half-plane cuts,
+        # CCW shell — ~0.3 ms against the overlay's ~2.1 ms.  Same
+        # scale limits as above; declines (→ overlay, keeping the exact
+        # degenerate semantics) for a non-convex or holed polygon, a
+        # polygon vertex within 4*_SNAP of a rectangle edge line, and a
+        # rectangle corner within 4*_SNAP of the polygon boundary.
+        if (ra is None) != (rb is None):
+            fast = (_convex_rect_intersection(g1, rb) if ra is None
+                    else _convex_rect_intersection(g2, ra))
+            if fast is not None:
+                return fast
         return _overlay(g1, g2, "intersection")
     if _is_poly(g2) and g1.gtype in (GTYPE_LINESTRING, GTYPE_MULTILINESTRING):
         return clip_line(g1, g2)
@@ -912,6 +926,44 @@ def intersection(g1: Geometry, g2: Geometry) -> Geometry:
     raise NotImplementedError(
         f"intersection({g1.type_name()},{g2.type_name()}) not supported by this kernel"
     )
+
+
+def _convex_rect_intersection(g: Geometry, rect) -> Geometry | None:
+    """``g`` ∩ ``rect`` for a single-ring convex polygon ``g`` and an
+    axis-aligned rectangle ``rect`` = (xmin, ymin, xmax, ymax): four
+    Sutherland–Hodgman half-plane cuts, the result shell made CCW.
+    None (→ overlay) outside the inputs the rect∩rect closed form takes
+    (|coord| ≤ 1e6, rectangle sides ≥ 1e-2), for a ring that is not
+    convex or has no area, and for contacts inside the kernel's snap
+    band: a vertex of ``g`` within 4·_SNAP of a rectangle edge line, or
+    a rectangle corner within 4·_SNAP of ``g``'s boundary."""
+    if g.gtype != GTYPE_POLYGON or len(g.data) != 1:
+        return None
+    x0, y0, x1, y1 = rect
+    ring = np.asarray(g.data[0], dtype=np.float64)
+    if len(ring) < 4 or not np.array_equal(ring[0], ring[-1]) \
+            or max(abs(x0), abs(y0), abs(x1), abs(y1)) > 1e6 \
+            or min(x1 - x0, y1 - y0) < 1e-2 \
+            or not np.abs(ring).max() <= 1e6:
+        return None
+    band = 4.0 * _SNAP
+    xs, ys = ring[:-1, 0], ring[:-1, 1]
+    if (np.minimum(np.abs(xs - x0), np.abs(xs - x1)) <= band).any() \
+            or (np.minimum(np.abs(ys - y0), np.abs(ys - y1)) <= band).any():
+        return None
+    if ring_signed_area(ring) == 0.0 or not _convex_ring(ring):
+        return None
+    corners = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
+    if (points_min_dist_to_boundary(corners, g) <= band).any():
+        return None
+    for axis, val, keep_low in ((0, x0, False), (0, x1, True),
+                                (1, y0, False), (1, y1, True)):
+        ring = _clip_ring_halfplane(ring, axis, val, keep_low)
+        if ring is None:
+            return Geometry(GTYPE_POLYGON, [])
+    if ring_signed_area(ring) < 0:
+        ring = ring[::-1].copy()
+    return Geometry(GTYPE_POLYGON, [ring])
 
 
 def _pt_on(p: Geometry, g: Geometry) -> bool:
@@ -1246,11 +1298,25 @@ def intersect_many(geoms: list) -> Geometry:
 
 
 def _convex_ring(ring: np.ndarray) -> bool:
-    """Closed ring convex (collinear runs allowed)?  One vectorized
-    cross-product sign sweep."""
-    v = np.diff(ring[:-1], axis=0, append=ring[1:2])
-    cross = v[:-1, 0] * v[1:, 1] - v[:-1, 1] * v[1:, 0]
-    return bool((cross >= -1e-12).all() or (cross <= 1e-12).all())
+    """Closed ring convex and simple (collinear runs allowed)?  One
+    vectorized sweep over the turn at every vertex, the closing one
+    included.  A turn counts as collinear when its cross product is
+    within 1e-12 of the two edge lengths' product — relative, so the
+    answer does not depend on the coordinate scale; a collinear turn
+    that doubles back is not convex.  The other turns must share one
+    sign and add up to one revolution (a pentagram turns one way twice
+    round)."""
+    v = ring[1:] - ring[:-1]
+    w = v[np.arange(1, len(v) + 1) % len(v)]
+    cross = v[:, 0] * w[:, 1] - v[:, 1] * w[:, 0]
+    dot = (v * w).sum(axis=1)
+    flat = np.abs(cross) <= 1e-12 * np.hypot(*v.T) * np.hypot(*w.T)
+    if (flat & (dot < 0)).any():
+        return False
+    turn = cross[~flat]
+    if not ((turn > 0).all() or (turn < 0).all()):
+        return False
+    return bool(abs(np.arctan2(cross, dot).sum()) < 3 * math.pi)
 
 
 def _clip_ring_halfplane(ring: np.ndarray, axis: int, val: float,
@@ -1261,21 +1327,22 @@ def _clip_ring_halfplane(ring: np.ndarray, axis: int, val: float,
     the caller's guarantee (a concave subject could need the output
     split into components, which S-H cannot represent)."""
     out: list = []
-    n = len(ring) - 1
-    for i in range(n):
-        p, q = ring[i], ring[i + 1]
-        pin = (p[axis] <= val) if keep_low else (p[axis] >= val)
-        qin = (q[axis] <= val) if keep_low else (q[axis] >= val)
-        if pin:
+    pts = ring.tolist()
+    side = ring[:, axis]
+    ins = ((side <= val) if keep_low else (side >= val)).tolist()
+    for i in range(len(pts) - 1):
+        p = pts[i]
+        if ins[i]:
             out.append(p)
-        if pin != qin:
+        if ins[i] != ins[i + 1]:
+            q = pts[i + 1]
             t = (val - p[axis]) / (q[axis] - p[axis])
-            c = p + t * (q - p)
+            c = [p[0] + t * (q[0] - p[0]), p[1] + t * (q[1] - p[1])]
             c[axis] = val
             out.append(c)
     if len(out) < 3:
         return None
-    arr = np.vstack(out + [out[0]])
+    arr = np.array(out + [out[0]], dtype=np.float64)
     keep = np.ones(len(arr), dtype=bool)
     keep[1:] = (np.abs(np.diff(arr, axis=0)).max(axis=1) > 0)
     arr = arr[keep]

@@ -29,9 +29,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..geom import from_wkb
+from ..geom import Geometry, from_wkb
 from ..geom import predicates as P
-from ..geom.algorithms import point_in_polygon, points_in_polygon_bulk
+from ..geom.algorithms import (
+    points_in_polygon_bulk, points_min_dist_to_boundary,
+)
 
 _PREDS = {
     "intersects": P.intersects, "contains": P.contains, "within": P.within,
@@ -227,8 +229,13 @@ def spatial_join(a: DataFrame, b: DataFrame, predicate: str = "intersects",
     if predicate not in _PREDS:
         raise ValueError(f"unknown predicate {predicate!r}")
 
-    # point-layer frames carry no geom column; synthesize st_point ONLY on
-    # the refine paths (the pure-column fast path must stay Python-free)
+    # point-layer frames carry no geom column.  An all-points a side is
+    # refined from its a_xmin/a_ymin and gets its a_geom (st_point) only
+    # on the rows the refine keeps; a geom-less b side, or an a side not
+    # known to be all points, gets st_point before the join.  The
+    # pure-column fast path stays Python-free either way.
+    a_xy = "geom" not in a.columns and bool(a_all_points)
+
     def ensure_geom(df):
         if "geom" in df.columns:
             return df
@@ -270,10 +277,12 @@ def spatial_join(a: DataFrame, b: DataFrame, predicate: str = "intersects",
                     & (F.col("a_ymin") >= F.col("b_ymin")) & (F.col("a_ymin") <= F.col("b_ymax"))
                 )
             return a_pref.join(F.broadcast(b_pref), exact)
-        a_pref, b_pref = pref(ensure_geom(a), "a_"), pref(ensure_geom(b), "b_")
+        a_pref = pref(a if a_xy else ensure_geom(a), "a_")
+        b_pref = pref(ensure_geom(b), "b_")
         joined = a_pref.join(F.broadcast(b_pref), bbox_pair)
     else:
-        a_pref, b_pref = pref(ensure_geom(a), "a_"), pref(ensure_geom(b), "b_")
+        a_pref = pref(a if a_xy else ensure_geom(a), "a_")
+        b_pref = pref(ensure_geom(b), "b_")
         if extent is not None:
             a_bbox = b_bbox = tuple(extent)
         else:
@@ -311,7 +320,12 @@ def spatial_join(a: DataFrame, b: DataFrame, predicate: str = "intersects",
         ref_cy = F.greatest(F.lit(0), F.least(F.lit(side - 1), ref_cy))
         joined = joined.filter(F.col("cell") == (ref_cy * side + ref_cx)).drop("cell")
 
-    return joined.filter(_refine_pred(predicate))
+    if not a_xy:
+        return joined.filter(_refine_pred(predicate))
+    # same columns, order and bytes as a join of the st_point-encoded frame
+    return joined.filter(_refine_xy_pred(predicate)).select(
+        *a_pref.columns, F.expr("st_point(a_xmin, a_ymin)").alias("a_geom"),
+        *b_pref.columns)
 
 
 def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
@@ -323,7 +337,8 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
     Two grouped fast paths (predicate ∈ within/intersects/coveredby and
     polygonal b):
 
-    * point-a rows: one ray-cast sweep per distinct b (as before);
+    * point-a rows: decoded to coordinates and refined by
+      _refine_xy_batch (one ray-cast sweep per distinct b);
     * line/polygon/multi-a rows (r5 verdict ask #3 — the parcels×zones
       shape): per distinct b, ONE bulk classification of every a-vertex
       against b (interior / within-snap-of-boundary / exterior), then
@@ -352,36 +367,26 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
         return g
 
     vec_ok = predicate in ("within", "intersects", "coveredby")
-    pt_groups: dict = {}
+    pt_rows: list = []
     gen_groups: dict = {}
     slow: list = []
     for i in range(len(a_geom)):
         ab, bb = a_geom.iloc[i], b_geom.iloc[i]
         if ab is None or bb is None:
             out[i] = None
-        elif vec_ok and b_gtype.iloc[i] in (3, 6):
-            if a_gtype.iloc[i] == 1:
-                pt_groups.setdefault(bytes(bb), []).append(i)
-            elif a_gtype.iloc[i] in (2, 3, 4, 5, 6):
-                gen_groups.setdefault(bytes(bb), []).append(i)
-            else:
-                slow.append(i)
+        elif a_gtype.iloc[i] == 1:
+            pt_rows.append(i)
+        elif vec_ok and b_gtype.iloc[i] in (3, 6) \
+                and a_gtype.iloc[i] in (2, 3, 4, 5, 6):
+            gen_groups.setdefault(bytes(bb), []).append(i)
         else:
             slow.append(i)
 
-    from ..geom.algorithms import points_min_dist_to_boundary
-
-    for bkey, idxs in pt_groups.items():
-        gb = geom_of(bkey)
-        pts = np.array([from_wkb(a_geom.iloc[i]).data for i in idxs])
-        inside = points_in_polygon_bulk(pts, gb)
-        on_bnd = points_min_dist_to_boundary(pts, gb) == 0.0
-        if predicate == "within":
-            res = inside & ~on_bnd
-        else:  # intersects / coveredby: boundary counts
-            res = inside | on_bnd
-        for j, i in enumerate(idxs):
-            out[i] = bool(res[j])
+    if pt_rows:
+        xy = np.array([from_wkb(a_geom.iloc[i]).data for i in pt_rows])
+        out[pt_rows] = _refine_xy_batch(
+            predicate, xy, b_geom.iloc[pt_rows], b_gtype.iloc[pt_rows],
+            stats).tolist()
 
     for bkey, idxs in gen_groups.items():
         gb = geom_of(bkey)
@@ -453,8 +458,44 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
         stats["slow"] = stats.get("slow", 0) + len(slow)
         stats["grouped"] = stats.get("grouped", 0) + sum(
             len(v) for v in gen_groups.values())
-        stats["point_grouped"] = stats.get("point_grouped", 0) + sum(
-            len(v) for v in pt_groups.values())
+    return out
+
+
+def _refine_xy_batch(predicate: str, xy: np.ndarray, b_geom: pd.Series,
+                     b_gtype: pd.Series, stats: dict | None = None
+                     ) -> np.ndarray:
+    """_refine_batch for an a side of points given by their coordinates
+    ``xy`` (n, 2), no a-side WKB.  Rows are grouped by b bytes in one
+    hash pass and each distinct b is decoded once.  For within /
+    intersects / coveredby against a polygonal b, one ray-cast sweep per
+    b, boundary-exact through the zero-distance test; otherwise the
+    kernel predicate.  A point with a NaN coordinate is refined as POINT
+    EMPTY, as st_point encodes it."""
+    fn = _PREDS[predicate]
+    out = np.empty(len(xy), dtype=object)
+    xy = np.where(np.isnan(xy).any(axis=1, keepdims=True), np.nan, xy)
+    codes, uniq = pd.factorize(b_geom)
+    geoms = [from_wkb(bytes(b)) for b in uniq]
+    known = codes >= 0
+    vec = (known & np.isin(b_gtype.to_numpy(), (3, 6))
+           if predicate in ("within", "intersects", "coveredby")
+           else np.zeros_like(known))
+    rows = np.flatnonzero(vec)
+    rows = rows[np.argsort(codes[rows], kind="stable")]
+    for idxs in np.split(rows, np.flatnonzero(np.diff(codes[rows])) + 1):
+        if not len(idxs):
+            continue
+        pts, gb = xy[idxs], geoms[codes[idxs[0]]]
+        inside = points_in_polygon_bulk(pts, gb)
+        on_bnd = points_min_dist_to_boundary(pts, gb) == 0.0
+        res = inside & ~on_bnd if predicate == "within" else inside | on_bnd
+        out[idxs] = res.tolist()
+    slow = np.flatnonzero(known & ~vec)
+    for i in slow:
+        out[i] = fn(Geometry.point(xy[i, 0], xy[i, 1]), geoms[codes[i]])
+    if stats is not None:
+        stats["slow"] = stats.get("slow", 0) + len(slow)
+        stats["point_grouped"] = stats.get("point_grouped", 0) + len(rows)
     return out
 
 
@@ -466,6 +507,17 @@ def _refine_pred(predicate: str):
             _refine_batch(predicate, a_geom, a_gtype, b_geom, b_gtype))
 
     return refine(F.col("a_geom"), F.col("a_gtype"), F.col("b_geom"), F.col("b_gtype"))
+
+
+def _refine_xy_pred(predicate: str):
+    @F.pandas_udf(T.BooleanType())
+    def refine(a_x: pd.Series, a_y: pd.Series,
+               b_geom: pd.Series, b_gtype: pd.Series) -> pd.Series:
+        xy = np.column_stack([a_x.to_numpy(np.float64),
+                              a_y.to_numpy(np.float64)])
+        return pd.Series(_refine_xy_batch(predicate, xy, b_geom, b_gtype))
+
+    return refine(F.col("a_xmin"), F.col("a_ymin"), F.col("b_geom"), F.col("b_gtype"))
 
 
 def within_distance_join(a: DataFrame, b: DataFrame, km: float) -> DataFrame:

@@ -381,6 +381,34 @@ def test_batched_centroid_bit_identical_to_kernel():
         assert out == to_wkb(centroid(from_wkb(b))), from_wkb(b)
 
 
+def test_convex_ring_is_scale_free():
+    """_convex_ring decides by turn direction relative to edge lengths:
+    a U at 1e-7 scale (about 1 cm in degrees) is as concave as at scale
+    1, so subdivide cuts both the same way."""
+    import numpy as np
+    from spatial_spark.geom import Geometry
+    from spatial_spark.geom import algorithms as alg
+    from spatial_spark.geom.algorithms import densify
+    from spatial_spark.geom.clip import _convex_ring, subdivide
+
+    u = np.array([(0, 0), (3, 0), (3, 10), (2, 10), (2, 1), (1, 1), (1, 10),
+                  (0, 10), (0, 0)], dtype=np.float64)
+    assert not _convex_ring(u) and not _convex_ring(u * 1e-7)
+    assert _convex_ring(np.array([(0, 0), (1, 0), (2, 0), (2, 1), (0, 1),
+                                  (0, 0)], dtype=np.float64) * 1e-7)
+    big = subdivide(densify(Geometry.polygon(u), 2.0), max_vertices=16)
+    small = subdivide(densify(Geometry.polygon(u * 1e-7), 2e-7),
+                      max_vertices=16)
+    assert len(small) == len(big)
+
+    def key(parts, s):
+        return sorted((round(alg.area(p) / s / s, 9),
+                       tuple(np.round(np.array(p.envelope()) / s, 9)))
+                      for p in parts)
+
+    assert key(small, 1e-7) == key(big, 1.0)
+
+
 def test_subdivide_tiles_exactly():
     """subdivide: every piece under the vertex cap, areas sum to the
     original, pieces pairwise interior-disjoint — square, L-shape, and

@@ -297,6 +297,31 @@ def test_layer_join_rect_fast_path_from_stats(ctx, spark, point_layer):
     assert n > 0
 
 
+def test_point_join_encodes_geom_only_above_refine(ctx, spark, point_layer):
+    """A point layer joined to polygons is refined from its coordinates:
+    st_point is evaluated only above the refine filter, so it encodes
+    the kept rows and never the candidates — on both branches."""
+    tri = spark.createDataFrame(
+        [(1, "POLYGON ((0 0, 40 0, 20 30, 0 0))"),
+         (2, "POLYGON ((-60 -20, -10 -20, -35 20, -60 -20))")],
+        "id long, wkt string")
+    tl = ctx.create_wkt_layer("plan_refine_tri")
+    tl.add(tri, wkt="wkt")
+    for threshold in (10000, 0):
+        lines = _plan(point_layer.join(tl, "within",
+                                       broadcast_threshold=threshold)
+                      ).splitlines()
+        enc = [i for i, s in enumerate(lines) if "st_point(" in s]
+        refine = [i for i, s in enumerate(lines)
+                  if "ArrowEvalPython" in s and "refine(" in s]
+        filt = [i for i in range(len(lines))
+                if "Filter pythonUDF" in lines[i]]
+        assert len(enc) == 1 and len(refine) == 1 and filt, lines
+        assert enc[0] < filt[0] < refine[0]
+        assert "a_xmin" in lines[refine[0]] and "a_geom" not in \
+            lines[refine[0]]
+
+
 def test_layer_all_rects_false_for_non_rects(ctx, spark):
     tri = spark.createDataFrame(
         [(1, "POLYGON ((0 0, 10 0, 5 8, 0 0))")], "id long, wkt string")
