@@ -520,7 +520,8 @@ def test_point_join_from_coordinates_matches_wkb_join(ctx, spark, threshold):
     bytes equal the join of the same points carrying a WKB geom column.
     Points lie inside, outside, on edges and on vertices; predicates are
     the vectorized three plus touches, b holds polygons and a line; both
-    the broadcast and the grid (threshold 0) branch."""
+    the broadcast and the grid (threshold 0) branch, with and without the
+    a_all_points hint."""
     register_all(spark)
     pts = [(i, x / 2.0, y / 2.0)
            for i, (x, y) in enumerate((x, y) for x in range(-2, 11)
@@ -540,14 +541,16 @@ def test_point_join_from_coordinates_matches_wkb_join(ctx, spark, threshold):
     assert "geom" not in a_xy.columns
     a_wkb = a_xy.withColumn("geom", F.expr("st_point(xmin, ymin)"))
     for pred in ("within", "intersects", "coveredby", "touches"):
-        got = spatial_join(a_xy, gl.df(), pred, a_all_points=True,
-                           broadcast_threshold=threshold)
         want = spatial_join(a_wkb, gl.df(), pred, a_all_points=True,
                             broadcast_threshold=threshold)
-        assert got.columns == want.columns
-        g = {(r["a_id"], r["b_id"]): tuple(r) for r in got.collect()}
         w = {(r["a_id"], r["b_id"]): tuple(r) for r in want.collect()}
-        assert g == w and len(w) > 0, pred
+        assert len(w) > 0, pred
+        for hint in (True, None):
+            got = spatial_join(a_xy, gl.df(), pred, a_all_points=hint,
+                               broadcast_threshold=threshold)
+            assert got.columns == want.columns
+            g = {(r["a_id"], r["b_id"]): tuple(r) for r in got.collect()}
+            assert g == w, (pred, hint)
 
 
 def test_point_refine_from_coordinates_matches_exact_kernel():

@@ -300,17 +300,21 @@ def test_layer_join_rect_fast_path_from_stats(ctx, spark, point_layer):
 def test_point_join_encodes_geom_only_above_refine(ctx, spark, point_layer):
     """A point layer joined to polygons is refined from its coordinates:
     st_point is evaluated only above the refine filter, so it encodes
-    the kept rows and never the candidates — on both branches."""
+    the kept rows and never the candidates — on both branches, through
+    Layer.join and through a bare spatial_join without hints."""
+    from spatial_spark.operators import spatial_join
     tri = spark.createDataFrame(
         [(1, "POLYGON ((0 0, 40 0, 20 30, 0 0))"),
          (2, "POLYGON ((-60 -20, -10 -20, -35 20, -60 -20))")],
         "id long, wkt string")
     tl = ctx.create_wkt_layer("plan_refine_tri")
     tl.add(tri, wkt="wkt")
-    for threshold in (10000, 0):
-        lines = _plan(point_layer.join(tl, "within",
-                                       broadcast_threshold=threshold)
-                      ).splitlines()
+    joins = [j for threshold in (10000, 0) for j in (
+        point_layer.join(tl, "within", broadcast_threshold=threshold),
+        spatial_join(point_layer.df(), tl.df(), "within",
+                     broadcast_threshold=threshold))]
+    for joined in joins:
+        lines = _plan(joined).splitlines()
         enc = [i for i, s in enumerate(lines) if "st_point(" in s]
         refine = [i for i, s in enumerate(lines)
                   if "ArrowEvalPython" in s and "refine(" in s]
