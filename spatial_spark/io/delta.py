@@ -48,13 +48,20 @@ through a pluggable ``LogStore`` that wraps the layer manifest's IO
 interface (``LocalManifestIO`` default; ``S3ManifestIO``/
 ``HadoopManifestIO`` or a test fake drop in — Delta's own spec
 delegates exactly this to a LogStore, and on S3 semantics
-``create_excl`` IS the conditional PUT).  DATA files are written by
-Spark into a staging dir and moved into the table by
-``manifest.publish_staged`` — the one mover every table write
-shares — over a ``LocalManifestIO()``, not the LogStore's IO: on a
-cluster the table path is shared storage (the same assumption every
-Spark parquet write makes).  Per-file stats are a translation of
-``manifest.footer_stats``, the one footer reader.
+``create_excl`` IS the conditional PUT).  Every commit of both table
+formats (export_delta, optimize_delta, the Iceberg leg's snapshot and
+snapshot-expiry commits) runs under ONE conflict policy,
+``_commit_or_rebase``: publish through the LogStore's put-if-absent; a
+lost append re-reads the winner, re-runs its format's one
+compatibility check and retries (up to 20 times); any other lost
+commit raises "concurrent commit ... re-run".  DATA files are written
+by ``_write_staged`` — Spark into a staging dir, then
+``manifest.publish_staged``, the one mover every table write shares —
+over a ``LocalManifestIO()``, not the LogStore's IO: on a cluster the
+table path is shared storage (the same assumption every Spark parquet
+write makes).  Per-file stats are a translation of
+``manifest.footer_stats``, the one footer reader; ``props=`` file
+pruning is ``manifest.range_filter``, the rule the layer read shares.
 100 TB shape: one commit is O(changed files); planning reads the log
 tail + one checkpoint, never lists the store; file pruning happens on
 driver-held metadata exactly like the layer manifest's files_where.
@@ -68,7 +75,8 @@ import time
 import uuid
 from urllib.parse import quote, unquote
 
-from ..manifest import LocalManifestIO, footer_stats, publish_staged
+from ..manifest import (LocalManifestIO, footer_stats, publish_staged,
+                        range_filter)
 
 __all__ = ["export_delta", "layer_to_delta", "layer_from_delta",
            "read_delta_log", "delta_source", "write_delta_checkpoint",
@@ -89,6 +97,33 @@ class CommitConflict(FileExistsError):
     """The put-if-absent commit lost: another writer already published
     this version.  Subclasses FileExistsError so the optimistic-
     concurrency retry loop catches either form."""
+
+
+def _commit_or_rebase(caller: str, publish, rebase=None):
+    """The one optimistic-concurrency policy of both table formats.
+    ``publish()`` makes one put-if-absent attempt through the LogStore
+    and returns the write's result; losing the race raises
+    FileExistsError (CommitConflict is one).  ``rebase()`` then
+    re-reads the winner's snapshot, re-checks it and readies the next
+    attempt: it returns None to retry, or a result to end the loop
+    with (an idempotent write that already landed).  Without a
+    ``rebase`` a lost put raises — the write was computed against a
+    snapshot that is now stale (an overwrite's removes, a compaction,
+    an expiry), so it must be re-run, never rebased."""
+    for _attempt in range(20):
+        try:
+            return publish()
+        except FileExistsError as e:
+            if rebase is None:
+                raise RuntimeError(
+                    f"{caller}: concurrent commit at {e} — computed "
+                    "against a stale snapshot; re-run")
+            done = rebase()
+            if done is not None:
+                return done
+    raise RuntimeError(
+        f"{caller}: lost the commit race 20 times — pathological "
+        "contention; serialize writers")
 
 
 class LogStore:
@@ -270,6 +305,25 @@ def _partition_values(rel_path: str, partition_cols: list) -> dict:
     return {c: vals.get(c) for c in partition_cols}
 
 
+def _write_staged(df, table_dir: str, dest: str, partition_by: list,
+                  name=None) -> dict:
+    """The one staged write of export_delta, optimize_delta and
+    export_iceberg: Spark's parquet writer lands ``df`` in a unique
+    ``_staging-*`` dir under ``table_dir`` (hive layout under
+    ``partition_by``), then ``manifest.publish_staged`` moves the files
+    into ``dest`` (``name``: its rename rule).  The commit's file list
+    is exactly the staging listing, never a directory diff that could
+    claim a concurrent writer's files.  Returns ``{dest-relative name:
+    _file_info}``."""
+    staging = os.path.join(table_dir, f"_staging-{uuid.uuid4().hex[:12]}")
+    writer = df.write.mode("append")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(staging)
+    return publish_staged(LocalManifestIO(), staging, dest, name=name,
+                          stat=_file_info, spark=df.sparkSession)
+
+
 def _add_actions(published: dict, partition_cols: list,
                  data_change: bool) -> list:
     """``add`` actions, in path order, for the files a
@@ -315,41 +369,36 @@ def export_delta(df, path: str, mode: str = "overwrite",
         raise ValueError(f"export_delta: mode {mode!r} not in "
                          "('overwrite', 'append')")
     st = _store(store)
-    snap = None
-    if st.isdir(os.path.join(path, _LOG)):
-        snap = read_delta_log(path, store=st)
-    if snap is not None:
-        _check_writer_protocol(snap, mode)
-    if txn is not None and snap is not None and \
-            snap["txns"].get(str(txn[0]), -1) >= int(txn[1]):
-        return snap["version"]          # idempotent replay: no-op
-    version = 0 if snap is None else snap["version"] + 1
     schema_string = df.schema.json()
-    if snap is not None:
+
+    def replayed(snap) -> bool:
+        """Check ``snap`` accepts this write (the first read and every
+        winner's on rebase); True when ``txn`` already landed."""
+        _check_writer_protocol(snap, mode)
+        if txn is not None and \
+                snap["txns"].get(str(txn[0]), -1) >= int(txn[1]):
+            return True
         if mode == "append" and \
                 snap["metadata"]["schemaString"] != schema_string:
             raise ValueError(
                 "export_delta: append schema differs from the table's "
                 "— overwrite or align the frame")
         if snap["metadata"]["partitionColumns"] != partition_by:
+            # hive-layout adds on a differently-partitioned table
+            # read back as all-NULL partition columns
             raise ValueError(
-                "export_delta: partition columns differ from the "
-                f"table's {snap['metadata']['partitionColumns']}")
+                "export_delta: the table has different partition "
+                f"columns {snap['metadata']['partitionColumns']}")
+        return False
 
-    # data files land in a unique staging dir first, then move into
-    # the table root — so THIS commit's file list is exactly the
-    # staging listing, never a directory diff that could claim a
-    # concurrent writer's files (the commit itself is already
-    # race-safe via the put-if-absent version file)
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex[:12]}")
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    new_adds = _add_actions(
-        publish_staged(LocalManifestIO(), staging, path, stat=_file_info,
-                       spark=df.sparkSession),
-        partition_by, True)
+    snap = None
+    if st.isdir(os.path.join(path, _LOG)):
+        snap = read_delta_log(path, store=st)
+        if replayed(snap):
+            return snap["version"]      # idempotent replay: no-op
+    version = 0 if snap is None else snap["version"] + 1
+    new_adds = _add_actions(_write_staged(df, path, path, partition_by),
+                            partition_by, True)
 
     now_ms = int(time.time() * 1000)
     actions: list = [{"commitInfo": {
@@ -386,49 +435,29 @@ def export_delta(df, path: str, mode: str = "overwrite",
         actions.append({"txn": {"appId": str(txn[0]),
                                 "version": int(txn[1]),
                                 "lastUpdated": now_ms}})
-    # the spec's optimistic concurrency: losing the put-if-absent race
-    # means re-reading the snapshot and retrying at N+1.  Blind-append
-    # commits are always safe to rebase (our adds are disjoint files);
-    # an overwrite's semantics were computed against a snapshot that
-    # is now stale — whether that snapshot existed (removes miss the
-    # winner's files) or not (create-overwrite would silently degrade
-    # to an unvalidated append onto the winner's table) — so EVERY
-    # lost overwrite surfaces the conflict instead of rebasing
-    for _attempt in range(20):
-        try:
-            _write_commit(path, version, actions, store=st)
-            return version
-        except FileExistsError:
-            if mode == "overwrite":
-                raise RuntimeError(
-                    f"export_delta: concurrent commit at version "
-                    f"{version} — overwrite computed against a stale "
-                    "snapshot; re-run")
-            snap2 = read_delta_log(path, store=st)
-            if mode == "append" and \
-                    snap2["metadata"]["schemaString"] != schema_string:
-                raise ValueError(
-                    "export_delta: concurrent writer created the "
-                    "table with a different schema")
-            if snap2["metadata"]["partitionColumns"] != partition_by:
-                # same rule as the initial-path check: rebasing
-                # hive-layout adds onto a differently-partitioned
-                # winner reads back as all-NULL partition columns
-                raise ValueError(
-                    "export_delta: concurrent writer created the "
-                    "table with different partition columns "
-                    f"{snap2['metadata']['partitionColumns']}")
-            _check_writer_protocol(snap2, mode)
-            if txn is not None and \
-                    snap2["txns"].get(str(txn[0]), -1) >= int(txn[1]):
-                return snap2["version"]    # our txn landed elsewhere
-            version = snap2["version"] + 1
-            # a concurrent writer owns the table metadata now
-            actions = [a for a in actions
-                       if "protocol" not in a and "metaData" not in a]
-    raise RuntimeError(
-        "export_delta: lost the commit race 20 times — pathological "
-        "contention; serialize writers")
+
+    def publish():
+        _write_commit(path, version, actions, store=st)
+        return version
+
+    def rebase():
+        nonlocal version, actions
+        snap2 = read_delta_log(path, store=st)
+        if replayed(snap2):
+            return snap2["version"]     # our txn landed elsewhere
+        version = snap2["version"] + 1
+        # a concurrent writer owns the table metadata now
+        actions = [a for a in actions
+                   if "protocol" not in a and "metaData" not in a]
+
+    # a blind append is always safe to rebase (its adds are disjoint
+    # files); an overwrite was computed against a snapshot that is now
+    # stale — whether that snapshot existed (removes miss the winner's
+    # files) or not (create-overwrite would silently degrade to an
+    # unvalidated append onto the winner's table) — so EVERY lost
+    # overwrite surfaces the conflict instead of rebasing
+    return _commit_or_rebase("export_delta", publish,
+                             None if mode == "overwrite" else rebase)
 
 
 def layer_to_delta(layer, out_dir: str, name: str | None = None,
@@ -917,15 +946,8 @@ def optimize_delta(spark, path: str, zorder_by: list | None = None,
         df = df.coalesce(n_out) if n_out < len(old_files) \
             else df.repartition(n_out)
 
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex[:12]}")
-    writer = df.write.mode("append")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
-    new_adds = _add_actions(
-        publish_staged(LocalManifestIO(), staging, path, stat=_file_info,
-                       spark=spark),
-        part_cols, False)
+    new_adds = _add_actions(_write_staged(df, path, path, part_cols),
+                            part_cols, False)
 
     now_ms = int(time.time() * 1000)
     actions: list = [{"commitInfo": {
@@ -941,15 +963,13 @@ def optimize_delta(spark, path: str, zorder_by: list | None = None,
             "dataChange": False}})
     actions.extend({"add": add} for add in new_adds)
     version = snap["version"] + 1
-    try:
+
+    def publish():
         _write_commit(path, version, actions, store=st)
-    except FileExistsError:
-        # the remove set is stale — surface it (the writer should
-        # re-run; compaction is always safe to retry from scratch)
-        raise RuntimeError(
-            f"optimize_delta: concurrent commit at version {version} "
-            "— re-run against the new snapshot")
-    return version
+        return version
+    # a lost put leaves the remove set stale: re-run (compaction is
+    # always safe to retry from scratch)
+    return _commit_or_rebase("optimize_delta", publish)
 
 
 def vacuum_delta(path: str, clean_staging: bool = False,
@@ -1046,21 +1066,14 @@ def delta_source(spark, path: str, version: int | None = None,
     meta = snap["metadata"]
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     part_cols = meta["partitionColumns"]
-    files = _in_partitions("delta_source", snap, partitions)
-    pb = {k: v for k, v in (props or {}).items()
-          if v is not None and (v[0] is not None or v[1] is not None)}
-    if pb:
-        def keep(fe):
-            st = fe["stats"] or {}
-            mins = st.get("minValues") or {}
-            maxs = st.get("maxValues") or {}
-            for col, (lo, hi) in pb.items():
-                if hi is not None and col in mins and mins[col] > hi:
-                    return False
-                if lo is not None and col in maxs and maxs[col] < lo:
-                    return False
-            return True
-        files = [fe for fe in files if keep(fe)]
+
+    def bounds(fe, col):
+        st = fe["stats"] or {}
+        return ((st.get("minValues") or {}).get(col),
+                (st.get("maxValues") or {}).get(col))
+    keep = range_filter(props, bounds)
+    files = [fe for fe in _in_partitions("delta_source", snap, partitions)
+             if keep(fe)]
     if not files:
         return spark.createDataFrame([], schema)
     paths = [fe["path"] for fe in files]

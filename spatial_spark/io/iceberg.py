@@ -46,13 +46,18 @@ Deliberate seams (loud, spec-cited):
 * Avro files are null-codec (spec-required readable everywhere).
 
 Storage seam: metadata (metadata.json, manifest lists, manifests,
-the version hint) goes through the same ``LogStore`` as the Delta leg.
-Data files are written by Spark into a staging dir and moved into
-``data/`` under stamped names by ``manifest.publish_staged`` — the one
-mover every table write shares — over a ``LocalManifestIO()``, not the
-LogStore's IO (shared table storage, as for every Spark parquet
+the version hint) goes through the same ``LogStore`` as the Delta leg,
+and every metadata-version commit (snapshot, expiry) runs under the
+Delta leg's one conflict policy, ``delta._commit_or_rebase``: a lost
+append re-reads the winner by listing, re-runs ``_check_table`` and
+retries; a lost overwrite or expiry raises.  Data files are written by
+the Delta leg's ``_write_staged`` (Spark into a staging dir, then
+``manifest.publish_staged``, the one mover every table write shares,
+into ``data/`` under stamped names) over a ``LocalManifestIO()``, not
+the LogStore's IO (shared table storage, as for every Spark parquet
 write); their bounds translate the Delta leg's stats over
-``manifest.footer_stats``, the one footer reader.
+``manifest.footer_stats``, the one footer reader, and ``props=``
+pruning is ``manifest.range_filter``.
 
 100 TB shape: commits are O(changed files) like the Delta leg; the
 manifest list keeps planning at one small Avro read + one Avro per
@@ -68,10 +73,11 @@ import struct
 import time
 import uuid
 
-from ..manifest import LocalManifestIO, publish_staged
+from ..manifest import range_filter
 from .avrofile import read_avro, write_avro
-from .delta import (LogStore, _file_info, _layer_files, _layer_from_frame,
-                    _partition_values, _store, CommitConflict)
+from .delta import (LogStore, _commit_or_rebase, _layer_files,
+                    _layer_from_frame, _partition_values, _store,
+                    _write_staged)
 
 _FMT = 2
 _INITIAL_SPEC_ID = 0
@@ -483,6 +489,31 @@ def _snapshot_id() -> int:
     return uuid.uuid4().int & ((1 << 62) - 1)
 
 
+def _check_table(meta: dict, mode: str, ice_schema: dict,
+                 partition_by: list) -> dict:
+    """The one compatibility check of an Iceberg write, run against the
+    metadata it first read and again against a winner's on rebase: an
+    append's column names and types must match the table's current
+    schema, and the partition columns must match its default spec's.
+    Returns the current schema."""
+    cur = next(s for s in meta["schemas"]
+               if s["schema-id"] == meta["current-schema-id"])
+    if mode == "append" and \
+            [(f["name"], f["type"]) for f in cur["fields"]] != \
+            [(f["name"], f["type"]) for f in ice_schema["fields"]]:
+        raise ValueError(
+            "export_iceberg: append schema differs from the table's "
+            "— overwrite or align the frame")
+    spec = next(s for s in meta["partition-specs"]
+                if s["spec-id"] == meta["default-spec-id"])
+    cols = [f["name"] for f in spec["fields"]]
+    if cols != partition_by:
+        raise ValueError(
+            f"export_iceberg: partition columns differ from the table's "
+            f"{cols}")
+    return cur
+
+
 def export_iceberg(df, path: str, mode: str = "overwrite",
                    name: str | None = None,
                    partition_by: list | None = None,
@@ -499,56 +530,36 @@ def export_iceberg(df, path: str, mode: str = "overwrite",
     st = _store(store)
     ice_schema = _ice_schema_from_spark(df.schema)
     prev = _read_table_meta(path, st)
-    if prev is not None and mode == "append":
-        prev_schema = next(
-            s for s in prev[1]["schemas"]
-            if s["schema-id"] == prev[1]["current-schema-id"])
-        if [(f["name"], f["type"]) for f in prev_schema["fields"]] != \
-                [(f["name"], f["type"]) for f in ice_schema["fields"]]:
-            raise ValueError(
-                "export_iceberg: append schema differs from the "
-                "table's — overwrite or align the frame")
-        # keep the table's field ids; but a nullable incoming column
-        # RELAXES required -> optional (spec-legal evolution) — the
-        # appended files may hold nulls, so keeping required=true
-        # would poison the non-null contract for every reader
-        merged = []
-        for pf, nf in zip(prev_schema["fields"],
-                          ice_schema["fields"]):
-            f = dict(pf)
-            f["required"] = pf["required"] and nf["required"]
-            merged.append(f)
-        ice_schema = {"type": "struct",
-                      "schema-id": prev_schema["schema-id"],
-                      "fields": merged}
     if prev is not None:
-        prev_spec = next(
-            s for s in prev[1]["partition-specs"]
-            if s["spec-id"] == prev[1]["default-spec-id"])
-        if [f["name"] for f in prev_spec["fields"]] != partition_by:
-            raise ValueError(
-                "export_iceberg: partition columns differ from the "
-                f"table's {[f['name'] for f in prev_spec['fields']]}")
+        prev_schema = _check_table(prev[1], mode, ice_schema, partition_by)
+        if mode == "append":
+            # keep the table's field ids; but a nullable incoming column
+            # RELAXES required -> optional (spec-legal evolution) — the
+            # appended files may hold nulls, so keeping required=true
+            # would poison the non-null contract for every reader
+            merged = []
+            for pf, nf in zip(prev_schema["fields"],
+                              ice_schema["fields"]):
+                f = dict(pf)
+                f["required"] = pf["required"] and nf["required"]
+                merged.append(f)
+            ice_schema = {"type": "struct",
+                          "schema-id": prev_schema["schema-id"],
+                          "fields": merged}
     spec_fields = _spec_fields_for(partition_by, ice_schema)
     part_types = {sf["name"]: _types_by_id(ice_schema)[sf["source-id"]]
                   for sf in spec_fields}
 
-    # distributed data write into staging, then publish into data/
-    # (hive layout preserved for partitioned tables — basePath
+    # distributed data write, published into data/ under stamped
+    # names (hive layout preserved for partitioned tables — basePath
     # restores the columns the writer dropped; partition VALUES live
     # in the manifests, the spec's identity contract)
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex[:12]}")
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
     data_dir = os.path.join(path, "data")
     snap_id = _snapshot_id()
     seq = 1 if prev is None else prev[1]["last-sequence-number"] + 1
     stamp = uuid.uuid4().hex[:8]
-    published = publish_staged(
-        LocalManifestIO(), staging, data_dir, stat=_file_info,
-        spark=df.sparkSession,
+    published = _write_staged(
+        df, path, data_dir, partition_by,
         name=lambda rel, i: os.path.join(os.path.dirname(rel),
                                          f"{stamp}-{i:05d}.parquet"))
     entries = []
@@ -581,17 +592,20 @@ def _commit_snapshot(path: str, st: LogStore, ice_schema: dict,
                      entries: list, mode: str, prev, snap_id: int,
                      seq: int, name: str | None,
                      spec_fields: list | None = None) -> int:
-    """Compose and publish one snapshot.  Optimistic concurrency per
-    the spec: an APPEND that loses the put-if-absent metadata-version
-    race re-reads the table and retries against the new snapshot
-    (its added files are disjoint; the manifest is rewritten so entry
-    sequence numbers match the new commit).  An OVERWRITE's semantics
-    were computed against a snapshot that is now stale, so a lost
-    overwrite SURFACES the conflict instead of rebasing — the same
-    rule as the Delta leg."""
+    """Compose and publish one snapshot under the Delta leg's conflict
+    policy (``delta._commit_or_rebase``): an APPEND that loses the
+    put-if-absent metadata-version race re-reads the table by listing,
+    re-runs ``_check_table`` against the winner and retries against the
+    new snapshot (its added files are disjoint; the manifest is
+    rewritten so entry sequence numbers match the new commit; the lost
+    attempt's manifest avros stay as unreferenced orphans).  An
+    OVERWRITE's semantics were computed against a snapshot that is now
+    stale, so a lost overwrite SURFACES the conflict instead of
+    rebasing."""
     spec_fields = list(spec_fields or [])
 
-    for _attempt in range(20):
+    def publish():
+        nonlocal ice_schema
         now_ms = int(time.time() * 1000)
         # schema HISTORY: an overwrite that changes the schema appends
         # a new entry with the next schema-id instead of replacing the
@@ -707,46 +721,23 @@ def _commit_snapshot(path: str, st: LogStore, ice_schema: dict,
         vpath = os.path.join(_meta_dir(path),
                              f"v{version}.metadata.json")
         # HadoopTables' atomic version-file rename == put-if-absent
-        try:
-            st.put_commit(vpath,
-                          json.dumps(meta, separators=(",", ":")))
-        except CommitConflict:
-            if mode != "append":
-                raise RuntimeError(
-                    f"export_iceberg: concurrent commit at metadata "
-                    f"version {version} — overwrite computed against "
-                    "a stale snapshot; re-run")
-            # append rebase: re-read by LISTING (the winner's commit
-            # may be newer than the hint), verify the winner kept our
-            # schema/spec, retry at the next version (lost attempts
-            # leave orphan manifest avros — unreferenced, harmless)
-            prev = _read_table_meta(path, st, prefer_hint=False)
-            win_schema = next(
-                s for s in prev[1]["schemas"]
-                if s["schema-id"] == prev[1]["current-schema-id"])
-            if [(f["name"], f["type"])
-                    for f in win_schema["fields"]] != \
-                    [(f["name"], f["type"])
-                     for f in ice_schema["fields"]]:
-                raise ValueError(
-                    "export_iceberg: concurrent writer changed the "
-                    "table schema — re-run")
-            win_spec = next(
-                s for s in prev[1]["partition-specs"]
-                if s["spec-id"] == prev[1]["default-spec-id"])
-            if win_spec["fields"] != spec_fields:
-                raise ValueError(
-                    "export_iceberg: concurrent writer changed the "
-                    "partition spec — re-run")
-            seq = prev[1]["last-sequence-number"] + 1
-            continue
+        st.put_commit(vpath, json.dumps(meta, separators=(",", ":")))
         st.write_file(os.path.join(_meta_dir(path),
                                    "version-hint.text"),
                       str(version).encode())
         return snap_id
-    raise RuntimeError(
-        "export_iceberg: lost the commit race 20 times — "
-        "pathological contention; serialize writers")
+
+    def rebase():
+        nonlocal prev, seq
+        # re-read by LISTING: the winner's commit may be newer than
+        # the hint
+        prev = _read_table_meta(path, st, prefer_hint=False)
+        _check_table(prev[1], mode, ice_schema,
+                     [sf["name"] for sf in spec_fields])
+        seq = prev[1]["last-sequence-number"] + 1
+
+    return _commit_or_rebase("export_iceberg", publish,
+                             rebase if mode == "append" else None)
 
 
 def layer_to_iceberg(layer, out_dir: str, name: str | None = None,
@@ -872,13 +863,8 @@ def expire_snapshots(path: str, keep_last: int = 1,
         if e["snapshot-id"] in kept_ids]
     vpath = os.path.join(_meta_dir(path),
                          f"v{version + 1}.metadata.json")
-    try:
-        st.put_commit(vpath, json.dumps(new_meta,
-                                        separators=(",", ":")))
-    except CommitConflict:
-        raise RuntimeError(
-            f"expire_snapshots: concurrent commit at metadata "
-            f"version {version + 1} — re-run")
+    _commit_or_rebase("expire_snapshots", lambda: st.put_commit(
+        vpath, json.dumps(new_meta, separators=(",", ":"))))
     st.write_file(os.path.join(_meta_dir(path), "version-hint.text"),
                   str(version + 1).encode())
     removed = 0
@@ -1004,24 +990,9 @@ def iceberg_source(spark, path: str, snapshot_id: int | None = None,
         files = [fe for fe in files
                  if all(fe["partition"].get(k) == v
                         for k, v in partitions.items())]
-    pb = {k: v for k, v in (props or {}).items()
-          if v is not None and (v[0] is not None or v[1] is not None)}
-    if pb:
-        def keep(fe):
-            for col, (lo, hi) in pb.items():
-                fid = ids.get(col)
-                if fid is None:
-                    continue
-                b = fe["bounds"].get(fid)
-                if b is None:
-                    continue          # stats-less file always survives
-                blo, bhi = b
-                if lo is not None and bhi is not None and bhi < lo:
-                    return False
-                if hi is not None and blo is not None and blo > hi:
-                    return False
-            return True
-        files = [fe for fe in files if keep(fe)]
+    keep = range_filter(props, lambda fe, col: fe["bounds"].get(
+        ids.get(col), (None, None)))
+    files = [fe for fe in files if keep(fe)]
     if not files:
         return spark.createDataFrame([], spark_schema)
     paths = [fe["path"] for fe in files]

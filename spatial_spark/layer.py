@@ -512,16 +512,35 @@ class Layer:
         p = urlparse(uri)
         return unquote(p.path) if p.scheme else uri
 
-    def _subset(self, paths: list) -> DataFrame:
-        """Read specific store part files under the recorded union schema
-        (files written before an attribute column appeared read it as
-        NULL, same as the full df() read)."""
+    def _read(self, files: list) -> DataFrame:
+        """The one Layer file read: ``files`` under the union schema
+        recorded at write time, so the read needs no mergeSchema
+        footer-listing job and files written before an attribute column
+        appeared read it as NULL (appends may add discovered attribute
+        columns over time — the reference's dynamic attribute model,
+        EditableLayerImpl:224-237).  A layer with no recorded schema
+        reads with mergeSchema; an empty list gives an empty frame (the
+        core schema when none is recorded)."""
         schema_json = self.meta.get("schema_json")
+        st = None
         if schema_json:
             import json as _json
             st = T.StructType.fromJson(_json.loads(schema_json))
-            return self.ctx.spark.read.schema(st).parquet(*paths)
-        return self.ctx.spark.read.option("mergeSchema", "true").parquet(*paths)
+        if not files:
+            return self.ctx.spark.createDataFrame([], st or T.StructType([
+                T.StructField("id", T.LongType()),
+                T.StructField("geom", T.BinaryType()),
+                T.StructField("gtype", T.IntegerType()),
+                T.StructField("xmin", T.DoubleType()),
+                T.StructField("ymin", T.DoubleType()),
+                T.StructField("xmax", T.DoubleType()),
+                T.StructField("ymax", T.DoubleType()),
+                T.StructField("zkey", T.LongType()),
+            ]))
+        if st is not None:
+            return self.ctx.spark.read.schema(st).parquet(*files)
+        return (self.ctx.spark.read.option("mergeSchema", "true")
+                .parquet(*files))
 
     def _files_for_ids(self, ids: list):
         """Store part files containing any of ``ids`` — two file-pruned
@@ -572,7 +591,7 @@ class Layer:
                 return False
             if not files:
                 return True  # nothing matches: mutation is a no-op
-            sub = self._subset(files)
+            sub = self._read(files)
             before = sub.count()  # bounded: affected files only
             out = transform(sub)
             tmp = self.path + ".mutate.tmp"
@@ -769,7 +788,7 @@ class Layer:
             if len(live) <= 1:
                 return {"files_before": len(live),
                         "files_after": len(live), "files_compacted": 0}
-            bounds = (self._subset(live)
+            bounds = (self._read(live)
                       .groupBy(F.input_file_name().alias("f"))
                       .agg(F.min("zkey").alias("lo"),
                            F.max("zkey").alias("hi"))
@@ -780,7 +799,7 @@ class Layer:
                 return {"files_before": len(live),
                         "files_after": len(live), "files_compacted": 0}
             tmp = self.path + ".compact.tmp"
-            self._stage(self._subset(targets)
+            self._stage(self._read(targets)
                         .repartitionByRange(max(target_files, 1), "zkey")
                         .sortWithinPartitions("zkey"), tmp)
             moved = self._commit(man, lk, tmp, remove=targets)
@@ -811,30 +830,6 @@ class Layer:
         return self._manifest.epochs()
 
     def df(self, epoch: int | None = None) -> DataFrame:
-        import os
-
-        def _empty():
-            schema = T.StructType([
-                T.StructField("id", T.LongType()),
-                T.StructField("geom", T.BinaryType()),
-                T.StructField("gtype", T.IntegerType()),
-                T.StructField("xmin", T.DoubleType()),
-                T.StructField("ymin", T.DoubleType()),
-                T.StructField("xmax", T.DoubleType()),
-                T.StructField("ymax", T.DoubleType()),
-                T.StructField("zkey", T.LongType()),
-            ])
-            return self.ctx.spark.createDataFrame([], schema)
-
-        # appends may add discovered attribute columns over time (the
-        # reference's dynamic attribute model, EditableLayerImpl:224-237);
-        # the union schema is recorded at write time so the read needs no
-        # mergeSchema footer-listing job
-        schema_json = self.meta.get("schema_json")
-        st = None
-        if schema_json:
-            import json as _json
-            st = T.StructType.fromJson(_json.loads(schema_json))
         # a store written through the commit protocol reads exactly the
         # CURRENT manifest snapshot — crash orphans in the directory are
         # invisible (manifest.py; VERDICT r6 ask #5).  ``epoch`` reads a
@@ -851,27 +846,11 @@ class Layer:
                     f"{len(missing)} file(s) a later commit removed "
                     f"(vacuumed); earliest fully-readable epoch differs: "
                     f"{[os.path.basename(m) for m in missing[:3]]}...")
-            if not files:
-                return (self.ctx.spark.createDataFrame([], st) if st
-                        else _empty())
-            if st is not None:
-                return self.ctx.spark.read.schema(st).parquet(*files)
-            return (self.ctx.spark.read.option("mergeSchema", "true")
-                    .parquet(*files))
+            return self._read(files)
         files = self._manifest.files()
-        if files is not None:
-            if not files:
-                return (self.ctx.spark.createDataFrame([], st) if st
-                        else _empty())
-            if st is not None:
-                return self.ctx.spark.read.schema(st).parquet(*files)
-            return (self.ctx.spark.read.option("mergeSchema", "true")
-                    .parquet(*files))
-        if not os.path.exists(self.path):
-            return _empty()  # empty layer: core schema
-        if st is not None:
-            return self.ctx.spark.read.schema(st).parquet(self.path)
-        return self.ctx.spark.read.option("mergeSchema", "true").parquet(self.path)
+        if files is None:               # pre-manifest store
+            files = [self.path] if os.path.exists(self.path) else []
+        return self._read(files)
 
     def df_window(self, windows) -> DataFrame:
         """Snapshot read PRUNED at the manifest list: only files in
@@ -898,11 +877,11 @@ class Layer:
         alone (r13, VERDICT r12 ask #5).  Shards without the stat are
         always included; the exact predicate still runs in the plan —
         pruning only shrinks the file list, never the answer."""
+        from .manifest import range_filter
         ws = (windows if isinstance(windows, list) else [windows]) \
             if windows is not None else None
-        pb = {k: v for k, v in (props or {}).items()
-              if v is not None and (v[0] is not None
-                                    or v[1] is not None)}
+        in_ranges = range_filter(props, lambda stats, col: (
+            stats.get(f"amin:{col}"), stats.get(f"amax:{col}")))
 
         def keep(stats: dict) -> bool:
             if ws is not None and all(
@@ -911,30 +890,12 @@ class Layer:
                            and stats["ymin"] <= w[3]
                            and stats["ymax"] >= w[1] for w in ws):
                     return False
-            for col, (lo, hi) in pb.items():
-                amin = stats.get(f"amin:{col}")
-                amax = stats.get(f"amax:{col}")
-                if hi is not None and amin is not None and amin > hi:
-                    return False
-                if lo is not None and amax is not None and amax < lo:
-                    return False
-            return True
+            return in_ranges(stats)
 
         files = self._manifest.files_where(keep)
         if files is None:                # pre-manifest store
             return self.df()
-        schema_json = self.meta.get("schema_json")
-        st = None
-        if schema_json:
-            import json as _json
-            st = T.StructType.fromJson(_json.loads(schema_json))
-        if not files:
-            return (self.ctx.spark.createDataFrame([], st) if st
-                    else self.df().limit(0))
-        if st is not None:
-            return self.ctx.spark.read.schema(st).parquet(*files)
-        return (self.ctx.spark.read.option("mergeSchema", "true")
-                .parquet(*files))
+        return self._read(files)
 
     def signature(self) -> str:
         """Compact layer signature string — Layer.getSignature /

@@ -357,6 +357,29 @@ class S3ManifestIO:
             self.client.delete(k)
 
 
+# ---- range prune: the one file-skipping rule for props= ranges -------
+def range_filter(props: dict | None, bounds):
+    """``keep(item) -> bool`` for ``props={col: (lo, hi)}`` ranges —
+    the prune rule Layer.df_pruned, delta_source and iceberg_source
+    share.  ``bounds(item, col)`` gives the item's recorded ``(min,
+    max)`` for ``col``, either side None when the stat is missing.  An
+    item is dropped only when its stats PROVE a range empty: a None
+    bound side is unbounded, a missing stat keeps the item, and both
+    ends are inclusive."""
+    ranges = [(k, v[0], v[1]) for k, v in (props or {}).items()
+              if v is not None and (v[0] is not None or v[1] is not None)]
+
+    def keep(item) -> bool:
+        for col, lo, hi in ranges:
+            mn, mx = bounds(item, col)
+            if hi is not None and mn is not None and mn > hi:
+                return False
+            if lo is not None and mx is not None and mx < lo:
+                return False
+        return True
+    return keep
+
+
 # ---- staged publish: the one mover + the one footer reader ----------
 #: at or above this many staged files (on LocalManifestIO, with a
 #: session at hand) the move + per-file stat pass runs as ONE Spark job

@@ -68,29 +68,6 @@ def _cql_seed(layer, cql: str | None):
     return sql, props
 
 
-def _pruned_window_df(layer, windows, props) -> DataFrame:
-    """Manifest-pruned snapshot read: spatial windows AND property
-    bounds cut the file list from the manifest alone (falls back to
-    df_window for layers without attribute stats support)."""
-    if props and hasattr(layer, "df_pruned"):
-        return layer.df_pruned(windows=windows, props=props)
-    return layer.df_window(windows)
-
-
-def _layer_all_points(layer) -> bool | None:
-    try:
-        return layer.all_points
-    except Exception:
-        return None
-
-
-def _layer_curve(layer) -> str:
-    try:
-        return layer.curve
-    except Exception:
-        return "zorder"
-
-
 def _distance_col(df: DataFrame, lon: float, lat: float):
     """Spherical distance column: pure column math for points (gtype==1
     everywhere), DistanceOp-style nearest-point fallback for general
@@ -125,9 +102,8 @@ def within_distance(layer, lon: float, lat: float, km: float,
     # manifest-shard file pruning first (windows AND property bounds),
     # then the in-plan bbox + SFC-range predicates — three prune
     # layers, outermost free
-    df = _window_prefilter(_pruned_window_df(layer, windows, props),
-                           windows, _layer_all_points(layer),
-                           _layer_curve(layer))
+    df = _window_prefilter(layer.df_pruned(windows=windows, props=props),
+                           windows, layer.all_points, layer.curve)
     if sql is not None:
         df = df.filter(sql)
     df = df.withColumn("distance", _distance_col(df, lon, lat))
@@ -158,7 +134,7 @@ def closest(layer, lon: float, lat: float, k: int = 100,
         return layer.df().withColumn("distance", F.lit(0.0)).limit(0)
     bx = layer.bbox()          # metadata likewise
     import math
-    all_pts = _layer_all_points(layer)
+    all_pts = layer.all_points
     area = max((bx[2] - bx[0]) * (bx[3] - bx[1]), 1e-12)
     # window sized for ~4k expected candidates under uniform density
     est_deg = math.sqrt(4.0 * k * area / (math.pi * total))
@@ -168,8 +144,8 @@ def closest(layer, lon: float, lat: float, k: int = 100,
     sql, props = _cql_seed(layer, cql)
     window = sphere_search_window(lon, lat, km)  # unwrapped, for coverage test
     kwins = sphere_search_windows(lon, lat, km)
-    cand = _window_prefilter(_pruned_window_df(layer, kwins, props),
-                             kwins, all_pts, _layer_curve(layer))
+    cand = _window_prefilter(layer.df_pruned(windows=kwins, props=props),
+                             kwins, all_pts, layer.curve)
     if sql is not None:
         cand = cand.filter(sql)
     cand = cand.withColumn("distance", _distance_col(cand, lon, lat))
@@ -186,8 +162,7 @@ def closest(layer, lon: float, lat: float, k: int = 100,
                        F.max("distance").alias("dmax")).first()
     if probe["n"] >= k and (probe["dmax"] is None or probe["dmax"] <= km):
         return pruned
-    full = (layer.df_pruned(props=props)
-            if props and hasattr(layer, "df_pruned") else layer.df())
+    full = layer.df_pruned(props=props) if props else layer.df()
     if sql is not None:
         full = full.filter(sql)
     full = full.withColumn("distance", _distance_col(full, lon, lat))
@@ -200,9 +175,8 @@ def bbox_search(layer, window, cql: str | None = None) -> DataFrame:
     """spatial.bbox (:822-836): envelope-intersection search.  ``cql``
     composes an attribute predicate + its mined manifest prune."""
     sql, props = _cql_seed(layer, cql)
-    df = _window_prefilter(_pruned_window_df(layer, window, props),
-                           window, _layer_all_points(layer),
-                           _layer_curve(layer))
+    df = _window_prefilter(layer.df_pruned(windows=window, props=props),
+                           window, layer.all_points, layer.curve)
     return df.filter(sql) if sql is not None else df
 
 
@@ -214,10 +188,11 @@ def intersects_search(layer, geom_or_wkt,
     the catalog's write-time stats, never a plan-time scan.  ``cql``
     composes an attribute predicate + its mined manifest prune."""
     g = from_wkt(geom_or_wkt) if isinstance(geom_or_wkt, str) else geom_or_wkt
-    all_pts = _layer_all_points(layer)
+    all_pts = layer.all_points
     sql, props = _cql_seed(layer, cql)
-    df = _window_prefilter(_pruned_window_df(layer, g.envelope(), props),
-                           g.envelope(), all_pts, _layer_curve(layer))
+    df = _window_prefilter(layer.df_pruned(windows=g.envelope(),
+                                           props=props),
+                           g.envelope(), all_pts, layer.curve)
     if sql is not None:
         df = df.filter(sql)
     if all_pts is True:

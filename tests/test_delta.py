@@ -1014,3 +1014,36 @@ def test_manifest_ios_read_bytes(tmp_path):
     s3 = S3ManifestIO(Client())
     s3.write_file("k/b.bin", b"\x07\x00")
     assert s3.read_bytes("k/b.bin") == b"\x07\x00"
+
+
+def test_delta_optimize_lost_commit_leaves_winner(spark, tmp_path,
+                                                  monkeypatch):
+    """optimize_delta never rebases: its remove set was computed
+    against the snapshot it read.  Losing the put-if-absent race
+    raises "concurrent commit", and the winner's version stays current
+    with none of the optimize's removes or adds in it."""
+    import spatial_spark.io.delta as D
+    from spatial_spark.io.delta import optimize_delta
+    tab = str(tmp_path / "optrace")
+    for i in range(3):
+        export_delta(spark.range(10 * i, 10 * i + 10).coalesce(1), tab,
+                     mode="append" if i else "overwrite")
+    before = read_delta_log(tab)
+    winner = [{"commitInfo": {"timestamp": 0, "operation": "WRITE"}}]
+    real = D._write_commit
+
+    def racy(path, version, actions, store=None):
+        real(path, version, winner, store=store)     # the winner lands
+        return real(path, version, actions, store=store)
+
+    monkeypatch.setattr(D, "_write_commit", racy)
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        optimize_delta(spark, tab, target_files=1)
+    monkeypatch.undo()
+    after = read_delta_log(tab)
+    assert after["version"] == before["version"] + 1
+    with open(os.path.join(tab, "_delta_log",
+                           f"{after['version']:020d}.json")) as f:
+        assert [json.loads(line) for line in f] == winner
+    assert after["files"] == before["files"]
+    assert delta_source(spark, tab).count() == 30

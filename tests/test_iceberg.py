@@ -599,3 +599,69 @@ def test_iceberg_distributed_publish(spark, tmp_path, fmt):
     assert sum(records) == 2000 and count == 2000
     # the staging dir is gone once its files are published
     assert not glob.glob(os.path.join(tab, "_staging-*"))
+
+
+def test_iceberg_expire_lost_commit_deletes_nothing(spark, tmp_path):
+    """expire_snapshots never rebases: losing the put-if-absent
+    metadata-version race raises, the winner's metadata version stays
+    current, and no manifest, manifest list or data object is
+    deleted (the deletes run only after a won commit)."""
+    from spatial_spark.io.delta import LogStore
+    from spatial_spark.io.iceberg import _read_table_meta, expire_snapshots
+    tab = str(tmp_path / "tx")
+    export_iceberg(_mkdf(spark, 0, 20).coalesce(1), tab)
+    export_iceberg(_mkdf(spark, 20, 40).coalesce(1), tab,
+                   mode="overwrite")
+    for i in (2, 3):
+        export_iceberg(_mkdf(spark, 20 * i, 20 * (i + 1)).coalesce(1),
+                       tab, mode="append")
+    md = tab + "/metadata"
+    winner = open(md + "/v4.metadata.json").read()
+
+    def objects():
+        return {os.path.join(r, f) for r, _, fs in os.walk(tab)
+                for f in fs}
+    before = objects()
+
+    class Racy(LogStore):
+        def put_commit(self, p, body):
+            super().put_commit(p, winner)              # the winner lands
+            return super().put_commit(p, body)
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        expire_snapshots(tab, keep_last=1, clean_data=True,
+                         store=Racy())
+    version, meta = _read_table_meta(tab, LogStore(), prefer_hint=False)
+    assert version == 5
+    assert meta == json.loads(winner)
+    assert objects() == before | {md + "/v5.metadata.json"}
+    assert iceberg_source(spark, tab).count() == 60
+
+
+@pytest.mark.parametrize("change", ["partition_spec", "schema"])
+def test_iceberg_rebase_checks_winner(spark, tmp_path, change):
+    """A lost append whose partition spec or schema differs from the
+    winner's refuses with ValueError instead of rebasing its files
+    onto a table they do not fit."""
+    from spatial_spark.io.delta import LogStore
+    tab = str(tmp_path / "tr")
+    export_iceberg(_mkdf(spark, 0, 10).coalesce(1), tab)
+    # the winner: another table's v1, partitioned or with one column more
+    other = str(tmp_path / "other")
+    if change == "partition_spec":
+        export_iceberg(_mkdf(spark, 0, 10).coalesce(1), other,
+                       partition_by=["s"])
+    else:
+        export_iceberg(_mkdf(spark, 0, 10).selectExpr("*", "1 AS w")
+                       .coalesce(1), other)
+    winner = open(other + "/metadata/v1.metadata.json").read()
+
+    class Racy(LogStore):
+        def put_commit(self, p, body):
+            if not os.path.exists(p):
+                super().put_commit(p, winner)          # the winner lands
+            return super().put_commit(p, body)
+    with pytest.raises(ValueError):
+        export_iceberg(_mkdf(spark, 10, 20).coalesce(1), tab,
+                       mode="append", store=Racy())
+    assert open(tab + "/metadata/v2.metadata.json").read() == winner
+    assert not os.path.exists(tab + "/metadata/v3.metadata.json")

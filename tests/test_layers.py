@@ -751,6 +751,40 @@ def test_snapshot_time_travel(ctx, spark):
     assert layer.df().count() == 29
 
 
+@pytest.mark.parametrize("props,stats,kept", [
+    # None bound sides are unbounded
+    ({"a": (None, 5)}, (3, 9), True),
+    ({"a": (None, 2)}, (3, 9), False),
+    ({"a": (7, None)}, (3, 9), True),
+    ({"a": (10, None)}, (3, 9), False),
+    ({"a": (None, None)}, (3, 9), True),
+    ({"a": None}, (3, 9), True),
+    (None, (3, 9), True),
+    # a missing stat keeps the item
+    ({"a": (None, 2)}, (None, 9), True),
+    ({"a": (10, None)}, (3, None), True),
+    ({"a": (10, 20)}, (None, None), True),
+    ({"c": (10, 20)}, (3, 9), True),
+    # both ends inclusive: touching ranges are kept
+    ({"a": (9, 20)}, (3, 9), True),
+    ({"a": (0, 3)}, (3, 9), True),
+    ({"a": (5, 5)}, (5, 5), True),
+    # disjoint on either side: pruned
+    ({"a": (10, 20)}, (3, 9), False),
+    ({"a": (0, 2)}, (3, 9), False),
+    # every range must overlap (b's stats are (0, 1))
+    ({"a": (0, 4), "b": (0, 20)}, (3, 9), True),
+    ({"a": (0, 4), "b": (10, 20)}, (3, 9), False),
+])
+def test_range_filter_rule(props, stats, kept):
+    """manifest.range_filter, the one props= prune rule of
+    Layer.df_pruned, delta_source and iceberg_source: an item is
+    dropped only when its recorded (min, max) proves a range empty."""
+    from spatial_spark.manifest import range_filter
+    keep = range_filter(props, lambda item, col: item.get(col, (None, None)))
+    assert keep({"a": stats, "b": (0, 1)}) is kept
+
+
 def test_manifest_cas_and_generation_pruning(tmp_path):
     """Pure-manifest unit behaviors: the optional base-epoch CAS
     detects a snapshot that moved underneath a writer, and generation
