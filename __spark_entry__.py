@@ -216,8 +216,7 @@ def _q_within_distance(spark, sf_dir) -> DataFrame:
     km = 2000.0
     pts = _customer_points(spark)
     window = sphere_search_window(PROBE_LON, PROBE_LAT, km)
-    dist = F.round(sphere_distance_km(F.lit(PROBE_LON), F.lit(PROBE_LAT),
-                                      F.col("lon"), F.col("lat")), 6)
+    dist = F.round(sphere_distance_km(PROBE_LON, PROBE_LAT, "lon", "lat"), 6)
     return (pts
             .filter(bbox_intersects_window("lon", "lat", "lon", "lat", window))
             .withColumn("distance_km", dist)
@@ -227,8 +226,7 @@ def _q_within_distance(spark, sf_dir) -> DataFrame:
 
 def _q_knn(spark, sf_dir) -> DataFrame:
     from spatial_spark.functions.columns import sphere_distance_km
-    dist = F.round(sphere_distance_km(F.lit(PROBE_LON), F.lit(PROBE_LAT),
-                                      F.col("lon"), F.col("lat")), 6)
+    dist = F.round(sphere_distance_km(PROBE_LON, PROBE_LAT, "lon", "lat"), 6)
     return (_customer_points(spark)
             .withColumn("distance_km", dist)
             .orderBy(F.col("distance_km").asc(), F.col("c_custkey").asc())

@@ -1,10 +1,16 @@
-"""Pure-Column spatial expressions — the JVM-side fast path.
+"""Pure-column spatial expressions — the JVM-side fast path.
 
 These never leave whole-stage codegen: no Python UDFs, no Arrow transfer.
 Point layers (x/y double columns) get their entire hot path here — the
 reference's two-phase search (envelope prefilter + exact test,
 rtree/filter/AbstractSearchEnvelopeIntersection.java:48-54) becomes pure
 column predicates that Catalyst pushes into the Parquet scan.
+
+Window predicates are SQL strings for ``df.filter`` and the spherical
+distance is one ``F.expr``: the JVM parses each once instead of the
+driver building it from dozens of Column calls, each a py4j round trip.
+Literals are typed (``sql_double``/``sql_long``), so the parsed trees
+hold the same values as Column-built ones.
 """
 
 from __future__ import annotations
@@ -17,24 +23,45 @@ from pyspark.sql import functions as F
 EARTH_RADIUS_KM = 6371.0  # OrthodromicDistance.java R=6371
 
 
+def sql_double(x) -> str:
+    """``x`` as a typed Spark SQL DOUBLE literal.  A bare ``11.9`` parses
+    as DECIMAL; the ``D`` suffix keeps it a double, and Python's
+    shortest repr round-trips exactly through Java's
+    ``Double.parseDouble``, so the literal is bit-identical to
+    ``F.lit(x)``."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"no SQL double literal for {x!r}")
+    return f"{x!r}D"
+
+
+def sql_long(v) -> str:
+    """``v`` as a typed Spark SQL BIGINT literal (keys above 2**31)."""
+    return f"{int(v)}L"
+
+
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql(v) -> str:
+    """A column name or a float as a SQL fragment."""
+    return _ident(v) if isinstance(v, str) else sql_double(v)
+
+
 def sphere_distance_km(lon1, lat1, lon2, lat2) -> Column:
     """Spherical law of cosines, R=6371 — exact replication of
-    OrthodromicDistance.calculateDistance (reference :90-97), as a pure
-    Column expression (codegen'd, vectorized, no Python)."""
-    rlat1 = F.radians(_c(lat1))
-    rlat2 = F.radians(_c(lat2))
-    dlon = F.radians(_c(lon2) - _c(lon1))
-    v = F.sin(rlat1) * F.sin(rlat2) + F.cos(rlat1) * F.cos(rlat2) * F.cos(dlon)
-    v = F.least(F.lit(1.0), F.greatest(F.lit(-1.0), v))
-    return F.acos(v) * F.lit(EARTH_RADIUS_KM)
-
-
-def _c(v):
-    if isinstance(v, Column):
-        return v
-    if isinstance(v, str):
-        return F.col(v)
-    return F.lit(v)
+    OrthodromicDistance.calculateDistance (reference :90-97), as one
+    codegen'd SQL expression.  Each argument is a column name or a
+    float; the expression tree is the same radians/sin/cos/least/
+    greatest/acos one a Column build makes, with nothing precomputed in
+    Python, so the doubles are identical."""
+    lon1, lat1, lon2, lat2 = map(_sql, (lon1, lat1, lon2, lat2))
+    return F.expr(
+        f"acos(least(1.0D, greatest(-1.0D, "
+        f"sin(radians({lat1})) * sin(radians({lat2})) + "
+        f"cos(radians({lat1})) * cos(radians({lat2})) * "
+        f"cos(radians({lon2} - {lon1}))))) * {sql_double(EARTH_RADIUS_KM)}")
 
 
 def sphere_search_window(lon: float, lat: float, dist_km: float):
@@ -62,7 +89,7 @@ def sphere_search_windows(lon: float, lat: float, dist_km: float) -> list:
     """Antimeridian-aware window list: 1 window normally, 2 when the cap
     crosses ±180 (layer coordinates stay in [-180, 180], so a window
     extending past the antimeridian must wrap).  OR the per-window
-    prefilters (bbox_intersects_any)."""
+    prefilters (bbox_intersects_window)."""
     x0, y0, x1, y1 = sphere_search_window(lon, lat, dist_km)
     if x1 - x0 >= 360.0:
         return [(-180.0, y0, 180.0, y1)]
@@ -73,61 +100,39 @@ def sphere_search_windows(lon: float, lat: float, dist_km: float) -> list:
     return [(x0, y0, x1, y1)]
 
 
-def bbox_intersects_window(xmin, ymin, xmax, ymax, window) -> Column:
+def _window_sql(x_lo, x_hi, y_lo, y_hi, window, lo: str = ">=",
+                hi: str = "<=") -> str:
+    """``(x_lo >= wx0 AND x_hi <= wx1 AND y_lo >= wy0 AND y_hi <= wy1)``
+    (with the ``lo``/``hi`` comparisons) as a SQL predicate string."""
+    wx0, wy0, wx1, wy1 = map(sql_double, window)
+    return (f"({_ident(x_lo)} {lo} {wx0} AND {_ident(x_hi)} {hi} {wx1} AND "
+            f"{_ident(y_lo)} {lo} {wy0} AND {_ident(y_hi)} {hi} {wy1})")
+
+
+def bbox_intersects_window(xmin, ymin, xmax, ymax, window) -> str:
     """bbox-vs-rectangle predicate on the four bbox columns —
     FilterIntersectWindow.java:32-51 as pure column math."""
-    wx0, wy0, wx1, wy1 = window
-    return (
-        (_c(xmax) >= F.lit(wx0)) & (_c(xmin) <= F.lit(wx1))
-        & (_c(ymax) >= F.lit(wy0)) & (_c(ymin) <= F.lit(wy1))
-    )
+    return _window_sql(xmax, xmin, ymax, ymin, window)
 
 
-def point_in_window(x, y, window) -> Column:
-    wx0, wy0, wx1, wy1 = window
-    return (
-        (_c(x) >= F.lit(wx0)) & (_c(x) <= F.lit(wx1))
-        & (_c(y) >= F.lit(wy0)) & (_c(y) <= F.lit(wy1))
-    )
+def point_in_window(x, y, window) -> str:
+    return _window_sql(x, x, y, y, window)
 
 
-def bbox_covered_by_window(xmin, ymin, xmax, ymax, window) -> Column:
+def bbox_covered_by_window(xmin, ymin, xmax, ymax, window) -> str:
     """SearchCoveredByEnvelope equivalent."""
-    wx0, wy0, wx1, wy1 = window
-    return (
-        (_c(xmin) >= F.lit(wx0)) & (_c(xmax) <= F.lit(wx1))
-        & (_c(ymin) >= F.lit(wy0)) & (_c(ymax) <= F.lit(wy1))
-    )
+    return _window_sql(xmin, xmax, ymin, ymax, window)
 
 
-def bbox_equals_window(xmin, ymin, xmax, ymax, window, tol: float = 0.0) -> Column:
+def bbox_equals_window(xmin, ymin, xmax, ymax, window, tol: float = 0.0) -> str:
     """SearchEqualEnvelopes equivalent."""
-    wx0, wy0, wx1, wy1 = window
     if tol == 0.0:
-        return (
-            (_c(xmin) == F.lit(wx0)) & (_c(xmax) == F.lit(wx1))
-            & (_c(ymin) == F.lit(wy0)) & (_c(ymax) == F.lit(wy1))
-        )
-    return (
-        (F.abs(_c(xmin) - F.lit(wx0)) <= tol) & (F.abs(_c(xmax) - F.lit(wx1)) <= tol)
-        & (F.abs(_c(ymin) - F.lit(wy0)) <= tol) & (F.abs(_c(ymax) - F.lit(wy1)) <= tol)
-    )
-
-
-def sfc_ranges_predicate(key_col, ranges) -> Column:
-    """OR-list of BETWEENs over an SFC key column; Catalyst turns each into
-    row-group min/max pruning — the reference's curve-range scans
-    (LayerSpaceFillingCurvePointIndex.java:114-179)."""
-    key = F.col(key_col) if isinstance(key_col, str) else key_col
-    pred = None
-    for lo, hi in ranges:
-        p = key.between(int(lo), int(hi))
-        pred = p if pred is None else (pred | p)
-    return pred if pred is not None else F.lit(True)
-
-
-def planar_distance(x1, y1, x2, y2) -> Column:
-    return F.sqrt((_c(x2) - _c(x1)) ** 2 + (_c(y2) - _c(y1)) ** 2)
+        return _window_sql(xmin, xmax, ymin, ymax, window, "=", "=")
+    wx0, wy0, wx1, wy1 = window
+    return "(" + " AND ".join(
+        f"abs({_ident(c)} - {sql_double(w)}) <= {sql_double(tol)}"
+        for c, w in ((xmin, wx0), (xmax, wx1), (ymin, wy0), (ymax, wy1))) \
+        + ")"
 
 
 def sphere_azimuth_deg(lon1, lat1, lon2, lat2) -> Column:

@@ -17,6 +17,7 @@ Parquet min/max stats as index-node envelopes.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pandas as pd
@@ -395,7 +396,7 @@ class Layer:
         try:
             cur = None if replace else self.meta.get("schema_json")
             if cur:
-                prev = T.StructType.fromJson(__import__("json").loads(cur))
+                prev = T.StructType.fromJson(json.loads(cur))
                 by_name = {f.name: f for f in prev.fields}
                 for f in schema.fields:
                     by_name[f.name] = f
@@ -524,8 +525,7 @@ class Layer:
         schema_json = self.meta.get("schema_json")
         st = None
         if schema_json:
-            import json as _json
-            st = T.StructType.fromJson(_json.loads(schema_json))
+            st = T.StructType.fromJson(json.loads(schema_json))
         if not files:
             return self.ctx.spark.createDataFrame([], st or T.StructType([
                 T.StructField("id", T.LongType()),
@@ -953,6 +953,16 @@ class Layer:
     @property
     def stats(self) -> dict:
         return self.meta.get("stats") or {}
+
+    @property
+    def columns(self) -> list:
+        """Column names of ``df()``, from the schema the catalog recorded
+        at write time (the schema every read applies) — no read, no JVM
+        round trip.  Only a layer with no recorded schema asks a read."""
+        schema_json = self.meta.get("schema_json")
+        if schema_json:
+            return [f["name"] for f in json.loads(schema_json)["fields"]]
+        return self.df().columns
 
     @property
     def all_points(self) -> bool | None:

@@ -578,8 +578,7 @@ def within_distance_join(a: DataFrame, b: DataFrame, km: float) -> DataFrame:
                .drop("_lc0"))
 
     joined = a_keyed.join(b_keyed, ["band", "lcell"])
-    dist = sphere_distance_km(F.col("a_xmin"), F.col("a_ymin"),
-                              F.col("b_xmin"), F.col("b_ymin"))
+    dist = sphere_distance_km("a_xmin", "a_ymin", "b_xmin", "b_ymin")
     return (joined.withColumn("distance", dist)
             .filter(F.col("distance") <= km)
             .drop("band", "lcell"))

@@ -3,17 +3,16 @@
 The reference's space-filling-curve point indexes answer a window query by
 computing the curve ranges that intersect the window
 (LayerSpaceFillingCurvePointIndex.getTilesIntersectingEnvelope → index range
-scans, :114-179).  Here the same ranges become a `zkey BETWEEN lo AND hi`
-OR-list that Catalyst pushes to Parquet row-group stats.  Because layer
-writes range-partition and sort by zkey, whole files/row-groups fall out of
-the scan — the 100 TB story for "index scan".
+scans, :114-179).  Here the same ranges become one SQL string,
+``((zkey >= lo AND zkey <= hi) OR …)``, that Catalyst pushes to Parquet
+row-group stats.  Because layer writes range-partition and sort by zkey,
+whole files/row-groups fall out of the scan — the 100 TB story for "index
+scan".
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-from ..functions.columns import sfc_ranges_predicate
+from ..functions.columns import sql_long
 from ..sfc import WGS84, hilbert_ranges, zorder_ranges
 
 MAX_RANGES = 32
@@ -21,21 +20,16 @@ MAX_RANGES = 32
 _RANGE_FNS = {"zorder": zorder_ranges, "hilbert": hilbert_ranges}
 
 
-def sfc_window_predicate(df: DataFrame, window, extent=WGS84,
-                         all_points: bool | None = None,
-                         curve: str = "zorder"):
-    """Column predicate over zkey for rows whose bbox centre may fall in
-    `window`, or None if it cannot be applied.
+def sfc_window_sql(window, curve: str = "zorder", extent=WGS84) -> str | None:
+    """SQL predicate over zkey for rows whose bbox centre may fall in
+    `window`, or None when the window yields no key ranges.
 
     NOTE: zkey indexes the bbox *centre* cell.  For point layers this is
     exact; for extended geometries a centre can sit in a cell outside the
-    query window even though the bbox intersects it, so the zkey predicate
-    is only applied when the layer is all-points.
-
-    ``all_points`` comes from the layer catalog's write-time statistics
-    (Layer.all_points) — planning NEVER scans the data to find out.  When
-    the caller can't supply it (stat-less frame), the answer is the
-    conservative plan (bbox pruning only), not a plan-time job.
+    query window even though the bbox intersects it, so callers apply the
+    predicate only when the layer catalog records the layer as all-points
+    (Layer.all_points) and its schema holds a zkey column — planning
+    NEVER scans the data to find out.
 
     ``curve`` is the layer's write-clustering curve from the catalog: the
     window decomposes into key ranges of the SAME curve the zkey column
@@ -43,7 +37,9 @@ def sfc_window_predicate(df: DataFrame, window, extent=WGS84,
     curve-generic the same way, LayerSpaceFillingCurvePointIndex.java:
     114-124).
     """
-    if "zkey" not in df.columns or all_points is not True:
-        return None
     ranges = _RANGE_FNS[curve](window, extent=extent, max_ranges=MAX_RANGES)
-    return sfc_ranges_predicate("zkey", ranges)
+    if not ranges:
+        return None
+    return "(" + " OR ".join(
+        f"(zkey >= {sql_long(lo)} AND zkey <= {sql_long(hi)})"
+        for lo, hi in ranges) + ")"

@@ -6,11 +6,18 @@ SpatialProcedures.findGeometriesWithinDistance (:864-880) / .closest
 (:850-862) / .bbox (:822-836) / .intersects (:901-911).
 
 Every search is the reference's two-phase plan re-expressed declaratively:
-  1. envelope window  -> pure-column bbox predicate (+ SFC key ranges),
-     pushed by Catalyst into the Parquet scan (min/max row-group pruning =
-     R-tree node envelope pruning);
-  2. exact refine     -> column math for point layers (zero Python), pandas
-     UDF on WKB for general geometry.
+  1. envelope window  -> ONE SQL predicate string per search: each
+     window's bbox conjuncts, ANDed on an all-points layer with its SFC
+     key ranges, OR'd over the antimeridian split — pushed by Catalyst
+     into the Parquet scan (min/max row-group pruning = R-tree node
+     envelope pruning);
+  2. exact refine     -> column math for point layers (zero Python; the
+     distance is one SQL expression), pandas UDF on WKB for general
+     geometry.
+
+Builders read schema facts (zkey, geom) and write-time stats from the
+layer catalog and hand the JVM strings to parse, so a build costs a few
+dozen py4j round trips rather than one per Column operation.
 """
 
 from __future__ import annotations
@@ -23,34 +30,35 @@ import pandas as pd
 
 from ..functions.columns import (
     bbox_intersects_window, sphere_distance_km, sphere_search_window,
-    sphere_search_windows,
+    sphere_search_windows, sql_double,
 )
 from ..functions.scalar import wkb_lit
 from ..geom import from_wkb, from_wkt
 from ..geom.algorithms import nearest_point_on, orthodromic_distance_km
-from ..sfc import zorder_ranges
-from .pruning import sfc_window_predicate
+from .pruning import sfc_window_sql
 
 
-def _window_prefilter(df: DataFrame, window, all_points: bool | None = None,
-                      curve: str = "zorder") -> DataFrame:
-    """bbox window + SFC key range pruning (two independent prune layers).
+def _window_prefilter(layer, window, props: dict, cols: list) -> DataFrame:
+    """The layer read, pruned at the manifest by ``window`` and
+    ``props``, then filtered by bbox window + SFC key range predicates
+    (two more independent prune layers) as one ``df.filter`` string.
     ``window`` may be a single (x0,y0,x1,y1) or a list of windows (the
     antimeridian split) — list windows OR their per-window predicates.
-    ``all_points`` and ``curve`` are the layer catalog's write-time facts
-    — no plan-time scan."""
+    Point-ness, curve and the zkey column (``cols``, Layer.columns) are
+    the layer catalog's write-time facts — no plan-time scan."""
     windows = window if isinstance(window, list) else [window]
-    pred = None
+    curve = layer.curve if (layer.all_points is True
+                            and "zkey" in cols) else None
+    preds = []
     for w in windows:
         p = bbox_intersects_window("xmin", "ymin", "xmax", "ymax", w)
-        zpred = sfc_window_predicate(df, w, all_points=all_points, curve=curve)
-        if zpred is not None:
-            p = zpred & p
-        pred = p if pred is None else (pred | p)
-    return df.filter(pred)
+        z = sfc_window_sql(w, curve) if curve else None
+        preds.append(f"({z} AND {p})" if z else p)
+    return layer.df_pruned(windows=window, props=props).filter(
+        " OR ".join(preds))
 
 
-def _cql_seed(layer, cql: str | None):
+def _cql_seed(cql: str | None, cols: list):
     """Translate an optional CQL expression riding a spatial search:
     returns ``(sql, props)`` where ``sql`` is the Catalyst predicate
     to apply in-plan and ``props`` the mined numeric property bounds
@@ -63,15 +71,19 @@ def _cql_seed(layer, cql: str | None):
         return None, {}
     from .cql import cql_to_sql
     props: dict = {}
-    sql = cql_to_sql(cql, has_geom="geom" in layer.df().columns,
+    sql = cql_to_sql(cql, has_geom="geom" in cols,
                      _prop_out=props)
     return sql, props
 
 
-def _distance_col(df: DataFrame, lon: float, lat: float):
+def _distance_col(lon: float, lat: float, cols: list):
     """Spherical distance column: pure column math for points (gtype==1
     everywhere), DistanceOp-style nearest-point fallback for general
     geometries (OrthodromicDistance.java:37-72)."""
+    point_fast = sphere_distance_km(lon, lat, "xmin", "ymin")
+    if "geom" not in cols:
+        return point_fast
+
     @F.pandas_udf(T.DoubleType())
     def geom_sphere_dist(wkb: pd.Series) -> pd.Series:
         out = []
@@ -84,11 +96,8 @@ def _distance_col(df: DataFrame, lon: float, lat: float):
             out.append(orthodromic_distance_km(lon, lat, qx, qy))
         return pd.Series(out)
 
-    point_fast = sphere_distance_km(F.lit(lon), F.lit(lat), F.col("xmin"), F.col("ymin"))
-    if "geom" in df.columns:
-        return F.when(F.col("gtype") == 1, point_fast).otherwise(
-            geom_sphere_dist(F.col("geom")))
-    return point_fast
+    return F.when(F.col("gtype") == 1, point_fast).otherwise(
+        geom_sphere_dist("geom"))
 
 
 def within_distance(layer, lon: float, lat: float, km: float,
@@ -97,17 +106,17 @@ def within_distance(layer, lon: float, lat: float, km: float,
     ordered ascending — spatial.withinDistance semantics.  ``cql``:
     an attribute predicate applied in-plan whose mined property bounds
     ALSO seed manifest attribute pruning (both prunes compose)."""
-    sql, props = _cql_seed(layer, cql)
+    cols = layer.columns
+    sql, props = _cql_seed(cql, cols)
     windows = sphere_search_windows(lon, lat, km)
     # manifest-shard file pruning first (windows AND property bounds),
     # then the in-plan bbox + SFC-range predicates — three prune
     # layers, outermost free
-    df = _window_prefilter(layer.df_pruned(windows=windows, props=props),
-                           windows, layer.all_points, layer.curve)
+    df = _window_prefilter(layer, windows, props, cols)
     if sql is not None:
         df = df.filter(sql)
-    df = df.withColumn("distance", _distance_col(df, lon, lat))
-    return df.filter(F.col("distance") <= km).orderBy("distance")
+    df = df.withColumn("distance", _distance_col(lon, lat, cols))
+    return df.filter(f"distance <= {sql_double(km)}").orderBy("distance")
 
 
 def closest(layer, lon: float, lat: float, k: int = 100,
@@ -134,23 +143,24 @@ def closest(layer, lon: float, lat: float, k: int = 100,
         return layer.df().withColumn("distance", F.lit(0.0)).limit(0)
     bx = layer.bbox()          # metadata likewise
     import math
-    all_pts = layer.all_points
     area = max((bx[2] - bx[0]) * (bx[3] - bx[1]), 1e-12)
     # window sized for ~4k expected candidates under uniform density
     est_deg = math.sqrt(4.0 * k * area / (math.pi * total))
     km = max(est_deg * 110.574, 1e-6)
     if max_km is not None:
         km = min(km, max_km)
-    sql, props = _cql_seed(layer, cql)
+    cols = layer.columns
+    sql, props = _cql_seed(cql, cols)
     window = sphere_search_window(lon, lat, km)  # unwrapped, for coverage test
     kwins = sphere_search_windows(lon, lat, km)
-    cand = _window_prefilter(layer.df_pruned(windows=kwins, props=props),
-                             kwins, all_pts, layer.curve)
+    cand = _window_prefilter(layer, kwins, props, cols)
     if sql is not None:
         cand = cand.filter(sql)
-    cand = cand.withColumn("distance", _distance_col(cand, lon, lat))
-    if max_km is not None:
-        cand = cand.filter(F.col("distance") <= max_km)
+    dist = _distance_col(lon, lat, cols)
+    in_range = None if max_km is None else f"distance <= {sql_double(max_km)}"
+    cand = cand.withColumn("distance", dist)
+    if in_range:
+        cand = cand.filter(in_range)
     pruned = cand.orderBy("distance").limit(k)
     window_covers_layer = (window[0] <= bx[0] and window[1] <= bx[1]
                            and window[2] >= bx[2] and window[3] >= bx[3])
@@ -158,25 +168,24 @@ def closest(layer, lon: float, lat: float, k: int = 100,
         return pruned
     # correctness probe: a point outside the window is farther than `km`,
     # so the in-window top-k is globally correct only while d_k <= km
-    probe = pruned.agg(F.count(F.lit(1)).alias("n"),
-                       F.max("distance").alias("dmax")).first()
+    probe = pruned.selectExpr("count(1) AS n", "max(distance) AS dmax").first()
     if probe["n"] >= k and (probe["dmax"] is None or probe["dmax"] <= km):
         return pruned
     full = layer.df_pruned(props=props) if props else layer.df()
     if sql is not None:
         full = full.filter(sql)
-    full = full.withColumn("distance", _distance_col(full, lon, lat))
-    if max_km is not None:
-        full = full.filter(F.col("distance") <= max_km)
+    full = full.withColumn("distance", dist)
+    if in_range:
+        full = full.filter(in_range)
     return full.orderBy("distance").limit(k)
 
 
 def bbox_search(layer, window, cql: str | None = None) -> DataFrame:
     """spatial.bbox (:822-836): envelope-intersection search.  ``cql``
     composes an attribute predicate + its mined manifest prune."""
-    sql, props = _cql_seed(layer, cql)
-    df = _window_prefilter(layer.df_pruned(windows=window, props=props),
-                           window, layer.all_points, layer.curve)
+    cols = layer.columns
+    sql, props = _cql_seed(cql, cols)
+    df = _window_prefilter(layer, window, props, cols)
     return df.filter(sql) if sql is not None else df
 
 
@@ -189,10 +198,9 @@ def intersects_search(layer, geom_or_wkt,
     composes an attribute predicate + its mined manifest prune."""
     g = from_wkt(geom_or_wkt) if isinstance(geom_or_wkt, str) else geom_or_wkt
     all_pts = layer.all_points
-    sql, props = _cql_seed(layer, cql)
-    df = _window_prefilter(layer.df_pruned(windows=g.envelope(),
-                                           props=props),
-                           g.envelope(), all_pts, layer.curve)
+    cols = layer.columns
+    sql, props = _cql_seed(cql, cols)
+    df = _window_prefilter(layer, g.envelope(), props, cols)
     if sql is not None:
         df = df.filter(sql)
     if all_pts is True:
@@ -214,10 +222,10 @@ def intersects_search(layer, geom_or_wkt,
             from ..geom.predicates import intersects as isect
             return pd.Series([isect(Geometry.point(*p), g) for p in pts])
 
-        return df.filter(pts_in(F.col("xmin"), F.col("ymin")))
+        return df.filter(pts_in("xmin", "ymin"))
     return df.filter(_intersects_refine(g))
 
 
 def _intersects_refine(g):
     from ..functions.scalar import st_intersects
-    return st_intersects(F.col("geom"), wkb_lit(g))
+    return st_intersects("geom", wkb_lit(g))

@@ -6,6 +6,7 @@ golden within-distance counts, LayersTest.java DDL, TestRemove.java deletes.
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -172,19 +173,108 @@ def test_update_dataframe_ids_and_wkt_quoting(ctx, spark):
         layer.update("not-ids")
 
 
+def _sphere_km(lon, lat, xs, ys):
+    """Law-of-cosines great-circle km, R=6371 (numpy brute force)."""
+    p1, p2 = np.radians(lat), np.radians(ys)
+    v = (np.sin(p1) * np.sin(p2)
+         + np.cos(p1) * np.cos(p2) * np.cos(np.radians(xs - lon)))
+    return np.arccos(np.clip(v, -1.0, 1.0)) * 6371.0
+
+
+def _in_convex(ring, xs, ys):
+    """Boundary-inclusive point-in-convex-ring (counter-clockwise)."""
+    inside = np.ones(len(xs), bool)
+    for (x0, y0), (x1, y1) in zip(ring, ring[1:] + ring[:1]):
+        inside &= (x1 - x0) * (ys - y0) - (y1 - y0) * (xs - x0) >= 0
+    return inside
+
+
 def test_within_distance_antimeridian(ctx, spark):
     """ADVICE r1: the search window must wrap at ±180 — points physically
-    near the probe but across the antimeridian were missed."""
-    layer = ctx.create_point_layer("anti", x="lon", y="lat")
+    near the probe but across the antimeridian were missed.  Every
+    search on points straddling the antimeridian matches a numpy brute
+    force under both curves' key-range decompositions, so the OR of the
+    split windows' bbox and key-range predicates drops nothing."""
+    for curve in ("zorder", "hilbert"):
+        _check_antimeridian_searches(ctx, spark, curve)
+
+
+def _check_antimeridian_searches(ctx, spark, curve):
+    rng = np.random.default_rng(11)
+    lon = np.concatenate([[179.5, -179.5, 170.0, 0.0],
+                          rng.uniform(170.0, 180.0, 150),
+                          rng.uniform(-180.0, -170.0, 150)])
+    lat = np.concatenate([[0.0] * 4, rng.uniform(-5.0, 5.0, 300)])
+    ids = np.arange(1, len(lon) + 1)
+    layer = ctx.create_point_layer(f"anti_{curve}", x="lon", y="lat",
+                                   curve=curve)
     layer.add(spark.createDataFrame(
-        [(1, 179.5, 0.0), (2, -179.5, 0.0), (3, 170.0, 0.0), (4, 0.0, 0.0)],
+        [(int(i), float(x), float(y)) for i, x, y in zip(ids, lon, lat)],
         "id long, lon double, lat double"))
     # probe sits right of the antimeridian; id 2 is ~111 km away across it
     res = layer.within_distance(179.9, 0.0, 200.0)
-    ids = {r["id"] for r in res.collect()}
-    assert ids == {1, 2}
-    res2 = layer.closest(-179.9, 0.0, k=2)
-    assert {r["id"] for r in res2.collect()} == {1, 2}
+    assert {1, 2} <= {r["id"] for r in res.collect()}
+    for cx, cy, km in [(179.9, 0.0, 200.0), (-179.9, 1.0, 350.0),
+                       (179.99, -2.0, 50.0)]:
+        d = _sphere_km(cx, cy, lon, lat)
+        got = sorted(r["id"] for r in layer.within_distance(cx, cy, km)
+                     .collect())
+        assert got == sorted(ids[d <= km].tolist())
+    for cx, cy, k in [(-179.9, 0.0, 2), (179.95, 1.0, 15)]:
+        d = _sphere_km(cx, cy, lon, lat)
+        rows = layer.closest(cx, cy, k=k).collect()
+        assert sorted(r["id"] for r in rows) == \
+            sorted(ids[np.argsort(d)[:k]].tolist())
+        assert np.allclose(sorted(r["distance"] for r in rows),
+                           np.sort(d)[:k], rtol=1e-12, atol=1e-9)
+    for w in [(175.0, -3.0, 180.0, 3.0), (-180.0, -3.0, -176.0, 2.0)]:
+        want = ids[(lon >= w[0]) & (lon <= w[2])
+                   & (lat >= w[1]) & (lat <= w[3])]
+        got = sorted(r["id"] for r in layer.bbox_search(*w).collect())
+        assert got == sorted(want.tolist())
+    for ring in [[(176.0, -2.0), (180.0, -2.0), (180.0, 2.0), (176.0, 2.0)],
+                 [(-180.0, -3.0), (-175.0, 0.0), (-180.0, 3.0)]]:
+        wkt = "POLYGON ((" + ", ".join(
+            f"{x} {y}" for x, y in ring + ring[:1]) + "))"
+        got = sorted(r["id"] for r in layer.intersects(wkt).collect())
+        assert got == sorted(ids[_in_convex(ring, lon, lat)].tolist())
+
+
+def test_cql_search_reads_geom_from_catalog(ctx, spark, monkeypatch):
+    """A ``cql=`` search learns whether the layer has a geom column from
+    the catalog's recorded schema — it reads no layer for that — and a
+    WKB layer and a point layer over the same points answer as a numpy
+    brute force does."""
+    rng = np.random.default_rng(5)
+    n = 200
+    lon, lat = rng.uniform(9.0, 11.0, n), rng.uniform(44.0, 46.0, n)
+    ids, score = np.arange(n), np.arange(n) % 10
+    pts = ctx.create_point_layer("cql_pts", x="lon", y="lat")
+    pts.add(spark.createDataFrame(
+        [(int(i), float(x), float(y), int(s))
+         for i, x, y, s in zip(ids, lon, lat, score)],
+        "id long, lon double, lat double, score long"))
+    wkb = ctx.create_layer("cql_wkb")
+    wkb.add(spark.createDataFrame(
+        [(int(i), f"POINT ({x!r} {y!r})", int(s))
+         for i, x, y, s in zip(ids, lon, lat, score)],
+        "id long, wkt string, score long"), wkt="wkt")
+    cql = "score >= 5 AND DWITHIN(geom, POINT(10 45), 60, kilometers)"
+    d = _sphere_km(10.0, 45.0, lon, lat)
+    hit = (score >= 5) & (d <= 60.0)
+    in_win = (lon >= 9.5) & (lon <= 10.5) & (lat >= 44.5) & (lat <= 45.5)
+
+    def no_read(*a, **kw):
+        raise AssertionError("search read the layer to learn its schema")
+
+    for layer in (pts, wkb):
+        monkeypatch.setattr(layer, "df", no_read)
+        got = sorted(r["id"] for r in layer.bbox_search(
+            9.5, 44.5, 10.5, 45.5, cql=cql).collect())
+        assert got == sorted(ids[hit & in_win].tolist())
+        got = sorted(r["id"] for r in layer.within_distance(
+            10.0, 45.0, 40.0, cql=cql).collect())
+        assert got == sorted(ids[hit & (d <= 40.0)].tolist())
 
 
 def test_dynamic_view(ctx, spark):

@@ -814,8 +814,7 @@ def test_sphere_azimuth_and_project(spark):
          (179.5, 10.0, -179.5, 10.0), (5.0, 80.0, 5.0, -80.0)],
         "lon1 double, lat1 double, lon2 double, lat2 double")
     az = sphere_azimuth_deg("lon1", "lat1", "lon2", "lat2")
-    dist = sphere_distance_km(F.col("lon1"), F.col("lat1"),
-                              F.col("lon2"), F.col("lat2"))
+    dist = sphere_distance_km("lon1", "lat1", "lon2", "lat2")
     plon, plat = sphere_project(F.col("lon1"), F.col("lat1"), az, dist)
     rows = df.select(az.alias("az"), plon.alias("plon"),
                      plat.alias("plat"), "lon2", "lat2").collect()

@@ -691,3 +691,90 @@ def test_cql_props_compose_with_window_prune(ctx, spark):
     cl = layer.closest(10.0, 45.0, k=5, cql="score >= 1000")
     rows = cl.collect()
     assert len(rows) == 5 and all(100 <= r["id"] < 200 for r in rows)
+
+
+#: the spelling of every literal a search predicate embeds: each double
+#: must parse back as DOUBLE, bit for bit (a bare ``11.9`` is DECIMAL)
+LITERAL_DOUBLES = (-179.99999999999997, 0.1, 11.9, -0.0, 1e-12, 5e-324, 1e16)
+
+
+def test_typed_sql_literals_round_trip(spark):
+    import struct
+    from pyspark.sql import types as T
+    key = 2 ** 40 + 12345          # zkey ranges reach past 2**31
+    df = spark.sql("SELECT " + ", ".join(
+        [f"{x!r}D AS d{i}" for i, x in enumerate(LITERAL_DOUBLES)]
+        + [f"{key}L AS k"]))
+    row = df.first()
+    for i, x in enumerate(LITERAL_DOUBLES):
+        assert df.schema[f"d{i}"].dataType == T.DoubleType()
+        assert struct.pack(">d", row[f"d{i}"]) == struct.pack(">d", x)
+    assert df.schema["k"].dataType == T.LongType() and row["k"] == key
+
+
+def test_sql_literal_helpers():
+    import math
+    from spatial_spark.functions.columns import sql_double, sql_long
+    for x in LITERAL_DOUBLES:
+        assert sql_double(x) == f"{x!r}D"
+    assert sql_double(3) == "3.0D"
+    for bad in (math.inf, -math.inf, math.nan):
+        with pytest.raises(ValueError):
+            sql_double(bad)
+    assert sql_long(2 ** 40 + 12345) == f"{2 ** 40 + 12345}L"
+
+
+_POLY = "POLYGON ((0 0, 20 0, 20 20, 0 20, 0 0))"
+
+#: the point_layer searches every plan pin below runs
+_SEARCHES = {
+    "bbox": lambda lay: lay.bbox_search(0, 0, 20, 20),
+    "within": lambda lay: lay.within_distance(10.0, 45.0, 500.0),
+    "intersects": lambda lay: lay.intersects(_POLY),
+    "closest": lambda lay: lay.closest(10.0, 45.0, k=25),
+}
+
+#: py4j ``send_command`` round trips allowed per search build on
+#: point_layer (``closest`` includes its probe job); Column-by-Column
+#: predicate building made 549-2127
+PY4J_BUDGET = {"bbox": 100, "within": 100, "intersects": 100, "closest": 150}
+
+
+def test_search_build_py4j_budget(point_layer, spark, monkeypatch):
+    """Counts the building thread's round trips only: py4j's finalizer
+    thread sends the deletes of released JVM references on its own
+    schedule."""
+    import threading
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    builder = threading.get_ident()
+    calls = [0]
+
+    def counting(*a, **kw):
+        calls[0] += threading.get_ident() == builder
+        return send(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    used = {}
+    for name, build in _SEARCHES.items():
+        calls[0] = 0
+        build(point_layer)
+        used[name] = calls[0]
+    monkeypatch.undo()
+    assert all(used[n] <= PY4J_BUDGET[n] for n in PY4J_BUDGET), used
+
+
+def test_point_search_filters_are_typed(point_layer, spark):
+    """Every search's pushed predicate on a point layer holds typed
+    double/long literals: no DECIMAL, no CAST; bbox/within/intersects
+    keep the zkey ranges in the scan's DataFilters and build with no
+    job."""
+    for name, build in _SEARCHES.items():
+        plan = _plan(build(point_layer))
+        assert "decimal" not in plan.lower(), (name, plan)
+        assert "cast(" not in plan.lower(), (name, plan)
+        scan = plan[plan.index("FileScan parquet"):]
+        assert "zkey" in scan.split("DataFilters")[1][:2000], name
+        # closest() may run its one correctness probe
+        assert _jobs_run(spark, lambda: build(point_layer)) <= \
+            (name == "closest"), name
