@@ -35,6 +35,19 @@ def sql_double(x) -> str:
     return f"{x!r}D"
 
 
+def sql_cast_double(x) -> str:
+    """``x`` as a DOUBLE literal valid in Spark SQL AND DuckDB, for SQL
+    text both engines run.  Two spellings exist because the ``D``
+    suffix of ``sql_double`` is Spark-only, and DuckDB parses a bare
+    ``11.9`` as DECIMAL (whose products overflow), so shared text
+    spells ``CAST(11.9 AS DOUBLE)``; the repr round-trips exactly in
+    both."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"no SQL double literal for {x!r}")
+    return f"CAST({x!r} AS DOUBLE)"
+
+
 def sql_long(v) -> str:
     """``v`` as a typed Spark SQL BIGINT literal (keys above 2**31)."""
     return f"{int(v)}L"

@@ -1,27 +1,40 @@
-"""CRS reprojection: EPSG:4326 ↔ EPSG:3857 and ↔ UTM in closed form.
+"""CRS reprojection in closed form: every frame composes with every
+other through WGS84 lon/lat degrees.
 
-The reference delegates CRS work to GeoTools adapters
-(geotools-common/, ~457 LoC of CRS plumbing); per SURVEY §1.2 this
-engine scopes CRS to WGS84 + cartesian + the web-mercator frame its
-tile math already uses (operators/tiles.py holds the slippy-map
-FORWARD half).  This module closes the practical gap (VERDICT r7 ask
-#7, extended by the r8 ask #6 UTM tier, and in r9 by the conic /
-azimuthal conformal tier — Lambert Conformal Conic 2SP (EPSG:2154
-Lambert-93, EPSG:3034 LCC-Europe, generic ``lcc:…`` frames) and polar
-stereographic in both EPSG variants (B: 3031/3413/3995 standard
-parallel; A: 5041/5042 UPS, central scale k0) — every projected frame
-composing with every other through wgs84): spherical-mercator meters ↔
-lon/lat degrees and WGS84 ↔ UTM (EPSG:326xx/327xx), both directions, as
+The reference delegates CRS work to the GeoTools CRS factory
+(geotools-common/, DefaultLayer.java:135-141; SURVEY §1.2).  This
+module is the engine's one CRS tier, laid out as:
 
-  * dual-engine SQL TEXT (``merc_forward_sql`` / ``merc_inverse_sql`` /
-    ``utm_forward_ctes``) — identical IEEE double expressions valid in
-    Spark SQL and DuckDB, the repo's cross-engine oracle discipline,
-    usable as pure Column math on point tables (no UDF, whole-stage
-    codegen), and
-  * ``st_transform(geom, 'EPSG:4326', 'EPSG:3857'|'EPSG:32632'|…)`` —
-    an Arrow-batched UDF applying the same formulas to every vertex of
-    any WKB geometry (the ``cartesian`` frame passes through
-    untouched; merc ↔ utm composes through wgs84).
+  * Frame table.  ``_frame`` resolves an EPSG code, a registry entry or
+    a generic token to one canonical frame string (``wgs84``, ``merc``,
+    ``cart``, ``utm:<zone>:<n|s>``, ``tm:…``, ``lcc:…``, ``psb:…``,
+    ``psa:…``, ``laea:…``, ``aea:…``, ``tmd:…``, ``lccd:…``, ``sod:…``,
+    ``soc:…``).  ``_KERNELS`` registers each frame kind once — its
+    parameter count and its (to_wgs84, from_wgs84) numpy kernels — and
+    ``transform_points`` is one lookup in it per side.
+  * Kernels.  Spherical mercator; ONE Krüger/Karney transverse-Mercator
+    series (``tm_forward``/``tm_inverse`` on any ellipsoid (a, f), with
+    ``utm_forward``/``utm_inverse`` as zone adapters); Lambert conformal
+    conic and polar stereographic (Snyder's t/m machinery); LAEA and
+    Albers (authalic q); oblique stereographic and Swiss oblique
+    cylindrical (the Gauss conformal sphere).
+  * Datum leg.  Frames on a non-WGS84 datum (``tmd``, ``lccd``, ``sod``,
+    ``soc``) reach WGS84 through geodetic → ECEF → position-vector
+    Helmert → Bowring at h = 0: ``_wgs84_to_datum``/``_datum_to_wgs84``
+    in numpy, ``_datum_ctes`` in SQL.
+  * SQL spellings.  Each ``*_forward_ctes`` (and ``utm_inverse_ctes``)
+    wraps a base query in a ``SELECT *`` WITH chain whose last stage
+    (``_utm_out``, ``_utmi_out``, ``_tm_out``, ``_tmd_out``,
+    ``_lcd_out``, ``_sod_out``, ``_soc_out``, ``_lcc_out``,
+    ``_laea_out``, ``_aea_out``) adds the output columns.  The text is
+    valid Spark SQL and DuckDB and replays the numpy kernel op for op:
+    constants are repr'd from the same Python doubles and spelled
+    ``CAST(v AS DOUBLE)`` (``columns.sql_cast_double``), sinh/cosh/atanh
+    go through exp/ln.  No stage repeats an alias an earlier stage
+    added: under ``SELECT *`` an engine silently reads the first one.
+  * ``st_transform`` is an Arrow-batched UDF applying
+    ``transform_points`` to every vertex of a WKB geometry; the
+    ``cartesian`` frame passes through to itself only.
 
 Spherical mercator (EPSG:3857 definition, R = WGS84 semi-major axis):
 
@@ -34,15 +47,13 @@ No latitude clamp is applied — |lat| → 90 diverges by definition; the
 tile layer (operators/tiles.py) clamps to ±85.05112878° where the
 slippy grid requires it.
 
-UTM (WGS84 ellipsoid, transverse Mercator) uses the published
-Krüger/Karney series in the third flattening n to 3rd order (Karney
-2011 "Transverse Mercator with an accuracy of a few nanometers",
-eqs. 7-15 and 21-26; also the Redfearn-series summary on the standard
-references).  Truncation error is sub-0.1 mm inside a zone — far below
-the libm-ulp level the cross-engine gates already absorb with cm
-rounding.  k0 = 0.9996, false easting 500 000 m, false northing 0 (N
-hemisphere, EPSG:326zz) / 10 000 000 m (S, EPSG:327zz); the central
-meridian of zone z is 6z - 183 degrees.
+Transverse Mercator uses the Krüger/Karney series in the third
+flattening n to 3rd order (Karney 2011 "Transverse Mercator with an
+accuracy of a few nanometers", eqs. 7-15 and 21-26).  Truncation error
+is sub-0.1 mm inside a zone — far below the libm-ulp level the
+cross-engine gates absorb with cm rounding.  UTM is k0 = 0.9996, false
+easting 500 000 m, false northing 0 (N hemisphere, EPSG:326zz) /
+10 000 000 m (S, EPSG:327zz), central meridian 6z - 183 degrees.
 """
 
 from __future__ import annotations
@@ -57,12 +68,14 @@ from pyspark.sql import types as T
 
 from ..geom import Geometry, GTYPE_POINT, GTYPE_LINESTRING, GTYPE_POLYGON, \
     from_wkb, to_wkb
+from .columns import sql_cast_double as _c
 
 __all__ = ["MERC_R", "merc_forward_sql", "merc_inverse_sql",
            "transform_points", "st_transform",
            "UTM_K0", "UTM_A", "UTM_ALPHA", "utm_forward", "utm_inverse",
            "utm_forward_ctes", "utm_inverse_ctes",
            "tm_forward", "tm_inverse", "tm_forward_ctes", "tm_xi0",
+           "krueger_constants",
            "lcc_constants", "lcc_forward", "lcc_inverse",
            "ps_forward", "ps_inverse", "psa_forward", "psa_inverse",
            "lcc_forward_ctes",
@@ -72,37 +85,45 @@ __all__ = ["MERC_R", "merc_forward_sql", "merc_inverse_sql",
            "aea_forward_ctes"]
 
 MERC_R = 6378137.0   # WGS84 semi-major axis, the EPSG:3857 sphere radius
+_F = 1.0 / 298.257223563            # WGS84 flattening
 
 _WGS84 = ("epsg:4326", "4326", "crs:84", "wgs84")
 _MERC = ("epsg:3857", "3857", "epsg:900913", "web-mercator")
 _CART = ("cartesian", "0", "none", "")
 
-# --- UTM ellipsoid series constants (WGS84) --------------------------------
+
+def krueger_constants(a: float, f: float):
+    """(A, alpha, beta, delta, c) — the Krüger/Karney series constants
+    for ellipsoid (a, f), 3rd order in the third flattening n: the
+    rectifying radius A = a/(1+n) (1 + n²/4 + n⁴/64), the forward series
+    alpha_j, the inverse series beta_j, the conformal → geographic
+    latitude series delta_j, and the conformal-map coefficient c."""
+    n = f / (2.0 - f)
+    A = a / (1.0 + n) * (1.0 + n * n / 4.0 + n ** 4 / 64.0)
+    alpha = (
+        n / 2.0 - 2.0 * n ** 2 / 3.0 + 5.0 * n ** 3 / 16.0,
+        13.0 * n ** 2 / 48.0 - 3.0 * n ** 3 / 5.0,
+        61.0 * n ** 3 / 240.0,
+    )
+    beta = (
+        n / 2.0 - 2.0 * n ** 2 / 3.0 + 37.0 * n ** 3 / 96.0,
+        n ** 2 / 48.0 + n ** 3 / 15.0,
+        17.0 * n ** 3 / 480.0,
+    )
+    delta = (
+        2.0 * n - 2.0 * n ** 2 / 3.0 - 2.0 * n ** 3,
+        7.0 * n ** 2 / 3.0 - 8.0 * n ** 3 / 5.0,
+        56.0 * n ** 3 / 15.0,
+    )
+    c = 2.0 * math.sqrt(n) / (1.0 + n)
+    return A, alpha, beta, delta, c
+
+
+# --- UTM: the WGS84 transverse Mercator zones ------------------------------
 UTM_K0 = 0.9996
 UTM_E0 = 500000.0
 UTM_FN_SOUTH = 10000000.0
-_F = 1.0 / 298.257223563            # WGS84 flattening
-_N = _F / (2.0 - _F)                # third flattening
-# rectifying radius A = a/(1+n) (1 + n^2/4 + n^4/64)
-UTM_A = MERC_R / (1.0 + _N) * (1.0 + _N * _N / 4.0 + _N ** 4 / 64.0)
-# forward series alpha_j, inverse series beta_j, conformal->geographic
-# latitude series delta_j (3rd order in n)
-UTM_ALPHA = (
-    _N / 2.0 - 2.0 * _N ** 2 / 3.0 + 5.0 * _N ** 3 / 16.0,
-    13.0 * _N ** 2 / 48.0 - 3.0 * _N ** 3 / 5.0,
-    61.0 * _N ** 3 / 240.0,
-)
-UTM_BETA = (
-    _N / 2.0 - 2.0 * _N ** 2 / 3.0 + 37.0 * _N ** 3 / 96.0,
-    _N ** 2 / 48.0 + _N ** 3 / 15.0,
-    17.0 * _N ** 3 / 480.0,
-)
-UTM_DELTA = (
-    2.0 * _N - 2.0 * _N ** 2 / 3.0 - 2.0 * _N ** 3,
-    7.0 * _N ** 2 / 3.0 - 8.0 * _N ** 3 / 5.0,
-    56.0 * _N ** 3 / 15.0,
-)
-_UTM_C = 2.0 * math.sqrt(_N) / (1.0 + _N)   # coefficient in the conformal map
+UTM_A, UTM_ALPHA, UTM_BETA, UTM_DELTA, _UTM_C = krueger_constants(MERC_R, _F)
 
 _UTM_RE = re.compile(r"^(?:epsg:)?(326|327)(\d{2})$")
 # ETRS89 / UTM zones (EPSG 25828-25838) and ETRS89 / TM35FIN (EPSG
@@ -558,8 +579,6 @@ for _z in range(17, 26):
 # (EPSG tfm 1777: 598.1, 73.7, 418.2 m; 0.202", 0.045", -2.455";
 # 6.7 ppm — the documented ~3 m national class, same contract as the
 # NAD27/Pulkovo tiers).  CM = 3z, FE = z * 1e6 + 500 000, k0 = 1.
-BESSEL_A = 6377397.155
-BESSEL_F = 1.0 / 299.1528128
 DHDN_HELMERT = (598.1, 73.7, 418.2, 0.202, 0.045, -2.455, 6.7)
 for _z in range(2, 6):
     EPSG_REGISTRY[str(31464 + _z)] = ("tmd:" + ":".join(
@@ -638,12 +657,25 @@ def list_supported_epsg() -> dict:
     return out
 
 
+_POLE_MSG = {
+    "tm": "st_transform: TM origin latitude must be below the pole",
+    "tmd": "st_transform: TM origin latitude must be below the pole",
+    "sod": ("st_transform: oblique-stereographic origin latitude must be "
+            "below the pole (use psb:/psa: for the polar aspect)"),
+    "soc": ("st_transform: Swiss-oblique origin latitude must be below "
+            "the pole"),
+    "laea": ("st_transform: LAEA polar aspect is out of scope (oblique "
+             "|lat0| < 90 only)"),
+}
+_DATUM_KINDS = ("tmd", "lccd", "sod", "soc")   # (a, f) + 7 Helmert last
+
+
 def _frame(crs) -> str:
     """Canonical frame token: 'wgs84' | 'merc' | 'cart' |
-    'utm:<zone>:<n|s>' | 'lcc:<lat1>:<lat2>:<lat0>:<lon0>:<fe>:<fn>' |
-    'psb:<lat_ts>:<lon0>:<fe>:<fn>' | 'psa:<k0>:<lon0>:<fe>:<fn>:<n|s>'.
-    Generic lcc:/psb:/psa: strings are accepted and re-canonicalized
-    (float repr) so parameter-equal frames compare equal."""
+    'utm:<zone>:<n|s>' | '<kind>:<params…>' for every other kind in
+    ``_KERNELS`` ('psa:…' ends in ':<n|s>').  Generic tokens are
+    accepted and re-canonicalized (float repr) so parameter-equal
+    frames compare equal."""
     s = str(crs).strip().lower()
     if s in _WGS84:
         return "wgs84"
@@ -677,14 +709,9 @@ def _frame(crs) -> str:
     key = s[5:] if s.startswith("epsg:") else s
     if key in EPSG_REGISTRY:    # data-driven registry (r12)
         return _frame(EPSG_REGISTRY[key])
-    if key in _EPSG_CONIC:
-        return _EPSG_CONIC[key]
-    if key in _EPSG_TMD:
-        return _EPSG_TMD[key]
-    if key in _EPSG_SOD:
-        return _EPSG_SOD[key]
-    if key in _EPSG_SOC:
-        return _EPSG_SOC[key]
+    for table in (_EPSG_CONIC, _EPSG_TMD, _EPSG_SOD, _EPSG_SOC):
+        if key in table:
+            return table[key]
     if s.startswith("utm:"):
         # canonical utm:<zone>:<n|s> token (registry zone aliases —
         # e.g. SIRGAS 2000 / UTM — resolve recursively through here)
@@ -697,12 +724,9 @@ def _frame(crs) -> str:
         if not 1 <= zone <= 60:
             raise ValueError(f"st_transform: UTM zone {zone} out of 1..60")
         return f"utm:{zone}:{parts[2]}"
-    if s.startswith(("lcc:", "psb:", "psa:", "laea:", "tm:", "aea:",
-                     "tmd:", "sod:", "soc:", "lccd:")):
-        kind, *parts = s.split(":")
-        n_num = {"lcc": 6, "psb": 4, "psa": 4, "laea": 4, "tm": 5,
-                 "aea": 6, "tmd": 14, "sod": 14, "soc": 13,
-                 "lccd": 15}[kind]
+    kind, *parts = s.split(":")
+    n_num = _KERNELS[kind][0] if parts and kind in _KERNELS else None
+    if n_num:
         hemi = ()
         if kind == "psa":
             if len(parts) != 5 or parts[4] not in ("n", "s"):
@@ -719,38 +743,13 @@ def _frame(crs) -> str:
         if kind == "psb" and nums[0] == 0.0:
             raise ValueError("st_transform: psb lat_ts must be nonzero "
                              "(sign selects the aspect)")
-        if kind == "tm" and abs(nums[0]) >= 89.999999:
-            raise ValueError("st_transform: TM origin latitude must be "
-                             "below the pole")
-        if kind == "lccd":
-            if not (nums[6] > 0.0 and 0.0 < nums[7] < 0.01):
-                raise ValueError("st_transform: lccd ellipsoid must "
+        if kind in _POLE_MSG and abs(nums[0]) >= 89.999999:
+            raise ValueError(_POLE_MSG[kind])
+        if kind in _DATUM_KINDS:
+            a, f = nums[-9], nums[-8]
+            if not (a > 0.0 and 0.0 < f < 0.01):
+                raise ValueError(f"st_transform: {kind} ellipsoid must "
                                  "have a > 0 and 0 < f < 0.01")
-        if kind == "tmd":
-            if abs(nums[0]) >= 89.999999:
-                raise ValueError("st_transform: TM origin latitude must "
-                                 "be below the pole")
-            if not (nums[5] > 0.0 and 0.0 < nums[6] < 0.01):
-                raise ValueError("st_transform: tmd ellipsoid must have "
-                                 "a > 0 and 0 < f < 0.01")
-        if kind == "sod":
-            if abs(nums[0]) >= 89.999999:
-                raise ValueError("st_transform: oblique-stereographic "
-                                 "origin latitude must be below the pole "
-                                 "(use psb:/psa: for the polar aspect)")
-            if not (nums[5] > 0.0 and 0.0 < nums[6] < 0.01):
-                raise ValueError("st_transform: sod ellipsoid must have "
-                                 "a > 0 and 0 < f < 0.01")
-        if kind == "soc":
-            if abs(nums[0]) >= 89.999999:
-                raise ValueError("st_transform: Swiss-oblique origin "
-                                 "latitude must be below the pole")
-            if not (nums[4] > 0.0 and 0.0 < nums[5] < 0.01):
-                raise ValueError("st_transform: soc ellipsoid must have "
-                                 "a > 0 and 0 < f < 0.01")
-        if kind == "laea" and abs(nums[0]) >= 89.999999:
-            raise ValueError("st_transform: LAEA polar aspect is out of "
-                             "scope (oblique |lat0| < 90 only)")
         if kind == "aea" and abs(nums[0] + nums[1]) < 1e-9:
             raise ValueError("st_transform: Albers standard parallels "
                              "symmetric about the equator give n=0 "
@@ -772,6 +771,28 @@ def _frame(crs) -> str:
         "cartesian)")
 
 
+# --- SQL spellings: atanh/sinh/cosh through ln/exp, valid in both engines --
+def _atanh(x: str) -> str:
+    return f"(0.5 * ln((1.0 + {x}) / (1.0 - {x})))"
+
+
+def _sinh(x: str) -> str:
+    return f"((exp({x}) - exp(-({x}))) / 2.0)"
+
+
+def _cosh(x: str) -> str:
+    return f"((exp({x}) + exp(-({x}))) / 2.0)"
+
+
+def _ksum(v: str, sign: str, coefs, trig: str, hyp, x: str, y: str) -> str:
+    """One Krüger series as SQL: ``v`` ± Σ_j coef_j · trig(2j·x) ·
+    hyp(2j·y), summed left to right as the numpy loop does."""
+    return v + "".join(
+        f"\n              {sign} {_c(k)} * {trig}({2.0 * j!r} * {x})"
+        f" * {hyp(f'({2.0 * j!r} * {y})')}"
+        for j, k in enumerate(coefs, start=1))
+
+
 def merc_forward_sql(lon_sql: str, lat_sql: str) -> tuple[str, str]:
     """(x_meters, y_meters) SQL texts — valid in Spark SQL and DuckDB."""
     x = f"({MERC_R!r} * radians({lon_sql}))"
@@ -786,40 +807,77 @@ def merc_inverse_sql(x_sql: str, y_sql: str) -> tuple[str, str]:
     return lon, lat
 
 
-def utm_forward(xy: np.ndarray, zone: int, south: bool) -> np.ndarray:
-    """WGS84 lon/lat degrees → UTM easting/northing meters (vectorized
-    Krüger/Karney forward series, 3rd order in n)."""
-    lon0 = 6.0 * zone - 183.0
-    phi = np.radians(xy[:, 1])
-    lam = np.radians(xy[:, 0] - lon0)
-    sphi = np.sin(phi)
-    t = np.sinh(np.arctanh(sphi) - _UTM_C * np.arctanh(_UTM_C * sphi))
-    xip = np.arctan2(t, np.cos(lam))
-    etap = np.arctanh(np.sin(lam) / np.sqrt(1.0 + t * t))
-    xi, eta = xip.copy(), etap.copy()
-    for j, a in enumerate(UTM_ALPHA, start=1):
-        xi += a * np.sin(2.0 * j * xip) * np.cosh(2.0 * j * etap)
-        eta += a * np.cos(2.0 * j * xip) * np.sinh(2.0 * j * etap)
-    out = np.empty_like(xy, dtype=np.float64)
-    out[:, 0] = UTM_E0 + UTM_K0 * UTM_A * eta
-    out[:, 1] = (UTM_FN_SOUTH if south else 0.0) + UTM_K0 * UTM_A * xi
+def _merc_forward(ll: np.ndarray) -> np.ndarray:
+    out = np.empty_like(ll, dtype=np.float64)
+    out[:, 0] = MERC_R * np.radians(ll[:, 0])
+    out[:, 1] = MERC_R * np.log(
+        np.tan(np.pi / 4.0 + np.radians(ll[:, 1]) / 2.0))
     return out
 
 
-def utm_inverse(xy: np.ndarray, zone: int, south: bool) -> np.ndarray:
-    """UTM easting/northing meters → WGS84 lon/lat degrees (inverse
-    series; conformal latitude → geographic via the delta series)."""
-    lon0 = 6.0 * zone - 183.0
-    xi = (xy[:, 1] - (UTM_FN_SOUTH if south else 0.0)) / (UTM_K0 * UTM_A)
-    eta = (xy[:, 0] - UTM_E0) / (UTM_K0 * UTM_A)
+def _merc_inverse(xy: np.ndarray) -> np.ndarray:
+    ll = np.empty_like(xy, dtype=np.float64)
+    ll[:, 0] = np.degrees(xy[:, 0] / MERC_R)
+    ll[:, 1] = np.degrees(
+        2.0 * np.arctan(np.exp(xy[:, 1] / MERC_R)) - np.pi / 2.0)
+    return ll
+
+
+# --- Transverse Mercator: one Krüger/Karney series -------------------------
+def tm_xi0(lat0: float, alpha, c: float) -> float:
+    """ξ of (lat0, central meridian) in the Krüger series with constants
+    (alpha, c) — the meridian-arc origin shift a TM frame subtracts
+    (exactly 0 for lat0 = 0, the UTM case)."""
+    sphi = math.sin(math.radians(lat0))
+    t = math.sinh(math.atanh(sphi) - c * math.atanh(c * sphi))
+    xip = math.atan(t)
+    xi = xip
+    for j, a_j in enumerate(alpha, start=1):
+        xi += a_j * math.sin(2.0 * j * xip)
+    return xi
+
+
+def tm_forward(xy: np.ndarray, lat0: float, lon0: float, k0: float,
+               fe: float, fn: float, a: float = MERC_R,
+               f: float = _F) -> np.ndarray:
+    """Lon/lat degrees on ellipsoid (a, f) → transverse-Mercator meters
+    (Krüger/Karney forward series) with natural origin (lat0, lon0),
+    scale k0 and false origin (fe, fn).  Coordinates are in the grid's
+    own datum: a datum-shifted caller moves them there first."""
+    A, alpha, _, _, c = krueger_constants(a, f)
+    phi = np.radians(xy[:, 1])
+    lam = np.radians(xy[:, 0] - lon0)
+    sphi = np.sin(phi)
+    t = np.sinh(np.arctanh(sphi) - c * np.arctanh(c * sphi))
+    xip = np.arctan2(t, np.cos(lam))
+    etap = np.arctanh(np.sin(lam) / np.sqrt(1.0 + t * t))
+    xi, eta = xip.copy(), etap.copy()
+    for j, a_j in enumerate(alpha, start=1):
+        xi += a_j * np.sin(2.0 * j * xip) * np.cosh(2.0 * j * etap)
+        eta += a_j * np.cos(2.0 * j * xip) * np.sinh(2.0 * j * etap)
+    out = np.empty_like(xy, dtype=np.float64)
+    out[:, 0] = fe + k0 * A * eta
+    out[:, 1] = fn + k0 * A * (xi - tm_xi0(lat0, alpha, c))
+    return out
+
+
+def tm_inverse(xy: np.ndarray, lat0: float, lon0: float, k0: float,
+               fe: float, fn: float, a: float = MERC_R,
+               f: float = _F) -> np.ndarray:
+    """Transverse-Mercator meters → lon/lat degrees on ellipsoid (a, f)
+    (inverse series; conformal → geographic latitude by the delta
+    series)."""
+    A, alpha, beta, delta, c = krueger_constants(a, f)
+    xi = (xy[:, 1] - fn) / (k0 * A) + tm_xi0(lat0, alpha, c)
+    eta = (xy[:, 0] - fe) / (k0 * A)
     xip, etap = xi.copy(), eta.copy()
-    for j, b in enumerate(UTM_BETA, start=1):
-        xip -= b * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
-        etap -= b * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
+    for j, b_j in enumerate(beta, start=1):
+        xip -= b_j * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
+        etap -= b_j * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
     chi = np.arcsin(np.sin(xip) / np.cosh(etap))
     phi = chi.copy()
-    for j, d in enumerate(UTM_DELTA, start=1):
-        phi += d * np.sin(2.0 * j * chi)
+    for j, d_j in enumerate(delta, start=1):
+        phi += d_j * np.sin(2.0 * j * chi)
     lam = np.arctan2(np.sinh(etap), np.cos(xip))
     out = np.empty_like(xy, dtype=np.float64)
     out[:, 0] = lon0 + np.degrees(lam)
@@ -827,62 +885,65 @@ def utm_inverse(xy: np.ndarray, zone: int, south: bool) -> np.ndarray:
     return out
 
 
+def utm_forward(xy: np.ndarray, zone: int, south: bool) -> np.ndarray:
+    """WGS84 lon/lat degrees → UTM easting/northing meters."""
+    return tm_forward(xy, 0.0, 6.0 * zone - 183.0, UTM_K0, UTM_E0,
+                      UTM_FN_SOUTH if south else 0.0)
+
+
+def utm_inverse(xy: np.ndarray, zone: int, south: bool) -> np.ndarray:
+    """UTM easting/northing meters → WGS84 lon/lat degrees."""
+    return tm_inverse(xy, 0.0, 6.0 * zone - 183.0, UTM_K0, UTM_E0,
+                      UTM_FN_SOUTH if south else 0.0)
+
+
+def _tm_ctes(p: str, src: str, k0: float, a: float, f: float,
+             fe_sql: str, fn_sql: str, lat0: float) -> str:
+    """The Krüger forward series as the stages ``{p}_t``, ``{p}_xe``
+    and ``{p}_out`` over stage ``src``, which carries ``_phi`` (latitude
+    on ellipsoid (a, f)) and ``_lam`` (longitude from the central
+    meridian), both radians.  ``{p}_out`` adds ``easting`` =
+    fe + k0·A·η and ``northing`` = fn + k0·A·(ξ − ξ₀): ``tm_forward``
+    op for op."""
+    A, alpha, _, _, c = krueger_constants(a, f)
+    ka = f"({_c(k0)} * {_c(A)})"
+    t = _sinh(f"({_atanh('sin(_phi)')} - {_c(c)} * "
+              f"{_atanh(f'({_c(c)} * sin(_phi))')})")
+    return f"""
+        {p}_t AS (SELECT *, {t} AS _t FROM {src}),
+        {p}_xe AS (
+          SELECT *, atan2(_t, cos(_lam)) AS _xip,
+                 {_atanh("(sin(_lam) / sqrt(1.0 + _t * _t))")} AS _etap
+          FROM {p}_t),
+        {p}_out AS (
+          SELECT *,
+            {fe_sql} + {ka} * ({_ksum("_etap", "+", alpha, "cos", _sinh,
+                                      "_xip", "_etap")})
+              AS easting,
+            {fn_sql} + {ka} * (({_ksum("_xip", "+", alpha, "sin", _cosh,
+                                       "_xip", "_etap")})
+              - {_c(tm_xi0(lat0, alpha, c))})
+              AS northing
+          FROM {p}_xe)"""
+
+
 def utm_forward_ctes(base: str, lon: str = "lon", lat: str = "lat",
                      zone: str = "zone", south: str = "south") -> str:
-    """Dual-engine SQL (valid Spark SQL AND DuckDB) computing the same
+    """Dual-engine SQL (valid Spark SQL AND DuckDB) computing the UTM
     forward series: wraps ``base`` — a query exposing ``lon``/``lat``
     degrees plus ``zone`` (1..60) and ``south`` (boolean) columns — in
-    a WITH chain that adds ``easting``/``northing`` columns.  sinh /
-    cosh / atanh are spelled via exp/ln so the text is portable; the
-    numeric constants are repr'd from the same Python values the numpy
-    kernel uses."""
-    a1, a2, a3 = UTM_ALPHA
-
-    def _c(v: float) -> str:
-        # bare decimal literals parse as DECIMAL in DuckDB (and overflow
-        # in products) — every constant is cast to DOUBLE explicitly
-        return f"CAST({v!r} AS DOUBLE)"
-
-    def _atanh(x):
-        return f"(0.5 * ln((1.0 + {x}) / (1.0 - {x})))"
-
-    def _sinh(x):
-        return f"((exp({x}) - exp(-({x}))) / 2.0)"
-
-    def _cosh(x):
-        return f"((exp({x}) + exp(-({x}))) / 2.0)"
-
-    ka = f"({_c(UTM_K0)} * {_c(UTM_A)})"
+    a WITH chain whose ``_utm_out`` stage adds ``easting``/``northing``
+    columns."""
+    fn = (f"(CASE WHEN {south} THEN {_c(UTM_FN_SOUTH)} "
+          f"ELSE {_c(0.0)} END)")
     return f"""
         WITH _utm_base AS ({base}),
         _utm_s1 AS (
           SELECT *, radians(CAST({lat} AS DOUBLE)) AS _phi,
                  radians(CAST({lon} AS DOUBLE)
                          - (6.0 * CAST({zone} AS DOUBLE) - 183.0)) AS _lam
-          FROM _utm_base),
-        _utm_s2 AS (
-          SELECT *, {_sinh(f"({_atanh('sin(_phi)')} - {_c(_UTM_C)} * "
-                           f"{_atanh(f'({_c(_UTM_C)} * sin(_phi))')})")} AS _t
-          FROM _utm_s1),
-        _utm_s3 AS (
-          SELECT *, atan2(_t, cos(_lam)) AS _xip,
-                 {_atanh("(sin(_lam) / sqrt(1.0 + _t * _t))")} AS _etap
-          FROM _utm_s2),
-        _utm_out AS (
-          SELECT *,
-            {_c(UTM_E0)} + {ka} * (_etap
-              + {_c(a1)} * cos(2.0 * _xip) * {_sinh("(2.0 * _etap)")}
-              + {_c(a2)} * cos(4.0 * _xip) * {_sinh("(4.0 * _etap)")}
-              + {_c(a3)} * cos(6.0 * _xip) * {_sinh("(6.0 * _etap)")})
-              AS easting,
-            (CASE WHEN {south} THEN {_c(UTM_FN_SOUTH)}
-                  ELSE CAST(0.0 AS DOUBLE) END)
-              + {ka} * (_xip
-              + {_c(a1)} * sin(2.0 * _xip) * {_cosh("(2.0 * _etap)")}
-              + {_c(a2)} * sin(4.0 * _xip) * {_cosh("(4.0 * _etap)")}
-              + {_c(a3)} * sin(6.0 * _xip) * {_cosh("(6.0 * _etap)")})
-              AS northing
-          FROM _utm_s3)
+          FROM _utm_base),{_tm_ctes("_utm", "_utm_s1", UTM_K0, MERC_R, _F,
+                                    _c(UTM_E0), fn, 0.0)}
     """
 
 
@@ -892,21 +953,9 @@ def utm_inverse_ctes(base: str, easting: str = "easting",
     """Dual-engine SQL for the INVERSE series (UTM meters → lon/lat
     degrees), the symmetric twin of ``utm_forward_ctes``: wraps
     ``base`` — a query exposing ``easting``/``northing`` meters plus
-    ``zone`` and ``south`` columns — in a WITH chain that adds
-    ``lon``/``lat`` columns.  Same portability rules (constants cast to
-    DOUBLE, sinh/cosh via exp)."""
-    b1, b2, b3 = UTM_BETA
+    ``zone`` and ``south`` columns — in a WITH chain whose
+    ``_utmi_out`` stage adds ``lon``/``lat`` columns."""
     d1, d2, d3 = UTM_DELTA
-
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    def _sinh(x):
-        return f"((exp({x}) - exp(-({x}))) / 2.0)"
-
-    def _cosh(x):
-        return f"((exp({x}) + exp(-({x}))) / 2.0)"
-
     ka = f"({_c(UTM_K0)} * {_c(UTM_A)})"
     return f"""
         WITH _utmi_base AS ({base}),
@@ -914,18 +963,14 @@ def utm_inverse_ctes(base: str, easting: str = "easting",
           SELECT *,
                  (CAST({northing} AS DOUBLE)
                   - (CASE WHEN {south} THEN {_c(UTM_FN_SOUTH)}
-                          ELSE CAST(0.0 AS DOUBLE) END)) / {ka} AS _ixi,
+                          ELSE {_c(0.0)} END)) / {ka} AS _ixi,
                  (CAST({easting} AS DOUBLE) - {_c(UTM_E0)}) / {ka} AS _ieta
           FROM _utmi_base),
         _utmi_s2 AS (
           SELECT *,
-            _ixi - {_c(b1)} * sin(2.0 * _ixi) * {_cosh("(2.0 * _ieta)")}
-                - {_c(b2)} * sin(4.0 * _ixi) * {_cosh("(4.0 * _ieta)")}
-                - {_c(b3)} * sin(6.0 * _ixi) * {_cosh("(6.0 * _ieta)")}
+            {_ksum("_ixi", "-", UTM_BETA, "sin", _cosh, "_ixi", "_ieta")}
               AS _ixip,
-            _ieta - {_c(b1)} * cos(2.0 * _ixi) * {_sinh("(2.0 * _ieta)")}
-                 - {_c(b2)} * cos(4.0 * _ixi) * {_sinh("(4.0 * _ieta)")}
-                 - {_c(b3)} * cos(6.0 * _ixi) * {_sinh("(6.0 * _ieta)")}
+            {_ksum("_ieta", "-", UTM_BETA, "cos", _sinh, "_ixi", "_ieta")}
               AS _ietap
           FROM _utmi_s1),
         _utmi_s3 AS (
@@ -939,6 +984,22 @@ def utm_inverse_ctes(base: str, easting: str = "easting",
             (6.0 * CAST({zone} AS DOUBLE) - 183.0)
               + degrees(atan2({_sinh("_ietap")}, cos(_ixip))) AS lon
           FROM _utmi_s3)
+    """
+
+
+def tm_forward_ctes(base: str, lat0: float, lon0: float, k0: float,
+                    fe: float, fn: float, lon: str = "lon",
+                    lat: str = "lat") -> str:
+    """Dual-engine SQL for the generic WGS84 TM forward: ``_tm_out``
+    adds ``easting``/``northing``; the frame constants, ξ₀ included,
+    fold in as DOUBLE literals."""
+    return f"""
+        WITH _tm_base AS ({base}),
+        _tm_s1 AS (
+          SELECT *, radians(CAST({lat} AS DOUBLE)) AS _phi,
+                 radians(CAST({lon} AS DOUBLE) - {_c(lon0)}) AS _lam
+          FROM _tm_base),{_tm_ctes("_tm", "_tm_s1", k0, MERC_R, _F, _c(fe),
+                                   _c(fn), lat0)}
     """
 
 
@@ -985,18 +1046,6 @@ def _phi_from_t(t: np.ndarray, e: float = _WGS_E,
     return phi
 
 
-def _phi_from_t_iter(t: np.ndarray, e: float = _WGS_E,
-                     iters: int = 15) -> np.ndarray:
-    """Extra-iterations twin used by the property tests to pin
-    convergence (a 15-step run must agree with the 12-step one)."""
-    phi = np.pi / 2.0 - 2.0 * np.arctan(t)
-    for _ in range(iters):
-        s = e * np.sin(phi)
-        phi = np.pi / 2.0 - 2.0 * np.arctan(
-            t * ((1.0 - s) / (1.0 + s)) ** (e / 2.0))
-    return phi
-
-
 def lcc_constants(lat1: float, lat2: float, lat0: float,
                   a: float = MERC_R, f: float = _F) -> tuple:
     """(n_cone, a*F, rho0, e) for an LCC 2SP frame.  When the
@@ -1015,114 +1064,6 @@ def lcc_constants(lat1: float, lat2: float, lat0: float,
         nc = (math.log(m1) - math.log(m2)) / (math.log(t1) - math.log(t2))
     af = a * m1 / (nc * t1 ** nc)
     return nc, af, af * t0 ** nc, e
-
-
-def tm_xi0(lat0: float) -> float:
-    """ξ of (lat0, central meridian) in the Krüger series — the
-    meridian-arc origin shift a generic TM frame subtracts (UTM is the
-    lat0=0 special case, where this is exactly 0)."""
-    sphi = math.sin(math.radians(lat0))
-    t = math.sinh(math.atanh(sphi) - _UTM_C * math.atanh(_UTM_C * sphi))
-    xip = math.atan(t)
-    xi = xip
-    for j, a in enumerate(UTM_ALPHA, start=1):
-        xi += a * math.sin(2.0 * j * xip)
-    return xi
-
-
-def tm_forward(xy: np.ndarray, lat0: float, lon0: float, k0: float,
-               fe: float, fn: float) -> np.ndarray:
-    """WGS84 lon/lat degrees → generic transverse-Mercator meters
-    (Krüger/Karney series, the UTM kernel with configurable natural
-    origin/scale/offsets — the national-grid class: NZTM2000, Poland
-    CS92, SVY21, …)."""
-    phi = np.radians(xy[:, 1])
-    lam = np.radians(xy[:, 0] - lon0)
-    sphi = np.sin(phi)
-    t = np.sinh(np.arctanh(sphi) - _UTM_C * np.arctanh(_UTM_C * sphi))
-    xip = np.arctan2(t, np.cos(lam))
-    etap = np.arctanh(np.sin(lam) / np.sqrt(1.0 + t * t))
-    xi, eta = xip.copy(), etap.copy()
-    for j, a in enumerate(UTM_ALPHA, start=1):
-        xi += a * np.sin(2.0 * j * xip) * np.cosh(2.0 * j * etap)
-        eta += a * np.cos(2.0 * j * xip) * np.sinh(2.0 * j * etap)
-    out = np.empty_like(xy, dtype=np.float64)
-    out[:, 0] = fe + k0 * UTM_A * eta
-    out[:, 1] = fn + k0 * UTM_A * (xi - tm_xi0(lat0))
-    return out
-
-
-def tm_inverse(xy: np.ndarray, lat0: float, lon0: float, k0: float,
-               fe: float, fn: float) -> np.ndarray:
-    """Generic transverse-Mercator meters → WGS84 lon/lat degrees."""
-    xi = (xy[:, 1] - fn) / (k0 * UTM_A) + tm_xi0(lat0)
-    eta = (xy[:, 0] - fe) / (k0 * UTM_A)
-    xip, etap = xi.copy(), eta.copy()
-    for j, b in enumerate(UTM_BETA, start=1):
-        xip -= b * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
-        etap -= b * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
-    chi = np.arcsin(np.sin(xip) / np.cosh(etap))
-    phi = chi.copy()
-    for j, d in enumerate(UTM_DELTA, start=1):
-        phi += d * np.sin(2.0 * j * chi)
-    lam = np.arctan2(np.sinh(etap), np.cos(xip))
-    out = np.empty_like(xy, dtype=np.float64)
-    out[:, 0] = lon0 + np.degrees(lam)
-    out[:, 1] = np.degrees(phi)
-    return out
-
-
-def tm_forward_ctes(base: str, lat0: float, lon0: float, k0: float,
-                    fe: float, fn: float, lon: str = "lon",
-                    lat: str = "lat") -> str:
-    """Dual-engine SQL for the generic TM forward (same portability
-    rules as utm_forward_ctes; the frame constants — including the
-    ξ₀ origin shift, repr'd from the exact value the numpy kernel
-    subtracts — fold in as DOUBLE literals)."""
-    a1, a2, a3 = UTM_ALPHA
-
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    def _atanh(x):
-        return f"(0.5 * ln((1.0 + {x}) / (1.0 - {x})))"
-
-    def _sinh(x):
-        return f"((exp({x}) - exp(-({x}))) / 2.0)"
-
-    def _cosh(x):
-        return f"((exp({x}) + exp(-({x}))) / 2.0)"
-
-    ka = f"({_c(k0)} * {_c(UTM_A)})"
-    return f"""
-        WITH _tm_base AS ({base}),
-        _tm_s1 AS (
-          SELECT *, radians(CAST({lat} AS DOUBLE)) AS _phi,
-                 radians(CAST({lon} AS DOUBLE) - {_c(lon0)}) AS _lam
-          FROM _tm_base),
-        _tm_s2 AS (
-          SELECT *, {_sinh(f"({_atanh('sin(_phi)')} - {_c(_UTM_C)} * "
-                           f"{_atanh(f'({_c(_UTM_C)} * sin(_phi))')})")} AS _t
-          FROM _tm_s1),
-        _tm_s3 AS (
-          SELECT *, atan2(_t, cos(_lam)) AS _xip,
-                 {_atanh("(sin(_lam) / sqrt(1.0 + _t * _t))")} AS _etap
-          FROM _tm_s2),
-        _tm_out AS (
-          SELECT *,
-            {_c(fe)} + {ka} * (_etap
-              + {_c(a1)} * cos(2.0 * _xip) * {_sinh("(2.0 * _etap)")}
-              + {_c(a2)} * cos(4.0 * _xip) * {_sinh("(4.0 * _etap)")}
-              + {_c(a3)} * cos(6.0 * _xip) * {_sinh("(6.0 * _etap)")})
-              AS easting,
-            {_c(fn)} + {ka} * ((_xip
-              + {_c(a1)} * sin(2.0 * _xip) * {_cosh("(2.0 * _etap)")}
-              + {_c(a2)} * sin(4.0 * _xip) * {_cosh("(4.0 * _etap)")}
-              + {_c(a3)} * sin(6.0 * _xip) * {_cosh("(6.0 * _etap)")})
-              - {_c(tm_xi0(lat0))})
-              AS northing
-          FROM _tm_s3)
-    """
 
 
 def lcc_forward(xy: np.ndarray, lat1: float, lat2: float, lat0: float,
@@ -1259,6 +1200,27 @@ def _q_of(phi: np.ndarray, e: float = _WGS_E) -> np.ndarray:
                             * np.log((1.0 - e * s) / (1.0 + e * s)))
 
 
+def _phi_from_q(q: np.ndarray, e: float, iters: int) -> np.ndarray:
+    """Geographic latitude from the authalic q by Snyder's 3-16 fixed
+    point (the LAEA and Albers inverses)."""
+    phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
+    for _ in range(iters):
+        s = np.sin(phi)
+        phi = phi + (1.0 - (e * s) ** 2) ** 2 / (2.0 * np.cos(phi)) * (
+            q / (1.0 - e * e) - s / (1.0 - (e * s) ** 2)
+            + 1.0 / (2.0 * e) * np.log((1.0 - e * s) / (1.0 + e * s)))
+    return phi
+
+
+def _q_sql(lat: str, e: float) -> str:
+    """``_q_of`` of a latitude column in degrees, as SQL."""
+    sphi = f"sin(radians(CAST({lat} AS DOUBLE)))"
+    return (f"({_c(1.0 - e * e)} * ({sphi} / (1.0 - {_c(e * e)}"
+            f" * {sphi} * {sphi}) - {_c(1.0 / (2.0 * e))}"
+            f" * ln((1.0 - {_c(e)} * {sphi})"
+            f" / (1.0 + {_c(e)} * {sphi}))))")
+
+
 def laea_constants(lat0: float, a: float = MERC_R,
                    f: float = _F) -> tuple:
     """(q_pole, beta0, R_q, D) for an oblique LAEA frame."""
@@ -1312,15 +1274,9 @@ def laea_inverse(xy: np.ndarray, lat0: float, lon0: float, fe: float,
     lam = np.arctan2(x * np.sin(ce),
                      rho * math.cos(b0) * np.cos(ce)
                      - y * math.sin(b0) * np.sin(ce))
-    phi = np.arcsin(np.clip(qv / 2.0, -1.0, 1.0))
-    for _ in range(iters):
-        s = np.sin(phi)
-        phi = phi + (1.0 - (e * s) ** 2) ** 2 / (2.0 * np.cos(phi)) * (
-            qv / (1.0 - e * e) - s / (1.0 - (e * s) ** 2)
-            + 1.0 / (2.0 * e) * np.log((1.0 - e * s) / (1.0 + e * s)))
     out = np.empty_like(xy, dtype=np.float64)
     out[:, 0] = (lon0 + np.degrees(lam) + 180.0) % 360.0 - 180.0
-    out[:, 1] = np.degrees(phi)
+    out[:, 1] = np.degrees(_phi_from_q(qv, e, iters))
     return out
 
 
@@ -1336,14 +1292,7 @@ def laea_forward_ctes(base: str, lon: str = "lon", lat: str = "lat",
     wrap are the kernel's op order."""
     qp, b0, rq, d, e = laea_constants(lat0)
 
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    sphi = f"sin(radians(CAST({lat} AS DOUBLE)))"
-    qexpr = (f"({_c(1.0 - e * e)} * ({sphi} / (1.0 - {_c(e * e)}"
-             f" * {sphi} * {sphi}) - {_c(1.0 / (2.0 * e))}"
-             f" * ln((1.0 - {_c(e)} * {sphi})"
-             f" / (1.0 + {_c(e)} * {sphi}))))")
+    qexpr = _q_sql(lat, e)
     return f"""
         WITH _laea_base AS ({base}),
         _laea_s1 AS (
@@ -1434,15 +1383,9 @@ def aea_inverse(xy: np.ndarray, lat1: float, lat2: float, lat0: float,
     rho = sgn * np.hypot(x, y)
     theta = np.arctan2(sgn * x, sgn * y)
     q = (big_c - (rho * n / a) ** 2) / n
-    phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
-    for _ in range(iters):
-        s = np.sin(phi)
-        phi = phi + (1.0 - (e * s) ** 2) ** 2 / (2.0 * np.cos(phi)) * (
-            q / (1.0 - e * e) - s / (1.0 - (e * s) ** 2)
-            + 1.0 / (2.0 * e) * np.log((1.0 - e * s) / (1.0 + e * s)))
     out = np.empty_like(xy, dtype=np.float64)
     out[:, 0] = (lon0 + np.degrees(theta / n) + 180.0) % 360.0 - 180.0
-    out[:, 1] = np.degrees(phi)
+    out[:, 1] = np.degrees(_phi_from_q(q, e, iters))
     return out
 
 
@@ -1458,14 +1401,7 @@ def aea_forward_ctes(base: str, lon: str = "lon", lat: str = "lat",
     kernel's op order."""
     n, big_c, rho0, e = aea_constants(lat1, lat2, lat0)
 
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    sphi = f"sin(radians(CAST({lat} AS DOUBLE)))"
-    qexpr = (f"({_c(1.0 - e * e)} * ({sphi} / (1.0 - {_c(e * e)}"
-             f" * {sphi} * {sphi}) - {_c(1.0 / (2.0 * e))}"
-             f" * ln((1.0 - {_c(e)} * {sphi})"
-             f" / (1.0 + {_c(e)} * {sphi}))))")
+    qexpr = _q_sql(lat, e)
     return f"""
         WITH _aea_base AS ({base}),
         _aea_s1 AS (
@@ -1494,45 +1430,55 @@ def lcc_forward_ctes(base: str, lon: str = "lon", lat: str = "lat",
     a*F, rho0) are precomputed in Python from the SAME lcc_constants
     the numpy kernel uses and inlined as DOUBLE literals, so both
     engines evaluate the identical expression tree."""
-    nc, af, rho0, e = lcc_constants(lat1, lat2, lat0)
-
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    t = (f"(tan(pi() / 4.0 - radians(CAST({lat} AS DOUBLE)) / 2.0)"
-         f" / pow((1.0 - {_c(e)} * sin(radians(CAST({lat} AS DOUBLE))))"
-         f" / (1.0 + {_c(e)} * sin(radians(CAST({lat} AS DOUBLE)))),"
-         f" {_c(e / 2.0)}))")
     return f"""
-        WITH _lcc_base AS ({base}),
-        _lcc_s1 AS (
+        WITH _lcc_base AS ({base}),{_lcc_ctes(
+            "_lcc", "_lcc_base", f"radians(CAST({lat} AS DOUBLE))",
+            f"CAST({lon} AS DOUBLE)", lat1, lat2, lat0, lon0, fe, fn,
+            MERC_R, _F)}
+    """
+
+
+def _lcc_ctes(p: str, src: str, phi: str, lamdeg: str, lat1, lat2, lat0,
+              lon0, fe, fn, a: float, f: float) -> str:
+    """The LCC 2SP conic on ellipsoid (a, f) as the stages ``{p}_cone``
+    and ``{p}_out`` over stage ``src``; ``phi`` is the latitude in
+    radians and ``lamdeg`` the longitude in degrees, as SQL.
+    ``{p}_out`` adds ``easting``/``northing``: ``lcc_forward`` op for
+    op, with the frame constants from the same ``lcc_constants``."""
+    nc, af, rho0, e = lcc_constants(lat1, lat2, lat0, a, f)
+    t = (f"(tan(pi() / 4.0 - {phi} / 2.0)"
+         f" / pow((1.0 - {_c(e)} * sin({phi}))"
+         f" / (1.0 + {_c(e)} * sin({phi})), {_c(e / 2.0)}))")
+    return f"""
+        {p}_cone AS (
           SELECT *, {_c(af)} * pow({t}, {_c(nc)}) AS _rho,
                  {_c(nc)} * radians(
-                   (CAST({lon} AS DOUBLE) - {_c(lon0)} + 540.0) % 360.0
-                   - 180.0) AS _th
-          FROM _lcc_base),
-        _lcc_out AS (
+                   ({lamdeg} - {_c(lon0)} + 540.0) % 360.0 - 180.0) AS _th
+          FROM {src}),
+        {p}_out AS (
           SELECT *, {_c(fe)} + _rho * sin(_th) AS easting,
                  {_c(fn)} + {_c(rho0)} - _rho * cos(_th) AS northing
-          FROM _lcc_s1)
-    """
+          FROM {p}_cone)"""
 
 
 # ===================== datum-shifted national grids (r11) ==================
 # Helmert 7-parameter datum shift (EPSG method 9606, position-vector
-# rotation convention) + transverse Mercator on a CONFIGURABLE ellipsoid —
-# the class every previous frame excluded (all of crs.py above assumes the
-# WGS84/GRS80 ellipsoid AND datum).  Reference envelope: GeoTools CRS
-# decode behind DefaultLayer.java:135-141 resolves datum-shifted systems
-# like EPSG:27700 (OSGB36 / British National Grid, Airy 1830 ellipsoid).
+# rotation convention) in front of a projection on a CONFIGURABLE
+# ellipsoid — the class every WGS84-family frame above excludes.
+# Reference envelope: GeoTools CRS decode behind DefaultLayer.java:135-141
+# resolves datum-shifted systems like EPSG:27700 (OSGB36 / British
+# National Grid, Airy 1830 ellipsoid).
 #
-# Frame token:  tmd:<lat0>:<lon0>:<k0>:<fe>:<fn>:<a>:<f>
-#                  :<tx>:<ty>:<tz>:<rx>:<ry>:<rz>:<ds>
-# — a transverse-Mercator grid on ellipsoid (a, f) whose datum maps to
-# WGS84 by the position-vector Helmert (tx/ty/tz meters, rx/ry/rz
-# ARC-SECONDS, ds PPM), parameters in the DATUM→WGS84 direction.  The
-# reverse direction negates the parameters (the EPSG reversal convention
-# for 9606; second-order error ≪ 0.1 mm at real datum magnitudes).
+# Frame tokens end in :<a>:<f>:<tx>:<ty>:<tz>:<rx>:<ry>:<rz>:<ds> — the
+# grid ellipsoid plus the position-vector Helmert (tx/ty/tz meters,
+# rx/ry/rz ARC-SECONDS, ds PPM), parameters in the DATUM→WGS84
+# direction.  The reverse direction negates the parameters (the EPSG
+# reversal convention for 9606; second-order error ≪ 0.1 mm at real
+# datum magnitudes):
+#   tmd:<lat0>:<lon0>:<k0>:<fe>:<fn>:…            transverse Mercator
+#   lccd:<lat1>:<lat2>:<lat0>:<lon0>:<fe>:<fn>:…  LCC 2SP
+#   sod:<lat0>:<lon0>:<k0>:<fe>:<fn>:…            oblique stereographic
+#   soc:<lat0>:<lon0>:<fe>:<fn>:…                 Swiss oblique cylindrical
 #
 # ENGINE CONTRACT (documented): coordinates are 2-D, so the geodetic ↔
 # geocentric legs run at ellipsoidal height h = 0 (the standard 2-D
@@ -1549,87 +1495,6 @@ AIRY_F = 1.0 / 299.3249646           # Airy 1830 flattening
 OSGB_HELMERT = (446.448, -125.157, 542.060,
                 0.1502, 0.2470, 0.8421, -20.4894)
 _AS2R = math.pi / (180.0 * 3600.0)   # arc-seconds → radians
-
-
-def krueger_constants(a: float, f: float):
-    """(A, alpha, beta, delta, c) — the Krüger/Karney series constants
-    for an arbitrary ellipsoid; with WGS84 parameters these equal the
-    module-level UTM_* constants BIT-EXACTLY (same formulas, pinned by
-    test), so the WGS84 frames keep their existing kernels."""
-    n = f / (2.0 - f)
-    A = a / (1.0 + n) * (1.0 + n * n / 4.0 + n ** 4 / 64.0)
-    alpha = (
-        n / 2.0 - 2.0 * n ** 2 / 3.0 + 5.0 * n ** 3 / 16.0,
-        13.0 * n ** 2 / 48.0 - 3.0 * n ** 3 / 5.0,
-        61.0 * n ** 3 / 240.0,
-    )
-    beta = (
-        n / 2.0 - 2.0 * n ** 2 / 3.0 + 37.0 * n ** 3 / 96.0,
-        n ** 2 / 48.0 + n ** 3 / 15.0,
-        17.0 * n ** 3 / 480.0,
-    )
-    delta = (
-        2.0 * n - 2.0 * n ** 2 / 3.0 - 2.0 * n ** 3,
-        7.0 * n ** 2 / 3.0 - 8.0 * n ** 3 / 5.0,
-        56.0 * n ** 3 / 15.0,
-    )
-    c = 2.0 * math.sqrt(n) / (1.0 + n)
-    return A, alpha, beta, delta, c
-
-
-def tm_xi0_ell(lat0: float, alpha, c: float) -> float:
-    """ξ₀ (meridian-arc origin shift) on an arbitrary ellipsoid —
-    tm_xi0 parametrized by the frame's series constants."""
-    sphi = math.sin(math.radians(lat0))
-    t = math.sinh(math.atanh(sphi) - c * math.atanh(c * sphi))
-    xip = math.atan(t)
-    xi = xip
-    for j, a_j in enumerate(alpha, start=1):
-        xi += a_j * math.sin(2.0 * j * xip)
-    return xi
-
-
-def tm_forward_ell(xy: np.ndarray, lat0: float, lon0: float, k0: float,
-                   fe: float, fn: float, a: float, f: float) -> np.ndarray:
-    """tm_forward on ellipsoid (a, f) — geodetic coordinates are in the
-    GRID's own datum (callers datum-shift first)."""
-    A, alpha, _, _, c = krueger_constants(a, f)
-    phi = np.radians(xy[:, 1])
-    lam = np.radians(xy[:, 0] - lon0)
-    sphi = np.sin(phi)
-    t = np.sinh(np.arctanh(sphi) - c * np.arctanh(c * sphi))
-    xip = np.arctan2(t, np.cos(lam))
-    etap = np.arctanh(np.sin(lam) / np.sqrt(1.0 + t * t))
-    xi, eta = xip.copy(), etap.copy()
-    for j, a_j in enumerate(alpha, start=1):
-        xi += a_j * np.sin(2.0 * j * xip) * np.cosh(2.0 * j * etap)
-        eta += a_j * np.cos(2.0 * j * xip) * np.sinh(2.0 * j * etap)
-    out = np.empty_like(xy, dtype=np.float64)
-    out[:, 0] = fe + k0 * A * eta
-    out[:, 1] = fn + k0 * A * (xi - tm_xi0_ell(lat0, alpha, c))
-    return out
-
-
-def tm_inverse_ell(xy: np.ndarray, lat0: float, lon0: float, k0: float,
-                   fe: float, fn: float, a: float, f: float) -> np.ndarray:
-    """tm_inverse on ellipsoid (a, f) — returns geodetic coordinates in
-    the GRID's own datum."""
-    A, alpha, beta, delta, c = krueger_constants(a, f)
-    xi = (xy[:, 1] - fn) / (k0 * A) + tm_xi0_ell(lat0, alpha, c)
-    eta = (xy[:, 0] - fe) / (k0 * A)
-    xip, etap = xi.copy(), eta.copy()
-    for j, b_j in enumerate(beta, start=1):
-        xip -= b_j * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
-        etap -= b_j * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
-    chi = np.arcsin(np.sin(xip) / np.cosh(etap))
-    phi = chi.copy()
-    for j, d_j in enumerate(delta, start=1):
-        phi += d_j * np.sin(2.0 * j * chi)
-    lam = np.arctan2(np.sinh(etap), np.cos(xip))
-    out = np.empty_like(xy, dtype=np.float64)
-    out[:, 0] = lon0 + np.degrees(lam)
-    out[:, 1] = np.degrees(phi)
-    return out
 
 
 def geodetic_to_ecef(lon_deg, lat_deg, a: float, f: float):
@@ -1675,80 +1540,56 @@ def helmert_xyz(x, y, z, tx: float, ty: float, tz: float,
     return x2, y2, z2
 
 
-def tmd_to_wgs84(xy: np.ndarray, lat0, lon0, k0, fe, fn, a, f,
-                 tx, ty, tz, rx, ry, rz, ds) -> np.ndarray:
-    """Datum'd grid meters → WGS84 lon/lat degrees: TM inverse on the
-    grid ellipsoid, geodetic→XYZ on that ellipsoid, Helmert (datum →
-    WGS84 as tokenized), XYZ→geodetic on WGS84."""
-    ll = tm_inverse_ell(xy, lat0, lon0, k0, fe, fn, a, f)
+def _datum_to_wgs84(ll: np.ndarray, a: float, f: float,
+                    helmert) -> np.ndarray:
+    """Lon/lat degrees on the grid datum (ellipsoid (a, f)) → WGS84:
+    geodetic → XYZ on (a, f), the Helmert as tokenized, Bowring on
+    WGS84."""
     x, y, z = geodetic_to_ecef(ll[:, 0], ll[:, 1], a, f)
-    x, y, z = helmert_xyz(x, y, z, tx, ty, tz, rx, ry, rz, ds)
-    lon, lat = ecef_to_geodetic(x, y, z, MERC_R, _F)
-    out = np.empty_like(xy, dtype=np.float64)
-    out[:, 0] = lon
-    out[:, 1] = lat
-    return out
+    x, y, z = helmert_xyz(x, y, z, *helmert)
+    return np.column_stack(ecef_to_geodetic(x, y, z, MERC_R, _F))
 
 
-def wgs84_to_tmd(ll: np.ndarray, lat0, lon0, k0, fe, fn, a, f,
-                 tx, ty, tz, rx, ry, rz, ds) -> np.ndarray:
-    """WGS84 lon/lat degrees → datum'd grid meters (reverse Helmert =
-    negated parameters, the EPSG 9606 reversal convention)."""
+def _wgs84_to_datum(ll: np.ndarray, a: float, f: float,
+                    helmert) -> np.ndarray:
+    """WGS84 lon/lat degrees → the grid datum on ellipsoid (a, f): the
+    reverse Helmert is the negated parameters (EPSG 9606 reversal)."""
     x, y, z = geodetic_to_ecef(ll[:, 0], ll[:, 1], MERC_R, _F)
-    x, y, z = helmert_xyz(x, y, z, -tx, -ty, -tz, -rx, -ry, -rz, -ds)
-    lon, lat = ecef_to_geodetic(x, y, z, a, f)
-    out = np.empty_like(ll, dtype=np.float64)
-    out[:, 0] = lon
-    out[:, 1] = lat
-    return tm_forward_ell(out, lat0, lon0, k0, fe, fn, a, f)
+    x, y, z = helmert_xyz(x, y, z, *(-v for v in helmert))
+    return np.column_stack(ecef_to_geodetic(x, y, z, a, f))
 
 
-def tmd_forward_ctes(base: str, lat0, lon0, k0, fe, fn, a, f,
-                     tx, ty, tz, rx, ry, rz, ds,
-                     lon: str = "lon", lat: str = "lat") -> str:
-    """Dual-engine SQL (Spark SQL AND DuckDB) for WGS84 → datum'd TM
-    grid: the SAME closed-form chain as wgs84_to_tmd op for op — WGS84
-    ECEF, negated-parameter Helmert, Bowring inverse on the grid
-    ellipsoid, Krüger forward series with the grid ellipsoid's
-    constants (all frame constants computed by the same Python the
-    kernel runs, repr'd as DOUBLE literals)."""
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    def _atanh(x):
-        return f"(0.5 * ln((1.0 + {x}) / (1.0 - {x})))"
-
-    def _sinh(x):
-        return f"((exp({x}) - exp(-({x}))) / 2.0)"
-
-    def _cosh(x):
-        return f"((exp({x}) + exp(-({x}))) / 2.0)"
-
+def _datum_ctes(p: str, base: str, lon: str, lat: str, a: float, f: float,
+                helmert) -> str:
+    """``_wgs84_to_datum`` as SQL: ``WITH {p}_base AS (base)``, then
+    WGS84 ECEF, the negated-parameter Helmert and Bowring's inverse on
+    (a, f), ending in stage ``{p}_geo`` with ``_phi`` (grid-datum
+    latitude) and ``_lamabs`` (longitude), both radians.  Bowring's
+    angle is ``_gth``: LCC's cone angle ``_th`` comes later in the same
+    ``SELECT *`` chain."""
+    tx, ty, tz, rx, ry, rz, ds = helmert
     e2w = _F * (2.0 - _F)                 # WGS84 e²
     rxr, ryr, rzr = -rx * _AS2R, -ry * _AS2R, -rz * _AS2R
     s = 1.0 - ds * 1e-6
     bg = a * (1.0 - f)                    # grid ellipsoid b
     e2g = f * (2.0 - f)
     ep2g = e2g / (1.0 - e2g)
-    A, alpha, _, _, c = krueger_constants(a, f)
-    a1, a2, a3 = alpha
-    ka = f"({_c(k0)} * {_c(A)})"
     return f"""
-        WITH _tmd_base AS ({base}),
-        _tmd_s1 AS (
+        WITH {p}_base AS ({base}),
+        {p}_s1 AS (
           SELECT *, radians(CAST({lat} AS DOUBLE)) AS _gphi,
                  radians(CAST({lon} AS DOUBLE)) AS _glam
-          FROM _tmd_base),
-        _tmd_s2 AS (
+          FROM {p}_base),
+        {p}_s2 AS (
           SELECT *, {_c(MERC_R)} / sqrt(1.0 - {_c(e2w)} * sin(_gphi)
                    * sin(_gphi)) AS _nu
-          FROM _tmd_s1),
-        _tmd_s3 AS (
+          FROM {p}_s1),
+        {p}_s3 AS (
           SELECT *, _nu * cos(_gphi) * cos(_glam) AS _wx,
                  _nu * cos(_gphi) * sin(_glam) AS _wy,
                  _nu * (1.0 - {_c(e2w)}) * sin(_gphi) AS _wz
-          FROM _tmd_s2),
-        _tmd_s4 AS (
+          FROM {p}_s2),
+        {p}_s4 AS (
           SELECT *,
             {_c(-tx)} + {_c(s)} * (_wx - {_c(rzr)} * _wy + {_c(ryr)} * _wz)
               AS _hx,
@@ -1756,156 +1597,83 @@ def tmd_forward_ctes(base: str, lat0, lon0, k0, fe, fn, a, f,
               AS _hy,
             {_c(-tz)} + {_c(s)} * (-({_c(ryr)}) * _wx + {_c(rxr)} * _wy + _wz)
               AS _hz
-          FROM _tmd_s3),
-        _tmd_s5 AS (
+          FROM {p}_s3),
+        {p}_s5 AS (
           SELECT *, sqrt(_hx * _hx + _hy * _hy) AS _p,
                  atan2(_hz * {_c(a)}, sqrt(_hx * _hx + _hy * _hy)
-                       * {_c(bg)}) AS _th
-          FROM _tmd_s4),
-        _tmd_s6 AS (
+                       * {_c(bg)}) AS _gth
+          FROM {p}_s4),
+        {p}_geo AS (
           SELECT *,
-            atan2(_hz + {_c(ep2g)} * {_c(bg)} * sin(_th) * sin(_th)
-                    * sin(_th),
-                  _p - {_c(e2g)} * {_c(a)} * cos(_th) * cos(_th)
-                    * cos(_th)) AS _phi,
+            atan2(_hz + {_c(ep2g)} * {_c(bg)} * sin(_gth) * sin(_gth)
+                    * sin(_gth),
+                  _p - {_c(e2g)} * {_c(a)} * cos(_gth) * cos(_gth)
+                    * cos(_gth)) AS _phi,
             atan2(_hy, _hx) AS _lamabs
-          FROM _tmd_s5),
+          FROM {p}_s5)"""
+
+
+def tmd_to_wgs84(xy: np.ndarray, lat0, lon0, k0, fe, fn, a, f,
+                 *helmert) -> np.ndarray:
+    """Datum'd TM grid meters → WGS84 lon/lat degrees."""
+    return _datum_to_wgs84(tm_inverse(xy, lat0, lon0, k0, fe, fn, a, f),
+                           a, f, helmert)
+
+
+def wgs84_to_tmd(ll: np.ndarray, lat0, lon0, k0, fe, fn, a, f,
+                 *helmert) -> np.ndarray:
+    """WGS84 lon/lat degrees → datum'd TM grid meters."""
+    return tm_forward(_wgs84_to_datum(ll, a, f, helmert),
+                      lat0, lon0, k0, fe, fn, a, f)
+
+
+def tmd_forward_ctes(base: str, lat0, lon0, k0, fe, fn, a, f,
+                     tx, ty, tz, rx, ry, rz, ds,
+                     lon: str = "lon", lat: str = "lat") -> str:
+    """Dual-engine SQL (Spark SQL AND DuckDB) for WGS84 → datum'd TM
+    grid, ``wgs84_to_tmd`` op for op: the datum leg, then the Krüger
+    forward series with the grid ellipsoid's constants.  ``_tmd_out``
+    adds ``easting``/``northing``."""
+    return _datum_ctes("_tmd", base, lon, lat, a, f,
+                       (tx, ty, tz, rx, ry, rz, ds)) + f""",
         _tmd_s7 AS (
           SELECT *, _lamabs - radians({_c(lon0)}) AS _lam
-          FROM _tmd_s6),
-        _tmd_s8 AS (
-          SELECT *, {_sinh(f"({_atanh('sin(_phi)')} - {_c(c)} * "
-                           f"{_atanh(f'({_c(c)} * sin(_phi))')})")} AS _t
-          FROM _tmd_s7),
-        _tmd_s9 AS (
-          SELECT *, atan2(_t, cos(_lam)) AS _xip,
-                 {_atanh("(sin(_lam) / sqrt(1.0 + _t * _t))")} AS _etap
-          FROM _tmd_s8),
-        _tmd_out AS (
-          SELECT *,
-            {_c(fe)} + {ka} * (_etap
-              + {_c(a1)} * cos(2.0 * _xip) * {_sinh("(2.0 * _etap)")}
-              + {_c(a2)} * cos(4.0 * _xip) * {_sinh("(4.0 * _etap)")}
-              + {_c(a3)} * cos(6.0 * _xip) * {_sinh("(6.0 * _etap)")})
-              AS easting,
-            {_c(fn)} + {ka} * ((_xip
-              + {_c(a1)} * sin(2.0 * _xip) * {_cosh("(2.0 * _etap)")}
-              + {_c(a2)} * sin(4.0 * _xip) * {_cosh("(4.0 * _etap)")}
-              + {_c(a3)} * sin(6.0 * _xip) * {_cosh("(6.0 * _etap)")})
-              - {_c(tm_xi0_ell(lat0, alpha, c))})
-              AS northing
-          FROM _tmd_s9)
+          FROM _tmd_geo),{_tm_ctes("_tmd", "_tmd_s7", k0, a, f, _c(fe),
+                                   _c(fn), lat0)}
     """
 
 
 # ---------------------------------------------------------------------------
-# LCC 2SP on a datum-shifted ellipsoid (r12): the same Helmert legs as
-# the tmd: tier, with the Lambert conic tail on the grid ellipsoid —
-# lcc_forward/lcc_inverse already take (a, f).  Canonical user:
-# EPSG:31370 Belge 1972 / Belgian Lambert 72 (International 1924 +
-# the national position-vector Helmert — the judge's r11 example of a
-# refusal that was pure missing data).  Frame token:
-#   lccd:<lat1>:<lat2>:<lat0>:<lon0>:<fe>:<fn>:<a>:<f>
-#       :<tx>:<ty>:<tz>:<rx>:<ry>:<rz>:<ds>
-# Same engine contract as tmd:/sod:/soc: — h = 0 legs, single national
-# Helmert (grid-shift files out of scope), deterministic and
-# cross-engine cm-exact.
-
-def wgs84_to_lccd(ll: np.ndarray, lat1, lat2, lat0, lon0, fe, fn, a, f,
-                  tx, ty, tz, rx, ry, rz, ds) -> np.ndarray:
-    """WGS84 lon/lat degrees → datum'd LCC grid meters (reverse
-    Helmert = negated parameters, the EPSG 9606 reversal convention)."""
-    x, y, z = geodetic_to_ecef(ll[:, 0], ll[:, 1], MERC_R, _F)
-    x, y, z = helmert_xyz(x, y, z, -tx, -ty, -tz, -rx, -ry, -rz, -ds)
-    lon, lat = ecef_to_geodetic(x, y, z, a, f)
-    grid = np.empty_like(ll, dtype=np.float64)
-    grid[:, 0] = lon
-    grid[:, 1] = lat
-    return lcc_forward(grid, lat1, lat2, lat0, lon0, fe, fn, a, f)
-
+# LCC 2SP on a datum-shifted ellipsoid (r12): the lcc kernels on the
+# grid ellipsoid behind the datum leg.  Canonical user: EPSG:31370
+# Belge 1972 / Belgian Lambert 72 (International 1924 + the national
+# position-vector Helmert).
 
 def lccd_to_wgs84(xy: np.ndarray, lat1, lat2, lat0, lon0, fe, fn, a, f,
-                  tx, ty, tz, rx, ry, rz, ds) -> np.ndarray:
+                  *helmert) -> np.ndarray:
     """Datum'd LCC grid meters → WGS84 lon/lat degrees."""
-    ll = lcc_inverse(xy, lat1, lat2, lat0, lon0, fe, fn, a, f)
-    x, y, z = geodetic_to_ecef(ll[:, 0], ll[:, 1], a, f)
-    x, y, z = helmert_xyz(x, y, z, tx, ty, tz, rx, ry, rz, ds)
-    lon, lat = ecef_to_geodetic(x, y, z, MERC_R, _F)
-    out = np.empty_like(xy, dtype=np.float64)
-    out[:, 0] = lon
-    out[:, 1] = lat
-    return out
+    return _datum_to_wgs84(lcc_inverse(xy, lat1, lat2, lat0, lon0, fe, fn,
+                                       a, f), a, f, helmert)
+
+
+def wgs84_to_lccd(ll: np.ndarray, lat1, lat2, lat0, lon0, fe, fn, a, f,
+                  *helmert) -> np.ndarray:
+    """WGS84 lon/lat degrees → datum'd LCC grid meters."""
+    return lcc_forward(_wgs84_to_datum(ll, a, f, helmert),
+                       lat1, lat2, lat0, lon0, fe, fn, a, f)
 
 
 def lccd_forward_ctes(base: str, lat1, lat2, lat0, lon0, fe, fn, a, f,
                       tx, ty, tz, rx, ry, rz, ds,
                       lon: str = "lon", lat: str = "lat") -> str:
     """Dual-engine SQL (Spark SQL AND DuckDB) for WGS84 → datum'd LCC
-    grid: the SAME closed-form chain as wgs84_to_lccd op for op — WGS84
-    ECEF, negated-parameter Helmert, Bowring inverse on the grid
-    ellipsoid, then the LCC 2SP conic with the grid ellipsoid's
-    constants (frame constants computed by the same Python the kernel
-    runs, repr'd as DOUBLE literals)."""
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    e2w = _F * (2.0 - _F)
-    rxr, ryr, rzr = -rx * _AS2R, -ry * _AS2R, -rz * _AS2R
-    sc = 1.0 - ds * 1e-6
-    bg = a * (1.0 - f)
-    e2g = f * (2.0 - f)
-    ep2g = e2g / (1.0 - e2g)
-    nc, af, rho0, e = lcc_constants(lat1, lat2, lat0, a, f)
-    t = (f"(tan(pi() / 4.0 - _phi / 2.0)"
-         f" / pow((1.0 - {_c(e)} * sin(_phi))"
-         f" / (1.0 + {_c(e)} * sin(_phi)), {_c(e / 2.0)}))")
-    return f"""
-        WITH _lcd_base AS ({base}),
-        _lcd_s1 AS (
-          SELECT *, radians(CAST({lat} AS DOUBLE)) AS _gphi,
-                 radians(CAST({lon} AS DOUBLE)) AS _glam
-          FROM _lcd_base),
-        _lcd_s2 AS (
-          SELECT *, {_c(MERC_R)} / sqrt(1.0 - {_c(e2w)} * sin(_gphi)
-                   * sin(_gphi)) AS _nu
-          FROM _lcd_s1),
-        _lcd_s3 AS (
-          SELECT *, _nu * cos(_gphi) * cos(_glam) AS _wx,
-                 _nu * cos(_gphi) * sin(_glam) AS _wy,
-                 _nu * (1.0 - {_c(e2w)}) * sin(_gphi) AS _wz
-          FROM _lcd_s2),
-        _lcd_s4 AS (
-          SELECT *,
-            {_c(-tx)} + {_c(sc)} * (_wx - {_c(rzr)} * _wy + {_c(ryr)} * _wz)
-              AS _hx,
-            {_c(-ty)} + {_c(sc)} * ({_c(rzr)} * _wx + _wy - {_c(rxr)} * _wz)
-              AS _hy,
-            {_c(-tz)} + {_c(sc)} * (-({_c(ryr)}) * _wx + {_c(rxr)} * _wy + _wz)
-              AS _hz
-          FROM _lcd_s3),
-        _lcd_s5 AS (
-          SELECT *, sqrt(_hx * _hx + _hy * _hy) AS _p,
-                 atan2(_hz * {_c(a)}, sqrt(_hx * _hx + _hy * _hy)
-                       * {_c(bg)}) AS _gth
-          FROM _lcd_s4),
-        _lcd_s6 AS (
-          SELECT *,
-            atan2(_hz + {_c(ep2g)} * {_c(bg)} * sin(_gth) * sin(_gth)
-                    * sin(_gth),
-                  _p - {_c(e2g)} * {_c(a)} * cos(_gth) * cos(_gth)
-                    * cos(_gth)) AS _phi,
-            degrees(atan2(_hy, _hx)) AS _lamdeg
-          FROM _lcd_s5),
-        _lcd_s7 AS (
-          SELECT *, {_c(af)} * pow({t}, {_c(nc)}) AS _rho,
-                 {_c(nc)} * radians(
-                   (_lamdeg - {_c(lon0)} + 540.0) % 360.0 - 180.0) AS _th
-          FROM _lcd_s6),
-        _lcd_out AS (
-          SELECT *, {_c(fe)} + _rho * sin(_th) AS easting,
-                 {_c(fn)} + {_c(rho0)} - _rho * cos(_th) AS northing
-          FROM _lcd_s7)
-    """
+    grid, ``wgs84_to_lccd`` op for op: the datum leg, then the LCC 2SP
+    conic with the grid ellipsoid's constants.  ``_lcd_out`` adds
+    ``easting``/``northing``."""
+    return _datum_ctes("_lcd", base, lon, lat, a, f,
+                       (tx, ty, tz, rx, ry, rz, ds)) + "," + _lcc_ctes(
+        "_lcd", "_lcd_geo", "_phi", "degrees(_lamabs)",
+        lat1, lat2, lat0, lon0, fe, fn, a, f)
 
 
 # ---------------------------------------------------------------------------
@@ -1944,7 +1712,7 @@ def sod_constants(lat0: float, a: float, f: float):
 def sod_forward(xy: np.ndarray, lat0: float, lon0: float, k0: float,
                 fe: float, fn: float, a: float, f: float) -> np.ndarray:
     """Oblique stereographic forward — geodetic coordinates are in the
-    GRID's own datum (callers datum-shift first, as with tm_forward_ell)."""
+    GRID's own datum (callers datum-shift first, as with tm_forward)."""
     R, n, c, chi0, e = sod_constants(lat0, a, f)
     phi = np.radians(xy[:, 1])
     L = n * np.radians(xy[:, 0] - lon0)          # Λ − Λ0 on the sphere
@@ -1994,94 +1762,36 @@ def sod_inverse(xy: np.ndarray, lat0: float, lon0: float, k0: float,
     return out
 
 
+
 def sod_to_wgs84(xy: np.ndarray, lat0, lon0, k0, fe, fn, a, f,
-                 tx, ty, tz, rx, ry, rz, ds) -> np.ndarray:
-    """Datum'd stereographic grid meters → WGS84 lon/lat degrees (the
-    tmd_to_wgs84 chain with the stereographic kernel)."""
-    ll = sod_inverse(xy, lat0, lon0, k0, fe, fn, a, f)
-    x, y, z = geodetic_to_ecef(ll[:, 0], ll[:, 1], a, f)
-    x, y, z = helmert_xyz(x, y, z, tx, ty, tz, rx, ry, rz, ds)
-    lon, lat = ecef_to_geodetic(x, y, z, MERC_R, _F)
-    out = np.empty_like(xy, dtype=np.float64)
-    out[:, 0] = lon
-    out[:, 1] = lat
-    return out
+                 *helmert) -> np.ndarray:
+    """Datum'd stereographic grid meters → WGS84 lon/lat degrees."""
+    return _datum_to_wgs84(sod_inverse(xy, lat0, lon0, k0, fe, fn, a, f),
+                           a, f, helmert)
 
 
 def wgs84_to_sod(ll: np.ndarray, lat0, lon0, k0, fe, fn, a, f,
-                 tx, ty, tz, rx, ry, rz, ds) -> np.ndarray:
-    """WGS84 lon/lat degrees → datum'd stereographic grid meters
-    (reverse Helmert = negated parameters, EPSG 9606 convention)."""
-    x, y, z = geodetic_to_ecef(ll[:, 0], ll[:, 1], MERC_R, _F)
-    x, y, z = helmert_xyz(x, y, z, -tx, -ty, -tz, -rx, -ry, -rz, -ds)
-    lon, lat = ecef_to_geodetic(x, y, z, a, f)
-    out = np.empty_like(ll, dtype=np.float64)
-    out[:, 0] = lon
-    out[:, 1] = lat
-    return sod_forward(out, lat0, lon0, k0, fe, fn, a, f)
+                 *helmert) -> np.ndarray:
+    """WGS84 lon/lat degrees → datum'd stereographic grid meters."""
+    return sod_forward(_wgs84_to_datum(ll, a, f, helmert),
+                       lat0, lon0, k0, fe, fn, a, f)
 
 
 def sod_forward_ctes(base: str, lat0, lon0, k0, fe, fn, a, f,
                      tx, ty, tz, rx, ry, rz, ds,
                      lon: str = "lon", lat: str = "lat") -> str:
     """Dual-engine SQL (Spark SQL AND DuckDB) for WGS84 → datum'd
-    oblique stereographic grid: the SAME closed-form chain as
-    wgs84_to_sod op for op — WGS84 ECEF, negated-parameter Helmert,
-    Bowring inverse on the grid ellipsoid, conformal-sphere
-    stereographic forward (all frame constants computed by the same
-    Python the kernel runs, repr'd as DOUBLE literals)."""
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    e2w = _F * (2.0 - _F)                 # WGS84 e²
-    rxr, ryr, rzr = -rx * _AS2R, -ry * _AS2R, -rz * _AS2R
-    s = 1.0 - ds * 1e-6
-    bg = a * (1.0 - f)                    # grid ellipsoid b
-    e2g = f * (2.0 - f)
-    ep2g = e2g / (1.0 - e2g)
+    oblique stereographic grid, ``wgs84_to_sod`` op for op: the datum
+    leg, then the conformal-sphere stereographic forward.  ``_sod_out``
+    adds ``easting``/``northing``."""
     R, n, c, chi0, e = sod_constants(lat0, a, f)
     rk2 = 2.0 * R * k0
-    return f"""
-        WITH _sod_base AS ({base}),
-        _sod_s1 AS (
-          SELECT *, radians(CAST({lat} AS DOUBLE)) AS _gphi,
-                 radians(CAST({lon} AS DOUBLE)) AS _glam
-          FROM _sod_base),
-        _sod_s2 AS (
-          SELECT *, {_c(MERC_R)} / sqrt(1.0 - {_c(e2w)} * sin(_gphi)
-                   * sin(_gphi)) AS _nu
-          FROM _sod_s1),
-        _sod_s3 AS (
-          SELECT *, _nu * cos(_gphi) * cos(_glam) AS _wx,
-                 _nu * cos(_gphi) * sin(_glam) AS _wy,
-                 _nu * (1.0 - {_c(e2w)}) * sin(_gphi) AS _wz
-          FROM _sod_s2),
-        _sod_s4 AS (
-          SELECT *,
-            {_c(-tx)} + {_c(s)} * (_wx - {_c(rzr)} * _wy + {_c(ryr)} * _wz)
-              AS _hx,
-            {_c(-ty)} + {_c(s)} * ({_c(rzr)} * _wx + _wy - {_c(rxr)} * _wz)
-              AS _hy,
-            {_c(-tz)} + {_c(s)} * (-({_c(ryr)}) * _wx + {_c(rxr)} * _wy + _wz)
-              AS _hz
-          FROM _sod_s3),
-        _sod_s5 AS (
-          SELECT *, sqrt(_hx * _hx + _hy * _hy) AS _p,
-                 atan2(_hz * {_c(a)}, sqrt(_hx * _hx + _hy * _hy)
-                       * {_c(bg)}) AS _th
-          FROM _sod_s4),
-        _sod_s6 AS (
-          SELECT *,
-            atan2(_hz + {_c(ep2g)} * {_c(bg)} * sin(_th) * sin(_th)
-                    * sin(_th),
-                  _p - {_c(e2g)} * {_c(a)} * cos(_th) * cos(_th)
-                    * cos(_th)) AS _phi,
-            atan2(_hy, _hx) AS _lamabs
-          FROM _sod_s5),
+    return _datum_ctes("_sod", base, lon, lat, a, f,
+                       (tx, ty, tz, rx, ry, rz, ds)) + f""",
         _sod_s7 AS (
           SELECT *, {_c(n)} * (_lamabs - radians({_c(lon0)})) AS _slam,
                  sin(_phi) AS _sphi
-          FROM _sod_s6),
+          FROM _sod_geo),
         _sod_s8 AS (
           SELECT *, {_c(c)} * power(
                    ((1.0 + _sphi) / (1.0 - _sphi))
@@ -2191,89 +1901,31 @@ def soc_inverse(xy: np.ndarray, lat0: float, lon0: float,
     return out
 
 
+
 def soc_to_wgs84(xy: np.ndarray, lat0, lon0, fe, fn, a, f,
-                 tx, ty, tz, rx, ry, rz, ds) -> np.ndarray:
-    """Datum'd Swiss grid meters → WGS84 lon/lat degrees (the tmd/sod
-    chain with the Rosenmund kernel)."""
-    ll = soc_inverse(xy, lat0, lon0, fe, fn, a, f)
-    x, y, z = geodetic_to_ecef(ll[:, 0], ll[:, 1], a, f)
-    x, y, z = helmert_xyz(x, y, z, tx, ty, tz, rx, ry, rz, ds)
-    lon, lat = ecef_to_geodetic(x, y, z, MERC_R, _F)
-    out = np.empty_like(xy, dtype=np.float64)
-    out[:, 0] = lon
-    out[:, 1] = lat
-    return out
+                 *helmert) -> np.ndarray:
+    """Datum'd Swiss grid meters → WGS84 lon/lat degrees."""
+    return _datum_to_wgs84(soc_inverse(xy, lat0, lon0, fe, fn, a, f),
+                           a, f, helmert)
 
 
 def wgs84_to_soc(ll: np.ndarray, lat0, lon0, fe, fn, a, f,
-                 tx, ty, tz, rx, ry, rz, ds) -> np.ndarray:
-    """WGS84 lon/lat degrees → datum'd Swiss grid meters (reverse
-    Helmert = negated parameters, EPSG 9606 convention)."""
-    x, y, z = geodetic_to_ecef(ll[:, 0], ll[:, 1], MERC_R, _F)
-    x, y, z = helmert_xyz(x, y, z, -tx, -ty, -tz, -rx, -ry, -rz, -ds)
-    lon, lat = ecef_to_geodetic(x, y, z, a, f)
-    out = np.empty_like(ll, dtype=np.float64)
-    out[:, 0] = lon
-    out[:, 1] = lat
-    return soc_forward(out, lat0, lon0, fe, fn, a, f)
+                 *helmert) -> np.ndarray:
+    """WGS84 lon/lat degrees → datum'd Swiss grid meters."""
+    return soc_forward(_wgs84_to_datum(ll, a, f, helmert),
+                       lat0, lon0, fe, fn, a, f)
 
 
 def soc_forward_ctes(base: str, lat0, lon0, fe, fn, a, f,
                      tx, ty, tz, rx, ry, rz, ds,
                      lon: str = "lon", lat: str = "lat") -> str:
     """Dual-engine SQL (Spark SQL AND DuckDB) for WGS84 → datum'd Swiss
-    oblique cylindrical grid: the SAME closed-form chain as
-    wgs84_to_soc op for op — WGS84 ECEF, negated-parameter Helmert,
-    Bowring inverse on the grid ellipsoid, conformal sphere, rotation
-    to the pseudo-equator, spherical Mercator (all frame constants
-    computed by the same Python the kernel runs)."""
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    e2w = _F * (2.0 - _F)                 # WGS84 e²
-    rxr, ryr, rzr = -rx * _AS2R, -ry * _AS2R, -rz * _AS2R
-    s = 1.0 - ds * 1e-6
-    bg = a * (1.0 - f)                    # grid ellipsoid b
-    e2g = f * (2.0 - f)
-    ep2g = e2g / (1.0 - e2g)
+    oblique cylindrical grid, ``wgs84_to_soc`` op for op: the datum leg,
+    conformal sphere, rotation to the pseudo-equator, spherical
+    Mercator.  ``_soc_out`` adds ``easting``/``northing``."""
     R, alpha, b0, K, e = soc_constants(lat0, a, f)
-    return f"""
-        WITH _soc_base AS ({base}),
-        _soc_s1 AS (
-          SELECT *, radians(CAST({lat} AS DOUBLE)) AS _gphi,
-                 radians(CAST({lon} AS DOUBLE)) AS _glam
-          FROM _soc_base),
-        _soc_s2 AS (
-          SELECT *, {_c(MERC_R)} / sqrt(1.0 - {_c(e2w)} * sin(_gphi)
-                   * sin(_gphi)) AS _nu
-          FROM _soc_s1),
-        _soc_s3 AS (
-          SELECT *, _nu * cos(_gphi) * cos(_glam) AS _wx,
-                 _nu * cos(_gphi) * sin(_glam) AS _wy,
-                 _nu * (1.0 - {_c(e2w)}) * sin(_gphi) AS _wz
-          FROM _soc_s2),
-        _soc_s4 AS (
-          SELECT *,
-            {_c(-tx)} + {_c(s)} * (_wx - {_c(rzr)} * _wy + {_c(ryr)} * _wz)
-              AS _hx,
-            {_c(-ty)} + {_c(s)} * ({_c(rzr)} * _wx + _wy - {_c(rxr)} * _wz)
-              AS _hy,
-            {_c(-tz)} + {_c(s)} * (-({_c(ryr)}) * _wx + {_c(rxr)} * _wy + _wz)
-              AS _hz
-          FROM _soc_s3),
-        _soc_s5 AS (
-          SELECT *, sqrt(_hx * _hx + _hy * _hy) AS _p,
-                 atan2(_hz * {_c(a)}, sqrt(_hx * _hx + _hy * _hy)
-                       * {_c(bg)}) AS _th
-          FROM _soc_s4),
-        _soc_s6 AS (
-          SELECT *,
-            atan2(_hz + {_c(ep2g)} * {_c(bg)} * sin(_th) * sin(_th)
-                    * sin(_th),
-                  _p - {_c(e2g)} * {_c(a)} * cos(_th) * cos(_th)
-                    * cos(_th)) AS _phi,
-            atan2(_hy, _hx) AS _lamabs
-          FROM _soc_s5),
+    return _datum_ctes("_soc", base, lon, lat, a, f,
+                       (tx, ty, tz, rx, ry, rz, ds)) + f""",
         _soc_s7 AS (
           SELECT *, {_c(alpha)} * (_lamabs - radians({_c(lon0)})) AS _lam,
                  {_c(alpha)} * ln(tan(pi() / 4.0 + _phi / 2.0))
@@ -2281,7 +1933,7 @@ def soc_forward_ctes(base: str, lat0, lon0, fe, fn, a, f,
                    * ln((1.0 + {_c(e)} * sin(_phi))
                         / (1.0 - {_c(e)} * sin(_phi)))
                  + {_c(K)} AS _ss
-          FROM _soc_s6),
+          FROM _soc_geo),
         _soc_s8 AS (
           SELECT *, 2.0 * (atan(exp(_ss)) - pi() / 4.0) AS _b
           FROM _soc_s7),
@@ -2470,12 +2122,40 @@ def prj_to_frame(wkt: str) -> str | None:
     return _frame(f"tm:{lat0!r}:{lon0!r}:{k0!r}:{fe!r}:{fn!r}")
 
 
+# Every frame kind once: (parameter count for a generic '<kind>:…' token
+# — None where ``_frame`` builds the token itself —, to_wgs84 kernel,
+# from_wgs84 kernel).  The kernels take the token's parsed parameters.
+_KERNELS = {
+    "merc": (None, _merc_inverse, _merc_forward),
+    "utm": (None, utm_inverse, utm_forward),
+    "tm": (5, tm_inverse, tm_forward),
+    "lcc": (6, lcc_inverse, lcc_forward),
+    "psb": (4, ps_inverse, ps_forward),
+    "psa": (4, psa_inverse, psa_forward),
+    "laea": (4, laea_inverse, laea_forward),
+    "aea": (6, aea_inverse, aea_forward),
+    "tmd": (14, tmd_to_wgs84, wgs84_to_tmd),
+    "lccd": (15, lccd_to_wgs84, wgs84_to_lccd),
+    "sod": (14, sod_to_wgs84, wgs84_to_sod),
+    "soc": (13, soc_to_wgs84, wgs84_to_soc),
+}
+
+
+def _kernel_args(frame: str) -> tuple:
+    """(kind, kernel arguments) of a resolved frame token."""
+    kind, *parts = frame.split(":")
+    if kind == "utm":
+        return kind, (int(parts[0]), parts[1] == "s")
+    if kind == "psa":
+        return kind, (*(float(v) for v in parts[:4]), parts[4] == "s")
+    return kind, tuple(float(v) for v in parts)
+
+
 def transform_points(xy: np.ndarray, src: str, dst: str) -> np.ndarray:
     """Vectorized (n, 2) coordinate transform between resolved frames
-    ('wgs84' | 'merc' | 'cart' | 'utm:<zone>:<n|s>' | 'lcc:…' |
-    'psb:…' | 'psa:…').  cart composes with nothing: it is an identity
-    passthrough and only pairs with itself.  Every projected frame
-    composes with every other through wgs84."""
+    (``_frame`` tokens).  cart composes with nothing: it is an identity
+    passthrough and only pairs with itself.  Every other frame composes
+    with every other through wgs84."""
     if src == dst:
         return xy
     if "cart" in (src, dst):
@@ -2483,69 +2163,14 @@ def transform_points(xy: np.ndarray, src: str, dst: str) -> np.ndarray:
             "st_transform: the cartesian frame has no defined mapping to "
             f"{src if dst == 'cart' else dst!r}; cartesian only passes "
             "through to itself")
-    # normalize to wgs84, then project to dst
-    if src == "merc":
-        ll = np.empty_like(xy, dtype=np.float64)
-        ll[:, 0] = np.degrees(xy[:, 0] / MERC_R)
-        ll[:, 1] = np.degrees(
-            2.0 * np.arctan(np.exp(xy[:, 1] / MERC_R)) - np.pi / 2.0)
-    elif src.startswith("utm:"):
-        _, z, hemi = src.split(":")
-        ll = utm_inverse(xy, int(z), hemi == "s")
-    elif src.startswith("lcc:"):
-        ll = lcc_inverse(xy, *(float(v) for v in src.split(":")[1:]))
-    elif src.startswith("psb:"):
-        ll = ps_inverse(xy, *(float(v) for v in src.split(":")[1:]))
-    elif src.startswith("psa:"):
-        p = src.split(":")
-        ll = psa_inverse(xy, *(float(v) for v in p[1:5]), p[5] == "s")
-    elif src.startswith("laea:"):
-        ll = laea_inverse(xy, *(float(v) for v in src.split(":")[1:]))
-    elif src.startswith("aea:"):
-        ll = aea_inverse(xy, *(float(v) for v in src.split(":")[1:]))
-    elif src.startswith("lccd:"):
-        ll = lccd_to_wgs84(xy, *(float(v) for v in src.split(":")[1:]))
-    elif src.startswith("tmd:"):
-        ll = tmd_to_wgs84(xy, *(float(v) for v in src.split(":")[1:]))
-    elif src.startswith("sod:"):
-        ll = sod_to_wgs84(xy, *(float(v) for v in src.split(":")[1:]))
-    elif src.startswith("soc:"):
-        ll = soc_to_wgs84(xy, *(float(v) for v in src.split(":")[1:]))
-    elif src.startswith("tm:"):
-        ll = tm_inverse(xy, *(float(v) for v in src.split(":")[1:]))
-    else:
-        ll = xy
+    ll = xy
+    if src != "wgs84":
+        kind, args = _kernel_args(src)
+        ll = _KERNELS[kind][1](xy, *args)
     if dst == "wgs84":
         return ll
-    if dst == "merc":
-        out = np.empty_like(ll, dtype=np.float64)
-        out[:, 0] = MERC_R * np.radians(ll[:, 0])
-        out[:, 1] = MERC_R * np.log(
-            np.tan(np.pi / 4.0 + np.radians(ll[:, 1]) / 2.0))
-        return out
-    if dst.startswith("lcc:"):
-        return lcc_forward(ll, *(float(v) for v in dst.split(":")[1:]))
-    if dst.startswith("psb:"):
-        return ps_forward(ll, *(float(v) for v in dst.split(":")[1:]))
-    if dst.startswith("psa:"):
-        p = dst.split(":")
-        return psa_forward(ll, *(float(v) for v in p[1:5]), p[5] == "s")
-    if dst.startswith("laea:"):
-        return laea_forward(ll, *(float(v) for v in dst.split(":")[1:]))
-    if dst.startswith("aea:"):
-        return aea_forward(ll, *(float(v) for v in dst.split(":")[1:]))
-    if dst.startswith("lccd:"):
-        return wgs84_to_lccd(ll, *(float(v) for v in dst.split(":")[1:]))
-    if dst.startswith("tmd:"):
-        return wgs84_to_tmd(ll, *(float(v) for v in dst.split(":")[1:]))
-    if dst.startswith("sod:"):
-        return wgs84_to_sod(ll, *(float(v) for v in dst.split(":")[1:]))
-    if dst.startswith("soc:"):
-        return wgs84_to_soc(ll, *(float(v) for v in dst.split(":")[1:]))
-    if dst.startswith("tm:"):
-        return tm_forward(ll, *(float(v) for v in dst.split(":")[1:]))
-    _, z, hemi = dst.split(":")
-    return utm_forward(ll, int(z), hemi == "s")
+    kind, args = _kernel_args(dst)
+    return _KERNELS[kind][2](ll, *args)
 
 
 def _map_geometry(g: Geometry, fn) -> Geometry:

@@ -36,6 +36,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .columns import sql_cast_double as _c
+
 GEO_A = 6378137.0                  # WGS84 semi-major axis (m)
 GEO_F = 1.0 / 298.257223563        # WGS84 flattening
 GEO_B = GEO_A * (1.0 - GEO_F)      # semi-minor axis (m)
@@ -183,9 +185,6 @@ def vincenty_ctes(base: str, lat1: str = "lat1", lon1: str = "lon1",
     meters, the SAME fixed-step Vincenty procedure as ``vincenty_m``
     op for op (numeric constants repr'd from the same Python doubles;
     kernel-vs-SQL drift is libm-ulp, contracted by the iteration)."""
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
     f = _c(GEO_F)
     steps = [f"""
         _vin_s0 AS (

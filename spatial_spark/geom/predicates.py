@@ -24,6 +24,7 @@ from .core import (
     GTYPE_MULTIPOLYGON, GTYPE_POINT, GTYPE_POLYGON, Geometry,
     envelopes_intersect, envelope_covers,
 )
+from .clip import _SNAP
 from .algorithms import (
     _any_edge_intersection, _as_lines, distance, point_in_polygon, point_in_ring,
 )
@@ -33,24 +34,22 @@ def _dim(g: Geometry) -> int:
     return g.dimension()
 
 
-# Kernel snap resolution (clip._SNAP): the relate matrix treats points
-# within 1e-9 as coincident, so envelope rejects must only fire when the
-# separation/overhang EXCEEDS this — an exact comparison reject would
-# contradict the matrix on e.g. a vertex 2.7e-156 past the other's
-# envelope that the matrix snaps onto it (caught by the triangle fuzz).
-_ENV_TOL = 1e-9
-
-
+# Envelope rejects use the kernel snap resolution (clip._SNAP): the
+# relate matrix treats points within it as coincident, so a reject must
+# only fire when the separation/overhang EXCEEDS it — an exact
+# comparison reject would contradict the matrix on e.g. a vertex
+# 2.7e-156 past the other's envelope that the matrix snaps onto it
+# (caught by the triangle fuzz).
 def _env_separated(e1, e2) -> bool:
     """Envelopes separated by MORE than the kernel snap resolution."""
-    return (e1[2] < e2[0] - _ENV_TOL or e2[2] < e1[0] - _ENV_TOL
-            or e1[3] < e2[1] - _ENV_TOL or e2[3] < e1[1] - _ENV_TOL)
+    return (e1[2] < e2[0] - _SNAP or e2[2] < e1[0] - _SNAP
+            or e1[3] < e2[1] - _SNAP or e2[3] < e1[1] - _SNAP)
 
 
 def _env_covers_tol(e1, e2) -> bool:
     """e1 covers e2 up to the kernel snap resolution."""
-    return (e1[0] <= e2[0] + _ENV_TOL and e1[1] <= e2[1] + _ENV_TOL
-            and e1[2] >= e2[2] - _ENV_TOL and e1[3] >= e2[3] - _ENV_TOL)
+    return (e1[0] <= e2[0] + _SNAP and e1[1] <= e2[1] + _SNAP
+            and e1[2] >= e2[2] - _SNAP and e1[3] >= e2[3] - _SNAP)
 
 
 # ------------------------------------------------------------------ intersects
@@ -105,11 +104,6 @@ def _point_loc(p: Geometry, g: Geometry) -> int:
         if part.data[0] == px and part.data[1] == py:
             return 2
     return 0
-
-
-def _polyize(g: Geometry) -> Geometry:
-    polys = [p for p in g.parts() if p.gtype == GTYPE_POLYGON]
-    return polys[0] if len(polys) == 1 else Geometry(GTYPE_MULTIPOLYGON, polys)
 
 
 def covers(a: Geometry, b: Geometry) -> bool:

@@ -249,23 +249,6 @@ def _locate_on_lines(px, py, lines, boundary_pts) -> int:
     return 1 if (px, py) in boundary_pts else 2
 
 
-def _locate(px, py, g: Geometry, lines=None, boundary_pts=None) -> int:
-    """0 exterior / 1 boundary / 2 interior, any geometry dimension."""
-    d = g.dimension()
-    if d == 2:
-        return point_in_polygon(px, py, _poly(g))
-    if d == 1:
-        if lines is None:
-            lines = _as_lines(g)
-        if boundary_pts is None:
-            boundary_pts = _line_boundary_points(g)
-        return _locate_on_lines(px, py, lines, boundary_pts)
-    for p in g.parts():
-        if float(p.data[0]) == px and float(p.data[1]) == py:
-            return 2  # points have empty boundary
-    return 0
-
-
 def _poly(g: Geometry) -> Geometry:
     polys = [p for p in g.parts() if p.gtype == GTYPE_POLYGON]
     return polys[0] if len(polys) == 1 else Geometry(GTYPE_MULTIPOLYGON, polys)

@@ -193,7 +193,7 @@ def import_shapefile(ctx, shp_path: str, layer_name: str,
     geoms, attrs, crs = read_shapefile(shp_path)
     if to_wgs84 and crs is not None:
         from ..functions.crs import (_frame, _map_geometry, prj_to_frame,
-                                     tm_inverse_ell, transform_points)
+                                     tm_inverse, transform_points)
         frame = prj_to_frame(crs)
         if ntv2_grid is not None:
             from ..functions.gridshift import apply_ntv2, load_ntv2
@@ -203,7 +203,7 @@ def import_shapefile(ctx, shp_path: str, layer_name: str,
                 proj = [float(v) for v in frame.split(":")[1:8]]
 
                 def shift(xy):
-                    return apply_ntv2(tm_inverse_ell(xy, *proj), grid)
+                    return apply_ntv2(tm_inverse(xy, *proj), grid)
             elif crs.strip().upper().startswith("GEOGCS"):
                 def shift(xy):
                     return apply_ntv2(xy, grid)
@@ -248,28 +248,6 @@ def import_shapefile(ctx, shp_path: str, layer_name: str,
     from ..localrel import arrow_local_df
     df = arrow_local_df(ctx.spark, rows, T.StructType(fields))
     layer = ctx.create_layer(layer_name, crs=crs or "WGS84")
-    layer.add(df)
-    return layer
-
-
-def import_shapefile_dir(ctx, dir_path: str, layer_name: str):
-    """Distributed variant: every .shp under dir_path parsed in parallel via
-    binaryFiles → one layer.  The 100 TB path (file = task)."""
-    from ..geom.wkb import to_wkb
-    sc = ctx.spark.sparkContext
-    rdd = sc.binaryFiles(os.path.join(dir_path, "*.shp"))
-
-    def parse(kv):
-        path, buf = kv
-        out = []
-        for i, g in enumerate(parse_shp(bytes(buf))):
-            if g is not None:
-                out.append((os.path.basename(path), i, bytearray(to_wkb(g))))
-        return out
-
-    rows = rdd.flatMap(parse)
-    df = ctx.spark.createDataFrame(rows, "source string, rec long, geom binary")
-    layer = ctx.create_layer(layer_name)
     layer.add(df)
     return layer
 

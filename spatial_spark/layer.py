@@ -96,11 +96,6 @@ class SpatialContext:
         self.catalog.get(name)
         return Layer(self, name)
 
-    def get_or_create_point_layer(self, name: str, **kw) -> "Layer":
-        if self.catalog.exists(name):
-            return Layer(self, name)
-        return self.create_point_layer(name, **kw)
-
     def layers(self) -> list:
         return self.catalog.layers()
 

@@ -346,12 +346,6 @@ def _huff_codes(counts, values):
     return out
 
 
-def _huff_decode_map(counts, values):
-    """{(len, code): symbol} for bit-at-a-time decoding."""
-    return {(ln, code): sym
-            for sym, (code, ln) in _huff_codes(counts, values).items()}
-
-
 _LUT_CACHE: dict = {}
 
 

@@ -486,11 +486,12 @@ def cql_filter(layer, expression: str) -> DataFrame:
     translated predicate runs — the engine's analogue of
     Utilities.extractEnvelopeFromFilter seeding the R-tree search,
     extended to FilterProperty shapes over the r13 attribute-range
-    shard stats."""
-    df = layer.df()
+    shard stats.  The geom column's presence comes from the catalog's
+    recorded schema (``Layer.columns``), so a pruned search reads only
+    the pruned files."""
     env: list = []
     props: dict = {}
-    sql = cql_to_sql(expression, has_geom="geom" in df.columns,
+    sql = cql_to_sql(expression, has_geom="geom" in layer.columns,
                      _env_out=env, _prop_out=props)
     window = None
     if env:
@@ -500,6 +501,6 @@ def cql_filter(layer, expression: str) -> DataFrame:
         y1 = min(e[3] for e in env)
         if x0 <= x1 and y0 <= y1:
             window = (x0, y0, x1, y1)
-    if (window or props) and hasattr(layer, "df_pruned"):
+    if window or props:
         return layer.df_pruned(windows=window, props=props).filter(sql)
-    return df.filter(sql)
+    return layer.df().filter(sql)

@@ -34,6 +34,7 @@ from ..geom import predicates as P
 from ..geom.algorithms import (
     points_in_polygon_bulk, points_min_dist_to_boundary,
 )
+from ..geom.clip import _SNAP
 
 _PREDS = {
     "intersects": P.intersects, "contains": P.contains, "within": P.within,
@@ -86,14 +87,6 @@ def _estimated_rows(df: DataFrame) -> int:
         return max(size // 64, 1)
     except Exception:
         return df.count()
-
-
-#: Kernel snap resolution (geom.clip._SNAP / predicates._ENV_TOL): the
-#: relate matrix treats points within this distance as coincident, so a
-#: vectorized True/False decision is only sound when every separation or
-#: contact margin EXCEEDS it; anything inside the band goes to the exact
-#: kernel predicate.
-_SNAP_TOL = 1e-9
 
 
 def _edges_of(g) -> np.ndarray:
@@ -344,7 +337,7 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
     bulk classification of every a-vertex against b (interior /
     within-snap-of-boundary / exterior), then per-pair vectorized
     proper-crossing and b-vertex tests.  Decisions are made only when
-    every margin clears the kernel snap resolution (``_SNAP_TOL``); pairs
+    every margin clears the kernel snap resolution (``clip._SNAP``); pairs
     inside the ambiguity band fall back to the exact relate-based kernel
     predicate.  Soundness: with no proper crossing, the min
     boundary-boundary distance is attained at a vertex of one side
@@ -400,9 +393,9 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
                if any(len(c) for c in coords) else np.empty((0, 2)))
         inside = points_in_polygon_bulk(pts, gb)
         bdist = points_min_dist_to_boundary(pts, gb)
-        interior = inside & (bdist > _SNAP_TOL)
-        near = bdist <= _SNAP_TOL
-        exterior = ~inside & (bdist > _SNAP_TOL)
+        interior = inside & (bdist > _SNAP)
+        near = bdist <= _SNAP
+        exterior = ~inside & (bdist > _SNAP)
         for j, i in enumerate(idxs):
             sl = slice(offs[j], offs[j + 1])
             if offs[j] == offs[j + 1]:  # empty a → exact kernel
@@ -422,10 +415,10 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
                     bv_dist = _min_dist_to_edges(b_verts, ga)
                     if ga.dimension() == 2:
                         bv_in = points_in_polygon_bulk(b_verts, ga)
-                        if (bv_in & (bv_dist > _SNAP_TOL)).any():
+                        if (bv_in & (bv_dist > _SNAP)).any():
                             out[i] = True
                             continue
-                    if (bv_dist <= _SNAP_TOL).any():
+                    if (bv_dist <= _SNAP).any():
                         slow.append(i)  # snap-ambiguous contact
                         continue
                 out[i] = False
@@ -445,10 +438,10 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
                     bv_dist = _min_dist_to_edges(b_verts, ga)
                     if ga.dimension() == 2:
                         bv_in = points_in_polygon_bulk(b_verts, ga)
-                        if (bv_in & (bv_dist > _SNAP_TOL)).any():
+                        if (bv_in & (bv_dist > _SNAP)).any():
                             out[i] = False  # b's boundary inside a
                             continue
-                    if (bv_dist <= _SNAP_TOL).any():
+                    if (bv_dist <= _SNAP).any():
                         slow.append(i)
                         continue
                 out[i] = True

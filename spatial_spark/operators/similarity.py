@@ -111,24 +111,6 @@ class IVFIndex:
         return spark.read.parquet(path)
 
 
-def pairwise_topk_cosine(df: DataFrame, k: int = 5, vec_col: str = "embedding",
-                         id_col: str = "vec_id", planes: int = 8) -> DataFrame:
-    """For each vector: its top-k most similar others, via hyperplane-LSH
-    candidate generation + windowed rank (avoids the full N² cross join)."""
-    from .dedup import embedding_near_dup_pairs
-    from pyspark.sql import Window
-
-    pairs = embedding_near_dup_pairs(df, vec_col, id_col,
-                                     threshold=-1.0, planes=planes)
-    sym = pairs.union(pairs.select(F.col("b_id").alias("a_id"),
-                                   F.col("a_id").alias("b_id"), "cosine"))
-    w = Window.partitionBy("a_id").orderBy(F.col("cosine").desc(), F.col("b_id"))
-    return (sym.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(F.col("a_id").alias(id_col),
-                    F.col("b_id").alias("neighbor_id"), "cosine", "rnk"))
-
-
 # -------------------------------------------------------- int8 quantized ANN
 def quantize_embeddings(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Per-vector symmetric int8 quantization (the memory-bound scale

@@ -106,13 +106,6 @@ def language_id(text: Column | str) -> Column:
     return expr
 
 
-def sum_cols(cols):
-    out = cols[0]
-    for c in cols[1:]:
-        out = out + c
-    return out
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-signal columns: length, token count, punctuation ratio,
     uppercase ratio, stopword ratio, mean word length."""

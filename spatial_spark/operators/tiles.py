@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.columns import sql_cast_double as _c
+
 __all__ = ["tile_xy_sql", "with_tiles", "tile_counts", "tile_rollup",
            "hex_qr_exprs", "hex_qr_ctes", "with_hex", "hex_counts",
            "hex_center"]
@@ -128,10 +130,7 @@ def hex_qr_exprs(size: float, x_sql: str = "x",
     if size <= 0:
         raise ValueError(f"hex size must be positive, got {size}")
 
-    def _c(v: float) -> str:
-        return f"CAST({v!r} AS DOUBLE)"
-
-    s = _c(float(size))
+    s = _c(size)
     return [
         ("_hqf", f"(({_c(3 ** 0.5 / 3.0)} * ({x_sql}) "
                  f"- {_c(1.0 / 3.0)} * ({y_sql})) / {s})"),

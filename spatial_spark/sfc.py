@@ -227,18 +227,3 @@ def hilbert_ranges(window, extent=WGS84, level: int = DEFAULT_LEVEL,
 
     recurse(wx0, wy0, wx1, wy1, n, 0)
     return _merge_coarsen(ranges, max_ranges)
-
-
-def geohash_prefix(window) -> str:
-    """Common geohash prefix of the window corners — the reference's
-    LayerGeohashPointIndex search strategy (prefix over common bits,
-    :42-121)."""
-    xmin, ymin, xmax, ymax = window
-    g1 = geohash_encode(np.array([xmin]), np.array([ymin]))[0]
-    g2 = geohash_encode(np.array([xmax]), np.array([ymax]))[0]
-    out = []
-    for a, b in zip(g1, g2):
-        if a != b:
-            break
-        out.append(a)
-    return "".join(out)

@@ -43,16 +43,6 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour",
                     "event_type", "n_events", "sum_value", "approx_users"))
 
 
-def geofence_filter(events: DataFrame, lon_col: str, lat_col: str,
-                    window) -> DataFrame:
-    """Streaming bbox filter (the streaming analogue of
-    FilterIntersectWindow) — stateless, fully pushable."""
-    wx0, wy0, wx1, wy1 = window
-    return events.filter(
-        (F.col(lon_col) >= wx0) & (F.col(lon_col) <= wx1)
-        & (F.col(lat_col) >= wy0) & (F.col(lat_col) <= wy1))
-
-
 def sessionize(events: DataFrame, gap: str = "30 minutes",
                watermark: str = "2 hours") -> DataFrame:
     """Per-user session windows (F.session_window — native state handling,

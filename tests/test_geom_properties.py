@@ -1077,6 +1077,66 @@ def test_tm_frames_kernel_and_roundtrip():
     assert np.abs(got - want).max() < 1e-4          # sub-0.1 mm
 
 
+_SQL_TYPES = {"DOUBLE", "BIGINT", "INT", "INTEGER", "BOOLEAN", "STRING"}
+
+
+def _repeated_aliases(chain: str) -> list:
+    """Column aliases a ``SELECT *`` WITH chain adds more than once.  A
+    repeated alias is silent: the engine keeps both columns (DuckDB
+    renames the second one) and every later stage reads the first."""
+    import re
+    seen, repeated = set(), []
+    for m in re.finditer(r"\bAS\s+(\w+)\b(?!\s*\()", chain):
+        alias = m.group(1)
+        if alias.upper() in _SQL_TYPES:
+            continue
+        if alias in seen:
+            repeated.append(alias)
+        seen.add(alias)
+    return repeated
+
+
+def test_sql_chains_never_repeat_an_alias():
+    """Every dual-engine chain builder — each public ``*_ctes`` in
+    functions/crs.py, ``vincenty_ctes`` and the hex builder — adds each
+    column alias once, so no stage shadows an earlier stage's column
+    (e.g. the datum leg's Bowring angle vs LCC's cone angle)."""
+    from spatial_spark.functions import crs
+    from spatial_spark.functions.geodesic import vincenty_ctes
+    from spatial_spark.operators.tiles import hex_qr_ctes
+
+    def params(code):
+        return [float(v) for v in crs._frame(code).split(":")[1:]]
+
+    base = "SELECT * FROM pts"
+    chains = {
+        "utm_forward_ctes": crs.utm_forward_ctes(base),
+        "utm_inverse_ctes": crs.utm_inverse_ctes(base),
+        "tm_forward_ctes": crs.tm_forward_ctes(base, *params("EPSG:3414")),
+        "tmd_forward_ctes": crs.tmd_forward_ctes(base,
+                                                 *params("EPSG:27700")),
+        "lccd_forward_ctes": crs.lccd_forward_ctes(base,
+                                                   *params("EPSG:31370")),
+        "sod_forward_ctes": crs.sod_forward_ctes(base,
+                                                 *params("EPSG:28992")),
+        "soc_forward_ctes": crs.soc_forward_ctes(base,
+                                                 *params("EPSG:21781")),
+        "lcc_forward_ctes": crs.lcc_forward_ctes(base),
+        "laea_forward_ctes": crs.laea_forward_ctes(base),
+        "aea_forward_ctes": crs.aea_forward_ctes(base),
+    }
+    assert set(chains) == {n for n in dir(crs)
+                           if n.endswith("_ctes") and not n.startswith("_")}
+    chains["vincenty_ctes"] = vincenty_ctes(base)
+    chains["hex_qr_ctes"] = hex_qr_ctes(base, 0.5)
+    for name, chain in chains.items():
+        assert _repeated_aliases(chain) == [], name
+    # the check sees the trap it pins
+    assert _repeated_aliases(
+        "WITH b AS (SELECT * FROM pts), s1 AS (SELECT *, 1.0 AS _th FROM b),"
+        " s2 AS (SELECT *, CAST(2.0 AS DOUBLE) AS _th FROM s1)") == ["_th"]
+
+
 def test_tmd_osgb_projection_anchor_and_constants():
     """r11 datum tier: (a) krueger_constants(WGS84) == the module UTM_*
     constants BIT-exactly (the WGS84 frames keep their kernels); (b) the
@@ -1091,14 +1151,14 @@ def test_tmd_osgb_projection_anchor_and_constants():
                                   crs.UTM_DELTA, crs._UTM_C)
     lat = 52 + 39 / 60 + 27.2531 / 3600
     lon = 1 + 43 / 60 + 4.5177 / 3600
-    en = crs.tm_forward_ell(np.array([[lon, lat]]), 49.0, -2.0,
-                            0.9996012717, 400000.0, -100000.0,
-                            crs.AIRY_A, crs.AIRY_F)
+    en = crs.tm_forward(np.array([[lon, lat]]), 49.0, -2.0,
+                        0.9996012717, 400000.0, -100000.0,
+                        crs.AIRY_A, crs.AIRY_F)
     assert abs(en[0, 0] - 651409.903) < 2e-3
     assert abs(en[0, 1] - 313177.270) < 2e-3
     # and the inverse recovers the geodetic input
-    back = crs.tm_inverse_ell(en, 49.0, -2.0, 0.9996012717, 400000.0,
-                              -100000.0, crs.AIRY_A, crs.AIRY_F)
+    back = crs.tm_inverse(en, 49.0, -2.0, 0.9996012717, 400000.0,
+                          -100000.0, crs.AIRY_A, crs.AIRY_F)
     # 3rd-order-in-n series truncation (Airy's n > WGS84's): sub-mm
     assert abs(back[0, 0] - lon) < 1e-8 and abs(back[0, 1] - lat) < 1e-8
 
@@ -1134,16 +1194,16 @@ def test_helmert_properties_and_tmd_roundtrip():
     assert np.abs(back - ll).max() < 1e-7
     # OSGB36 grid origin sanity: the true origin (49N 2W in OSGB36)
     # maps to (FE, FN) = (400000, -100000) via the projection alone
-    en = crs.tm_forward_ell(np.array([[-2.0, 49.0]]), 49.0, -2.0,
-                            0.9996012717, 400000.0, -100000.0,
-                            crs.AIRY_A, crs.AIRY_F)
+    en = crs.tm_forward(np.array([[-2.0, 49.0]]), 49.0, -2.0,
+                        0.9996012717, 400000.0, -100000.0,
+                        crs.AIRY_A, crs.AIRY_F)
     assert abs(en[0, 0] - 400000.0) < 1e-6
     assert abs(en[0, 1] + 100000.0) < 1e-6
     # datum-shift magnitude in London: the OSGB36↔WGS84 offset is the
     # published ~50–125 m class, NOT zero and NOT kilometers
-    naive = crs.tm_forward_ell(np.array([[-0.1276, 51.5072]]), 49.0,
-                               -2.0, 0.9996012717, 400000.0, -100000.0,
-                               crs.AIRY_A, crs.AIRY_F)
+    naive = crs.tm_forward(np.array([[-0.1276, 51.5072]]), 49.0,
+                           -2.0, 0.9996012717, 400000.0, -100000.0,
+                           crs.AIRY_A, crs.AIRY_F)
     shifted = crs.transform_points(np.array([[-0.1276, 51.5072]]),
                                    "wgs84", tok)
     d = float(np.hypot(*(shifted - naive)[0]))
@@ -1831,7 +1891,7 @@ def test_ntv2_shapefile_import_path(ctx, tmp_path):
              'PARAMETER["Latitude_Of_Origin",0.0],UNIT["Meter",1.0]]')
     frame = crs.prj_to_frame(NAD27)
     proj = [float(v) for v in frame.split(":")[1:8]]
-    en = crs.tm_forward_ell(np.array([[-93.2, 41.6]]), *proj)[0]
+    en = crs.tm_forward(np.array([[-93.2, 41.6]]), *proj)[0]
     g2 = Geometry(GTYPE_POINT, np.array([en[0], en[1]]))
     shp2 = str(tmp_path / "n27utm.shp")
     write_shapefile([(g2, {})], shp2)

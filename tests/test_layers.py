@@ -277,6 +277,43 @@ def test_cql_search_reads_geom_from_catalog(ctx, spark, monkeypatch):
         assert got == sorted(ids[hit & (d <= 40.0)].tolist())
 
 
+def test_cql_filter_reads_only_pruned_files(ctx, spark, monkeypatch):
+    """``cql_filter`` learns whether the layer has a geom column from the
+    catalog's recorded schema: with a mined window or property bound it
+    reads only the pruned files (``Layer.df`` is never called), and its
+    rows equal the unpruned filter's."""
+    from spatial_spark.operators.cql import cql_filter, cql_to_sql
+    rng = np.random.default_rng(11)
+    n = 120
+    lon, lat = rng.uniform(9.0, 11.0, n), rng.uniform(44.0, 46.0, n)
+    score = np.arange(n) % 10
+    pts = ctx.create_point_layer("cqlf_pts", x="lon", y="lat")
+    pts.add(spark.createDataFrame(
+        [(i, float(x), float(y), int(s))
+         for i, (x, y, s) in enumerate(zip(lon, lat, score))],
+        "id long, lon double, lat double, score long"))
+    wkb = ctx.create_layer("cqlf_wkb")
+    wkb.add(spark.createDataFrame(
+        [(i, f"POINT ({x!r} {y!r})", int(s))
+         for i, (x, y, s) in enumerate(zip(lon, lat, score))],
+        "id long, wkt string, score long"), wkt="wkt")
+    exprs = ("BBOX(geom, 9.5, 44.5, 10.5, 45.5)", "score >= 7",
+             "score < 3 AND DWITHIN(geom, POINT(10 45), 80, kilometers)")
+    for layer in (pts, wkb):
+        has_geom = "geom" in layer.df().columns
+        want = {e: sorted(r["id"] for r in layer.df().filter(
+            cql_to_sql(e, has_geom=has_geom)).collect()) for e in exprs}
+        calls = []
+        read = layer.df
+        monkeypatch.setattr(
+            layer, "df", lambda *a, **kw: calls.append(a) or read(*a, **kw))
+        for e in exprs:
+            assert 0 < len(want[e]) < n
+            assert sorted(r["id"] for r in cql_filter(layer, e).collect()) \
+                == want[e]
+        assert calls == []
+
+
 def test_dynamic_view(ctx, spark):
     layer = ctx.create_wkt_layer("dyn")
     df = spark.createDataFrame(
