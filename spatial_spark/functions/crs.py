@@ -88,8 +88,8 @@ MERC_R = 6378137.0   # WGS84 semi-major axis, the EPSG:3857 sphere radius
 _F = 1.0 / 298.257223563            # WGS84 flattening
 
 _WGS84 = ("epsg:4326", "4326", "crs:84", "wgs84")
-_MERC = ("epsg:3857", "3857", "epsg:900913", "web-mercator")
-_CART = ("cartesian", "0", "none", "")
+_MERC = ("epsg:3857", "3857", "epsg:900913", "web-mercator", "merc")
+_CART = ("cartesian", "0", "none", "", "cart")
 
 
 def krueger_constants(a: float, f: float):
@@ -161,7 +161,7 @@ _EPSG_CONIC = {
     #   3414  SVY21 / Singapore TM
     "2193": "tm:0.0:173.0:0.9996:1600000.0:10000000.0",
     "2180": "tm:0.0:19.0:0.9993:500000.0:-5300000.0",
-    "3414": "tm:1.3697222222222222:103.83333333333333:1.0:28001.642:38744.572",
+    "3414": "tm:1.3697222222222223:103.83333333333333:1.0:28001.642:38744.572",
 }
 
 # Datum-SHIFTED TM grids (r11): tmd:<lat0>:<lon0>:<k0>:<fe>:<fn>:<a>:<f>

@@ -6,11 +6,31 @@ Buffer.java, ConvexHull.java, Densify.java, SimplifyWithDouglasPeucker.java,
 SimplifyPreservingTopology.java, ApplyAffineTransformation.java,
 InteriorPoint.java, StartPoint.java, EndPoint.java, OrthodromicDistance.java
 (spherical law of cosines, R=6371 — replicated exactly).
+
+It also holds the shared kernels that every predicate, relate matrix,
+overlay, join refine and search refine decides with, one rule each:
+
+- ``orient``: the orientation determinant, scalar or array; its sign
+  (exactly 0 for collinear) is the only orientation test.
+- ``_proper``: two segments cross properly iff both orientation pairs
+  are strictly opposite; ``any_proper_crossing`` applies it to
+  ``edges`` arrays (and, to one ring's own edges, tests self-crossing).
+- ``_on_segment``: the point-on-line rule, orient == 0 inside the
+  segment's closed bbox; ``_locate_on_lines`` adds the mod-2 boundary.
+- ``point_in_polygon`` (scalar) and ``points_locate`` (bulk): point
+  location in an area, boundary iff ``_on_segment`` holds for a ring
+  edge, else ray-crossing parity, shells then holes then later parts.
+  ``locate`` is the scalar location in a geometry of any dimension.
+- ``points_dist_to_edges``: per-point minimum distance to the edges.
+  Overlay and the join's grouped path decide boundary points by this
+  distance against ``clip._SNAP`` and use ``points_in_polygon_bulk``
+  (parity only) for the rest.
 """
 
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import numpy as np
 
@@ -104,63 +124,97 @@ def centroid(g: Geometry) -> Geometry:
     return Geometry.point(float(c[:, 0].mean()), float(c[:, 1].mean()))
 
 
-# ---------------------------------------------------------------- distance
-def _pt_seg_dist(px, py, ax, ay, bx, by):
-    dx, dy = bx - ax, by - ay
-    ll = dx * dx + dy * dy
-    if ll == 0:
-        return math.hypot(px - ax, py - ay)
-    t = ((px - ax) * dx + (py - ay) * dy) / ll
-    t = 0.0 if t < 0 else (1.0 if t > 1 else t)
-    return math.hypot(px - (ax + t * dx), py - (ay + t * dy))
+# ------------------------------------------------------------ shared kernels
+def orient(ox, oy, ax, ay, bx, by):
+    """Orientation determinant of (o, a, b): > 0 when b lies left of o→a,
+    < 0 right, 0 collinear.  Scalars or numpy arrays alike."""
+    return (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
 
 
-def _pts_to_segs_dist(pts: np.ndarray, line: np.ndarray) -> float:
-    """Min distance from any of pts to polyline `line` (vectorized)."""
-    if len(line) == 1:
-        d = pts[:, None, :] - line[None, :, :]
-        return float(np.sqrt((d * d).sum(-1)).min())
-    a = line[:-1]
-    b = line[1:]
-    ab = b - a
-    ll = (ab * ab).sum(1)
-    ll[ll == 0] = 1e-300
-    ap = pts[:, None, :] - a[None, :, :]
-    t = (ap * ab[None, :, :]).sum(-1) / ll[None, :]
-    t = np.clip(t, 0.0, 1.0)
-    proj = a[None, :, :] + t[:, :, None] * ab[None, :, :]
-    d = pts[:, None, :] - proj
-    return float(np.sqrt((d * d).sum(-1)).min())
+def _proper(d1, d2, d3, d4):
+    """Proper-crossing rule on the four orientations of segments p, q
+    (d1, d2: p's ends against q; d3, d4: q's ends against p): each pair
+    strictly opposite.  Scalars or numpy arrays alike."""
+    return ((((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0)))
+            & (((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))))
+
+
+def _on_segment(px, py, ax, ay, bx, by) -> bool:
+    """The point-on-line rule: (px, py) is on the closed segment a-b iff
+    it is inside the segment's bbox and orient is exactly 0."""
+    return (min(ax, bx) <= px <= max(ax, bx)
+            and min(ay, by) <= py <= max(ay, by)
+            and orient(ax, ay, bx, by, px, py) == 0.0)
+
+
+def edges(g: Geometry) -> np.ndarray:
+    """All segments of a geometry as an (E, 2, 2) array (rings + lines)."""
+    segs = [np.stack([line[:-1], line[1:]], axis=1)
+            for line in _as_lines(g) if len(line) >= 2]
+    if not segs:
+        return np.empty((0, 2, 2))
+    return np.concatenate(segs, axis=0)
+
+
+def any_proper_crossing(ea: np.ndarray, eb: np.ndarray) -> bool:
+    """True iff any segment of ``ea`` properly (transversally) crosses
+    any segment of ``eb``; O(Ea·Eb) numpy ops, chunked so the orientation
+    grid stays bounded.  Segments sharing an endpoint never cross (their
+    orient is exactly 0), so ``any_proper_crossing(e, e)`` is a ring's
+    self-crossing test."""
+    if not len(ea) or not len(eb):
+        return False
+    chunk = max(1, 4_000_000 // len(eb))
+    q0x, q0y = eb[None, :, 0, 0], eb[None, :, 0, 1]
+    q1x, q1y = eb[None, :, 1, 0], eb[None, :, 1, 1]
+    for s in range(0, len(ea), chunk):
+        e = ea[s:s + chunk]
+        p0x, p0y = e[:, None, 0, 0], e[:, None, 0, 1]
+        p1x, p1y = e[:, None, 1, 0], e[:, None, 1, 1]
+        if _proper(orient(q0x, q0y, q1x, q1y, p0x, p0y),
+                   orient(q0x, q0y, q1x, q1y, p1x, p1y),
+                   orient(p0x, p0y, p1x, p1y, q0x, q0y),
+                   orient(p0x, p0y, p1x, p1y, q1x, q1y)).any():
+            return True
+    return False
+
+
+def points_dist_to_edges(pts: np.ndarray, g: Geometry) -> np.ndarray:
+    """Per-point min distance from ``pts`` (n, 2) to every edge of ``g``
+    (polygon rings and linestrings; a one-point line is its vertex); inf
+    when edgeless."""
+    best = np.full(len(pts), np.inf)
+    for line in _as_lines(g):
+        if len(line) == 1:
+            proj = line[None, :, :]
+        elif len(line):
+            a = line[:-1]
+            ab = line[1:] - a
+            ll = (ab * ab).sum(1)
+            ll_safe = np.where(ll == 0, 1e-300, ll)
+            ap = pts[:, None, :] - a[None, :, :]
+            t = np.clip((ap * ab[None, :, :]).sum(-1) / ll_safe[None, :],
+                        0.0, 1.0)
+            proj = a[None, :, :] + t[:, :, None] * ab[None, :, :]
+        else:
+            continue
+        d = pts[:, None, :] - proj
+        best = np.minimum(best, np.sqrt((d * d).sum(-1)).min(axis=1))
+    return best
 
 
 def _segments_cross(p1, p2, q1, q2) -> bool:
-    def orient(o, a, b):
-        return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
-
-    d1 = orient(q1, q2, p1)
-    d2 = orient(q1, q2, p2)
-    d3 = orient(p1, p2, q1)
-    d4 = orient(p1, p2, q2)
-    if ((d1 > 0 and d2 < 0) or (d1 < 0 and d2 > 0)) and (
-        (d3 > 0 and d4 < 0) or (d3 < 0 and d4 > 0)
-    ):
-        return True
-
-    def on_seg(a, b, c):
-        return (
-            min(a[0], b[0]) <= c[0] <= max(a[0], b[0])
-            and min(a[1], b[1]) <= c[1] <= max(a[1], b[1])
-        )
-
-    if d1 == 0 and on_seg(q1, q2, p1):
-        return True
-    if d2 == 0 and on_seg(q1, q2, p2):
-        return True
-    if d3 == 0 and on_seg(p1, p2, q1):
-        return True
-    if d4 == 0 and on_seg(p1, p2, q2):
-        return True
-    return False
+    """Closed segments p1-p2 and q1-q2 share a point (cross or touch)."""
+    d1 = orient(q1[0], q1[1], q2[0], q2[1], p1[0], p1[1])
+    d2 = orient(q1[0], q1[1], q2[0], q2[1], p2[0], p2[1])
+    d3 = orient(p1[0], p1[1], p2[0], p2[1], q1[0], q1[1])
+    d4 = orient(p1[0], p1[1], p2[0], p2[1], q2[0], q2[1])
+    return bool(
+        _proper(d1, d2, d3, d4)
+        or (d1 == 0 and _on_segment(p1[0], p1[1], q1[0], q1[1], q2[0], q2[1]))
+        or (d2 == 0 and _on_segment(p2[0], p2[1], q1[0], q1[1], q2[0], q2[1]))
+        or (d3 == 0 and _on_segment(q1[0], q1[1], p1[0], p1[1], p2[0], p2[1]))
+        or (d4 == 0 and _on_segment(q2[0], q2[1], p1[0], p1[1], p2[0], p2[1])))
 
 
 def _any_edge_intersection(l1: np.ndarray, l2: np.ndarray) -> bool:
@@ -181,6 +235,7 @@ def _any_edge_intersection(l1: np.ndarray, l2: np.ndarray) -> bool:
     return False
 
 
+# ----------------------------------------------------------- point location
 def point_in_ring(px: float, py: float, ring: np.ndarray) -> int:
     """2=interior, 1=boundary, 0=exterior (ray casting, boundary-exact)."""
     inside = False
@@ -188,14 +243,8 @@ def point_in_ring(px: float, py: float, ring: np.ndarray) -> int:
     for i in range(n - 1):
         ax, ay = ring[i]
         bx, by = ring[i + 1]
-        # boundary check
-        if (
-            min(ax, bx) - 1e-300 <= px <= max(ax, bx) + 1e-300
-            and min(ay, by) - 1e-300 <= py <= max(ay, by) + 1e-300
-        ):
-            cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-            if cross == 0.0:
-                return 1
+        if _on_segment(px, py, ax, ay, bx, by):
+            return 1
         if (ay > py) != (by > py):
             xint = (bx - ax) * (py - ay) / (by - ay) + ax
             if px < xint:
@@ -205,7 +254,6 @@ def point_in_ring(px: float, py: float, ring: np.ndarray) -> int:
 
 def point_in_polygon(px: float, py: float, poly: Geometry) -> int:
     """2=interior, 1=boundary, 0=exterior; honors holes and multi parts."""
-    best = 0
     for part in poly.parts():
         rings = part.data
         if not rings:
@@ -224,49 +272,39 @@ def point_in_polygon(px: float, py: float, poly: Geometry) -> int:
                     break
             if inside:
                 return 2
-        best = max(best, 0)
-    return best
+    return 0
 
 
-def points_in_ring_bulk(pts: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Vectorized ray-cast: bool array 'strictly inside or on boundary-ish'.
-
-    Used for bulk point-in-polygon joins; boundary points may classify either
-    way (callers needing exact boundary semantics use point_in_polygon).
-    """
-    x, y = pts[:, 0], pts[:, 1]
-    n = len(ring)
-    inside = np.zeros(len(pts), dtype=bool)
+def _ring_sweep(x: np.ndarray, y: np.ndarray, ring: np.ndarray,
+                on: np.ndarray | None = None) -> np.ndarray:
+    """point_in_ring over arrays: the ray-crossing parity of each point,
+    and, when ``on`` is given, ``_on_segment`` (elementwise) ORed into
+    ``on``."""
+    inside = np.zeros(len(x), dtype=bool)
     ax, ay = ring[:-1, 0], ring[:-1, 1]
     bx, by = ring[1:, 0], ring[1:, 1]
-    for i in range(n - 1):
-        a0, a1, b0, b1 = ax[i], ay[i], bx[i], by[i]
-        cond = (a1 > y) != (b1 > y)
-        if not cond.any():
-            continue
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        for i in range(len(ring) - 1):
+            a0, a1, b0, b1 = ax[i], ay[i], bx[i], by[i]
+            if on is not None:
+                box = ((min(a0, b0) <= x) & (x <= max(a0, b0))
+                       & (min(a1, b1) <= y) & (y <= max(a1, b1)))
+                if box.any():
+                    on |= box & (orient(a0, a1, b0, b1, x, y) == 0.0)
+            cond = (a1 > y) != (b1 > y)
+            if not cond.any():
+                continue
             xint = (b0 - a0) * (y - a1) / (b1 - a1) + a0
-        inside ^= cond & (x < xint)
+            inside ^= cond & (x < xint)
     return inside
 
 
-def points_min_dist_to_boundary(pts: np.ndarray, poly: Geometry) -> np.ndarray:
-    """Per-point min distance to the polygon's ring edges (vectorized).
-    Used to make bulk point-in-polygon boundary-exact: dist==0 ⇔ on boundary."""
-    best = np.full(len(pts), np.inf)
-    for part in poly.parts():
-        for ring in part.data:
-            a = ring[:-1]
-            b = ring[1:]
-            ab = b - a
-            ll = (ab * ab).sum(1)
-            ll_safe = np.where(ll == 0, 1e-300, ll)
-            ap = pts[:, None, :] - a[None, :, :]
-            t = np.clip((ap * ab[None, :, :]).sum(-1) / ll_safe[None, :], 0.0, 1.0)
-            proj = a[None, :, :] + t[:, :, None] * ab[None, :, :]
-            d = pts[:, None, :] - proj
-            best = np.minimum(best, np.sqrt((d * d).sum(-1)).min(axis=1))
-    return best
+def points_in_ring_bulk(pts: np.ndarray, ring: np.ndarray) -> np.ndarray:
+    """Vectorized ray-cast parity: 'strictly inside or on boundary-ish'.
+
+    Boundary points may classify either way; callers that need the
+    boundary decide it first (by distance) or use points_locate."""
+    return _ring_sweep(pts[:, 0], pts[:, 1], ring)
 
 
 def points_in_polygon_bulk(pts: np.ndarray, poly: Geometry) -> np.ndarray:
@@ -280,6 +318,74 @@ def points_in_polygon_bulk(pts: np.ndarray, poly: Geometry) -> np.ndarray:
             r &= ~points_in_ring_bulk(pts, h)
         res |= r
     return res
+
+
+def _ring_locate(x: np.ndarray, y: np.ndarray, ring: np.ndarray) -> np.ndarray:
+    on = np.zeros(len(x), dtype=bool)
+    inside = _ring_sweep(x, y, ring, on)
+    return np.where(on, 1, np.where(inside, 2, 0)).astype(np.int8)
+
+
+def points_locate(pts: np.ndarray, poly: Geometry) -> np.ndarray:
+    """point_in_polygon over (n, 2) points: int8 0 exterior, 1 boundary,
+    2 interior, by the same boundary rule, ray parity and shell/hole/part
+    order (the first part that answers 1 or 2 decides; NaN is
+    exterior)."""
+    x, y = pts[:, 0], pts[:, 1]
+    out = np.zeros(len(pts), dtype=np.int8)
+    open_ = np.ones(len(pts), dtype=bool)
+    for part in poly.parts():
+        rings = part.data
+        if not rings:
+            continue
+        loc = _ring_locate(x, y, rings[0])
+        pending = loc == 2
+        for h in rings[1:]:
+            if not pending.any():
+                break
+            hl = _ring_locate(x, y, h)
+            loc[pending & (hl == 1)] = 1
+            loc[pending & (hl == 2)] = 0
+            pending &= hl == 0
+        hit = open_ & (loc > 0)
+        out[hit] = loc[hit]
+        open_ &= ~hit
+    return out
+
+
+def _line_boundary_points(g: Geometry) -> set[tuple[float, float]]:
+    """Mod-2 boundary: endpoints that occur an odd number of times across
+    parts (a closed ring contributes its endpoint twice -> not boundary)."""
+    c: Counter = Counter()
+    for part in g.parts():
+        if part.gtype != GTYPE_LINESTRING or len(part.data) == 0:
+            continue
+        c[(float(part.data[0][0]), float(part.data[0][1]))] += 1
+        c[(float(part.data[-1][0]), float(part.data[-1][1]))] += 1
+    return {p for p, n in c.items() if n % 2 == 1}
+
+
+def _locate_on_lines(px, py, lines, boundary_pts) -> int:
+    """0 exterior / 1 boundary / 2 interior of a 1-dim geometry."""
+    for line in lines:
+        for i in range(len(line) - 1):
+            if _on_segment(px, py, line[i][0], line[i][1],
+                           line[i + 1][0], line[i + 1][1]):
+                return 1 if (px, py) in boundary_pts else 2
+    return 0
+
+
+def locate(px: float, py: float, g: Geometry) -> int:
+    """0 exterior / 1 boundary / 2 interior of (px, py) in ``g`` of any
+    dimension: point_in_polygon for areas, the on-segment rule with the
+    mod-2 boundary for lines, coordinate equality for points."""
+    dim = g.dimension()
+    if dim == 2:
+        return point_in_polygon(px, py, _poly_view(g))
+    if dim == 1:
+        return _locate_on_lines(px, py, _as_lines(g), _line_boundary_points(g))
+    return 2 if any(p.data[0] == px and p.data[1] == py
+                    for p in g.parts()) else 0
 
 
 def distance(g1: Geometry, g2: Geometry) -> float:
@@ -304,14 +410,11 @@ def distance(g1: Geometry, g2: Geometry) -> float:
                 if _any_edge_intersection(l1, l2):
                     return 0.0
     best = math.inf
-    if lines2:
-        for l2 in lines2:
-            if len(pts1):
-                best = min(best, _pts_to_segs_dist(pts1, l2))
-    if lines1:
-        for l1 in lines1:
-            if len(pts2):
-                best = min(best, _pts_to_segs_dist(pts2, l1))
+    for pts, lines in ((pts1, lines2), (pts2, lines1)):
+        if len(pts):
+            for line in lines:
+                best = min(best, float(points_dist_to_edges(
+                    pts, Geometry(GTYPE_LINESTRING, line)).min()))
     if not lines1 and not lines2:
         d = pts1[:, None, :] - pts2[None, :, :]
         best = float(np.sqrt((d * d).sum(-1)).min())
@@ -445,7 +548,7 @@ def convex_hull(g: Geometry) -> Geometry:
     def half(points):
         out = []
         for p in points:
-            while len(out) >= 2 and _cross3(out[-2], out[-1], p) <= 0:
+            while len(out) >= 2 and orient(*out[-2], *out[-1], *p) <= 0:
                 out.pop()
             out.append(p)
         return out
@@ -456,10 +559,6 @@ def convex_hull(g: Geometry) -> Geometry:
     if len(hull) < 3:
         return Geometry(GTYPE_LINESTRING, np.unique(hull, axis=0))
     return Geometry.polygon(hull)
-
-
-def _cross3(o, a, b):
-    return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
 
 
 def simplify_dp(g: Geometry, tol: float, preserve_topology: bool = False) -> Geometry:
@@ -475,12 +574,13 @@ def simplify_dp(g: Geometry, tol: float, preserve_topology: bool = False) -> Geo
                 continue
             seg = a[j] - a[i]
             ll = float((seg * seg).sum())
-            rel = a[i + 1:j] - a[i]
+            mid = a[i + 1:j]
             if ll == 0:
+                rel = mid - a[i]
                 d = np.sqrt((rel * rel).sum(1))
             else:
-                cross = np.abs(rel[:, 0] * seg[1] - rel[:, 1] * seg[0])
-                d = cross / math.sqrt(ll)
+                d = np.abs(orient(a[i, 0], a[i, 1], mid[:, 0], mid[:, 1],
+                                  a[j, 0], a[j, 1])) / math.sqrt(ll)
             k = int(np.argmax(d))
             if d[k] > tol:
                 keep[i + 1 + k] = True

@@ -27,8 +27,8 @@ from .core import (
     GTYPE_MULTIPOLYGON, GTYPE_POINT, GTYPE_POLYGON, Geometry, envelopes_intersect,
 )
 from .algorithms import (
-    affine_transform, point_in_polygon, points_min_dist_to_boundary,
-    ring_signed_area,
+    affine_transform, point_in_polygon, point_in_ring, points_dist_to_edges,
+    points_in_polygon_bulk, ring_signed_area,
 )
 
 _SNAP = 1e-9
@@ -237,8 +237,7 @@ def _classify(frag, poly: Geometry) -> int:
     near-coincident fragment agree on 'boundary'.  The parity test only
     runs for midpoints safely off the boundary, where it is stable."""
     mid = (frag[0] + frag[-1]) / 2.0
-    from .algorithms import points_min_dist_to_boundary
-    if points_min_dist_to_boundary(mid[None, :], poly)[0] <= _SNAP:
+    if points_dist_to_edges(mid[None, :], poly)[0] <= _SNAP:
         return 1
     return point_in_polygon(float(mid[0]), float(mid[1]), poly)
 
@@ -248,9 +247,8 @@ def _classify_all(frags, poly: Geometry) -> list:
     ray-cast sweep over all midpoints instead of per-fragment Python)."""
     if not frags:
         return []
-    from .algorithms import points_in_polygon_bulk, points_min_dist_to_boundary
     mids = np.array([(f[0] + f[-1]) / 2.0 for f in frags])
-    on_bnd = points_min_dist_to_boundary(mids, poly) <= _SNAP
+    on_bnd = points_dist_to_edges(mids, poly) <= _SNAP
     inside = points_in_polygon_bulk(mids, poly)
     return [1 if on_bnd[i] else (2 if inside[i] else 0)
             for i in range(len(frags))]
@@ -345,7 +343,7 @@ def _assemble_checked(rings) -> tuple:
         mid = _ring_interior_pt(h)
         placed = False
         for p in polys:
-            if point_in_ring_np(mid, p[0]):
+            if point_in_ring(float(mid[0]), float(mid[1]), p[0]) > 0:
                 p.append(h)
                 placed = True
                 break
@@ -357,7 +355,8 @@ def _assemble_checked(rings) -> tuple:
         for i, p in enumerate(polys):
             ip = _ring_interior_pt(p[0])
             for j, q in enumerate(polys):
-                if i != j and point_in_ring_np(ip, q[0]):
+                if i != j and point_in_ring(float(ip[0]), float(ip[1]),
+                                            q[0]) > 0:
                     sound = False
                     break
             if not sound:
@@ -366,11 +365,6 @@ def _assemble_checked(rings) -> tuple:
         return Geometry(GTYPE_POLYGON, polys[0]), sound
     return (Geometry(GTYPE_MULTIPOLYGON,
                      [Geometry(GTYPE_POLYGON, p) for p in polys]), sound)
-
-
-def point_in_ring_np(pt, ring) -> bool:
-    from .algorithms import point_in_ring
-    return point_in_ring(float(pt[0]), float(pt[1]), ring) > 0
 
 
 def _ring_interior_pt(ring):
@@ -954,7 +948,7 @@ def _convex_rect_intersection(g: Geometry, rect) -> Geometry | None:
     if ring_signed_area(ring) == 0.0 or not _convex_ring(ring):
         return None
     corners = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
-    if (points_min_dist_to_boundary(corners, g) <= band).any():
+    if (points_dist_to_edges(corners, g) <= band).any():
         return None
     for axis, val, keep_low in ((0, x0, False), (0, x1, True),
                                 (1, y0, False), (1, y1, True)):

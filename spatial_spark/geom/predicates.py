@@ -20,14 +20,12 @@ from __future__ import annotations
 import numpy as np
 
 from .core import (
-    GTYPE_GEOMETRY, GTYPE_LINESTRING, GTYPE_MULTILINESTRING, GTYPE_MULTIPOINT,
-    GTYPE_MULTIPOLYGON, GTYPE_POINT, GTYPE_POLYGON, Geometry,
-    envelopes_intersect, envelope_covers,
+    GTYPE_LINESTRING, GTYPE_MULTILINESTRING, GTYPE_MULTIPOLYGON, GTYPE_POLYGON,
+    Geometry, envelope_covers,
 )
 from .clip import _SNAP
-from .algorithms import (
-    _any_edge_intersection, _as_lines, distance, point_in_polygon, point_in_ring,
-)
+from .algorithms import any_proper_crossing, edges, locate, point_in_ring
+from .relate import matches, relate_matrix  # noqa: F401  (re-exported)
 
 
 def _dim(g: Geometry) -> int:
@@ -70,8 +68,7 @@ def intersects(a: Geometry, b: Geometry) -> bool:
     # (ADVICE r4, medium: every call was paying the full O(Na*Nb) noding).
     if _env_separated(a.envelope(), b.envelope()):
         return False
-    from .relate import matches, relate_matrix as _rm
-    return not matches(_rm(a, b), "FF*FF****")
+    return not matches(relate_matrix(a, b), "FF*FF****")
 
 
 def disjoint(a: Geometry, b: Geometry) -> bool:
@@ -79,33 +76,6 @@ def disjoint(a: Geometry, b: Geometry) -> bool:
 
 
 # ------------------------------------------------------------------ containment
-def _point_loc(p: Geometry, g: Geometry) -> int:
-    """Location of point in geometry: 0 ext, 1 boundary, 2 interior."""
-    px, py = float(p.data[0]), float(p.data[1])
-    if g.dimension() == 2:
-        return point_in_polygon(px, py, g)
-    if g.dimension() == 1:
-        for part in g.parts():
-            line = part.data
-            # endpoints are boundary (mod ring closure)
-            closed = len(line) > 1 and (line[0] == line[-1]).all()
-            from .algorithms import _pt_seg_dist
-            for i in range(len(line) - 1):
-                if _pt_seg_dist(px, py, line[i][0], line[i][1],
-                                line[i + 1][0], line[i + 1][1]) == 0.0:
-                    if not closed and (
-                        (px == line[0][0] and py == line[0][1])
-                        or (px == line[-1][0] and py == line[-1][1])
-                    ):
-                        return 1
-                    return 2
-        return 0
-    for part in g.parts():
-        if part.data[0] == px and part.data[1] == py:
-            return 2
-    return 0
-
-
 def covers(a: Geometry, b: Geometry) -> bool:
     """Every point of b is in (interior ∪ boundary of) a.
 
@@ -120,13 +90,13 @@ def covers(a: Geometry, b: Geometry) -> bool:
     if db == 0:
         if not envelope_covers(a.envelope(), b.envelope()):
             return False
-        return all(_point_loc(p, a) > 0 for p in b.parts())
+        return all(locate(float(p.data[0]), float(p.data[1]), a) > 0
+                   for p in b.parts())
     # envelope reject with snap guard band: a vertex of b beyond a's
     # envelope by more than the kernel resolution cannot lie in a
     if not _env_covers_tol(a.envelope(), b.envelope()):
         return False
-    from .relate import relate_matrix as _rm
-    m = _rm(a, b)
+    m = relate_matrix(a, b)
     return (m[6] == "F" and m[7] == "F"
             and any(m[i] != "F" for i in (0, 1, 3, 4)))
 
@@ -142,12 +112,12 @@ def contains(a: Geometry, b: Geometry) -> bool:
     if db == 0:
         if not envelope_covers(a.envelope(), b.envelope()):
             return False
-        return (all(_point_loc(p, a) > 0 for p in b.parts())
-                and any(_point_loc(p, a) == 2 for p in b.parts()))
+        locs = [locate(float(p.data[0]), float(p.data[1]), a)
+                for p in b.parts()]
+        return all(v > 0 for v in locs) and any(v == 2 for v in locs)
     if not _env_covers_tol(a.envelope(), b.envelope()):
         return False  # snap-tolerant reject, see covers()
-    from .relate import relate_matrix as _rm
-    m = _rm(a, b)
+    m = relate_matrix(a, b)
     return m[0] != "F" and m[6] == "F" and m[7] == "F"
 
 
@@ -164,22 +134,8 @@ def touches(a: Geometry, b: Geometry) -> bool:
     """Intersect, but interiors do not intersect: FT*******|F**T*****|F***T****."""
     if not intersects(a, b):
         return False
-    from .relate import relate_matrix as _rm
-    m = _rm(a, b)
+    m = relate_matrix(a, b)
     return m[0] == "F" and (m[1] != "F" or m[3] != "F" or m[4] != "F")
-
-
-def _proper_cross(p0, p1, q0, q1) -> bool:
-    def orient(o, a, b):
-        return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
-
-    d1 = orient(q0, q1, p0)
-    d2 = orient(q0, q1, p1)
-    d3 = orient(p0, p1, q0)
-    d4 = orient(p0, p1, q1)
-    return ((d1 > 0 and d2 < 0) or (d1 < 0 and d2 > 0)) and (
-        (d3 > 0 and d4 < 0) or (d3 < 0 and d4 > 0)
-    )
 
 
 def crosses(a: Geometry, b: Geometry) -> bool:
@@ -190,8 +146,7 @@ def crosses(a: Geometry, b: Geometry) -> bool:
         return False
     if da == db and da != 1:
         return False  # equal dims (0/0, 2/2) never cross
-    from .relate import relate_matrix as _rm
-    m = _rm(a, b)
+    m = relate_matrix(a, b)
     if da == db == 1:
         return m[0] == "0"
     if da < db:
@@ -207,8 +162,7 @@ def overlaps(a: Geometry, b: Geometry) -> bool:
         return False
     if not intersects(a, b):
         return False
-    from .relate import relate_matrix as _rm
-    m = _rm(a, b)
+    m = relate_matrix(a, b)
     ii_ok = m[0] == "1" if da == 1 else m[0] != "F"
     return ii_ok and m[2] != "F" and m[6] != "F"
 
@@ -253,8 +207,7 @@ def equals_topo(a: Geometry, b: Geometry) -> bool:
         return True
     if a.is_empty() or b.is_empty():
         return False
-    from .relate import relate_matrix as _rm
-    m = _rm(a, b)
+    m = relate_matrix(a, b)
     return (m[0] != "F" and m[2] == "F" and m[5] == "F"
             and m[6] == "F" and m[7] == "F")
 
@@ -273,7 +226,8 @@ def is_valid(g: Geometry) -> bool:
                     return False
                 if (r[0] != r[-1]).any():
                     return False
-                if _ring_self_intersects(r):
+                e = edges(Geometry(GTYPE_LINESTRING, r))
+                if any_proper_crossing(e, e):
                     return False
             shell = rings[0]
             for h in rings[1:]:
@@ -289,26 +243,8 @@ def is_valid(g: Geometry) -> bool:
     return True
 
 
-def _ring_self_intersects(r: np.ndarray) -> bool:
-    n = len(r) - 1
-    for i in range(n):
-        for j in range(i + 2, n):
-            if i == 0 and j == n - 1:
-                continue
-            if _proper_cross(r[i], r[i + 1], r[j], r[j + 1]):
-                return True
-    return False
-
-
 # ------------------------------------------------------------------ relate
 def relate(a: Geometry, b: Geometry, pattern: str) -> bool:
     """DE-9IM pattern match (FilterInRelation.java:30-50), computed on the
     exact noding-based matrix (relate.py)."""
-    from .relate import matches
     return matches(relate_matrix(a, b), pattern)
-
-
-def relate_matrix(a: Geometry, b: Geometry) -> str:
-    """Exact DE-9IM matrix (see relate.py for the construction)."""
-    from .relate import relate_matrix as _rm
-    return _rm(a, b)

@@ -41,28 +41,14 @@ import math
 
 import numpy as np
 
-from .core import (
-    GTYPE_LINESTRING, GTYPE_MULTIPOINT, GTYPE_MULTIPOLYGON, GTYPE_POINT,
-    GTYPE_POLYGON, Geometry,
-)
+from .core import Geometry
 from .algorithms import (
-    _as_lines, interior_point, point_in_polygon,
+    _as_lines, _line_boundary_points, _locate_on_lines, _on_segment,
+    _poly_view, _proper, interior_point, locate, orient, point_in_polygon,
 )
 
 
 # ---------------------------------------------------------------- primitives
-def _orient(ox, oy, ax, ay, bx, by) -> float:
-    return (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
-
-
-def _on_segment(px, py, ax, ay, bx, by) -> bool:
-    """Exact: is (px,py) on closed segment a-b?"""
-    if _orient(ax, ay, bx, by, px, py) != 0.0:
-        return False
-    return (min(ax, bx) <= px <= max(ax, bx)
-            and min(ay, by) <= py <= max(ay, by))
-
-
 def _seg_param(px, py, ax, ay, bx, by) -> float:
     """Parameter t of a point known to lie on segment a-b."""
     dx, dy = bx - ax, by - ay
@@ -88,10 +74,10 @@ def _seg_nodes(p0, p1, q0, q1):
     ts: list[tuple[float, bool]] = []
     px, py = p1[0] - p0[0], p1[1] - p0[1]
     qx, qy = q1[0] - q0[0], q1[1] - q0[1]
-    d0 = _orient(q0[0], q0[1], q1[0], q1[1], p0[0], p0[1])
-    d1 = _orient(q0[0], q0[1], q1[0], q1[1], p1[0], p1[1])
-    e0 = _orient(p0[0], p0[1], p1[0], p1[1], q0[0], q0[1])
-    e1 = _orient(p0[0], p0[1], p1[0], p1[1], q1[0], q1[1])
+    d0 = orient(q0[0], q0[1], q1[0], q1[1], p0[0], p0[1])
+    d1 = orient(q0[0], q0[1], q1[0], q1[1], p1[0], p1[1])
+    e0 = orient(p0[0], p0[1], p1[0], p1[1], q0[0], q0[1])
+    e1 = orient(p0[0], p0[1], p1[0], p1[1], q1[0], q1[1])
     if d0 == 0.0 and d1 == 0.0:
         # collinear: overlap interval in p-params
         t0 = _seg_param(q0[0], q0[1], p0[0], p0[1], p1[0], p1[1])
@@ -112,8 +98,7 @@ def _seg_nodes(p0, p1, q0, q1):
     if e1 == 0.0 and _on_segment(q1[0], q1[1], p0[0], p0[1], p1[0], p1[1]):
         ts.append((_seg_param(q1[0], q1[1], p0[0], p0[1], p1[0], p1[1]), False))
     # proper crossing
-    if ((d0 > 0) != (d1 > 0)) and ((e0 > 0) != (e1 > 0)) \
-            and d0 != 0.0 and d1 != 0.0 and e0 != 0.0 and e1 != 0.0:
+    if _proper(d0, d1, e0, e1):
         denom = px * qy - py * qx
         if denom != 0.0:
             t = ((q0[0] - p0[0]) * qy - (q0[1] - p0[1]) * qx) / denom
@@ -189,8 +174,8 @@ def _piece_probes(piece):
         yield (x0 + dx * t, y0 + dy * t)
 
 
-def _piece_region(piece, locate) -> int:
-    """Region code (via ``locate``) of an elementary open piece.
+def _piece_region(piece, where) -> int:
+    """Region code (via ``where(x, y)``) of an elementary open piece.
 
     Collinear-overlap pieces are on the other geometry's boundary *by
     construction* (``_seg_nodes`` provenance).  Any other piece lies
@@ -203,7 +188,7 @@ def _piece_region(piece, locate) -> int:
         return 1
     loc = 1
     for x, y in _piece_probes(piece):
-        loc = locate(x, y)
+        loc = where(x, y)
         if loc != 1:
             return loc
     return loc
@@ -220,40 +205,6 @@ def _piece_on_lines(piece, lines, boundary_pts) -> bool:
 
 
 # ---------------------------------------------------------------- location
-def _line_boundary_points(g: Geometry) -> set[tuple[float, float]]:
-    """Mod-2 boundary: endpoints that occur an odd number of times across
-    parts (a closed ring contributes its endpoint twice -> not boundary)."""
-    from collections import Counter
-    c: Counter = Counter()
-    for part in g.parts():
-        if part.gtype != GTYPE_LINESTRING or len(part.data) == 0:
-            continue
-        c[(float(part.data[0][0]), float(part.data[0][1]))] += 1
-        c[(float(part.data[-1][0]), float(part.data[-1][1]))] += 1
-    return {p for p, n in c.items() if n % 2 == 1}
-
-
-def _locate_on_lines(px, py, lines, boundary_pts) -> int:
-    """0 exterior / 1 boundary / 2 interior of a 1-dim geometry."""
-    on = False
-    for line in lines:
-        for i in range(len(line) - 1):
-            if _on_segment(px, py, line[i][0], line[i][1],
-                           line[i + 1][0], line[i + 1][1]):
-                on = True
-                break
-        if on:
-            break
-    if not on:
-        return 0
-    return 1 if (px, py) in boundary_pts else 2
-
-
-def _poly(g: Geometry) -> Geometry:
-    polys = [p for p in g.parts() if p.gtype == GTYPE_POLYGON]
-    return polys[0] if len(polys) == 1 else Geometry(GTYPE_MULTIPOLYGON, polys)
-
-
 def _part_interior_points(g: Geometry) -> list[tuple[float, float]]:
     out = []
     for p in g.parts():
@@ -354,11 +305,10 @@ def _relate_pp(a, b):
 
 def _relate_pl(a, b):
     m = ["F"] * 9
-    lines = _as_lines(b)
     bnd = _line_boundary_points(b)
     hits = set()
     for x, y in _pts(a):
-        loc = _locate_on_lines(x, y, lines, bnd)
+        loc = locate(x, y, b)
         if loc == 2:
             _set(m, 0, 0)
         elif loc == 1:
@@ -374,9 +324,8 @@ def _relate_pl(a, b):
 
 def _relate_pa(a, b):
     m = ["F"] * 9
-    poly = _poly(b)
     for x, y in _pts(a):
-        loc = point_in_polygon(x, y, poly)
+        loc = locate(x, y, b)
         if loc == 2:
             _set(m, 0, 0)
         elif loc == 1:
@@ -438,7 +387,7 @@ def _relate_la(a, b):
     m = ["F"] * 9
     la = _as_lines(a)
     ba = _line_boundary_points(a)
-    poly = _poly(b)
+    poly = _poly_view(b)
     rings = _as_lines(b)
     pieces_a, nodes_a, cross_a = _pieces_and_nodes(la, rings)
     for piece in pieces_a:
@@ -485,7 +434,7 @@ def _relate_la(a, b):
 
 def _relate_aa(a, b):
     m = ["F"] * 9
-    pa, pb = _poly(a), _poly(b)
+    pa, pb = _poly_view(a), _poly_view(b)
     rings_a, rings_b = _as_lines(pa), _as_lines(pb)
     pieces_a, nodes_a, cross_a = _pieces_and_nodes(rings_a, rings_b)
     pieces_b, nodes_b, _ = _pieces_and_nodes(rings_b, rings_a)

@@ -32,7 +32,8 @@ from pyspark.sql import types as T
 from ..geom import Geometry, from_wkb
 from ..geom import predicates as P
 from ..geom.algorithms import (
-    points_in_polygon_bulk, points_min_dist_to_boundary,
+    any_proper_crossing, edges, points_dist_to_edges, points_in_polygon_bulk,
+    points_locate,
 )
 from ..geom.clip import _SNAP
 
@@ -87,64 +88,6 @@ def _estimated_rows(df: DataFrame) -> int:
         return max(size // 64, 1)
     except Exception:
         return df.count()
-
-
-def _edges_of(g) -> np.ndarray:
-    """All segments of a geometry as an (E, 2, 2) array (rings + lines)."""
-    from ..geom.algorithms import _as_lines
-    segs = [np.stack([line[:-1], line[1:]], axis=1)
-            for line in _as_lines(g) if len(line) >= 2]
-    if not segs:
-        return np.empty((0, 2, 2))
-    return np.concatenate(segs, axis=0)
-
-
-def _any_proper_crossing(ea: np.ndarray, eb: np.ndarray) -> bool:
-    """True iff any segment of ``ea`` properly (transversally) crosses any
-    segment of ``eb`` — the vectorized form of predicates._proper_cross,
-    O(Ea·Eb) numpy ops, chunked so the orientation grid stays bounded."""
-    if not len(ea) or not len(eb):
-        return False
-
-    def orient(ox, oy, axx, ayy, bxx, byy):
-        return (axx - ox) * (byy - oy) - (ayy - oy) * (bxx - ox)
-
-    chunk = max(1, 4_000_000 // max(len(eb), 1))
-    q0x, q0y = eb[None, :, 0, 0], eb[None, :, 0, 1]
-    q1x, q1y = eb[None, :, 1, 0], eb[None, :, 1, 1]
-    for s in range(0, len(ea), chunk):
-        e = ea[s:s + chunk]
-        p0x, p0y = e[:, None, 0, 0], e[:, None, 0, 1]
-        p1x, p1y = e[:, None, 1, 0], e[:, None, 1, 1]
-        d1 = orient(q0x, q0y, q1x, q1y, p0x, p0y)
-        d2 = orient(q0x, q0y, q1x, q1y, p1x, p1y)
-        d3 = orient(p0x, p0y, p1x, p1y, q0x, q0y)
-        d4 = orient(p0x, p0y, p1x, p1y, q1x, q1y)
-        hit = ((((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0)))
-               & (((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))))
-        if hit.any():
-            return True
-    return False
-
-
-def _min_dist_to_edges(pts: np.ndarray, g) -> np.ndarray:
-    """Per-point min distance from ``pts`` to every edge of ``g`` (any
-    dimension — polygon rings and linestrings alike); inf when edgeless."""
-    from ..geom.algorithms import _as_lines
-    best = np.full(len(pts), np.inf)
-    for line in _as_lines(g):
-        if len(line) < 2:
-            continue
-        a, b = line[:-1], line[1:]
-        ab = b - a
-        ll = (ab * ab).sum(1)
-        ll_safe = np.where(ll == 0, 1e-300, ll)
-        ap = pts[:, None, :] - a[None, :, :]
-        t = np.clip((ap * ab[None, :, :]).sum(-1) / ll_safe[None, :], 0.0, 1.0)
-        proj = a[None, :, :] + t[:, :, None] * ab[None, :, :]
-        d = pts[:, None, :] - proj
-        best = np.minimum(best, np.sqrt((d * d).sum(-1)).min(axis=1))
-    return best
 
 
 def detect_hot_cell_salt(ae: DataFrame, est_rows: int,
@@ -384,7 +327,7 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
 
     for bkey, idxs in gen_groups.items():
         gb = geom_of(bkey)
-        b_edges = _edges_of(gb)
+        b_edges = edges(gb)
         b_verts = gb.all_coords()
         a_geoms = [geom_of(a_geom.iloc[i]) for i in idxs]
         coords = [g.all_coords() for g in a_geoms]
@@ -392,7 +335,7 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
         pts = (np.concatenate([c for c in coords if len(c)])
                if any(len(c) for c in coords) else np.empty((0, 2)))
         inside = points_in_polygon_bulk(pts, gb)
-        bdist = points_min_dist_to_boundary(pts, gb)
+        bdist = points_dist_to_edges(pts, gb)
         interior = inside & (bdist > _SNAP)
         near = bdist <= _SNAP
         exterior = ~inside & (bdist > _SNAP)
@@ -407,12 +350,12 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
                     out[i] = True
                     continue
                 # every a-vertex strictly exterior beyond snap
-                a_edges = _edges_of(ga)
-                if _any_proper_crossing(a_edges, b_edges):
+                a_edges = edges(ga)
+                if any_proper_crossing(a_edges, b_edges):
                     out[i] = True
                     continue
                 if len(b_verts):
-                    bv_dist = _min_dist_to_edges(b_verts, ga)
+                    bv_dist = points_dist_to_edges(b_verts, ga)
                     if ga.dimension() == 2:
                         bv_in = points_in_polygon_bulk(b_verts, ga)
                         if (bv_in & (bv_dist > _SNAP)).any():
@@ -430,12 +373,12 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
                     slow.append(i)  # boundary-adjacent vertex
                     continue
                 # every a-vertex strictly interior
-                a_edges = _edges_of(ga)
-                if _any_proper_crossing(a_edges, b_edges):
+                a_edges = edges(ga)
+                if any_proper_crossing(a_edges, b_edges):
                     slow.append(i)  # edge exits (multi-part adjacency
                     continue        # makes a direct False unsafe)
                 if len(b_verts):
-                    bv_dist = _min_dist_to_edges(b_verts, ga)
+                    bv_dist = points_dist_to_edges(b_verts, ga)
                     if ga.dimension() == 2:
                         bv_in = points_in_polygon_bulk(b_verts, ga)
                         if (bv_in & (bv_dist > _SNAP)).any():
@@ -461,10 +404,10 @@ def _refine_xy_batch(predicate: str, xy: np.ndarray, b_geom: pd.Series,
     """_refine_batch for an a side of points given by their coordinates
     ``xy`` (n, 2), no a-side WKB.  Rows are grouped by b bytes in one
     hash pass and each distinct b is decoded once.  For within /
-    intersects / coveredby against a polygonal b, one ray-cast sweep per
-    b, boundary-exact through the zero-distance test; otherwise the
-    kernel predicate.  A point with a NaN coordinate is refined as POINT
-    EMPTY, as st_point encodes it."""
+    intersects / coveredby against a polygonal b, one points_locate
+    sweep per b (point_in_polygon's boundary rule, so the kernel's
+    answer); otherwise the kernel predicate.  A point with a NaN
+    coordinate is refined as POINT EMPTY, as st_point encodes it."""
     fn = _PREDS[predicate]
     out = np.empty(len(xy), dtype=object)
     xy = np.where(np.isnan(xy).any(axis=1, keepdims=True), np.nan, xy)
@@ -479,11 +422,8 @@ def _refine_xy_batch(predicate: str, xy: np.ndarray, b_geom: pd.Series,
     for idxs in np.split(rows, np.flatnonzero(np.diff(codes[rows])) + 1):
         if not len(idxs):
             continue
-        pts, gb = xy[idxs], geoms[codes[idxs[0]]]
-        inside = points_in_polygon_bulk(pts, gb)
-        on_bnd = points_min_dist_to_boundary(pts, gb) == 0.0
-        res = inside & ~on_bnd if predicate == "within" else inside | on_bnd
-        out[idxs] = res.tolist()
+        loc = points_locate(xy[idxs], geoms[codes[idxs[0]]])
+        out[idxs] = (loc == 2 if predicate == "within" else loc > 0).tolist()
     slow = np.flatnonzero(known & ~vec)
     for i in slow:
         out[i] = fn(Geometry.point(xy[i, 0], xy[i, 1]), geoms[codes[i]])

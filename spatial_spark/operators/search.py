@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import numpy as np
 import pandas as pd
 
 from ..functions.columns import (
@@ -34,7 +35,9 @@ from ..functions.columns import (
 )
 from ..functions.scalar import wkb_lit
 from ..geom import from_wkb, from_wkt
-from ..geom.algorithms import nearest_point_on, orthodromic_distance_km
+from ..geom.algorithms import (
+    locate, nearest_point_on, orthodromic_distance_km, points_locate,
+)
 from .pruning import sfc_window_sql
 
 
@@ -204,23 +207,13 @@ def intersects_search(layer, geom_or_wkt,
     if sql is not None:
         df = df.filter(sql)
     if all_pts is True:
-        # pure point layer: exact test is point-in-geometry, vectorized
-        from ..geom.algorithms import points_in_polygon_bulk, point_in_polygon
-        import numpy as np
-
+        # pure point layer: the exact test is the point's location in g
         @F.pandas_udf(T.BooleanType())
         def pts_in(xs: pd.Series, ys: pd.Series) -> pd.Series:
             pts = np.column_stack([xs.to_numpy(float), ys.to_numpy(float)])
             if g.dimension() == 2:
-                res = points_in_polygon_bulk(pts, g)
-                # include boundary: bulk test is interior-biased; refine edge hits
-                for i in np.nonzero(~res)[0]:
-                    if point_in_polygon(pts[i, 0], pts[i, 1], g):
-                        res[i] = True
-                return pd.Series(res)
-            from ..geom import Geometry
-            from ..geom.predicates import intersects as isect
-            return pd.Series([isect(Geometry.point(*p), g) for p in pts])
+                return pd.Series(points_locate(pts, g) > 0)
+            return pd.Series([locate(x, y, g) > 0 for x, y in pts])
 
         return df.filter(pts_in("xmin", "ymin"))
     return df.filter(_intersects_refine(g))

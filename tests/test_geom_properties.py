@@ -7,6 +7,7 @@ identities, predicate algebra, overlay area conservation.
 
 import math
 
+import numpy as np
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
@@ -16,7 +17,7 @@ from spatial_spark.geom.algorithms import (
 )
 from spatial_spark.geom.clip import difference, intersection, union
 from spatial_spark.geom.predicates import (
-    contains, covers, disjoint, intersects, overlaps, within,
+    contains, covers, disjoint, intersects, is_valid, overlaps, within,
 )
 
 # subnormals excluded: cross products underflow to 0 at 5e-324 scale,
@@ -1591,6 +1592,30 @@ def test_nad27_utm_frames():
         crs._frame("EPSG:26700")
 
 
+def test_frame_tokens_re_resolve():
+    """A canonical frame token resolves to itself: ``_frame(_frame(t))
+    == _frame(t)`` for every alias, registry code, table code and
+    generic token the crs tests accept — 'merc' and 'cart' included, so
+    ``st_transform(g, 'merc', …)`` works like ``'wgs84'``."""
+    from spatial_spark.functions import crs
+
+    tokens = list(crs._WGS84 + crs._MERC + crs._CART)
+    tokens += [f"EPSG:{k}" for k in crs.EPSG_REGISTRY]
+    for table in (crs._EPSG_CONIC, crs._EPSG_TMD, crs._EPSG_SOD,
+                  crs._EPSG_SOC):
+        tokens += [f"EPSG:{k}" for k in table]
+    tokens += ["EPSG:32614", "EPSG:32755", "EPSG:26715", "EPSG:28407",
+               "epsg:25828", "EPSG:3067", "EPSG:26910", "EPSG:28355",
+               "EPSG:7850", "utm:32:n", "lcc:33.0:45.0:23.0:-96.0:0.0:0.0",
+               "aea:-18.0:-36.0:0.0:132.0:0.0:0.0",
+               "psb:60.0:25.0:1000.0:2000.0",
+               "lcc:46.0:48.0:47.0:11.0:0.0:0.0"]
+    for t in tokens:
+        fr = crs._frame(t)
+        assert crs._frame(fr) == fr, (t, fr)
+    assert crs._frame("merc") == "merc" and crs._frame("cart") == "cart"
+
+
 def test_etrs89_utm_aliases():
     """EPSG:25828-25838 (ETRS89/UTM) and EPSG:3067 (TM35FIN) alias the
     plain UTM frames (ETRS89 is WGS84-family; identical parameters)."""
@@ -1989,3 +2014,186 @@ def test_epsg_registry_r13_mechanical_completion():
     for bad in ("EPSG:26931", "EPSG:2046", "EPSG:99999"):
         with _pytest.raises(ValueError, match="unsupported CRS"):
             crs._frame(bad)
+
+
+# ---------------------------------------------- shared location kernels
+def _pairwise_self_crossing(r) -> bool:
+    """Reference for ``any_proper_crossing(e, e)``: the pairwise loop it
+    replaced — every non-adjacent edge pair of the closed ring ``r`` (the
+    closing pair excluded) crosses iff both orientation pairs are
+    strictly opposite."""
+    def orient(o, a, b):
+        return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
+
+    n = len(r) - 1
+    for i in range(n):
+        for j in range(i + 2, n):
+            if i == 0 and j == n - 1:
+                continue
+            p0, p1, q0, q1 = r[i], r[i + 1], r[j], r[j + 1]
+            d1, d2 = orient(q0, q1, p0), orient(q0, q1, p1)
+            d3, d4 = orient(p0, p1, q0), orient(p0, p1, q1)
+            if ((d1 > 0 and d2 < 0) or (d1 < 0 and d2 > 0)) and (
+                    (d3 > 0 and d4 < 0) or (d3 < 0 and d4 > 0)):
+                return True
+    return False
+
+
+@st.composite
+def closed_rings(draw):
+    """Closed rings of 3-10 vertices, free or quantized to 0.25 (shared
+    vertices, collinear edges), with repeated vertices and collinear
+    midpoints spliced in."""
+    import numpy as np
+    c = st.floats(-10, 10, allow_nan=False, allow_subnormal=False)
+    pts = [(draw(c), draw(c)) for _ in range(draw(st.integers(3, 10)))]
+    if draw(st.booleans()):
+        pts = [(round(x * 4) / 4, round(y * 4) / 4) for x, y in pts]
+    out = []
+    for k, p in enumerate(pts):
+        out.append(p)
+        extra = draw(st.integers(0, 3))
+        if extra == 1:
+            out.append(p)                       # repeated vertex
+        elif extra == 2:                        # collinear midpoint
+            q = pts[(k + 1) % len(pts)]
+            out.append(((p[0] + q[0]) / 2, (p[1] + q[1]) / 2))
+    return np.array(out + out[:1], dtype=np.float64)
+
+
+@given(closed_rings())
+@example(np.array([(0, 0), (2, 2), (2, 0), (0, 2), (0, 0)], dtype=float))
+@example(np.array([(0, 0), (4, 0), (4, 4), (2, 4), (2, 0), (1, 0), (1, 2),
+                   (0, 2), (0, 0)], dtype=float))
+@example(np.array([(0, 0), (3, 0), (3, 0), (3, 3), (0, 3), (1, -1), (0, 0)],
+                  dtype=float))
+@settings(max_examples=400, deadline=None)
+def test_ring_self_crossing_matches_pairwise_loop(r):
+    from spatial_spark.geom.algorithms import any_proper_crossing, edges
+    e = edges(Geometry(2, r))
+    assert any_proper_crossing(e, e) == _pairwise_self_crossing(r)
+    assert is_valid(Geometry.polygon(r)) == \
+        (len(r) >= 4 and not _pairwise_self_crossing(r))
+
+
+_SQUARE = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
+_SLANT = "POLYGON ((0 0, 3 1, 2 4, -1 2, 0 0))"
+_PROBES = [_SQUARE, _SLANT,
+           "POLYGON ((0 0, 8 0, 8 8, 0 8, 0 0), (2 2, 2 5, 6 3, 2 2))",
+           "MULTIPOLYGON (((0 0, 4 0, 4 4, 0 4, 0 0)), "
+           "((4 1, 7 2.5, 4 4, 4 1)))"]
+
+
+@st.composite
+def probe_points(draw):
+    """A probe polygon and (x, y): one of its vertices, a point float-
+    interpolated on one of its edges, or a free point around it."""
+    from spatial_spark.geom.algorithms import edges
+    g = from_wkt(draw(st.sampled_from(_PROBES)))
+    e = edges(g)
+    a, b = e[draw(st.integers(0, len(e) - 1))]
+    mode = draw(st.integers(0, 2))
+    if mode == 0:
+        x, y = a
+    elif mode == 1:
+        x, y = a + draw(st.floats(0.0, 1.0)) * (b - a)
+    else:
+        x, y = draw(st.floats(-2, 12)), draw(st.floats(-2, 12))
+    return g, (float(x), float(y))
+
+
+@given(probe_points(), st.sampled_from(["within", "intersects", "coveredby"]))
+@example((from_wkt(_SQUARE), (0.5514662733306819, 0.0)), "within")
+@example((from_wkt(_SLANT), (0.8954734302423699, 0.2984911434141233)),
+         "intersects")
+@example((from_wkt(_SQUARE), (0.0, -1.1125369292536007e-308)), "coveredby")
+@settings(max_examples=400, deadline=None)
+def test_point_join_refine_equals_kernel(case, pred):
+    """The join's coordinate refine decides a point on a vertex or an
+    edge exactly as the kernel predicate does — down to a point just
+    outside an edge's bbox, which no edge's bbox may count as on it."""
+    import numpy as np
+    import pandas as pd
+    from spatial_spark.operators.join import _PREDS, _refine_xy_batch
+    g, (x, y) = case
+    got = _refine_xy_batch(pred, np.array([[x, y]]),
+                           pd.Series([to_wkb(g)]), pd.Series([g.gtype]))
+    assert got[0] == _PREDS[pred](Geometry.point(x, y), g)
+
+
+@st.composite
+def line_points(draw):
+    """A (multi)linestring, free or on the 0.25 grid (parts chained end
+    to start, so endpoints are shared), and a point on one of its
+    vertices, float-interpolated on one of its edges, or free."""
+    from spatial_spark.geom.algorithms import edges
+    c = st.floats(-10, 10, allow_nan=False, allow_subnormal=False)
+    quant = draw(st.booleans())
+
+    def pt():
+        x, y = draw(c), draw(c)
+        return (round(x * 4) / 4, round(y * 4) / 4) if quant else (x, y)
+
+    parts, start = [], pt()
+    for _ in range(draw(st.integers(1, 3))):
+        part = [start] + [pt() for _ in range(draw(st.integers(1, 3)))]
+        parts.append(part)
+        start = part[-1] if draw(st.booleans()) else pt()
+    g = (Geometry.linestring(parts[0]) if len(parts) == 1 else
+         Geometry(5, [Geometry.linestring(p) for p in parts]))
+    e = edges(g)
+    a, b = e[draw(st.integers(0, len(e) - 1))]
+    mode = draw(st.integers(0, 2))
+    if mode == 0:
+        x, y = (a, b)[draw(st.integers(0, 1))]
+    elif mode == 1:
+        x, y = a + draw(st.floats(0.0, 1.0)) * (b - a)
+    else:
+        x, y = pt()
+    return g, Geometry.point(float(x), float(y))
+
+
+@given(line_points())
+@example((from_wkt("LINESTRING (0 0, 3 1, 5 -2)"),
+          Geometry.point(4.022655105628723, -0.5339826584430849)))
+@settings(max_examples=400, deadline=None)
+def test_covers_implies_intersects(case):
+    line, p = case
+    if covers(line, p):
+        assert intersects(line, p) and intersects(p, line)
+    if contains(line, p):
+        assert covers(line, p)
+
+
+@given(line_points())
+@example((from_wkt("MULTILINESTRING ((0 0, 1 0), (1 0, 2 0))"),
+          Geometry.point(1.0, 0.0)))
+@settings(max_examples=400, deadline=None)
+def test_contains_agrees_with_matrix(case):
+    """contains / covers / within on a point read the same location as
+    the DE-9IM matrix: T*****FF* and its covers alternatives."""
+    from spatial_spark.geom.relate import matches, relate_matrix
+    g, p = case
+    m = relate_matrix(g, p)
+    assert contains(g, p) == matches(m, "T*****FF*")
+    assert within(p, g) == contains(g, p)
+    assert covers(g, p) == any(matches(m, pat) for pat in (
+        "T*****FF*", "*T****FF*", "***T**FF*", "****T*FF*"))
+
+
+@given(probe_points(), st.lists(st.tuples(st.floats(-2, 12),
+                                          st.floats(-2, 12)), max_size=8))
+@settings(max_examples=300, deadline=None)
+def test_points_locate_equals_point_in_polygon(case, free):
+    """points_locate is point_in_polygon vectorized — on vertices, edge
+    points, holes, touching multipolygon parts and NaN (exterior)."""
+    import numpy as np
+    from spatial_spark.geom.algorithms import (
+        edges, point_in_polygon, points_locate,
+    )
+    g, xy = case
+    pts = np.array([xy, (np.nan, 1.0), (1.0, np.nan)] + free
+                   + [tuple(v) for v in edges(g)[:, 0]], dtype=np.float64)
+    want = [point_in_polygon(float(x), float(y), g) for x, y in pts]
+    got = points_locate(pts, g)
+    assert got.dtype == np.int8 and got.tolist() == want

@@ -585,6 +585,60 @@ def test_point_refine_from_coordinates_matches_exact_kernel():
             == want
 
 
+def test_point_on_edge_same_ids_on_every_path(ctx, spark):
+    """A point on a probe polygon's vertex, axis-aligned edge or slanted
+    edge (float-interpolated), or clearly inside or outside, gets one
+    answer on every path: Layer.intersects, Layer.join "intersects" and
+    "within", and the st_intersects / st_within SQL functions, all equal
+    to the kernel predicate.  Layer.intersects with a line probe (its
+    non-polygon refine) agrees with the kernel too."""
+    import numpy as np
+    from spatial_spark.geom import Geometry, from_wkt
+    from spatial_spark.geom import predicates as P
+
+    wkt = "POLYGON ((0 0, 10 0, 10 6, 3 9, -1 2, 0 0))"
+    poly = from_wkt(wkt)
+    ring = poly.data[0]
+    rng = np.random.default_rng(3)
+    pts = [tuple(v) for v in ring[:-1]]
+    pts += [(0.5514662733306819, 0.0), (10.0, 2.5), (5.0, 5.0), (4.0, 1.0),
+            (12.0, 3.0), (-2.0, 9.0), (3.0, 9.5)]
+    for a, b in zip(ring[:-1], ring[1:]):
+        for t in rng.uniform(0.0, 1.0, 60):
+            pts.append(tuple(a + t * (b - a)))
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)]
+    pl = ctx.create_point_layer("edge_pts", x="lon", y="lat")
+    pl.add(spark.createDataFrame(rows, "id long, lon double, lat double"))
+    probe = ctx.create_wkt_layer("edge_probe")
+    probe.add(spark.createDataFrame([(1, wkt)], "id long, wkt string"),
+              wkt="wkt")
+    assert probe.all_rects is False
+
+    def kernel(fn, g=poly):
+        return {i for i, x, y in rows if fn(Geometry.point(x, y), g)}
+
+    want_i, want_w = kernel(P.intersects), kernel(P.within)
+    assert want_w < want_i    # boundary points are in the test
+    spark.createDataFrame(rows, "id long, lon double, lat double") \
+        .createOrReplaceTempView("edge_pts_v")
+
+    def sql(fn):
+        return {r[0] for r in spark.sql(
+            f"SELECT id FROM edge_pts_v WHERE {fn}(st_point(lon, lat), "
+            f"st_geomfromtext('{wkt}'))").collect()}
+
+    assert {r["id"] for r in pl.intersects(wkt).collect()} == want_i
+    assert {r["a_id"] for r in pl.join(probe, "intersects").collect()} \
+        == want_i
+    assert {r["a_id"] for r in pl.join(probe, "within").collect()} == want_w
+    assert sql("st_intersects") == want_i
+    assert sql("st_within") == want_w
+    line = "LINESTRING (0 0, 10 0, 10 6, 3 9)"
+    want_l = kernel(P.intersects, from_wkt(line))
+    assert len(want_l) > 4
+    assert {r["id"] for r in pl.intersects(line).collect()} == want_l
+
+
 def test_st_point_make_box_byte_identical_to_row_encoder():
     """The vectorized st_point / st_make_box encode equals to_wkb of the
     row-built geometry, byte for byte: -0.0, a subnormal, NaN (POINT
