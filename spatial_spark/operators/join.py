@@ -294,6 +294,8 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
     fn = _PREDS[predicate]
     out = np.empty(len(a_geom), dtype=object)
     cache: dict = {}
+    a_geom, a_gtype, b_geom, b_gtype = (
+        np.asarray(c) for c in (a_geom, a_gtype, b_geom, b_gtype))
 
     def geom_of(buf):
         key = bytes(buf)
@@ -308,28 +310,27 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
     gen_groups: dict = {}
     slow: list = []
     for i in range(len(a_geom)):
-        ab, bb = a_geom.iloc[i], b_geom.iloc[i]
+        ab, bb = a_geom[i], b_geom[i]
         if ab is None or bb is None:
             out[i] = None
-        elif a_gtype.iloc[i] == 1:
+        elif a_gtype[i] == 1:
             pt_rows.append(i)
-        elif vec_ok and b_gtype.iloc[i] in (3, 6) \
-                and a_gtype.iloc[i] in (2, 3, 4, 5, 6):
+        elif vec_ok and b_gtype[i] in (3, 6) \
+                and a_gtype[i] in (2, 3, 4, 5, 6):
             gen_groups.setdefault(bytes(bb), []).append(i)
         else:
             slow.append(i)
 
     if pt_rows:
-        xy = np.array([from_wkb(a_geom.iloc[i]).data for i in pt_rows])
+        xy = np.array([from_wkb(a_geom[i]).data for i in pt_rows])
         out[pt_rows] = _refine_xy_batch(
-            predicate, xy, b_geom.iloc[pt_rows], b_gtype.iloc[pt_rows],
-            stats).tolist()
+            predicate, xy, b_geom[pt_rows], b_gtype[pt_rows], stats).tolist()
 
     for bkey, idxs in gen_groups.items():
         gb = geom_of(bkey)
         b_edges = edges(gb)
         b_verts = gb.all_coords()
-        a_geoms = [geom_of(a_geom.iloc[i]) for i in idxs]
+        a_geoms = [geom_of(a_geom[i]) for i in idxs]
         coords = [g.all_coords() for g in a_geoms]
         offs = np.cumsum([0] + [len(c) for c in coords])
         pts = (np.concatenate([c for c in coords if len(c)])
@@ -390,7 +391,7 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
                 out[i] = True
 
     for i in slow:
-        out[i] = fn(geom_of(a_geom.iloc[i]), geom_of(b_geom.iloc[i]))
+        out[i] = fn(geom_of(a_geom[i]), geom_of(b_geom[i]))
     if stats is not None:
         stats["slow"] = stats.get("slow", 0) + len(slow)
         stats["grouped"] = stats.get("grouped", 0) + sum(
@@ -398,23 +399,23 @@ def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
     return out
 
 
-def _refine_xy_batch(predicate: str, xy: np.ndarray, b_geom: pd.Series,
-                     b_gtype: pd.Series, stats: dict | None = None
-                     ) -> np.ndarray:
+def _refine_xy_batch(predicate: str, xy: np.ndarray, b_geom, b_gtype,
+                     stats: dict | None = None) -> np.ndarray:
     """_refine_batch for an a side of points given by their coordinates
-    ``xy`` (n, 2), no a-side WKB.  Rows are grouped by b bytes in one
-    hash pass and each distinct b is decoded once.  For within /
-    intersects / coveredby against a polygonal b, one points_locate
-    sweep per b (point_in_polygon's boundary rule, so the kernel's
-    answer); otherwise the kernel predicate.  A point with a NaN
-    coordinate is refined as POINT EMPTY, as st_point encodes it."""
+    ``xy`` (n, 2), no a-side WKB; ``b_geom``/``b_gtype`` are Series or
+    arrays.  Rows are grouped by b bytes in one hash pass and each
+    distinct b is decoded once.  For within / intersects / coveredby
+    against a polygonal b, one points_locate sweep per b
+    (point_in_polygon's boundary rule, so the kernel's answer);
+    otherwise the kernel predicate.  A point with a NaN coordinate is
+    refined as POINT EMPTY, as st_point encodes it."""
     fn = _PREDS[predicate]
     out = np.empty(len(xy), dtype=object)
     xy = np.where(np.isnan(xy).any(axis=1, keepdims=True), np.nan, xy)
     codes, uniq = pd.factorize(b_geom)
     geoms = [from_wkb(bytes(b)) for b in uniq]
     known = codes >= 0
-    vec = (known & np.isin(b_gtype.to_numpy(), (3, 6))
+    vec = (known & np.isin(np.asarray(b_gtype), (3, 6))
            if predicate in ("within", "intersects", "coveredby")
            else np.zeros_like(known))
     rows = np.flatnonzero(vec)

@@ -743,6 +743,54 @@ def test_polygon_refine_matches_exact_kernel():
                 assert bool(got) == fn(g, zone), (pred, to_wkb(g).hex())
 
 
+def test_refine_batch_each_branch_matches_kernel():
+    """One mixed batch exercises _refine_batch's three branches: point a
+    rows (handed to _refine_xy_batch), line/polygon a against a polygonal
+    b (the grouped sweep) and a polygonal a against a line b (the kernel
+    predicate).  Every decision equals _PREDS[pred], null rows give None,
+    and Series or plain arrays give the same answer."""
+    import numpy as np
+    import pandas as pd
+    from spatial_spark.geom import from_wkb, from_wkt, to_wkb
+    from spatial_spark.operators.join import _PREDS, _refine_batch
+
+    def wkb(w):
+        return to_wkb(from_wkt(w))
+
+    square = wkb("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
+    holed = wkb("POLYGON ((0 0, 6 0, 6 6, 0 6, 0 0), "
+                "(2 2, 4 2, 4 4, 2 4, 2 2))")
+    line = wkb("LINESTRING (0 0, 2 2, 4 0)")
+    pts = ["POINT (1 1)", "POINT (0 2)", "POINT (4 4)", "POINT (9 9)",
+           "POINT (3 3)", "POINT (2 1)"]
+    polys = ["POLYGON ((1 1, 2 1, 2 2, 1 2, 1 1))",
+             "POLYGON ((3 3, 5 3, 5 5, 3 5, 3 3))",
+             "POLYGON ((-1 -1, 7 -1, 7 7, -1 7, -1 -1))",
+             "POLYGON ((8 8, 9 8, 9 9, 8 9, 8 8))",
+             "POLYGON ((2 2, 4 2, 4 4, 2 4, 2 2))"]
+    lines = ["LINESTRING (1 1, 3 3)", "LINESTRING (-1 2, 5 2)",
+             "LINESTRING (2.5 2.5, 3.5 3.5)"]
+    rows = []                              # (a wkb, a gtype, b wkb, b gtype)
+    for b in (square, holed, line):
+        bt = 2 if b is line else 3
+        rows += [(wkb(w), 1, b, bt) for w in pts]
+        rows += [(wkb(w), 3, b, bt) for w in polys]
+        rows += [(wkb(w), 2, b, bt) for w in lines]
+    rows += [(None, 1, square, 3), (wkb(pts[0]), 1, None, 3)]
+    a, at, b, bt = (pd.Series(c, dtype=object) for c in zip(*rows))
+    at, bt = at.astype(np.int64), bt.astype(np.int64)
+    for pred in ("within", "intersects", "coveredby", "touches"):
+        want = [_PREDS[pred](from_wkb(r[0]), from_wkb(r[2]))
+                for r in rows[:-2]] + [None, None]
+        stats = {}
+        assert list(_refine_batch(pred, a, at, b, bt, stats=stats)) == want
+        assert list(_refine_batch(pred, *(c.to_numpy()
+                                          for c in (a, at, b, bt)))) == want
+        if pred != "touches":
+            assert stats["point_grouped"] and stats["grouped"] \
+                and stats["slow"], (pred, stats)
+
+
 def test_knn_join_vs_brute(ctx, spark):
     """knn_join agrees with a numpy brute-force k-NN on a random bed."""
     import numpy as np

@@ -14,6 +14,11 @@ Float cells use full-precision repr — no rounding, no integerizing — so a
 1-ulp difference or a -0.0 fails here exactly as it would on the driver.
 
 Usage:  python tools/check_correctness.py [sf_dir] [query ...]
+
+The DuckDB oracle runs under fixed caps (ORACLE_MEMORY_LIMIT in memory,
+ORACLE_TEMP_BYTES of spill in a temporary directory removed on exit), so
+an oracle that outgrows them ends as ORACLE_ERROR instead of taking the
+host's memory or disk.
 """
 
 from __future__ import annotations
@@ -22,11 +27,18 @@ import hashlib
 import json
 import os
 import sys
+import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
+
+#: DuckDB's default memory_limit is 80% of the host's RAM and its spill
+#: goes to ./.tmp, bounded only by the free disk
+ORACLE_MEMORY_LIMIT = "2GB"
+ORACLE_TEMP_BYTES = 4 << 30
 
 
 def norm_cell(v):
@@ -68,11 +80,53 @@ def _first_diff(cols_a, rows_a, cols_b, rows_b, label):
             return
 
 
+def _spill_bytes(spill: str) -> int:
+    total = 0
+    for entry in os.scandir(spill):
+        try:
+            total += entry.stat().st_size
+        except FileNotFoundError:   # freed while we looked
+            pass
+    return total
+
+
+def _guard_spill(con, spill: str, stop: threading.Event) -> None:
+    """Interrupt the running oracle once its spill passes
+    ORACLE_TEMP_BYTES.  duckdb 1.0.0 enforces max_temp_directory_size on
+    only part of its spill: semdedup's oracle at sf0.1 wrote 14 GB under
+    a 4 GB setting."""
+    while not stop.wait(0.5):
+        if _spill_bytes(spill) > ORACLE_TEMP_BYTES:
+            print(f"oracle spill passed {ORACLE_TEMP_BYTES >> 30} GiB: "
+                  "interrupting the query")
+            con.interrupt()
+            stop.wait(5.0)          # let the interrupted query free it
+
+
 def main():
+    import duckdb
+
+    with tempfile.TemporaryDirectory(prefix="oracle-spill-") as spill:
+        con = duckdb.connect(config={
+            "memory_limit": ORACLE_MEMORY_LIMIT,
+            "max_temp_directory_size": f"{ORACLE_TEMP_BYTES >> 30}GiB",
+            "temp_directory": spill})
+        stop = threading.Event()
+        guard = threading.Thread(target=_guard_spill,
+                                 args=(con, spill, stop), daemon=True)
+        guard.start()
+        try:
+            return check(con)
+        finally:
+            stop.set()
+            guard.join()
+            con.close()  # before its spill directory goes
+
+
+def check(con) -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import duckdb
     import __spark_entry__ as entrymod
     from spatial_spark.session import get_spark
 
@@ -80,7 +134,6 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem events "
               "documents embeddings").split():
         con.execute(
