@@ -22,6 +22,7 @@ from ..geom import Geometry, from_wkb, from_wkt, to_wkb, to_wkt
 from ..geom import algorithms as alg
 from ..geom import clip as cl
 from ..geom import predicates as pred
+from ..geom.core import GTYPE_POLYGON
 from ..geom.io_text import from_geojson, to_geojson, to_gml, to_kml
 from .crs import st_transform
 
@@ -38,7 +39,8 @@ def _uniform_batch(wkb: pd.Series):
     per-row ``from_wkb`` is the biggest 100×-scale cost), return
     ``(coords (n,k,2) float64, wkb_base_type)``; else None and the caller
     runs the general per-row path.  The header equality check is a cheap
-    bytes compare (~100 ns/row) vs a full parse (~10 µs/row)."""
+    bytes compare (~100 ns/row) vs a full parse (~10 µs/row).  Polygons
+    are ``_ring_groups``' single group (rings of 4+ points)."""
     vals = wkb.to_numpy(dtype=object)
     n = len(vals)
     if n == 0:
@@ -56,10 +58,10 @@ def _uniform_batch(wkb: pd.Series):
         off = 9
         k = int.from_bytes(first[5:9], "little")
     elif base == 3:                    # polygon, single ring only
-        if len(first) < 13 or first[5:9] != b"\x01\x00\x00\x00":
+        ks, groups = _ring_groups(vals)
+        if len(groups) != 1 or (ks < 0).any():
             return None
-        off = 13
-        k = int.from_bytes(first[9:13], "little")
+        return groups[int(ks[0])][1], base
     else:
         return None
     L = off + 16 * k
@@ -73,6 +75,32 @@ def _uniform_batch(wkb: pd.Series):
     arr = np.frombuffer(buf, np.uint8).reshape(n, L)
     coords = np.ascontiguousarray(arr[:, off:]).view("<f8").reshape(n, k, 2)
     return coords.astype(np.float64, copy=False), base
+
+
+_RING_HDR = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00"
+
+
+def _ring_groups(vals: np.ndarray) -> tuple:
+    """The single-ring polygons of a WKB batch (little-endian 2-D) whose
+    ring has at least 4 points, decoded at once as flat coordinates
+    grouped by vertex count: ``(k, groups)`` where ``k[i]`` is row i's
+    vertex count (-1 for a null row and any other geometry) and
+    ``groups`` maps a vertex count to ``(rows, coords (g, count, 2))``.
+    The one batch decoder of polygons (st_area, st_centroid,
+    st_intersection, and ``_uniform_batch`` for st_points)."""
+    k = np.full(len(vals), -1, dtype=np.int64)
+    for i, b in enumerate(vals):
+        if b is not None and b[:9] == _RING_HDR and len(b) >= 13:
+            m = int.from_bytes(b[9:13], "little")
+            if m >= 4 and len(b) == 13 + 16 * m:
+                k[i] = m
+    groups = {}
+    for m in set(k[k >= 0].tolist()):
+        rows = np.flatnonzero(k == m)
+        buf = b"".join(bytes(vals[i])[13:] for i in rows)
+        groups[m] = (rows, np.frombuffer(buf, "<f8").astype(np.float64)
+                     .reshape(len(rows), m, 2))
+    return k, groups
 
 
 def _wkb_rows(hdr: bytes, coords: np.ndarray) -> list:
@@ -173,17 +201,18 @@ def _b_scalar(fn, rtype):
 # ----------------------------------------------------------------- functions
 @F.pandas_udf(T.DoubleType())
 def st_area(wkb: pd.Series) -> pd.Series:
-    """Planar area.  Uniform single-ring-polygon batches take the
-    one-pass numpy decode + batched shoelace (same op order per row as
-    ring_signed_area, so results are bit-identical); anything else falls
-    back to the general per-row kernel."""
-    ub = _uniform_batch(wkb)
-    if ub is not None and ub[1] == 3 and ub[0].shape[1] >= 4:
-        c = ub[0]
-        x, y = c[:, :-1, 0], c[:, :-1, 1]
-        x2, y2 = c[:, 1:, 0], c[:, 1:, 1]
-        return pd.Series(np.abs(0.5 * np.sum(x * y2 - x2 * y, axis=1)))
-    return wkb.map(lambda b: None if b is None else alg.area(from_wkb(b)))
+    """Planar area.  Single-ring polygons take the batched shoelace, one
+    numpy pass per vertex count (same op order per row as
+    ring_signed_area, so results are bit-identical); every other row
+    takes the general per-row kernel."""
+    vals = wkb.to_numpy(dtype=object)
+    k, groups = _ring_groups(vals)
+    out = np.empty(len(vals))
+    for m, (rows, c) in groups.items():
+        out[rows] = np.abs(alg.ring_signed_areas(c))
+    for i in np.flatnonzero(k < 0):
+        out[i] = np.nan if vals[i] is None else alg.area(from_wkb(vals[i]))
+    return pd.Series(out)
 st_length = _u_scalar(alg.length, T.DoubleType())
 st_length_sphere = _u_scalar(alg.orthodromic_length_km, T.DoubleType())
 
@@ -225,25 +254,35 @@ st_envelope = _u_geom(alg.envelope_geom)
 
 @F.pandas_udf(T.BinaryType())
 def st_centroid(wkb: pd.Series) -> pd.Series:
-    """Centroid; uniform single-ring-polygon batches use the batched
-    area-weighted formula with the SAME op order as algorithms.centroid
-    (including the kernel's `(cx*s)/s` weight round-trip, which is not a
-    float identity), so a row's bytes do not depend on whether its Arrow
-    batch happened to be uniform (ADVICE r4)."""
-    ub = _uniform_batch(wkb)
-    if ub is not None and ub[1] == 3 and ub[0].shape[1] >= 4:
-        c = ub[0]
+    """Centroid.  Single-ring polygons with a finite, nonzero area take
+    the batched area-weighted formula, one numpy pass per vertex count,
+    with the SAME op order as algorithms.centroid (including the
+    kernel's ``0.0 + cx*s`` accumulation and ``/s`` weight round-trip,
+    which are not float identities), so a row's bytes do not depend on
+    its Arrow batch (ADVICE r4); every other row takes the per-row
+    kernel."""
+    vals = wkb.to_numpy(dtype=object)
+    k, groups = _ring_groups(vals)
+    out = np.empty(len(vals), dtype=object)
+    done = np.zeros(len(vals), dtype=bool)
+    for m, (rows, c) in groups.items():
+        tot = alg.ring_signed_areas(c)
+        ok = np.isfinite(tot) & (tot != 0.0)
+        c, tot = c[ok], tot[ok]
+        s = np.abs(tot)
         x, y = c[:, :-1, 0], c[:, :-1, 1]
         x2, y2 = c[:, 1:, 0], c[:, 1:, 1]
         cross = x * y2 - x2 * y
-        tot = 0.5 * np.sum(cross, axis=1)
-        if bool(np.all(tot != 0.0)):
-            s = np.abs(tot)
-            cx = (np.sum((x + x2) * cross, axis=1) / (6.0 * tot) * s) / s
-            cy = (np.sum((y + y2) * cross, axis=1) / (6.0 * tot) * s) / s
-            return pd.Series(_points_to_wkb_rows(cx, cy))
-    return wkb.map(lambda b: None if b is None
-                   else to_wkb(alg.centroid(from_wkb(b))))
+        cx = (0.0 + np.sum((x + x2) * cross, axis=1) / (6.0 * tot) * s) / s
+        cy = (0.0 + np.sum((y + y2) * cross, axis=1) / (6.0 * tot) * s) / s
+        out[rows[ok]] = _points_to_wkb_rows(cx, cy)
+        done[rows[ok]] = True
+    for i in np.flatnonzero(~done):
+        out[i] = None if vals[i] is None else to_wkb(
+            alg.centroid(from_wkb(vals[i])))
+    return pd.Series(out)
+
+
 st_interiorpoint = _u_geom(alg.interior_point)
 st_boundary = _u_geom(alg.boundary)
 st_convexhull = _u_geom(alg.convex_hull)
@@ -269,7 +308,68 @@ st_equals = _b_bool(pred.equals_topo)
 st_equals_norm = _b_bool(pred.equals_norm)
 
 st_union = _b_geom(cl.union)
-st_intersection = _b_geom(cl.intersection)
+
+
+@F.pandas_udf(T.BinaryType())
+def st_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Intersection; bytes equal to ``to_wkb(cl.intersection(...))``
+    row for row.  Rows pairing a single-ring polygon with an
+    axis-aligned rectangle (either order) whose envelopes meet go
+    through one cl.convex_rect_intersection pass per vertex count;
+    every other row, and every row that pass declines, is intersected
+    pair by pair."""
+    av, bv = a.to_numpy(dtype=object), b.to_numpy(dtype=object)
+    out = np.empty(len(av), dtype=object)
+    done = np.zeros(len(av), dtype=bool)
+    (ka, ga, ea, ra), (kb, gb, eb, rb) = _ring_side(av), _ring_side(bv)
+    meet = ~((ea[:, 2] < eb[:, 0]) | (eb[:, 2] < ea[:, 0])
+             | (ea[:, 3] < eb[:, 1]) | (eb[:, 3] < ea[:, 1]))
+    fast = (ka >= 0) & (kb >= 0) & meet & (ra != rb)
+    kp = np.where(ra, kb, ka)          # vertex count of the polygon side
+    for m in set(kp[fast].tolist()):
+        rows = np.flatnonzero(fast & (kp == m))
+        rings = np.empty((len(rows), m, 2))
+        rects = np.empty((len(rows), 4))
+        for groups, is_rect, box in ((ga, ra, eb), (gb, rb, ea)):
+            sel = ~is_rect[rows]       # this side is the polygon
+            if sel.any():
+                gr, coords = groups[m]
+                rings[sel] = coords[np.searchsorted(gr, rows[sel])]
+                rects[sel] = box[rows[sel]]
+        ring, n = cl.convex_rect_intersection(rings, rects)
+        out[rows[n == 0]] = _EMPTY_POLYGON
+        for L in set(n[n > 0].tolist()):
+            sel = n == L
+            out[rows[sel]] = _wkb_rows(
+                _RING_HDR + L.to_bytes(4, "little"),
+                ring[sel, :L].reshape(-1, 2 * L))
+        done[rows[n >= 0]] = True
+    for i in np.flatnonzero(~done):
+        x, y = av[i], bv[i]
+        out[i] = None if x is None or y is None else to_wkb(
+            cl.intersection(from_wkb(x), from_wkb(y)))
+    return pd.Series(out)
+
+
+_EMPTY_POLYGON = to_wkb(Geometry(GTYPE_POLYGON, []))
+
+
+def _ring_side(vals: np.ndarray) -> tuple:
+    """One operand column of st_intersection: ``(k, groups, envelope
+    (n, 4), is_rect (n,))`` with _ring_groups' ``k``/``groups``, and
+    each single-ring polygon's envelope and rectangle test.  A
+    rectangle's envelope is its cl._as_rects bounds, as the pairwise
+    path hands them to the kernel."""
+    k, groups = _ring_groups(vals)
+    env = np.full((len(vals), 4), np.nan)
+    rect = np.zeros(len(vals), dtype=bool)
+    for m, (rows, c) in groups.items():
+        env[rows, :2], env[rows, 2:] = c.min(1), c.max(1)
+        if m == 5:
+            ok, box = cl._as_rects(c)
+            rect[rows] = ok
+            env[rows[ok]] = box[ok]
+    return k, groups, env, rect
 st_difference = _b_geom(cl.difference)
 st_symdifference = _b_geom(cl.sym_difference)
 

@@ -52,6 +52,15 @@ def ring_signed_area(r: np.ndarray) -> float:
     return 0.5 * float(np.sum(x * y2 - x2 * y))
 
 
+def ring_signed_areas(rings: np.ndarray) -> np.ndarray:
+    """ring_signed_area of each closed ring of ``rings`` (g, k, 2), k >= 4,
+    with its op order, so each value is bit-identical to the scalar
+    one."""
+    x, y = rings[:, :-1, 0], rings[:, :-1, 1]
+    x2, y2 = rings[:, 1:, 0], rings[:, 1:, 1]
+    return 0.5 * np.sum(x * y2 - x2 * y, axis=1)
+
+
 def area(g: Geometry) -> float:
     if g.gtype == GTYPE_POLYGON:
         if not g.data:
@@ -186,21 +195,27 @@ def points_dist_to_edges(pts: np.ndarray, g: Geometry) -> np.ndarray:
     best = np.full(len(pts), np.inf)
     for line in _as_lines(g):
         if len(line) == 1:
-            proj = line[None, :, :]
+            d = pts[:, None, :] - line[None, :, :]
+            best = np.minimum(best, np.sqrt((d * d).sum(-1)).min(axis=1))
         elif len(line):
-            a = line[:-1]
-            ab = line[1:] - a
-            ll = (ab * ab).sum(1)
-            ll_safe = np.where(ll == 0, 1e-300, ll)
-            ap = pts[:, None, :] - a[None, :, :]
-            t = np.clip((ap * ab[None, :, :]).sum(-1) / ll_safe[None, :],
-                        0.0, 1.0)
-            proj = a[None, :, :] + t[:, :, None] * ab[None, :, :]
-        else:
-            continue
-        d = pts[:, None, :] - proj
-        best = np.minimum(best, np.sqrt((d * d).sum(-1)).min(axis=1))
+            best = np.minimum(best, dist_to_segments(pts, line))
     return best
+
+
+def dist_to_segments(pts: np.ndarray, line: np.ndarray) -> np.ndarray:
+    """Min distance from each point of ``pts`` (..., P, 2) to the
+    segments of the polyline ``line`` (..., L, 2), L >= 2; leading axes
+    broadcast, so one call serves a batch of rings."""
+    a = line[..., :-1, :]
+    ab = line[..., 1:, :] - a
+    ll = (ab * ab).sum(-1)
+    ll_safe = np.where(ll == 0, 1e-300, ll)
+    ap = pts[..., :, None, :] - a[..., None, :, :]
+    t = np.clip((ap * ab[..., None, :, :]).sum(-1) / ll_safe[..., None, :],
+                0.0, 1.0)
+    d = pts[..., :, None, :] - (a[..., None, :, :]
+                                + t[..., None] * ab[..., None, :, :])
+    return np.sqrt((d * d).sum(-1)).min(axis=-1)
 
 
 def _segments_cross(p1, p2, q1, q2) -> bool:

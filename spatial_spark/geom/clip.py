@@ -14,6 +14,13 @@ collinear edges are handled heuristically.  Lines can be clipped by polygons
 (``clip_line``); difference/symdifference accept any dimension pair
 (line−polygon, line−line, point−any).  Not a full JTS overlay — documented
 engine limitation.
+
+Closed forms skip the overlay for the dominant window/tile shapes:
+rect∩rect, rect∪rect, rect−rect, and convex polygon ∩ rectangle — four
+exact Sutherland–Hodgman cuts in ``convex_rect_intersection``, a kernel
+over a batch of pairs that holds the convex∩rect decline rules and is
+reached with one row by ``intersection`` and with every such row of an
+Arrow batch by ``st_intersection``.
 """
 
 from __future__ import annotations
@@ -27,8 +34,9 @@ from .core import (
     GTYPE_MULTIPOLYGON, GTYPE_POINT, GTYPE_POLYGON, Geometry, envelopes_intersect,
 )
 from .algorithms import (
-    affine_transform, point_in_polygon, point_in_ring, points_dist_to_edges,
-    points_in_polygon_bulk, ring_signed_area,
+    affine_transform, dist_to_segments, point_in_polygon, point_in_ring,
+    points_dist_to_edges, points_in_polygon_bulk, ring_signed_area,
+    ring_signed_areas,
 )
 
 _SNAP = 1e-9
@@ -847,25 +855,37 @@ def union(g1: Geometry, g2: Geometry) -> Geometry:
 
 def _as_rect(g: Geometry):
     """(xmin, ymin, xmax, ymax) when ``g`` is a single-ring axis-aligned
-    rectangle polygon (closed 5-point ring whose vertex set is exactly
-    the four envelope corners), else None.  A few-microsecond check
-    that unlocks the rect∩rect fast path below — the dominant shape of
-    window/tile/envelope workloads, where the general snap-rounded
-    overlay costs ~2.1 ms per pair."""
-    if g.gtype != GTYPE_POLYGON or len(g.data) != 1:
+    rectangle polygon (see ``_as_rects``), else None.  Unlocks the
+    rect∩rect, rect∪rect and rect−rect closed forms and the convex∩rect
+    cuts — the dominant shapes of window/tile/envelope workloads, where
+    the general snap-rounded overlay costs milliseconds per pair."""
+    if g.gtype != GTYPE_POLYGON or len(g.data) != 1 or len(g.data[0]) != 5:
         return None
     r = np.asarray(g.data[0], dtype=np.float64)
-    if r.shape[0] != 5 or not np.array_equal(r[0], r[4]):
-        return None
-    xs, ys = r[:4, 0], r[:4, 1]
-    x0, x1 = xs.min(), xs.max()
-    y0, y1 = ys.min(), ys.max()
-    if x0 == x1 or y0 == y1:
-        return None
-    if {(x, y) for x, y in r[:4]} != {(x0, y0), (x1, y0),
-                                      (x1, y1), (x0, y1)}:
-        return None
-    return float(x0), float(y0), float(x1), float(y1)
+    if len(set(r[:4, 0].tolist())) != 2 or len(set(r[:4, 1].tolist())) != 2:
+        return None                     # a cheap necessary condition
+    ok, rect = _as_rects(r[None])
+    return tuple(float(v) for v in rect[0]) if ok[0] else None
+
+
+def _as_rects(rings: np.ndarray):
+    """``(ok (g,), rect (g, 4))`` for closed 5-point rings (g, 5, 2):
+    ``ok`` where the ring's first four vertices are exactly the four
+    corners of its envelope ``rect`` = (xmin, ymin, xmax, ymax), with
+    xmin < xmax and ymin < ymax.  A bound tied between 0.0 and -0.0
+    takes the last of the tied vertices, as numpy's 4-element min/max
+    does."""
+    pts = rings[:, :4]
+    lo, hi = pts.min(1), pts.max(1)
+    for b in (lo, hi):
+        for i, j in zip(*np.nonzero(b == 0)):
+            b[i, j] = pts[i, 3 - (pts[i, ::-1, j] == 0).argmax(), j]
+    top = pts == hi[:, None]
+    # a corner id per vertex, 0..3: all four ids present = four corners
+    ids = (1 << (2 * top[..., 0] + top[..., 1])).sum(1)
+    ok = ((rings[:, 0] == rings[:, 4]).all(1) & (lo < hi).all(1)
+          & (top | (pts == lo[:, None])).all((1, 2)) & (ids == 15))
+    return ok, np.concatenate([lo, hi], axis=1)
 
 
 def intersection(g1: Geometry, g2: Geometry) -> Geometry:
@@ -897,12 +917,10 @@ def intersection(g1: Geometry, g2: Geometry) -> Geometry:
                     [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]],
                     dtype=np.float64)
                 return Geometry(GTYPE_POLYGON, [ring])
-        # convex∩rect (either order): four exact S-H half-plane cuts,
-        # CCW shell — ~0.3 ms against the overlay's ~2.1 ms.  Same
-        # scale limits as above; declines (→ overlay, keeping the exact
-        # degenerate semantics) for a non-convex or holed polygon, a
-        # polygon vertex within 4*_SNAP of a rectangle edge line, and a
-        # rectangle corner within 4*_SNAP of the polygon boundary.
+        # convex∩rect (either order): convex_rect_intersection with one
+        # row — four exact S-H half-plane cuts, CCW shell; its
+        # docstring holds the decline rules (→ overlay).  st_intersection
+        # runs the same kernel over every such row of an Arrow batch.
         if (ra is None) != (rb is None):
             fast = (_convex_rect_intersection(g1, rb) if ra is None
                     else _convex_rect_intersection(g2, ra))
@@ -923,41 +941,73 @@ def intersection(g1: Geometry, g2: Geometry) -> Geometry:
 
 
 def _convex_rect_intersection(g: Geometry, rect) -> Geometry | None:
-    """``g`` ∩ ``rect`` for a single-ring convex polygon ``g`` and an
-    axis-aligned rectangle ``rect`` = (xmin, ymin, xmax, ymax): four
-    Sutherland–Hodgman half-plane cuts, the result shell made CCW.
-    None (→ overlay) outside the inputs the rect∩rect closed form takes
-    (|coord| ≤ 1e6, rectangle sides ≥ 1e-2), for a ring that is not
-    convex or has no area, and for contacts inside the kernel's snap
-    band: a vertex of ``g`` within 4·_SNAP of a rectangle edge line, or
-    a rectangle corner within 4·_SNAP of ``g``'s boundary."""
+    """``g`` ∩ ``rect`` for a single-ring polygon ``g`` and an
+    axis-aligned rectangle ``rect`` = (xmin, ymin, xmax, ymax): the
+    one-row case of ``convex_rect_intersection``; None where it
+    declines (→ overlay)."""
     if g.gtype != GTYPE_POLYGON or len(g.data) != 1:
         return None
-    x0, y0, x1, y1 = rect
-    ring = np.asarray(g.data[0], dtype=np.float64)
-    if len(ring) < 4 or not np.array_equal(ring[0], ring[-1]) \
-            or max(abs(x0), abs(y0), abs(x1), abs(y1)) > 1e6 \
-            or min(x1 - x0, y1 - y0) < 1e-2 \
-            or not np.abs(ring).max() <= 1e6:
+    out, n = convex_rect_intersection(
+        np.asarray(g.data[0], dtype=np.float64)[None],
+        np.array([rect], dtype=np.float64))
+    if n[0] < 0:
         return None
+    return Geometry(GTYPE_POLYGON, [out[0, :n[0]].copy()] if n[0] else [])
+
+
+def convex_rect_intersection(rings: np.ndarray, rects: np.ndarray):
+    """Convex polygon ∩ axis-aligned rectangle for a batch of pairs:
+    ``rings`` (g, k, 2) holds closed rings of k points each (one vertex
+    count per call), ``rects`` (g, 4) the rectangles (xmin, ymin, xmax,
+    ymax).  Four exact Sutherland–Hodgman half-plane cuts over the
+    whole batch, the result shell made CCW.  Returns ``(out, n)``:
+    ``n[i]`` = -1 declines row i (→ overlay), 0 is an empty
+    intersection, else ``out[i, :n[i]]`` is the result ring.
+
+    The one home of the convex∩rect rules; ``intersection`` reaches
+    them with one row.  Declines, keeping the overlay's exact
+    degenerate semantics: |coord| > 1e6 or a rectangle side < 1e-2
+    (the rect∩rect closed form's limits; the unit-frame transform owns
+    extreme scales), an open ring or one with no area or that is not
+    convex, a ring vertex within 4·_SNAP of a rectangle edge line, and
+    a rectangle corner within 4·_SNAP of the ring.  A row's answer does
+    not depend on the other rows of its batch."""
+    g, k = rings.shape[:2]
+    n = np.full(g, -1, dtype=np.int64)
+    if k < 4:
+        return np.zeros((g, 0, 2)), n
     band = 4.0 * _SNAP
-    xs, ys = ring[:-1, 0], ring[:-1, 1]
-    if (np.minimum(np.abs(xs - x0), np.abs(xs - x1)) <= band).any() \
-            or (np.minimum(np.abs(ys - y0), np.abs(ys - y1)) <= band).any():
-        return None
-    if ring_signed_area(ring) == 0.0 or not _convex_ring(ring):
-        return None
-    corners = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
-    if (points_dist_to_edges(corners, g) <= band).any():
-        return None
-    for axis, val, keep_low in ((0, x0, False), (0, x1, True),
-                                (1, y0, False), (1, y1, True)):
-        ring = _clip_ring_halfplane(ring, axis, val, keep_low)
-        if ring is None:
-            return Geometry(GTYPE_POLYGON, [])
-    if ring_signed_area(ring) < 0:
-        ring = ring[::-1].copy()
-    return Geometry(GTYPE_POLYGON, [ring])
+    lo, hi = rects[:, None, :2], rects[:, None, 2:]
+    x = rings[:, :-1]
+    with np.errstate(all="ignore"):    # a non-finite row is declined
+        ok = ((rings[:, 0] == rings[:, -1]).all(1)
+              & (np.abs(rects).max(1) <= 1e6)
+              & ((hi - lo)[:, 0].min(1) >= 1e-2)
+              & (np.abs(rings).max(axis=(1, 2)) <= 1e6)
+              & (np.minimum(np.abs(x - lo), np.abs(x - hi)) > band).all((1, 2))
+              & (ring_signed_areas(rings) != 0.0)
+              & _convex_ring(rings)
+              & (dist_to_segments(rects[:, _CORNERS], rings) > band).all(1))
+    c = np.flatnonzero(ok)
+    # one padded copy of the closing point ends every ring (see
+    # _clip_rings_halfplane)
+    rr = np.concatenate([rings[c], rings[c, -1:]], axis=1)
+    ll = np.full(len(c), k)
+    for axis, col, keep_low in _RECT_CUTS:
+        rr, ll = _clip_rings_halfplane(rr, ll, axis, rects[c, col], keep_low)
+    r = np.zeros((g, rr.shape[1], 2))
+    r[c], n[c] = rr, ll
+    for m in set(ll[ll > 0].tolist()):
+        rows = c[ll == m]
+        cw = rows[ring_signed_areas(r[rows, :m]) < 0]
+        r[cw, :m] = r[cw, m - 1::-1]
+    return r, n
+
+
+#: the rectangle corners as (x, y) columns of (xmin, ymin, xmax, ymax)
+_CORNERS = np.array([[0, 1], [2, 1], [2, 3], [0, 3]])
+#: the four cuts of a rectangle: (axis, column of its bound, keep_low)
+_RECT_CUTS = ((0, 0, False), (0, 2, True), (1, 1, False), (1, 3, True))
 
 
 def _pt_on(p: Geometry, g: Geometry) -> bool:
@@ -1291,7 +1341,7 @@ def intersect_many(geoms: list) -> Geometry:
     return acc
 
 
-def _convex_ring(ring: np.ndarray) -> bool:
+def _convex_ring(ring: np.ndarray):
     """Closed ring convex and simple (collinear runs allowed)?  One
     vectorized sweep over the turn at every vertex, the closing one
     included.  A turn counts as collinear when its cross product is
@@ -1299,50 +1349,90 @@ def _convex_ring(ring: np.ndarray) -> bool:
     answer does not depend on the coordinate scale; a collinear turn
     that doubles back is not convex.  The other turns must share one
     sign and add up to one revolution (a pentagram turns one way twice
-    round)."""
-    v = ring[1:] - ring[:-1]
-    w = v[np.arange(1, len(v) + 1) % len(v)]
-    cross = v[:, 0] * w[:, 1] - v[:, 1] * w[:, 0]
-    dot = (v * w).sum(axis=1)
-    flat = np.abs(cross) <= 1e-12 * np.hypot(*v.T) * np.hypot(*w.T)
-    if (flat & (dot < 0)).any():
-        return False
-    turn = cross[~flat]
-    if not ((turn > 0).all() or (turn < 0).all()):
-        return False
-    return bool(abs(np.arctan2(cross, dot).sum()) < 3 * math.pi)
+    round).  ``ring`` (k, 2) gives a bool; a batch (g, k, 2) of rings
+    of one vertex count gives a bool per ring."""
+    v = ring[..., 1:, :] - ring[..., :-1, :]
+    w = np.concatenate([v[..., 1:, :], v[..., :1, :]], axis=-2)
+    cross = v[..., 0] * w[..., 1] - v[..., 1] * w[..., 0]
+    dot = (v * w).sum(axis=-1)
+    flat = np.abs(cross) <= 1e-12 * np.hypot(v[..., 0], v[..., 1]) \
+        * np.hypot(w[..., 0], w[..., 1])
+    turn = np.where(flat, 0.0, cross)
+    ok = ~(flat & (dot < 0)).any(-1) \
+        & ((turn >= 0).all(-1) | (turn <= 0).all(-1)) \
+        & (np.abs(np.arctan2(cross, dot).sum(-1)) < 3 * math.pi)
+    return bool(ok) if ring.ndim == 2 else ok
 
 
 def _clip_ring_halfplane(ring: np.ndarray, axis: int, val: float,
                          keep_low: bool):
-    """Sutherland–Hodgman of a CONVEX closed ring against the
-    axis-aligned half-plane — exact crossings (the cut coordinate is
-    set to `val` verbatim), O(n), no overlay machinery.  Convexity is
-    the caller's guarantee (a concave subject could need the output
-    split into components, which S-H cannot represent)."""
-    out: list = []
-    pts = ring.tolist()
-    side = ring[:, axis]
-    ins = ((side <= val) if keep_low else (side >= val)).tolist()
-    for i in range(len(pts) - 1):
-        p = pts[i]
-        if ins[i]:
-            out.append(p)
-        if ins[i] != ins[i + 1]:
-            q = pts[i + 1]
-            t = (val - p[axis]) / (q[axis] - p[axis])
-            c = [p[0] + t * (q[0] - p[0]), p[1] + t * (q[1] - p[1])]
-            c[axis] = val
-            out.append(c)
-    if len(out) < 3:
-        return None
-    arr = np.array(out + [out[0]], dtype=np.float64)
-    keep = np.ones(len(arr), dtype=bool)
-    keep[1:] = (np.abs(np.diff(arr, axis=0)).max(axis=1) > 0)
-    arr = arr[keep]
-    if not np.array_equal(arr[0], arr[-1]):
-        arr = np.vstack([arr, arr[:1]])
-    return arr if len(arr) >= 4 else None
+    """One convex closed ring cut by one half-plane (see
+    ``_clip_rings_halfplane``); None when nothing of area is left."""
+    out, n = _clip_rings_halfplane(
+        np.concatenate([ring, ring[-1:]])[None], np.array([len(ring)]), axis,
+        np.array([val]), keep_low)
+    return out[0, :n[0]].copy() if n[0] else None
+
+
+def _clip_rings_halfplane(rings: np.ndarray, lens: np.ndarray, axis: int,
+                          vals: np.ndarray, keep_low: bool):
+    """Sutherland–Hodgman of CONVEX closed rings against axis-aligned
+    half-planes, one ring and cut value per row: row i's ring is the
+    first ``lens[i]`` points of ``rings`` (g, m, 2), and the points
+    after it equal its closing point (at least one follows).  The
+    half-plane is coordinate ``axis`` <= ``vals[i]`` (``keep_low``) or
+    >=.  Each kept point before the closing one and each exact crossing
+    (``t = (val - p[axis]) / (q[axis] - p[axis])``, the cut coordinate
+    set to ``val`` verbatim) is emitted in order, then a copy of the
+    first emitted point closes the ring; a point equal to the one
+    before it is dropped.  Returns ``(rings, lens)`` the same way, with
+    length 0 where fewer than 4 ring points are left (nothing of area;
+    that row then stays empty).
+
+    The points after a ring are zero-length edges: they cross nothing
+    and are never emitted, so a row's ring does not depend on the
+    padding.  Convexity is the caller's guarantee (a concave subject
+    could need the output split into components, which S-H cannot
+    represent)."""
+    g, m = rings.shape[:2]
+    v = vals[:, None]
+    side = rings[:, :, axis]
+    ins = (side <= v) if keep_low else (side >= v)
+    ins &= (lens > 0)[:, None]                      # an emptied ring stays so
+    p = rings[:, :-1]
+    d = rings[:, 1:] - p
+    # slot 2i: point i (not the closing point); slot 2i + 1: the
+    # crossing on edge i → i+1
+    kept = np.empty((g, m - 1, 2), dtype=bool)
+    kept[..., 0] = ins[:, :-1] & (np.arange(m - 1) < lens[:, None] - 1)
+    kept[..., 1] = ins[:, :-1] != ins[:, 1:]
+    t = np.divide(v - side[:, :-1], d[..., axis], out=np.zeros((g, m - 1)),
+                  where=kept[..., 1])
+    pts = np.empty((g, m - 1, 2, 2))
+    pts[:, :, 0] = p
+    pts[:, :, 1] = p + t[..., None] * d
+    pts[:, :, 1, axis] = v
+    kept = kept.reshape(g, 2 * m - 2)
+    # the kept points in order, then copies of the first (the closing)
+    ring = _front(pts.reshape(g, 2 * m - 2, 2), kept, kept.sum(1))
+    fresh = np.empty(ring.shape[:2], dtype=bool)
+    fresh[:, 0] = True
+    fresh[:, 1:] = (ring[:, 1:] != ring[:, :-1]).any(-1)
+    lens = fresh.sum(1)
+    if (fresh.argmin(1) != lens).any():            # an inner repeat
+        ring = _front(ring, fresh, lens)
+    lens[lens < 4] = 0
+    return ring, lens
+
+
+def _front(pts: np.ndarray, kept: np.ndarray, cnt: np.ndarray) -> np.ndarray:
+    """Each row's ``kept`` points of ``pts`` (g, m, 2), in order, then
+    at least two copies of its first kept point: (g, max(cnt) + 2, 2)."""
+    j = np.arange(cnt.max(initial=0) + 2)
+    order = np.argsort(~kept, axis=1, kind="stable")
+    col = np.where(j < cnt[:, None],
+                   order[:, np.minimum(j, kept.shape[1] - 1)], order[:, :1])
+    return pts[np.arange(len(pts))[:, None], col]
 
 
 def subdivide(g: Geometry, max_vertices: int = 128,

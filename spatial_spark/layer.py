@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import CORE_COLUMNS, Catalog
+from .functions.columns import _ident
 from .functions.scalar import register_all, st_bbox, st_gtype, wkb_lit
 from .sfc import DEFAULT_LEVEL, WGS84, hilbert_encode, zorder_encode
 
@@ -336,7 +337,9 @@ class Layer:
         self.ctx.catalog.record_attrs(
             self.name, {c: out.schema[c].dataType.simpleString() for c in attr_cols})
 
-        cols = [c for c in CORE_COLUMNS if c in out.columns] + attr_cols
+        # quoted: a dotted attribute name is a column, not a struct path
+        cols = [_ident(c) for c in CORE_COLUMNS if c in out.columns] + [
+            _ident(c) for c in attr_cols]
         # write layout = SFC clustering (STR-bulk-load equivalent): range
         # partition by zkey so each file covers a compact spatial region and
         # Parquet min/max on (zkey, xmin..ymax) prune like R-tree node envelopes.

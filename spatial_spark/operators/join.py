@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.columns import sql_double
 from ..geom import Geometry, from_wkb
 from ..geom import predicates as P
 from ..geom.algorithms import (
@@ -58,19 +59,17 @@ def _grid_params(a_bbox, b_bbox, n_rows: int):
 
 
 def _cells_expr(prefix: str, side: int, x0: float, y0: float, cw: float, ch: float):
-    """Array of cell ids covered by a row's bbox — pure column math
-    (F.sequence cross-product; stays in codegen, no UDF)."""
-    def clamp(col):
-        return F.greatest(F.lit(0), F.least(F.lit(side - 1), col.cast("int")))
+    """Array of cell ids covered by a row's bbox — pure column math (a
+    sequence cross-product; stays in codegen, no UDF), one SQL string."""
+    def clamp(c, o, w):
+        return (f"greatest(0, least({side - 1}, CAST(floor(({prefix}{c} - "
+                f"{sql_double(o)}) / {sql_double(w)}) AS INT)))")
 
-    cx0 = clamp(F.floor((F.col(f"{prefix}xmin") - F.lit(x0)) / F.lit(cw)))
-    cx1 = clamp(F.floor((F.col(f"{prefix}xmax") - F.lit(x0)) / F.lit(cw)))
-    cy0 = clamp(F.floor((F.col(f"{prefix}ymin") - F.lit(y0)) / F.lit(ch)))
-    cy1 = clamp(F.floor((F.col(f"{prefix}ymax") - F.lit(y0)) / F.lit(ch)))
-    xs = F.sequence(cx0, cx1)
-    ys = F.sequence(cy0, cy1)
+    xs = f"sequence({clamp('xmin', x0, cw)}, {clamp('xmax', x0, cw)})"
+    ys = f"sequence({clamp('ymin', y0, ch)}, {clamp('ymax', y0, ch)})"
     # cross product of x and y ranges → cell = cy*side + cx
-    return F.flatten(F.transform(ys, lambda y: F.transform(xs, lambda x: y * side + x)))
+    return F.expr(
+        f"flatten(transform({ys}, y -> transform({xs}, x -> y * {side} + x)))")
 
 
 def _estimated_rows(df: DataFrame) -> int:
@@ -126,6 +125,24 @@ def detect_hot_cell_salt(ae: DataFrame, est_rows: int,
     return int(min(max_salt, max(2, round(share * max_salt))))
 
 
+#: a pair's bboxes meet: the candidate filter of both join paths
+_BBOX_PAIR = ("a_xmax >= b_xmin AND a_xmin <= b_xmax"
+              " AND a_ymax >= b_ymin AND a_ymin <= b_ymax")
+
+
+def _prefixed(df: DataFrame, p: str) -> DataFrame:
+    """``df`` with every column renamed ``p + name``: one positional
+    ``toDF``, so no name is parsed (a dotted attribute name is not a
+    struct path) and the build costs one py4j round trip per column."""
+    return df.toDF(*[p + c for c in df.columns])
+
+
+def _ensure_geom(df: DataFrame) -> DataFrame:
+    if "geom" in df.columns:
+        return df
+    return df.withColumn("geom", F.expr("st_point(xmin, ymin)"))
+
+
 def spatial_join(a: DataFrame, b: DataFrame, predicate: str = "intersects",
                  broadcast_threshold: int = 10000,
                  a_all_points: bool | None = None,
@@ -163,7 +180,13 @@ def spatial_join(a: DataFrame, b: DataFrame, predicate: str = "intersects",
     candidate mass — the result is pinned identical either way.
     Complements AQE's skew-split (which needs sort-merge plans); this
     works for the equi-join the grid emits regardless of join
-    strategy."""
+    strategy.
+
+    The build is name-only: each side is renamed by one positional
+    ``toDF`` (a dotted attribute name stays one column), the bbox,
+    cell and reference-point predicates are SQL strings the JVM parses
+    once, and the refine UDFs are built once per predicate at import —
+    a build makes about a hundred py4j round trips, not a thousand."""
     if predicate not in _PREDS:
         raise ValueError(f"unknown predicate {predicate!r}")
 
@@ -173,52 +196,32 @@ def spatial_join(a: DataFrame, b: DataFrame, predicate: str = "intersects",
     # gets st_point before the join.  The pure-column fast path stays
     # Python-free either way.
     a_xy = "geom" not in a.columns
-
-    def ensure_geom(df):
-        if "geom" in df.columns:
-            return df
-        return df.withColumn("geom", F.expr("st_point(xmin, ymin)"))
-
-    def pref(df, p):
-        return df.select([F.col(c).alias(f"{p}{c}") for c in df.columns])
-
-    a_pref = pref(a, "a_")
-    b_pref = pref(b, "b_")
-
-    bbox_pair = (
-        (F.col("a_xmax") >= F.col("b_xmin")) & (F.col("a_xmin") <= F.col("b_xmax"))
-        & (F.col("a_ymax") >= F.col("b_ymin")) & (F.col("a_ymin") <= F.col("b_ymax"))
-    )
+    a_pref = _prefixed(a, "a_")
 
     # broadcast decision from Catalyst's plan statistics (file-size based,
     # no job) — a .count() here would be a full scan at 100 TB
     b_rows = _estimated_rows(b)
-    if b_rows <= broadcast_threshold:
-        # points-vs-rectangles fast path: if every b geometry IS its bbox
-        # (grid cells, tiles — the dominant join shape) and a is all points,
-        # the predicate is pure column math — no Python refine at all.
-        # Hint-gated: probing here would cost plan-time jobs (b's rect
-        # check is a Python-UDF scan); without hints the exact refine
-        # below gives the same answer, just per-row.
-        b_rects = bool(b_all_rects)
-        a_points = bool(a_all_points)
-        if predicate in ("within", "intersects", "coveredby") and b_rects \
-                and a_points:
-            if predicate == "within":
-                exact = (
-                    (F.col("a_xmin") > F.col("b_xmin")) & (F.col("a_xmin") < F.col("b_xmax"))
-                    & (F.col("a_ymin") > F.col("b_ymin")) & (F.col("a_ymin") < F.col("b_ymax"))
-                )
-            else:
-                exact = (
-                    (F.col("a_xmin") >= F.col("b_xmin")) & (F.col("a_xmin") <= F.col("b_xmax"))
-                    & (F.col("a_ymin") >= F.col("b_ymin")) & (F.col("a_ymin") <= F.col("b_ymax"))
-                )
-            return a_pref.join(F.broadcast(b_pref), exact)
-        b_pref = pref(ensure_geom(b), "b_")
-        joined = a_pref.join(F.broadcast(b_pref), bbox_pair)
+    broadcast = b_rows <= broadcast_threshold
+    # points-vs-rectangles fast path: if every b geometry IS its bbox
+    # (grid cells, tiles — the dominant join shape) and a is all points,
+    # the predicate is pure column math — no Python refine at all.
+    # Hint-gated: probing here would cost plan-time jobs (b's rect
+    # check is a Python-UDF scan); without hints the exact refine
+    # below gives the same answer, just per-row.
+    if broadcast and predicate in ("within", "intersects", "coveredby") \
+            and b_all_rects and a_all_points:
+        lt, gt = ("<", ">") if predicate == "within" else ("<=", ">=")
+        return a_pref.join(F.broadcast(_prefixed(b, "b_")), F.expr(
+            f"a_xmin {gt} b_xmin AND a_xmin {lt} b_xmax"
+            f" AND a_ymin {gt} b_ymin AND a_ymin {lt} b_ymax"))
+    if a_xy:
+        # a_geom's place in the output, filled above the refine; Catalyst
+        # prunes the placeholder
+        a_pref = a_pref.withColumn("a_geom", F.expr("CAST(NULL AS BINARY)"))
+    b_pref = _prefixed(_ensure_geom(b), "b_")
+    if broadcast:
+        joined = a_pref.join(F.broadcast(b_pref), F.expr(_BBOX_PAIR))
     else:
-        b_pref = pref(ensure_geom(b), "b_")
         if extent is not None:
             a_bbox = b_bbox = tuple(extent)
         else:
@@ -232,8 +235,10 @@ def spatial_join(a: DataFrame, b: DataFrame, predicate: str = "intersects",
             a_bbox = b_bbox = (-180.0, -90.0, 180.0, 90.0)
         n = max(_estimated_rows(a), b_rows)
         x0, y0, cw, ch, side = _grid_params(a_bbox, b_bbox, n)
-        ae = a_pref.withColumn("cell", F.explode(_cells_expr("a_", side, x0, y0, cw, ch)))
-        be = b_pref.withColumn("cell", F.explode(_cells_expr("b_", side, x0, y0, cw, ch)))
+        ae = a_pref.withColumn("cell", F.explode(
+            _cells_expr("a_", side, x0, y0, cw, ch)))
+        be = b_pref.withColumn("cell", F.explode(
+            _cells_expr("b_", side, x0, y0, cw, ch)))
         if salt == "auto":
             salt = detect_hot_cell_salt(ae, _estimated_rows(a))
         if salt is not None and int(salt) > 1:
@@ -244,24 +249,27 @@ def spatial_join(a: DataFrame, b: DataFrame, predicate: str = "intersects",
                 F.hash("a_xmin", "a_ymin", "a_xmax", "a_ymax"), F.lit(r)))
             be = be.withColumn("salt",
                                F.explode(F.sequence(F.lit(0), F.lit(r - 1))))
-            joined = ae.join(be, ["cell", "salt"]).filter(bbox_pair) \
+            joined = ae.join(be, ["cell", "salt"]).filter(_BBOX_PAIR) \
                        .drop("salt")
         else:
-            joined = ae.join(be, "cell").filter(bbox_pair)
+            joined = ae.join(be, "cell").filter(_BBOX_PAIR)
         # reference-point dedup: emit only in the cell holding the pair's
         # intersection min corner (PBSM duplicate-avoidance, no distinct)
-        ref_cx = F.floor((F.greatest("a_xmin", "b_xmin") - F.lit(x0)) / F.lit(cw)).cast("int")
-        ref_cy = F.floor((F.greatest("a_ymin", "b_ymin") - F.lit(y0)) / F.lit(ch)).cast("int")
-        ref_cx = F.greatest(F.lit(0), F.least(F.lit(side - 1), ref_cx))
-        ref_cy = F.greatest(F.lit(0), F.least(F.lit(side - 1), ref_cy))
-        joined = joined.filter(F.col("cell") == (ref_cy * side + ref_cx)).drop("cell")
+        def ref(c, o, w):
+            return (f"greatest(0, least({side - 1}, CAST(floor((greatest("
+                    f"a_{c}, b_{c}) - {sql_double(o)}) / {sql_double(w)})"
+                    f" AS INT)))")
+        joined = joined.filter(
+            f"cell = {ref('ymin', y0, ch)} * {side} + {ref('xmin', x0, cw)}"
+        ).drop("cell")
 
     if not a_xy:
-        return joined.filter(_refine_pred(predicate))
+        return joined.filter(_REFINE[predicate](
+            "a_geom", "a_gtype", "b_geom", "b_gtype"))
     # same columns, order and bytes as a join of the st_point-encoded frame
-    return joined.filter(_refine_xy_pred(predicate)).select(
-        *a_pref.columns, F.expr("st_point(a_xmin, a_ymin)").alias("a_geom"),
-        *b_pref.columns)
+    return joined.filter(_REFINE_XY[predicate](
+        "a_xmin", "a_ymin", "b_geom", "b_gtype")).withColumn(
+        "a_geom", F.expr("st_point(a_xmin, a_ymin)"))
 
 
 def _refine_batch(predicate: str, a_geom: pd.Series, a_gtype: pd.Series,
@@ -434,17 +442,17 @@ def _refine_xy_batch(predicate: str, xy: np.ndarray, b_geom, b_gtype,
     return out
 
 
-def _refine_pred(predicate: str):
+def _refine_udf(predicate: str):
     @F.pandas_udf(T.BooleanType())
     def refine(a_geom: pd.Series, a_gtype: pd.Series,
                b_geom: pd.Series, b_gtype: pd.Series) -> pd.Series:
         return pd.Series(
             _refine_batch(predicate, a_geom, a_gtype, b_geom, b_gtype))
 
-    return refine(F.col("a_geom"), F.col("a_gtype"), F.col("b_geom"), F.col("b_gtype"))
+    return refine
 
 
-def _refine_xy_pred(predicate: str):
+def _refine_xy_udf(predicate: str):
     @F.pandas_udf(T.BooleanType())
     def refine(a_x: pd.Series, a_y: pd.Series,
                b_geom: pd.Series, b_gtype: pd.Series) -> pd.Series:
@@ -452,7 +460,13 @@ def _refine_xy_pred(predicate: str):
                               a_y.to_numpy(np.float64)])
         return pd.Series(_refine_xy_batch(predicate, xy, b_geom, b_gtype))
 
-    return refine(F.col("a_xmin"), F.col("a_ymin"), F.col("b_geom"), F.col("b_gtype"))
+    return refine
+
+
+#: the refine UDFs, one per predicate and a-side shape, built at import
+#: like the st_* UDFs: a join build neither builds nor pickles one
+_REFINE = {p: _refine_udf(p) for p in _PREDS}
+_REFINE_XY = {p: _refine_xy_udf(p) for p in _PREDS}
 
 
 def within_distance_join(a: DataFrame, b: DataFrame, km: float) -> DataFrame:
@@ -483,8 +497,8 @@ def within_distance_join(a: DataFrame, b: DataFrame, km: float) -> DataFrame:
     def n_cells(wcol):
         return F.greatest(F.floor(F.lit(360.0) / wcol), F.lit(1)).cast("int")
 
-    a_pref = a.select([F.col(c).alias(f"a_{c}") for c in a.columns])
-    b_pref = b.select([F.col(c).alias(f"b_{c}") for c in b.columns])
+    a_pref = _prefixed(a, "a_")
+    b_pref = _prefixed(b, "b_")
 
     a_band = F.floor(F.col("a_ymin") / band_deg).cast("int")
     aw = lon_cell_width(a_band)

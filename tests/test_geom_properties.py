@@ -564,6 +564,208 @@ def test_convex_rect_intersection_declines_snap_band_contacts():
     assert abs(area(fast) - (4.0 - 4 * 0.125)) < 1e-12
 
 
+def _clip_pair(kind: str, seed: int):
+    """One (polygon, rectangle) row of a batched-intersection property,
+    drawn from ``seed``: a convex ring (raw floats or quantized, or
+    quantized and closed by -0.0 where it opens with 0.0), a rectangle,
+    a concave, holed or multi polygon, or a convex ring with a vertex
+    or an edge inside the 4·_SNAP band of the rectangle."""
+    import random as _random
+
+    from spatial_spark.geom import clip as cl
+    rng = _random.Random(seed)
+    x0, y0 = rng.randint(-20, 20) / rng.choice([1, 4]), rng.randint(-20, 20)
+    w, h = rng.randint(1, 16) / rng.choice([1, 2]), rng.uniform(0.5, 12)
+    cx, cy = x0 + rng.uniform(-4, 8), y0 + rng.uniform(-4, 8)
+    n = rng.randrange(3, 12)
+    ang = sorted(rng.uniform(0, 2 * math.pi) for _ in range(n))
+    rx, ry = rng.uniform(0.5, 9), rng.uniform(0.5, 9)
+    ring = [(cx + rx * math.cos(a), cy + ry * math.sin(a)) for a in ang]
+    if rng.random() < 0.5:
+        ring = ring[::-1]
+    if kind in ("quantized", "signed_zero"):
+        ring = [(round(x * 4) / 4, round(y * 4) / 4) for x, y in ring]
+    if kind == "signed_zero":      # first x is 0.0, the closing one -0.0
+        dx = ring[0][0]
+        ring = [(x - dx, y) for x, y in ring]
+        x0 -= dx
+    elif kind == "band":           # a vertex within ~4·_SNAP of an edge
+        d = rng.choice([-5, -4, -3, -1, 0, 1, 3, 4, 5]) * cl._SNAP
+        ring[0] = (x0 + d, ring[0][1])
+    elif kind == "corner":         # an edge through or near a corner
+        d = rng.choice([-8, -6, -5, -3, 0, 3, 5, 6, 8]) * cl._SNAP
+        ring = [(x0 - 1, y0 + 1 + d), (x0 + 1, y0 - 1 + d),
+                (x0 + 2, y0 + 3), (x0 - 1, y0 + 3)]
+    rect = Geometry.box(x0, y0, x0 + w, y0 + h)
+    if kind == "rect":
+        poly = Geometry.box(cx, cy, cx + rx, cy + ry)
+    elif kind == "signed_zero":
+        poly = Geometry(3, [np.array(ring + [(-0.0, ring[0][1])])])
+    elif kind.startswith("empty_ring"):    # a ring of no points
+        poly = Geometry(3, [np.empty((0, 2))])
+    elif kind == "concave":
+        poly = Geometry.polygon([(cx, cy), (cx + rx, cy), (cx + rx / 3, cy + ry / 3),
+                                 (cx, cy + ry)])
+    elif kind == "holed":
+        poly = Geometry(3, [np.array(Geometry.box(cx - rx, cy - ry, cx + rx,
+                                                  cy + ry).data[0]),
+                            np.array(Geometry.box(cx - rx / 3, cy - ry / 3,
+                                                  cx + rx / 3, cy + ry / 3
+                                                  ).data[0][::-1])])
+    elif kind == "multi":
+        poly = Geometry.multi([Geometry.polygon(ring),
+                               Geometry.box(x0 - 9, y0 - 9, x0 - 8, y0 - 8)])
+    else:
+        poly = Geometry.polygon(ring)
+    return poly, rect
+
+
+_CLIP_KINDS = ("convex", "quantized", "signed_zero", "band", "corner",
+               "rect", "concave", "holed", "multi", "null", "empty_ring",
+               "empty_ring_null")
+
+
+@given(st.lists(st.tuples(st.sampled_from(_CLIP_KINDS),
+                          st.integers(0, 2**31 - 1), st.booleans()),
+                min_size=1, max_size=40))
+@example(rows=[("band", 3, False), ("band", 3, True), ("corner", 1, False),
+               ("corner", 2, True), ("null", 0, False), ("convex", 5, True)])
+@example(rows=[("empty_ring_null", 0, False), ("null", 0, False),
+               ("rect", 1, False), ("empty_ring", 2, True)])
+@settings(max_examples=120, deadline=None)
+def test_batched_intersection_and_area_match_pairwise(rows):
+    """st_intersection over a mixed Arrow batch — convex × rectangle in
+    both orders, rect × rect, concave, holed and multi polygons, snap-band
+    contacts, rings of no points, null rows, mixed vertex counts — gives
+    per row the bytes of to_wkb(cl.intersection(...)); st_area over its
+    output equals alg.area bitwise, and st_centroid and st_points over
+    its input and output give the bytes of alg.centroid and of each
+    vertex as a point."""
+    import pandas as pd
+    from spatial_spark.functions.scalar import (
+        st_area, st_centroid, st_intersection, st_points,
+    )
+    from spatial_spark.geom import clip as cl
+    from spatial_spark.geom.algorithms import centroid
+
+    a, b = [], []
+    for kind, seed, swap in rows:
+        poly, rect = _clip_pair(kind, seed)
+        pair = (None if kind == "null" else to_wkb(poly),
+                None if kind == "empty_ring_null" else to_wkb(rect))
+        a.append(pair[swap])
+        b.append(pair[not swap])
+    got = list(st_intersection.func(pd.Series(a), pd.Series(b)))
+    want = [None if x is None or y is None
+            else to_wkb(cl.intersection(from_wkb(x), from_wkb(y)))
+            for x, y in zip(a, b)]
+    assert got == want
+    areas = st_area.func(pd.Series(got))
+    for wkb, v in zip(got, areas):
+        w = np.nan if wkb is None else area(from_wkb(wkb))
+        assert np.float64(v).tobytes() == np.float64(w).tobytes(), (wkb, v)
+    for col in (a, got):
+        assert list(st_centroid.func(pd.Series(col))) == [
+            None if g is None else to_wkb(centroid(from_wkb(g))) for g in col]
+        assert list(st_points.func(pd.Series(col))) == [
+            None if g is None else [to_wkb(Geometry.point(float(x), float(y)))
+                                    for x, y in from_wkb(g).all_coords()]
+            for g in col]
+
+
+def test_convex_rect_cut_closes_ring_with_its_first_point():
+    """A cut ring closes with a copy of its first output point, not with
+    the input's closing vertex: a triangle whose closing vertex is -0.0
+    where its first is 0.0 keeps the bytes the per-point S-H clip gave
+    (hard-coded), pairwise, in a batch and in one half-plane cut."""
+    import pandas as pd
+    from spatial_spark.functions.scalar import st_intersection
+    from spatial_spark.geom import clip as cl
+
+    ring = np.array([[0.0, 1.0], [-3.0, -3.0], [3.0, -3.0], [-0.0, 1.0]])
+    tri, rect = Geometry(3, [ring]), Geometry.box(-2.0, -2.0, 2.0, 2.0)
+    want = bytes.fromhex(
+        "010300000001000000060000000000000000000000000000000000f03f0000"
+        "0000000000c0aaaaaaaaaaaafabf00000000000000c000000000000000c000"
+        "0000000000004000000000000000c00000000000000040abaaaaaaaaaafabf"
+        "0000000000000000000000000000f03f")
+    assert to_wkb(cl.intersection(tri, rect)) == want
+    assert to_wkb(cl.intersection(rect, tri)) == want
+    got = st_intersection.func(pd.Series([to_wkb(tri), to_wkb(rect)]),
+                               pd.Series([to_wkb(rect), to_wkb(tri)]))
+    assert list(got) == [want, want]
+    assert cl._clip_ring_halfplane(ring, 1, -2.0, False).tobytes() == \
+        bytes.fromhex("0000000000000000000000000000f03f00000000000002c0000"
+                      "00000000000c0000000000000024000000000000000c0000000"
+                      "0000000000000000000000f03f")
+
+
+def _loop_clip_halfplane(ring: np.ndarray, axis: int, val: float,
+                         keep_low: bool):
+    """Reference for the batched cut: Sutherland–Hodgman of one convex
+    closed ring, one point at a time."""
+    out = []
+    pts = ring.tolist()
+    ins = [(p[axis] <= val) if keep_low else (p[axis] >= val) for p in pts]
+    for i in range(len(pts) - 1):
+        p = pts[i]
+        if ins[i]:
+            out.append(p)
+        if ins[i] != ins[i + 1]:
+            q = pts[i + 1]
+            t = (val - p[axis]) / (q[axis] - p[axis])
+            c = [p[0] + t * (q[0] - p[0]), p[1] + t * (q[1] - p[1])]
+            c[axis] = val
+            out.append(c)
+    if len(out) < 3:
+        return None
+    arr = np.array(out + [out[0]], dtype=np.float64)
+    keep = np.ones(len(arr), dtype=bool)
+    keep[1:] = (np.abs(np.diff(arr, axis=0)).max(axis=1) > 0)
+    arr = arr[keep]
+    if not np.array_equal(arr[0], arr[-1]):
+        arr = np.vstack([arr, arr[:1]])
+    return arr if len(arr) >= 4 else None
+
+
+@given(st.tuples(st.sampled_from(("convex", "quantized", "signed_zero",
+                                  "band", "corner")),
+                 st.integers(0, 2**31 - 1)))
+@settings(max_examples=300, deadline=None)
+def test_convex_rect_cuts_match_point_loop(row):
+    """Every ring the convex∩rect kernel accepts is cut to the bytes of
+    four point-by-point Sutherland–Hodgman cuts, then made CCW; a
+    single half-plane cut through the ring matches the loop too."""
+    from spatial_spark.geom import clip as cl
+    from spatial_spark.geom.algorithms import ring_signed_area
+
+    poly, rect = _clip_pair(*row)
+    ring = np.asarray(poly.data[0], dtype=np.float64)
+    box = rect.envelope()
+    fast = cl._convex_rect_intersection(poly, box)
+    if fast is not None:
+        want = ring
+        for axis, val, keep_low in ((0, box[0], False), (0, box[2], True),
+                                    (1, box[1], False), (1, box[3], True)):
+            want = _loop_clip_halfplane(want, axis, val, keep_low)
+            if want is None:
+                break
+        if want is None:
+            assert fast.data == []
+        else:
+            if ring_signed_area(want) < 0:
+                want = want[::-1]
+            assert fast.data[0].tobytes() == want.tobytes()
+    if cl._convex_ring(ring):
+        for axis in (0, 1):
+            mid = float(np.median(ring[:, axis]))
+            for keep_low in (True, False):
+                got = cl._clip_ring_halfplane(ring, axis, mid, keep_low)
+                want = _loop_clip_halfplane(ring, axis, mid, keep_low)
+                assert (got is None) == (want is None)
+                assert got is None or got.tobytes() == want.tobytes()
+
+
 def test_utm_inverse_sql_roundtrip(spark):
     """utm_inverse_ctes is the exact SQL twin of the numpy inverse
     kernel, and forward→inverse in PURE SQL round-trips to the input

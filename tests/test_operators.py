@@ -9,7 +9,9 @@ from spatial_spark.geom.algorithms import area
 from spatial_spark.operators.agg import (
     density_islands, intersect_all, keep_max, keep_min, union_all,
 )
-from spatial_spark.operators.join import spatial_join, within_distance_join
+from spatial_spark.operators.join import (
+    knn_join, spatial_join, within_distance_join,
+)
 
 
 def _encoded(ctx, spark, name, rows, schema, **add_kw):
@@ -57,6 +59,41 @@ def test_spatial_join_grid_path_matches_broadcast(ctx, spark):
               for r in spatial_join(a, gl.df(), "intersects",
                                     broadcast_threshold=0).collect()}
     assert r_grid == r_broad and len(r_broad) > 0
+
+
+def test_joins_keep_dotted_attribute_names(ctx, spark):
+    """A layer attribute whose name holds a dot (``pop.total``) is a
+    plain column, not a struct path: Layer.join, a bare spatial_join on
+    the broadcast and the grid path, within_distance_join and knn_join
+    carry it through as ``a_pop.total`` / ``b_pop.total``."""
+    pts = [(i, float(i % 6), float(i // 6), 10 * i) for i in range(36)]
+    pl = ctx.create_point_layer("dot_pts", x="lon", y="lat")
+    pl.add(spark.createDataFrame(
+        pts, "id long, lon double, lat double, `pop.total` long"))
+    gl = ctx.create_wkt_layer("dot_polys")
+    gl.add(spark.createDataFrame(
+        [(7, "POLYGON ((0.5 0.5, 3.5 0.5, 3.5 3.5, 0.5 3.5, 0.5 0.5))", 3)],
+        "id long, wkt string, `pop.total` long"), wkt="wkt")
+    want = {(i, 7, 10 * i, 3) for i, x, y, _ in pts
+            if 0.5 < x < 3.5 and 0.5 < y < 3.5}
+
+    def rows(df):
+        return {(r["a_id"], r["b_id"], r["a_pop.total"], r["b_pop.total"])
+                for r in df.collect()}
+
+    assert rows(pl.join(gl, "within")) == want
+    for threshold in (10000, 0):
+        got = spatial_join(pl.df(), gl.df(), "within",
+                           broadcast_threshold=threshold)
+        assert "a_pop.total" in got.columns and rows(got) == want, threshold
+    near = within_distance_join(pl.df(), pl.df(), km=1.0)
+    assert {(r["a_id"], r["b_id"]) for r in near.collect()
+            if r["a_pop.total"] == 10 * r["a_id"]
+            and r["b_pop.total"] == 10 * r["b_id"]} == {
+        (i, i) for i in range(36)}
+    knn = knn_join(pl.df(), pl.df(), k=1, radius_km=1.0)
+    assert sorted((r["a_id"], r["b_pop.total"]) for r in knn.collect()) == [
+        (i, 10 * i) for i in range(36)]
 
 
 def test_within_distance_join(ctx, spark):

@@ -740,10 +740,11 @@ _SEARCHES = {
 PY4J_BUDGET = {"bbox": 100, "within": 100, "intersects": 100, "closest": 150}
 
 
-def test_search_build_py4j_budget(point_layer, spark, monkeypatch):
-    """Counts the building thread's round trips only: py4j's finalizer
-    thread sends the deletes of released JVM references on its own
-    schedule."""
+def _py4j_round_trips(spark, monkeypatch, builds: dict) -> dict:
+    """py4j ``send_command`` round trips each build of ``builds`` (name
+    → thunk) makes.  Counts the building thread's round trips only:
+    py4j's finalizer thread sends the deletes of released JVM references
+    on its own schedule."""
     import threading
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
@@ -756,12 +757,48 @@ def test_search_build_py4j_budget(point_layer, spark, monkeypatch):
 
     monkeypatch.setattr(client, "send_command", counting)
     used = {}
-    for name, build in _SEARCHES.items():
+    for name, build in builds.items():
         calls[0] = 0
-        build(point_layer)
+        build()
         used[name] = calls[0]
     monkeypatch.undo()
+    return used
+
+
+def test_search_build_py4j_budget(point_layer, spark, monkeypatch):
+    used = _py4j_round_trips(spark, monkeypatch, {
+        name: lambda b=build: b(point_layer)
+        for name, build in _SEARCHES.items()})
     assert all(used[n] <= PY4J_BUDGET[n] for n in PY4J_BUDGET), used
+
+
+#: py4j round trips allowed per Layer.join build, broadcast and grid
+#: path; a Column-by-Column build made 924-2047
+JOIN_PY4J_BUDGET = 150
+
+
+def test_join_build_py4j_budget(ctx, spark, point_layer, monkeypatch):
+    """Point×polygon ``within`` and polygon×polygon ``intersects``, each
+    on the broadcast and the grid path, once built before counting (the
+    first use of a refine UDF sends it to the JVM)."""
+    polys = []
+    for name, d in (("plan_tri", 0.0), ("plan_tri2", 0.5)):
+        lay = ctx.create_wkt_layer(name)
+        lay.add(spark.createDataFrame(
+            [(i, f"POLYGON (({i + d} {d}, {i + 3 + d} {d}, "
+                 f"{i + 1 + d} {2 + d}, {i + d} {d}))") for i in range(20)],
+            "id long, wkt string"), wkt="wkt")
+        polys.append(lay)
+    builds = {
+        f"{name}/{threshold}": lambda a=a, b=b, p=p, t=threshold: a.join(
+            b, p, broadcast_threshold=t)
+        for name, a, b, p in (("pip", point_layer, polys[0], "within"),
+                              ("overlay", polys[0], polys[1], "intersects"))
+        for threshold in (10000, 0)}
+    for build in builds.values():
+        build()
+    used = _py4j_round_trips(spark, monkeypatch, builds)
+    assert all(n <= JOIN_PY4J_BUDGET for n in used.values()), used
 
 
 def test_point_search_filters_are_typed(point_layer, spark):
