@@ -655,7 +655,8 @@ class Manifest:
             return [{"name": None, "n": len(doc["files"]), "stats": {}}]
         return [dict(sh) for sh in doc.get("shards", [])]
 
-    def files_where(self, keep) -> list | None:
+    def files_where(self, keep, rows_out: list | None = None
+                    ) -> list | None:
         """Absolute paths of current data files passing
         ``keep(stats_dict) -> bool`` — the planning read, two tiers:
         (1) shards whose AGGREGATE stats fail are skipped without
@@ -666,12 +667,16 @@ class Manifest:
         of whole shards: at 100 TB that is the difference between
         openining 8 and 512 parquet footers).  Stats-less shards and
         files are always included (prune only on evidence).  Returns
-        None when no manifest exists."""
+        None when no manifest exists.  ``rows_out``, when given, is
+        extended with each returned file's recorded ``rows`` stat (None
+        where the file has none)."""
         cur = self._newest()
         if cur is None:
             return None
         doc = cur[1]
         if "files" in doc:                       # v1: no stats, no prune
+            if rows_out is not None:
+                rows_out += [None] * len(doc["files"])
             return [os.path.join(self.store, n) for n in doc["files"]]
         out = []
         for sh in doc.get("shards", []):
@@ -685,6 +690,8 @@ class Manifest:
                 if f_st and not keep(f_st):
                     continue
                 out.append(os.path.join(self.store, n))
+                if rows_out is not None:
+                    rows_out.append((f_st or {}).get("rows"))
         return out
 
     def current_meta(self) -> dict:

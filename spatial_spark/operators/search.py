@@ -6,14 +6,23 @@ SpatialProcedures.findGeometriesWithinDistance (:864-880) / .closest
 (:850-862) / .bbox (:822-836) / .intersects (:901-911).
 
 Every search is the reference's two-phase plan re-expressed declaratively:
-  1. envelope window  -> ONE SQL predicate string per search: each
-     window's bbox conjuncts, ANDed on an all-points layer with its SFC
-     key ranges, OR'd over the antimeridian split — pushed by Catalyst
-     into the Parquet scan (min/max row-group pruning = R-tree node
-     envelope pruning);
+  1. envelope window  -> two prunes from one SFC decomposition per
+     window (operators/pruning).  The manifest list drops every file
+     whose envelope misses the windows or, on an all-points layer,
+     whose zkey range meets none of the exact key ranges.  The plan
+     gets ONE SQL predicate string: each window's bbox conjuncts
+     first, then its key ranges coarsened to at most four, OR'd over
+     the antimeridian split — pushed by Catalyst into the Parquet scan
+     (min/max row-group pruning = R-tree node envelope pruning) and
+     re-checked by Spark on every scanned row, which is why the cheap,
+     most selective bbox test leads and the range list is short;
   2. exact refine     -> column math for point layers (zero Python; the
      distance is one SQL expression), pandas UDF on WKB for general
      geometry.
+
+within_distance orders a small search's answer inside one task rather
+than with a global sort, and closest's correctness probe collects at
+most k distances on the driver: neither runs a shuffle.
 
 Builders read schema facts (zkey, geom) and write-time stats from the
 layer catalog and hand the JVM strings to parse, so a build costs a few
@@ -38,27 +47,42 @@ from ..geom import from_wkb, from_wkt
 from ..geom.algorithms import (
     locate, nearest_point_on, orthodromic_distance_km, points_locate,
 )
-from .pruning import sfc_window_sql
+from .pruning import window_ranges, zkey_sql
+
+#: within_distance sorts in one task while the manifest row counts of
+#: its planned files sum to at most this, a tenth of it on a layer with
+#: a geom column (its refine is a pandas UDF per row); above, a global
+#: sort.  Measured on 4 vCPUs: one task was 36% faster at 490k planned
+#: points, and at 1M from 3% faster to 8% slower; on 150k planned
+#: polygons it was 2× faster for a 5k-row answer and 7% slower for a
+#: 57k-row one
+ONE_TASK_SORT_ROWS = 500_000
 
 
-def _window_prefilter(layer, window, props: dict, cols: list) -> DataFrame:
-    """The layer read, pruned at the manifest by ``window`` and
-    ``props``, then filtered by bbox window + SFC key range predicates
-    (two more independent prune layers) as one ``df.filter`` string.
-    ``window`` may be a single (x0,y0,x1,y1) or a list of windows (the
-    antimeridian split) — list windows OR their per-window predicates.
-    Point-ness, curve and the zkey column (``cols``, Layer.columns) are
-    the layer catalog's write-time facts — no plan-time scan."""
+def _window_prefilter(layer, window, props: dict, cols: list,
+                      rows_out: list | None = None) -> DataFrame:
+    """The layer read, pruned at the manifest by ``window``, ``props``
+    and (on an all-points layer) each window's exact SFC key ranges,
+    then filtered in-plan as one ``df.filter`` string: per window the
+    bbox conjuncts first, then the key ranges coarsened to
+    ``pruning.PLAN_RANGES``.  ``window`` may be a single (x0,y0,x1,y1)
+    or a list of windows (the antimeridian split) — list windows OR
+    their per-window predicates.  Point-ness, curve and the zkey column
+    (``cols``, Layer.columns) are the layer catalog's write-time facts —
+    no plan-time scan.  ``rows_out`` receives the planned files' row
+    counts (Layer.df_pruned)."""
     windows = window if isinstance(window, list) else [window]
     curve = layer.curve if (layer.all_points is True
                             and "zkey" in cols) else None
-    preds = []
+    preds, exact = [], []
     for w in windows:
         p = bbox_intersects_window("xmin", "ymin", "xmax", "ymax", w)
-        z = sfc_window_sql(w, curve) if curve else None
-        preds.append(f"({z} AND {p})" if z else p)
-    return layer.df_pruned(windows=window, props=props).filter(
-        " OR ".join(preds))
+        ranges = window_ranges(w, curve) if curve else []
+        exact += ranges
+        z = zkey_sql(ranges)
+        preds.append(f"({p} AND {z})" if z else p)
+    return layer.df_pruned(windows=windows, props=props, zranges=exact,
+                           rows_out=rows_out).filter(" OR ".join(preds))
 
 
 def _cql_seed(cql: str | None, cols: list):
@@ -108,18 +132,34 @@ def within_distance(layer, lon: float, lat: float, km: float,
     """All records within `km` of (lon,lat), with a `distance` column,
     ordered ascending — spatial.withinDistance semantics.  ``cql``:
     an attribute predicate applied in-plan whose mined property bounds
-    ALSO seed manifest attribute pruning (both prunes compose)."""
+    ALSO seed manifest attribute pruning (both prunes compose).
+
+    The sort path is chosen from the manifest: while the planned
+    files' recorded row counts stay within ``ONE_TASK_SORT_ROWS`` the
+    order is one task's sort (``coalesce(1)`` then
+    ``sortWithinPartitions``).  ``coalesce`` adds no shuffle, so the
+    scan and refine run in that task too, and the call is one job
+    instead of the three of a range-partitioned ``orderBy`` (sampling,
+    shuffle map, sort), whose sampling job also runs the scan and
+    refine once more.  Above the bound, or when a planned file has no
+    row count, the sort is a global ``orderBy`` and the scan and refine
+    keep one task per input split."""
     cols = layer.columns
     sql, props = _cql_seed(cql, cols)
     windows = sphere_search_windows(lon, lat, km)
-    # manifest-shard file pruning first (windows AND property bounds),
-    # then the in-plan bbox + SFC-range predicates — three prune
-    # layers, outermost free
-    df = _window_prefilter(layer, windows, props, cols)
+    # manifest-shard file pruning first (windows, key ranges AND
+    # property bounds), then the in-plan bbox + SFC-range predicates —
+    # three prune layers, outermost free
+    planned: list = []
+    df = _window_prefilter(layer, windows, props, cols, planned)
     if sql is not None:
         df = df.filter(sql)
     df = df.withColumn("distance", _distance_col(lon, lat, cols))
-    return df.filter(f"distance <= {sql_double(km)}").orderBy("distance")
+    df = df.filter(f"distance <= {sql_double(km)}")
+    bound = ONE_TASK_SORT_ROWS // (10 if "geom" in cols else 1)
+    if None in planned or sum(planned) > bound:
+        return df.orderBy("distance")
+    return df.coalesce(1).sortWithinPartitions("distance")
 
 
 def closest(layer, lon: float, lat: float, k: int = 100,
@@ -136,11 +176,13 @@ def closest(layer, lon: float, lat: float, k: int = 100,
 
     Planning is metadata-only: count/bbox come from the layer catalog's
     write-time stats.  The result is a LAZY frame — no collect in the
-    builder.  One cheap probe action (top-k over the pruned window, a
-    TakeOrdered of k rows) runs only when the window does not already cover
-    the whole layer, to decide whether the pruned plan is globally correct;
-    its rows are never materialized into the result (the returned frame is
-    the pruned- or full-scan plan itself, composable by the caller)."""
+    builder.  One cheap probe action runs only when the window does not
+    already cover the whole layer, to decide whether the pruned plan is
+    globally correct: it collects the ``distance`` column of the pruned
+    top-k (a single-stage TakeOrdered of at most k values, no shuffle) and
+    takes the count and maximum on the driver.  Its rows are never
+    materialized into the result (the returned frame is the pruned- or
+    full-scan plan itself, composable by the caller)."""
     total = layer.count()      # metadata (catalog stats) for written layers
     if total == 0:
         return layer.df().withColumn("distance", F.lit(0.0)).limit(0)
@@ -171,8 +213,8 @@ def closest(layer, lon: float, lat: float, k: int = 100,
         return pruned
     # correctness probe: a point outside the window is farther than `km`,
     # so the in-window top-k is globally correct only while d_k <= km
-    probe = pruned.selectExpr("count(1) AS n", "max(distance) AS dmax").first()
-    if probe["n"] >= k and (probe["dmax"] is None or probe["dmax"] <= km):
+    ds = [d for (d,) in pruned.select("distance").collect()]
+    if len(ds) >= k and all(d is None or d <= km for d in ds):
         return pruned
     full = layer.df_pruned(props=props) if props else layer.df()
     if sql is not None:

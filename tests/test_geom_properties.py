@@ -231,6 +231,51 @@ def test_hilbert_ranges_cover_window_exactly(x0, y0, w, h):
     assert got == expect
 
 
+@st.composite
+def search_windows(draw):
+    """A (x0, y0, x1, y1) WGS84 window: anywhere, or straddling one of
+    the curves' level-1/level-2 quadrant boundaries."""
+    w = draw(st.floats(1e-6, 120, allow_nan=False))
+    h = draw(st.floats(1e-6, 60, allow_nan=False))
+    if draw(st.booleans()):
+        bx = draw(st.sampled_from((-90.0, 0.0, 90.0)))
+        by = draw(st.sampled_from((-45.0, 0.0, 45.0)))
+        x0 = max(bx - w * draw(st.floats(0.01, 0.99)), -180.0)
+        y0 = max(by - h * draw(st.floats(0.01, 0.99)), -90.0)
+    else:
+        x0 = draw(st.floats(-180, 179, allow_nan=False))
+        y0 = draw(st.floats(-90, 89, allow_nan=False))
+    return (x0, y0, min(x0 + w, 180.0), min(y0 + h, 90.0))
+
+
+@given(st.sampled_from(("zorder", "hilbert")), search_windows(),
+       st.lists(st.tuples(st.floats(0, 1), st.floats(0, 1)),
+                min_size=1, max_size=40))
+@settings(max_examples=150, deadline=None)
+def test_search_key_ranges_cover_window_points(curve, window, fracs):
+    """Every point inside a search window keys into one of the window's
+    exact ranges (the manifest prune) AND one of the at most
+    PLAN_RANGES coarsened ranges (the scan predicate): neither prune
+    may drop a matching row.  The window's corners are sampled too."""
+    from spatial_spark.operators.pruning import PLAN_RANGES, window_ranges
+    from spatial_spark.sfc import _merge_coarsen, hilbert_encode, zorder_encode
+
+    x0, y0, x1, y1 = window
+    pts = [(x0, y0), (x1, y1), (x0, y1), (x1, y0)] + [
+        (x0 + fx * (x1 - x0), y0 + fy * (y1 - y0)) for fx, fy in fracs]
+    xs = np.clip([x for x, _ in pts], x0, x1)
+    ys = np.clip([y for _, y in pts], y0, y1)
+    encode = zorder_encode if curve == "zorder" else hilbert_encode
+    keys = encode(xs, ys)
+    exact = window_ranges(window, curve)
+    coarse = _merge_coarsen(exact, PLAN_RANGES)
+    assert 1 <= len(coarse) <= PLAN_RANGES
+    for ranges in (exact, coarse):
+        for key in keys.tolist():
+            assert any(lo <= key <= hi for lo, hi in ranges), \
+                (curve, window, key, ranges)
+
+
 @given(triangles(), triangles())
 @settings(max_examples=400, deadline=None)
 def test_difference_area_conservation_triangles(a, b):

@@ -2145,6 +2145,71 @@ def test_df_window_antimeridian_split(ctx, spark):
     assert set(pruned.inputFiles()) < set(layer.df().inputFiles())
 
 
+def test_window_search_prunes_files_by_key_range(ctx, spark):
+    """On an all-points layer a window search drops at the manifest
+    every file whose zkey range meets none of the window's exact key
+    ranges.  Each append covers one level-1 z-order quadrant and
+    range-partitions into key slices, so the files hold disjoint key
+    ranges, while a slice's envelope can be far wider than the cells
+    its keys cover: the key ranges plan fewer files than the envelope
+    prune alone, and every answer stays the brute-force one."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    layer = ctx.create_point_layer("zprune", x="lon", y="lat")
+    pts = []
+    for q, (qx, qy) in enumerate(((-180, -90), (0, -90), (-180, 0), (0, 0))):
+        xy = rng.uniform((qx, qy), (qx + 180, qy + 90), size=(300, 2))
+        rows = [(q * 1000 + i, float(x), float(y))
+                for i, (x, y) in enumerate(xy)]
+        layer.add(spark.createDataFrame(
+            rows, "id long, lon double, lat double"))
+        pts += rows
+    ids, xs, ys = (np.array(c) for c in zip(*pts))
+    planned = envelope = 0
+    for cx, cy in rng.uniform((-170, -80), (170, 80), size=(12, 2)):
+        w = (cx - 8.0, cy - 5.0, cx + 8.0, cy + 5.0)
+        hit = layer.bbox_search(*w)
+        got = sorted(r["id"] for r in hit.select("id").collect())
+        inside = (xs >= w[0]) & (xs <= w[2]) & (ys >= w[1]) & (ys <= w[3])
+        assert got == sorted(ids[inside].tolist()), w
+        files = set(hit.inputFiles())
+        rows: list = []
+        env_files = set(layer.df_pruned(windows=w, rows_out=rows)
+                        .inputFiles())
+        assert files <= env_files, w
+        # the planned files' recorded row counts, one per file
+        assert len(rows) == len(env_files) and sum(rows) == \
+            layer.df_pruned(windows=w).count(), w
+        planned += len(files)
+        envelope += len(env_files)
+    assert planned < envelope, (planned, envelope)
+
+
+def test_window_search_never_key_prunes_polygon_layer(ctx, spark):
+    """zkey indexes a bbox CENTRE, so a polygon whose bbox meets the
+    window may key into a cell the window's ranges miss: a WKT layer's
+    search must plan exactly the envelope-pruned files and find it."""
+    from spatial_spark.operators.pruning import window_ranges
+
+    layer = ctx.create_wkt_layer("zprune_poly")
+    for i, (x0, y0) in enumerate(((-60, -60), (20, 20), (-170, 50))):
+        layer.add(spark.createDataFrame(
+            [(i, f"POLYGON (({x0} {y0}, {x0 + 59} {y0}, {x0 + 59} "
+                 f"{y0 + 59}, {x0} {y0 + 59}, {x0} {y0}))")],
+            "id long, wkt string"), wkt="wkt")
+    w = (-5.0, -5.0, -2.0, -2.0)          # the corner of polygon 0
+    (zmin, zmax), = [(r["zkey"], r["zkey"]) for r in
+                     layer.df().filter("id = 0").collect()]
+    assert not any(lo <= zmax and hi >= zmin
+                   for lo, hi in window_ranges(w)), \
+        "the centre key must miss the window for this test to bite"
+    hit = layer.bbox_search(*w)
+    assert [r["id"] for r in hit.select("id").collect()] == [0]
+    assert set(hit.inputFiles()) == set(
+        layer.df_pruned(windows=w).inputFiles())
+
+
 def test_commit_delta_range_less_shard_dedups_adds():
     """A shard entry without a lo/hi name range (e.g. written by an
     older layout generation) must be treated as possibly containing

@@ -815,3 +815,77 @@ def test_point_search_filters_are_typed(point_layer, spark):
         # closest() may run its one correctness probe
         assert _jobs_run(spark, lambda: build(point_layer)) <= \
             (name == "closest"), name
+
+
+def _scan_filter(plan: str) -> str:
+    """The condition of the Filter node that holds the zkey ranges."""
+    return next(line for line in plan.splitlines()
+                if "Filter" in line and "zkey#" in line)
+
+
+def test_point_search_filters_lead_with_bbox(point_layer, spark):
+    """A window's predicate tests its four bbox conjuncts before the
+    zkey ranges, and the plan holds at most ``PLAN_RANGES`` ranges per
+    window (the exact decomposition goes to the manifest prune): Spark
+    re-checks the pushed filter on every scanned row, so the cheap and
+    most selective test comes first and the range list is short."""
+    import re
+    from spatial_spark.operators.pruning import PLAN_RANGES, window_ranges
+
+    assert len(window_ranges((0, 0, 20, 20))) > PLAN_RANGES
+    cases = dict(_SEARCHES)
+    # the antimeridian split: two windows, each with its own ranges
+    cases["within_dateline"] = lambda lay: lay.within_distance(
+        179.5, 10.0, 300.0)
+    for name, build in cases.items():
+        spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+        try:
+            plan = _plan(build(point_layer))
+        finally:
+            spark.conf.unset("spark.sql.maxMetadataStringLength")
+        cond = _scan_filter(plan)
+        windows = 2 if name == "within_dateline" else 1
+        n_ranges = len(re.findall(r"\(zkey#\d+L >= ", cond))
+        assert 1 <= n_ranges <= windows * PLAN_RANGES, (name, cond)
+        first_z = cond.index("zkey#")
+        for bound in (r"xmin#\d+ <= ", r"xmax#\d+ >= ",
+                      r"ymin#\d+ <= ", r"ymax#\d+ >= "):
+            m = re.search(bound, cond)
+            assert m and m.start() < first_z, (name, bound, cond)
+        # the ranges still reach the scan: the DataFilters list, printed
+        # untruncated, holds them
+        filters = plan[plan.index("DataFilters: "):plan.index(", Format: ")]
+        assert "zkey#" in filters, (name, filters)
+
+
+def test_within_distance_sorts_in_one_job(point_layer, spark, monkeypatch):
+    """Below ``ONE_TASK_SORT_ROWS`` planned rows within_distance orders
+    its matches in one task: collecting it runs one Spark job (a global
+    orderBy adds a sampling job and a shuffle).  Above it the sort is
+    global again, so a large search keeps its scan and refine spread
+    over many tasks.  Both paths return the distances in the order a
+    global ``orderBy("distance")`` over the whole layer gives."""
+    from spatial_spark.functions.columns import sphere_distance_km
+    from spatial_spark.operators import search
+
+    def distances():
+        return [r["distance"] for r in point_layer.within_distance(
+            10.0, 45.0, 500.0).select("distance").collect()]
+
+    brute = [r["distance"] for r in point_layer.df()
+             .withColumn("distance",
+                         sphere_distance_km(10.0, 45.0, "xmin", "ymin"))
+             .filter("distance <= 500.0D").orderBy("distance")
+             .select("distance").collect()]
+    assert len(brute) > 1
+    assert point_layer.count() <= search.ONE_TASK_SORT_ROWS
+    assert _jobs_run(spark, lambda: point_layer.within_distance(
+        10.0, 45.0, 500.0).select("id").collect()) == 1
+    assert "rangepartitioning" not in _plan(
+        point_layer.within_distance(10.0, 45.0, 500.0))
+    assert distances() == brute
+
+    monkeypatch.setattr(search, "ONE_TASK_SORT_ROWS", 0)
+    assert "rangepartitioning(distance" in _plan(
+        point_layer.within_distance(10.0, 45.0, 500.0))
+    assert distances() == brute
